@@ -9709,6 +9709,9 @@ def transpile(sql: str, spark: SparkSession | None = None) -> TranspileResult:
 
     When ``spark`` is given, table-function sources are registered as
     temp views (``__bh_src_N``); otherwise table functions raise.
+    ``settings`` carries the SETTINGS clause mapped to Spark conf keys;
+    the caller applies them for the query's duration (session conf is
+    never written here — it is shared by every client).
     """
     out = sql.strip().rstrip(";")
     # CH (ANSI) double-quoted strings are IDENTIFIERS; Spark's
@@ -9840,9 +9843,6 @@ def transpile(sql: str, spark: SparkSession | None = None) -> TranspileResult:
         _ensure_misc_udfs(spark)
     if spark is not None and "bh_porter_stem" in out:
         _ensure_porter_udfs(spark)
-    if spark is not None:
-        for k, v in settings.items():
-            spark.conf.set(k, v)
     return TranspileResult(sql=out, views=views, settings=settings, dropped_settings=dropped)
 
 

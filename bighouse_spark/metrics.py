@@ -4,8 +4,8 @@ format (version 0.0.4) — no client library needed.
 The reference exposes Prometheus metrics (plus pprof) on an internal
 HTTP port (reference ``observability/internal_http.go:17-29``, wired
 in ``main.go``); this module is the analog for the Spark engine:
-query counters are derived at scrape time from the engine's existing
-``query_log`` / result-cache bookkeeping (no double accounting), and
+query counters are read at scrape time from the engine's running
+``query_totals`` / result-cache bookkeeping (no double accounting), and
 the four wire servers increment live connection counters here.
 
 Cardinality discipline (see SCALE.md): every label value in this
@@ -106,41 +106,37 @@ def render(
     engine: "BigHouseEngine",
     active_sessions: int | None = None,
 ) -> str:
-    """Scrape-time snapshot. Query counters are derived from the
-    engine's ``query_log`` so they can never drift from the system
-    views that report the same facts."""
+    """Scrape-time snapshot. Query counters read the engine's
+    ``query_totals``, kept in the same write as its bounded
+    ``query_log``, so they never drift from the log and a scrape costs
+    the same however long the history."""
     w = _Writer()
 
-    log = list(engine.query_log)  # snapshot; appends are atomic
-    n_err = sum(1 for e in log if e.error)
-    n_cached = sum(1 for e in log if e.cached)
-    rows = sum(e.row_count for e in log if e.row_count > 0)
-    secs = float(sum(e.elapsed_sec for e in log))
-
+    t = engine.query_totals
     w.metric(
         "bighouse_queries_total", "counter",
         "Queries executed (including failed ones).",
-        [({}, len(log))],
+        [({}, t.queries)],
     )
     w.metric(
         "bighouse_query_errors_total", "counter",
         "Queries that ended in an error.",
-        [({}, n_err)],
+        [({}, t.errors)],
     )
     w.metric(
         "bighouse_query_result_rows_total", "counter",
         "Rows returned by completed queries.",
-        [({}, rows)],
+        [({}, t.result_rows)],
     )
     w.metric(
         "bighouse_query_cache_hits_total", "counter",
         "Queries answered from the result cache.",
-        [({}, n_cached)],
+        [({}, t.cache_hits)],
     )
     w.metric(
         "bighouse_query_seconds_total", "counter",
         "Total wall-clock seconds spent executing queries.",
-        [({}, secs)],
+        [({}, t.seconds)],
     )
     w.metric(
         "bighouse_queries_killed_total", "counter",

@@ -494,7 +494,10 @@ class _Handler(BaseHTTPRequestHandler):
         elif parsed.path == "/query_log":
             if not self._check_auth(parsed):
                 return
-            self._send(200, [asdict(e) for e in self.engine.query_log])
+            # list(): copy the ring before iterating — request
+            # threads append to it concurrently
+            log = list(self.engine.query_log)
+            self._send(200, [asdict(e) for e in log])
         elif parsed.path == "/metrics":
             # Prometheus scrape target (reference serves Prometheus on
             # an internal port, observability/internal_http.go:17-29).
@@ -798,7 +801,7 @@ class _Handler(BaseHTTPRequestHandler):
         extra = {
             "X-ClickHouse-Format": fmt,
             "X-ClickHouse-Summary": json.dumps(
-                {"read_rows": str(len(result.rows)),
+                {"result_rows": str(len(result.rows)),
                  "elapsed_ns": str(int(result.elapsed_sec * 1e9))}
             ),
         }

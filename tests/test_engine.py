@@ -65,12 +65,123 @@ def test_cluster_shape_maps_to_partitions(engine, spark):
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
-def test_error_lands_in_query_log(engine):
+@pytest.mark.parametrize(
+    "run",
+    [
+        lambda eng, _tmp: eng.execute(
+            "SELECT definitely_not_a_column FROM nonexistent_xyz"
+        ),
+        lambda eng, _tmp: eng.execute("DROP TABLE missing_tbl_xyz"),
+        lambda eng, tmp: eng.execute_to_sink(
+            "SELECT definitely_not_a_column FROM nonexistent_xyz",
+            str(tmp / "never_written"),
+        ),
+    ],
+    ids=["select", "ddl", "sink"],
+)
+def test_error_lands_in_query_log(engine, tmp_path, run):
     before = len(engine.query_log)
     with pytest.raises(Exception):
-        engine.execute("SELECT definitely_not_a_column FROM nonexistent_xyz")
+        run(engine, tmp_path)
     assert len(engine.query_log) == before + 1
     assert engine.query_log[-1].error is not None
+
+
+def test_settings_are_query_scoped(engine, spark):
+    # SETTINGS max_threads maps to shuffle.partitions for ITS query
+    # only (winning over num_nodes x cores): session conf is shared by
+    # every client, so the prior value must be back after the query —
+    # also after one that fails in analysis — and the knob's lock must
+    # not outlive it.
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    seen = []
+
+    class Sink:
+        started = False
+
+        def start(self, cols, types):
+            self.started = True
+
+        def write_row(self, row):
+            seen.append(spark.conf.get("spark.sql.shuffle.partitions"))
+
+    engine.execute(
+        QueryRequest(
+            query="SELECT number FROM numbers(2) SETTINGS max_threads = 7",
+            num_nodes=3, cores=4,
+        ),
+        stream_to=Sink(),
+    )
+    assert seen == ["7", "7"]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    with pytest.raises(Exception):
+        engine.execute(
+            "SELECT no_such_col FROM numbers(2) SETTINGS max_threads = 7"
+        )
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+    # From another thread: the conf lock is re-entrant, so only a
+    # different thread would block on a leaked hold.
+    import threading
+
+    rows = []
+    t = threading.Thread(target=lambda: rows.append(engine.execute(
+        "SELECT 1 AS one SETTINGS max_threads = 3"
+    ).rows))
+    t.start()
+    t.join(timeout=120)
+    assert rows == [[[1]]]
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_query_log_is_bounded_and_totals_keep_counting(spark, monkeypatch):
+    from bighouse_spark import metrics
+
+    monkeypatch.setattr(BigHouseEngine, "QUERY_LOG_MAX", 3)
+    eng = BigHouseEngine(spark)
+    for _ in range(5):
+        eng.execute("GRANT SELECT ON t TO u")
+    assert len(eng.query_log) == 3
+    assert "bighouse_queries_total 5\n" in metrics.render(eng)
+    eng.execute("GRANT SELECT ON t TO u")
+    assert len(eng.query_log) == 3
+    assert "bighouse_queries_total 6\n" in metrics.render(eng)
+
+
+def test_concurrent_statements_keep_totals_and_conf(spark):
+    # More threads than cores through the lifecycle at once: no
+    # logged statement may be lost from the running totals, and
+    # knob-bearing statements restore the shared conf however they
+    # interleave.
+    import sys
+    import threading
+
+    eng = BigHouseEngine(spark)
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    n_threads, per_thread = 8, 25
+
+    def work(i: int) -> None:
+        for _ in range(per_thread):
+            eng.execute(QueryRequest(
+                query="GRANT SELECT ON t TO u", num_nodes=i + 1, cores=2
+            ))
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        threads = [
+            threading.Thread(target=work, args=(i,))
+            for i in range(n_threads)
+        ]
+        for t in threads:
+            t.start()
+        for t in threads:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in threads)
+    assert eng.query_totals.queries == n_threads * per_thread
+    assert len(eng.query_log) == n_threads * per_thread
+    assert spark.conf.get("spark.sql.shuffle.partitions") == before
 
 
 def test_execute_to_sink_roundtrip(engine, spark, tmp_path):
@@ -81,6 +192,26 @@ def test_execute_to_sink_roundtrip(engine, spark, tmp_path):
     assert meta["cols"] == ["answer", "note"]
     back = spark.read.parquet(out_dir).collect()
     assert [list(r) for r in back] == [[42, "hi"]]
+
+
+def test_execute_to_sink_runs_engine_init_queries(engine, spark, tmp_path):
+    # Both entry points share one init-query loop: an ATTACH init
+    # query is an engine statement, not Spark SQL.
+    engine.execute("DROP TABLE IF EXISTS sink_init_att")
+    out_dir = str(tmp_path / "sink_init")
+    engine.execute_to_sink(
+        QueryRequest(
+            query="SELECT count() AS n FROM sink_init_att",
+            init_queries=[
+                "ATTACH TABLE sink_init_att FROM "
+                f"'{SF_CORRECT}/nation.parquet'"
+            ],
+        ),
+        out_dir,
+    )
+    back = spark.read.parquet(out_dir).collect()
+    assert [list(r) for r in back] == [[25]]
+    engine.execute("DROP TABLE sink_init_att")
 
 
 def test_execute_to_sink_partitioned(engine, spark, tmp_path):

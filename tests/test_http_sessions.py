@@ -66,6 +66,18 @@ def test_set_persists_in_session_only(base):
     assert override.strip() != "11160318154034397263"
 
 
+def test_session_knob_does_not_leak_into_other_sessions(base, spark):
+    # Session A's SET max_threads re-enters its queries as SETTINGS,
+    # mapped onto shuffle.partitions; the shared session conf must be
+    # restored after each query, so session B reads the original.
+    original = spark.conf.get("spark.sql.shuffle.partitions")
+    knob = int(original) + 5  # differs from the original by construction
+    _q(base, f"SET max_threads = {knob}", session_id="s_knob_a")
+    _q(base, "SELECT count() AS c FROM numbers(10)", session_id="s_knob_a")
+    out = _q(base, "SET spark.sql.shuffle.partitions", session_id="s_knob_b")
+    assert out.split() == ["spark.sql.shuffle.partitions", original]
+
+
 def test_temp_table_is_session_scoped(base):
     _q(
         base,

@@ -119,6 +119,21 @@ def test_sink_endpoint_writes_parquet(server_url, spark, tmp_path):
     assert set(back.columns) == {"r_regionkey", "r_name"}
 
 
+def test_clickhouse_summary_reports_result_rows(server_url):
+    # The summary counts RESULT rows; read_rows (rows scanned) stays
+    # out until the engine measures scans. max_result_rows keeps the
+    # response on the collected path, which sends the summary.
+    import urllib.parse
+
+    qs = urllib.parse.urlencode({
+        "query": "SELECT number FROM numbers(3) SETTINGS max_result_rows=9"
+    })
+    with urllib.request.urlopen(f"{server_url}/?{qs}") as resp:
+        summary = json.loads(resp.headers["X-ClickHouse-Summary"])
+    assert summary["result_rows"] == "3"
+    assert "read_rows" not in summary
+
+
 def test_missing_query_field_is_400(server_url):
     req = urllib.request.Request(
         f"{server_url}/query", data=b'{"nope": 1}', method="POST"

@@ -198,3 +198,36 @@ def test_no_unaudited_raw_query_routers():
         "match raw request.query — prune the allowlist so it stays "
         "an exact audit record."
     )
+
+
+TRANSPILE = ENGINE.parent / "dialect" / "transpile.py"
+
+
+def _method_calls(path: Path, methods: tuple[str, ...], receiver: str):
+    """Calls ``<x>.<method>(...)`` in ``path`` whose receiver's source
+    text ends with ``receiver``."""
+    return [
+        ast.unparse(n)
+        for n in ast.walk(ast.parse(path.read_text()))
+        if isinstance(n, ast.Call)
+        and isinstance(n.func, ast.Attribute)
+        and n.func.attr in methods
+        and ast.unparse(n.func.value).endswith(receiver)
+    ]
+
+
+def test_one_query_log_write():
+    # The statement lifecycle (BigHouseEngine._run) owns the log:
+    # handlers return their result and a label, and one site writes
+    # the entry on success and on failure.
+    writes = _method_calls(
+        ENGINE, ("append", "appendleft", "extend", "insert"), "query_log"
+    )
+    assert len(writes) == 1, writes
+
+
+def test_transpile_never_writes_session_conf():
+    # transpile() only RETURNS mapped SETTINGS: the session conf is
+    # shared by every client, and a write there leaked one query's
+    # knobs into every later statement. The engine scopes them.
+    assert _method_calls(TRANSPILE, ("set", "unset"), "conf") == []
