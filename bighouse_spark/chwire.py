@@ -47,6 +47,7 @@ from bighouse_spark.compress import (
     read_frame,
 )
 from bighouse_spark.engine import BigHouseEngine, QueryRequest
+from bighouse_spark.netutil import NoDelayMixin
 from bighouse_spark.formats import (
     _leb128,
     _leb128_str,
@@ -794,7 +795,7 @@ class CHWireServer:
             tls_ctx = server_context(*tls)
         outer = self
 
-        class _Server(socketserver.ThreadingTCPServer):
+        class _Server(NoDelayMixin, socketserver.ThreadingTCPServer):
             allow_reuse_address = True
             daemon_threads = True
             engine = outer.engine

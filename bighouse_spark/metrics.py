@@ -5,8 +5,9 @@ The reference exposes Prometheus metrics (plus pprof) on an internal
 HTTP port (reference ``observability/internal_http.go:17-29``, wired
 in ``main.go``); this module is the analog for the Spark engine:
 query counters are read at scrape time from the engine's running
-``query_totals`` / result-cache bookkeeping (no double accounting), and
-the four wire servers increment live connection counters here.
+``query_totals`` / result-cache bookkeeping and the file-source schema
+memo's own hit/miss counts (no double accounting), and the four wire
+servers increment live connection counters here.
 
 Cardinality discipline (see SCALE.md): every label value in this
 module is a member of a fixed enum (``protocol`` ∈ {http,
@@ -22,6 +23,8 @@ from __future__ import annotations
 import threading
 from contextlib import contextmanager
 from typing import TYPE_CHECKING, Iterator
+
+from bighouse_spark.sources.readers import schema_memo_counts
 
 if TYPE_CHECKING:  # pragma: no cover - typing only
     from bighouse_spark.engine import BigHouseEngine
@@ -143,6 +146,18 @@ def render(
         "Queries cancelled via KILL QUERY or the execution-time "
         "watchdog.",
         [({}, getattr(engine, "kill_count", 0))],
+    )
+
+    hits, misses = schema_memo_counts()
+    w.metric(
+        "bighouse_source_schema_memo_hits_total", "counter",
+        "File-source reads served an inferred schema from the memo.",
+        [({}, hits)],
+    )
+    w.metric(
+        "bighouse_source_schema_memo_misses_total", "counter",
+        "Memo-eligible file-source reads that ran schema inference.",
+        [({}, misses)],
     )
 
     with engine._cache_lock:

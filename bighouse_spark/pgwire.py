@@ -54,6 +54,7 @@ from decimal import Decimal
 from typing import Any
 
 from bighouse_spark.engine import BigHouseEngine, QueryRequest
+from bighouse_spark.netutil import NoDelayMixin
 from bighouse_spark.session_settings import (
     merge_settings_clause,
     normalize_set_statement,
@@ -856,7 +857,7 @@ class PGWireServer:
 
         outer = self
 
-        class _Server(socketserver.ThreadingTCPServer):
+        class _Server(NoDelayMixin, socketserver.ThreadingTCPServer):
             allow_reuse_address = True
             daemon_threads = True
             engine = outer.engine

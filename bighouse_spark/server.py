@@ -41,6 +41,7 @@ from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 
 from bighouse_spark.engine import BigHouseEngine, QueryRequest
+from bighouse_spark.netutil import NoDelayMixin
 from bighouse_spark.session_settings import (
     SELECTISH_RE,
     merge_settings_clause,
@@ -361,19 +362,20 @@ class _HTTPStreamSink:
         if len(self._buf) >= self.CHUNK:
             self._flush()
 
-    def _flush(self) -> None:
+    def _flush(self, tail: bytes = b"") -> None:
+        """Write the buffered rows as one chunk, and ``tail`` in the
+        same send."""
+        out = b""
         if self._buf:
-            chunk = bytes(self._buf)
+            out = f"{len(self._buf):X}\r\n".encode() + self._buf + b"\r\n"
             self._buf.clear()
-            self._h.wfile.write(
-                f"{len(chunk):X}\r\n".encode() + chunk + b"\r\n"
-            )
+        if out or tail:
+            self._h.wfile.write(out + tail)
 
     def finish(self) -> None:
         if not self.headers_sent:  # empty result: headers + header rows
             self._send_headers()
-        self._flush()
-        self._h.wfile.write(b"0\r\n\r\n")
+        self._flush(b"0\r\n\r\n")  # last chunk and terminator: one send
 
     def abort(self, err_text: bytes) -> None:
         """Mid-stream failure: flush the error text as a final chunk
@@ -966,7 +968,7 @@ def make_server(
         "BoundHandler", (_Handler,),
         {"engine": engine, "sessions": SessionStore(), "auth": auth},
     )
-    class _Srv(ThreadingHTTPServer):
+    class _Srv(NoDelayMixin, ThreadingHTTPServer):
         def handle_error(self, request, client_address):  # noqa: D401
             # Connection-level noise (broken pipes, resets, TLS
             # handshake rejections/timeouts) is routine; anything

@@ -3,9 +3,15 @@
 
 from __future__ import annotations
 
+import json
+import os
+import time
+
 import pytest
 
 from bighouse_spark.engine import BigHouseEngine, QueryRequest
+from bighouse_spark.sources import readers
+from bighouse_spark.sources.readers import read_source, schema_memo_counts
 from tests.conftest import SF_CORRECT
 
 
@@ -638,6 +644,181 @@ def test_orc_table_function(engine, spark, tmp_path):
     )
     assert out.rows == [[10]]
 
+
+# -- inferred-schema memo of file sources (sources/readers.py) ----------
+
+_MEMO_ROWS = [(1, 1.5, "a"), (2, None, "b"), (3, -0.25, "c")]
+
+
+def _backdate(path, ts: float | None = None) -> float:
+    """Set mtime well outside the memo's 1-s racy window."""
+    ts = time.time() - 60 if ts is None else ts
+    os.utime(path, (ts, ts))
+    return ts
+
+
+def _write_memo_source(path, fmt: str) -> None:
+    import pyarrow as pa
+
+    ks, vs, ss = zip(*_MEMO_ROWS)
+    table = pa.table({"k": ks, "v": vs, "s": ss})
+    if fmt == "Parquet":
+        import pyarrow.parquet as pq
+
+        pq.write_table(table, path)
+    elif fmt == "ORC":
+        import pyarrow.orc as orc
+
+        orc.write_table(table, path)
+    elif fmt == "JSONEachRow":
+        path.write_text("".join(
+            json.dumps({"k": k, "v": v, "s": s}) + "\n"
+            for k, v, s in _MEMO_ROWS
+        ))
+    else:
+        sep = "\t" if fmt == "TSVWithNames" else ","
+        path.write_text("".join(
+            sep.join("" if x is None else str(x) for x in row) + "\n"
+            for row in [("k", "v", "s"), *_MEMO_ROWS]
+        ))
+    _backdate(path)
+
+
+@pytest.mark.parametrize(
+    "fmt", ["Parquet", "CSVWithNames", "TSVWithNames", "JSONEachRow", "ORC"]
+)
+def test_schema_memo_hit_matches_uncached_read(engine, tmp_path, fmt):
+    p = tmp_path / f"src.{fmt.lower()}"
+    _write_memo_source(p, fmt)
+    q = f"SELECT * FROM file('{p}', '{fmt}') ORDER BY k"
+    h0, m0 = schema_memo_counts()
+    cold = engine.execute(q)
+    h1, m1 = schema_memo_counts()
+    warm = engine.execute(q)
+    h2, m2 = schema_memo_counts()
+    assert (h1 - h0, m1 - m0) == (0, 1)  # inferred, then stored
+    assert (h2 - h1, m2 - m1) == (1, 0)  # served from the memo
+    assert (warm.cols, warm.types, warm.rows) == (
+        cold.cols, cold.types, cold.rows
+    )
+    assert sorted(warm.cols) == ["k", "s", "v"]
+    assert len(warm.rows) == len(_MEMO_ROWS)
+
+
+def test_schema_memo_sees_a_rewritten_file(engine, tmp_path):
+    p = tmp_path / "grow.csv"
+    p.write_text("k,v\n1,2\n")
+    ts = _backdate(p)
+    q = f"SELECT * FROM file('{p}', 'CSVWithNames')"
+    assert engine.execute(q).cols == ["k", "v"]
+    assert engine.execute(q).cols == ["k", "v"]  # memo hit
+    p.write_text("k,v,w\n1,2,3\n")
+    _backdate(p, ts)  # the same mtime as the stored entry
+    assert engine.execute(q).cols == ["k", "v", "w"]
+
+
+def test_schema_memo_skips_recently_modified_files(spark, tmp_path):
+    # A same-size rewrite inside one mtime tick is invisible to the
+    # fingerprint, so a file younger than 1 s is never stored.
+    p = tmp_path / "fresh.csv"
+    p.write_text("a,b\n1,2\n")
+    assert read_source(spark, str(p), "csv").columns == ["a", "b"]
+    p.write_text("x,y\n1,2\n")
+    assert read_source(spark, str(p), "csv").columns == ["x", "y"]
+    memo = readers._SCHEMA_MEMO.get(spark, {})
+    assert not any(k[0][0][0] == str(p) for k in memo)
+
+
+def test_schema_memo_keys_on_reader_confs(spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+    from pyspark.sql.types import BinaryType, StringType
+
+    p = tmp_path / "bin.parquet"
+    pq.write_table(pa.table({"b": pa.array([b"x"], pa.binary())}), p)
+    _backdate(p)
+    key = "spark.sql.parquet.binaryAsString"
+    old = spark.conf.get(key)
+    spark.conf.set(key, "false")
+    try:
+        for _ in range(2):  # the second read is a memo hit
+            assert read_source(spark, str(p)).schema["b"].dataType == BinaryType()
+        spark.conf.set(key, "true")
+        assert read_source(spark, str(p)).schema["b"].dataType == StringType()
+    finally:
+        spark.conf.set(key, old)
+
+
+def test_schema_memo_bypasses_globs_and_directories(spark, tmp_path):
+    d = tmp_path / "parts"
+    d.mkdir()
+    _write_memo_source(d / "a.parquet", "Parquet")
+    # A file may be named like a pattern; Spark still expands it.
+    _write_memo_source(d / "*.parquet", "Parquet")
+    before = schema_memo_counts()
+    size = len(readers._SCHEMA_MEMO.get(spark, {}))
+    for path in (str(d), f"{d}/*.parquet", f"file://{d}/a.parque?",
+                 f"{d}/[a].parquet", f"{d}/{{a,b}}.parquet"):
+        assert read_source(spark, path).count() >= len(_MEMO_ROWS)
+    assert schema_memo_counts() == before
+    assert len(readers._SCHEMA_MEMO.get(spark, {})) == size
+
+
+def test_schema_memo_is_bounded_and_per_session(spark, tmp_path, monkeypatch):
+    monkeypatch.setattr(readers, "SCHEMA_MEMO_MAX", 3)
+    paths = []
+    for i in range(5):
+        p = tmp_path / f"f{i}.parquet"
+        _write_memo_source(p, "Parquet")
+        paths.append(str(p))
+    for p in (*paths[:4], paths[1], paths[4]):  # paths[1] a hit
+        read_source(spark, p)
+        assert len(readers._SCHEMA_MEMO[spark]) <= 3
+    held = {k[0][0][0] for k in readers._SCHEMA_MEMO[spark]}
+    # least recently used first: paths[0], then paths[2]
+    assert held == {paths[1], paths[3], paths[4]}
+    other = spark.newSession()
+    assert other not in readers._SCHEMA_MEMO
+    read_source(other, paths[0])
+    assert len(readers._SCHEMA_MEMO[other]) == 1
+
+
+def test_schema_memo_concurrent_reads(spark, tmp_path, monkeypatch):
+    import sys
+    import threading
+
+    monkeypatch.setattr(readers, "SCHEMA_MEMO_MAX", 2)
+    paths = []
+    for i in range(3):
+        p = tmp_path / f"c{i}.parquet"
+        _write_memo_source(p, "Parquet")
+        paths.append(str(p))
+    threads, reads, errors = 8, 6, []
+    before = sum(schema_memo_counts())
+
+    def work(t: int) -> None:
+        try:
+            for i in range(reads):
+                df = read_source(spark, paths[(t + i) % len(paths)])
+                assert df.columns == ["k", "v", "s"]
+                assert len(readers._SCHEMA_MEMO[spark]) <= 2
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+
+    old = sys.getswitchinterval()
+    sys.setswitchinterval(1e-6)
+    try:
+        ts = [threading.Thread(target=work, args=(t,)) for t in range(threads)]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(timeout=120)
+    finally:
+        sys.setswitchinterval(old)
+    assert not any(t.is_alive() for t in ts)
+    assert errors == []
+    # every read counted once, as a hit or a miss
+    assert sum(schema_memo_counts()) - before == threads * reads
 
 def test_attach_table_then_query(engine, spark):
     engine.attach_table("gh_events_like", f"{SF_CORRECT}/orders.parquet")

@@ -75,6 +75,28 @@ def test_cache_hit_counter(eng, srv):
     assert vals["bighouse_result_cache_entries"] >= 1
 
 
+def test_schema_memo_counters(eng, srv, tmp_path):
+    import os
+    import time
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = tmp_path / "m.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), p)
+    old = time.time() - 60  # outside the memo's 1-s racy window
+    os.utime(p, (old, old))
+    q = f"SELECT sum(a) AS s FROM file('{p}', 'Parquet')"
+    _, before = _scrape(srv)
+    eng.execute(q)
+    eng.execute(q)
+    _, after = _scrape(srv)
+    hits = "bighouse_source_schema_memo_hits_total"
+    misses = "bighouse_source_schema_memo_misses_total"
+    assert after[hits] - before[hits] == 1
+    assert after[misses] - before[misses] == 1
+
+
 def test_wire_connection_counters(eng, srv):
     _, before = _scrape(srv)
     key = 'bighouse_connections_total{protocol="postgresql"}'

@@ -231,3 +231,17 @@ def test_transpile_never_writes_session_conf():
     # shared by every client, and a write there leaked one query's
     # knobs into every later statement. The engine scopes them.
     assert _method_calls(TRANSPILE, ("set", "unset"), "conf") == []
+
+
+def test_transpile_reads_files_only_through_read_source():
+    # file()/s3()/url() sources go through sources.readers.read_source,
+    # which owns the inferred-schema memo; a direct spark.read here
+    # would skip it and pay a schema-inference job per statement.
+    reads = [
+        ast.unparse(n)
+        for n in ast.walk(ast.parse(TRANSPILE.read_text()))
+        if isinstance(n, ast.Attribute)
+        and n.attr in ("read", "readStream")
+        and ast.unparse(n.value).endswith("spark")
+    ]
+    assert reads == []

@@ -18,6 +18,7 @@ from __future__ import annotations
 import random
 import socket
 import struct
+import time
 import urllib.request
 
 import pytest
@@ -176,6 +177,33 @@ def _http_alive(srv) -> None:
     url = f"http://{srv.server_address[0]}:{srv.server_address[1]}/ping"
     with urllib.request.urlopen(url, timeout=IO_DEADLINE) as r:
         assert r.status == 200
+
+
+@pytest.mark.parametrize("name", ["http_srv", "ch_srv", "pg_srv", "my_srv"])
+def test_accepted_sockets_set_tcp_nodelay(request, name):
+    # Responses go out as several small sends; with Nagle on, each one
+    # after the first can wait on the client's delayed ACK.
+    srv = request.getfixturevalue(name)
+    tcp = getattr(srv, "_server", srv)
+    seen = []
+    serve = tcp.process_request
+
+    def record(sock, addr):
+        seen.append(sock.getsockopt(socket.IPPROTO_TCP, socket.TCP_NODELAY))
+        serve(sock, addr)
+
+    tcp.process_request = record
+    try:
+        s = _conn(*tcp.server_address[:2])
+        try:
+            deadline = time.monotonic() + IO_DEADLINE
+            while not seen and time.monotonic() < deadline:
+                time.sleep(0.01)
+        finally:
+            s.close()
+    finally:
+        del tcp.process_request
+    assert seen and seen[0] != 0
 
 
 class TestGarbageBytes:
