@@ -3221,7 +3221,9 @@ class BigHouseEngine:
         ``write_row(row)``. When the statement is a plain transpiled
         query with nothing forcing driver materialization (no result
         cache, no max_result_rows), rows are fed to the sink from
-        ``toLocalIterator`` instead of being collected — the returned
+        ``toLocalIterator`` instead of being collected: at most two
+        partitions on the driver (the one being read and the
+        prefetched next), never the whole result. The returned
         ``QueryResult`` then has ``rows=[]``. When materialization IS
         forced (or the statement takes a DDL/ack path), the sink is
         never started and the full result returns as usual — callers

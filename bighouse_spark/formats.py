@@ -313,7 +313,7 @@ def _render_tsv_raw(cols, rows, types, elapsed) -> bytes:
 def _render_null(cols, rows, types, elapsed) -> bytes:
     # FORMAT Null: execute fully, emit nothing (CH's benchmarking
     # format). The streaming path pairs it with toLocalIterator, so
-    # the result is never materialized anywhere.
+    # the driver holds at most two partitions, never the whole result.
     return b""
 
 
@@ -1241,7 +1241,8 @@ def _render_native(cols, rows, types, elapsed) -> bytes:
 # collected renderers above (each emits line + "\n"; the collected
 # path joins lines with "\n" and appends a trailing "\n" when any
 # line exists — same concatenation). Used by the HTTP server's
-# chunked streaming path (toLocalIterator, no driver materialization).
+# chunked streaming path (toLocalIterator: at most two partitions on
+# the driver, never the whole result).
 STREAMABLE_FORMATS = {
     "JSONEachRow", "JSONCompactEachRow",
     "CSV", "CSVWithNames", "CSVWithNamesAndTypes",

@@ -545,9 +545,10 @@ class _Handler(socketserver.BaseRequestHandler):
         if not sql:
             self._send_ok(conn)
             return
-        # SELECT rows stream straight off toLocalIterator (the driver
-        # never materializes the result); the engine falls back to
-        # the collected path for DDL/acks, cached and capped results.
+        # SELECT rows stream straight off toLocalIterator (at most two
+        # partitions on the driver, never the whole result); the
+        # engine falls back to the collected path for DDL/acks, cached
+        # and capped results.
         sink = _MySQLStreamSink(self, conn)
         try:
             result = self.server.engine.execute(  # type: ignore[attr-defined]

@@ -595,11 +595,11 @@ class _Handler(socketserver.BaseRequestHandler):
             return
         # Stream SELECT rows straight off toLocalIterator: the PG
         # protocol is row-framed (DataRow per row), so the driver
-        # never materializes the result; a mid-stream failure is a
-        # clean ErrorResponse (PG clients handle errors after
-        # RowDescription). The engine falls back to the collected
-        # path (sink never started) for DDL/acks, cached results and
-        # capped results.
+        # holds at most two partitions, never the whole result; a
+        # mid-stream failure is a clean ErrorResponse (PG clients
+        # handle errors after RowDescription). The engine falls back
+        # to the collected path (sink never started) for DDL/acks,
+        # cached results and capped results.
         sink = _PGStreamSink(self, sock)
         try:
             result = self.server.engine.execute(

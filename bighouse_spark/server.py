@@ -316,9 +316,10 @@ def _apply_session_sql(
 
 class _HTTPStreamSink:
     """Engine → chunked-HTTP row sink: headers go out when the engine
-    calls ``start``, rows accumulate into ≤64 KiB chunks (the ONLY
-    driver-side row buffer on this path — the engine feeds it from
-    ``toLocalIterator``, never materializing the result)."""
+    calls ``start``, rows accumulate into ≤64 KiB chunks. The engine
+    feeds it from ``toLocalIterator``, which holds at most two
+    partitions on the driver (Spark collects each partition into an
+    array, and prefetches the next), never the whole result."""
 
     CHUNK = 64 * 1024
 
@@ -710,8 +711,9 @@ class _Handler(BaseHTTPRequestHandler):
                      if not k.startswith("param_")},
                 )
             # Streamed results: line-based formats render from
-            # toLocalIterator with chunked transfer-encoding — no
-            # driver-side materialization. The engine falls back to
+            # toLocalIterator with chunked transfer-encoding — at most
+            # two partitions on the driver, never the whole result.
+            # The engine falls back to
             # the collected path (sink never started) when the result
             # cache or max_result_rows forces it; gzip responses stay
             # on the collected path too.

@@ -21,12 +21,23 @@ Scale posture (100 TB / 1000-executor design targets):
   scheduler handles; do NOT collapse scans into fewer, larger splits.
 * Arrow enabled for the Pandas-UDF paths used by the dedup /
   similarity / multimodal operators.
+* Driver↔Python channels (``collect``, ``toLocalIterator``,
+  ``createDataFrame``, accumulators, Python workers) run over
+  Unix-domain sockets, which have no Nagle or delayed-ACK stalls. This
+  holds at 1000 executors: a UDS only joins a JVM to the Python
+  processes on its own host (the driver, and each executor's
+  workers), so shuffle and block transfer stay on the network.
 """
 
 from __future__ import annotations
 
+import atexit
 import os
+import shutil
+import tempfile
+import threading
 
+from pyspark import SparkContext
 from pyspark.sql import SparkSession
 
 _DEFAULTS = {
@@ -48,6 +59,56 @@ _DEFAULTS = {
 }
 
 
+# Spark refuses a longer ``spark.python.unix.domain.socket.dir`` (the
+# socket file name it appends must fit ``sun_path``). It checks at the
+# first socket use, not at session start, so a longer directory would
+# fail every statement.
+UDS_DIR_MAX = 61
+
+_socket_dir: str | None = None
+_socket_dir_lock = threading.Lock()
+
+
+def uds_conf(path: str) -> dict[str, str]:
+    """The confs that put the driver's Python channels on Unix-domain
+    sockets in ``path``; empty (UDS off: loopback TCP with a secret)
+    when Spark would refuse the path."""
+    if len(path) > UDS_DIR_MAX:
+        return {}
+    return {
+        "spark.python.unix.domain.socket.enabled": "true",
+        "spark.python.unix.domain.socket.dir": path,
+    }
+
+
+def _new_socket_dir() -> str | None:
+    """A fresh ``0700`` directory for the session's sockets. PySpark
+    sends no auth secret over a UDS, so the directory's permissions
+    are the whole access check: only this uid can connect. When the
+    temp dir is too deep for a socket path, fall back to ``/tmp`` (as
+    CPython's multiprocessing does); None when neither fits."""
+    for base in dict.fromkeys((tempfile.gettempdir(), "/tmp")):
+        try:
+            path = tempfile.mkdtemp(prefix="bh", dir=base)
+        except OSError:
+            continue
+        if uds_conf(path):
+            return path
+        os.rmdir(path)
+    return None
+
+
+def _remove_socket_dir() -> None:
+    global _socket_dir
+    with _socket_dir_lock:
+        if _socket_dir is not None and SparkContext._active_spark_context is None:
+            shutil.rmtree(_socket_dir, ignore_errors=True)
+            _socket_dir = None
+
+
+atexit.register(lambda: shutil.rmtree(_socket_dir or "", ignore_errors=True))
+
+
 def default_parallelism() -> int:
     return int(os.environ.get("SPARK_GRAFT_CPUS", os.cpu_count() or 4))
 
@@ -62,19 +123,28 @@ def get_spark(
 
     ``cpus``/``shuffle_partitions`` are the Spark analog of the
     reference's ``NumNodes``/``Cores`` request knobs
-    (``temporal/workflow_query_executor.go:30-35``).
+    (``temporal/workflow_query_executor.go:30-35``). The socket
+    directory is made only when no SparkContext is live yet, so
+    repeated calls against one context make no new directories.
     """
+    global _socket_dir
     cpus = cpus or default_parallelism()
     builder = (
         SparkSession.builder.master(f"local[{cpus}]")
         .appName(app_name)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions or cpus))
     )
-    for k, v in _DEFAULTS.items():
-        builder = builder.config(k, v)
-    for k, v in (extra_conf or {}).items():
-        builder = builder.config(k, v)
-    spark = builder.getOrCreate()
+    conf = dict(_DEFAULTS)
+    with _socket_dir_lock:
+        if SparkContext._active_spark_context is None:
+            if _socket_dir is None:
+                _socket_dir = _new_socket_dir()
+            if _socket_dir is not None:
+                conf.update(uds_conf(_socket_dir))
+        conf.update(extra_conf or {})
+        for k, v in conf.items():
+            builder = builder.config(k, v)
+        spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     return spark
 
@@ -85,3 +155,4 @@ def stop_spark() -> None:
     active = SparkSession.getActiveSession()
     if active is not None:
         active.stop()
+    _remove_socket_dir()

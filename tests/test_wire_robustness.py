@@ -15,19 +15,32 @@ The declared-length attacks pin the caps added for them:
 
 from __future__ import annotations
 
+import glob
+import json
+import os
 import random
 import socket
+import stat
 import struct
+import tempfile
 import time
+import urllib.parse
 import urllib.request
 
 import pytest
+from pyspark.serializers import BatchedSerializer, CPickleSerializer
+from pyspark.sql.classic.dataframe import DataFrame as ClassicDataFrame
+from pyspark.util import _load_from_socket, _local_iterator_from_socket
 
+from bighouse_spark import session
 from bighouse_spark.chwire import CHWireServer
 from bighouse_spark.engine import BigHouseEngine
 from bighouse_spark.mysqlwire import MySQLWireServer
 from bighouse_spark.pgwire import PGWireServer
 from bighouse_spark.server import start_in_background
+from tests.test_chwire import CHClient
+from tests.test_mysqlwire import MyClient
+from tests.test_pgwire import PGClient
 
 IO_DEADLINE = 20.0  # generous; a hang would exceed it by design
 
@@ -204,6 +217,184 @@ def test_accepted_sockets_set_tcp_nodelay(request, name):
     finally:
         del tcp.process_request
     assert seen and seen[0] != 0
+
+
+def test_socket_dir_is_private(spark):
+    # PySpark sends no secret over a Unix-domain socket: the
+    # directory's owner and mode are the whole access check.
+    d = session._socket_dir
+    assert d and spark.conf.get("spark.python.unix.domain.socket.dir") == d
+    st = os.stat(d)
+    assert st.st_uid == os.getuid()
+    assert stat.S_IMODE(st.st_mode) == 0o700
+
+
+def test_python_channels_use_unix_sockets(spark):
+    ser = BatchedSerializer(CPickleSerializer())
+    streamed = spark.range(3)._jdf.toPythonIterator(False)
+    collected = spark.range(3)._jdf.collectToPython()
+    for path, secret, _server in (streamed, collected):
+        assert isinstance(path, str)
+        assert os.path.dirname(path) == session._socket_dir
+        assert secret is None
+    # Connect, so neither JVM server waits out its accept timeout.
+    assert [r.id for r in _local_iterator_from_socket(streamed, ser)] == [0, 1, 2]
+    assert [r.id for r in _load_from_socket(collected, ser)] == [0, 1, 2]
+
+
+def test_repeated_get_spark_makes_one_socket_dir(spark):
+    pattern = os.path.join(os.path.dirname(session._socket_dir), "bh*")
+    before = set(glob.glob(pattern))
+    for _ in range(10):
+        # The fixture's own arguments, so the shared session's
+        # shuffle partitions stay as they are.
+        again = session.get_spark(cpus=8, shuffle_partitions=8)
+        assert again.sparkContext is spark.sparkContext
+    assert set(glob.glob(pattern)) == before
+    assert session._socket_dir in before
+
+
+def test_overlong_socket_dir_turns_uds_off():
+    assert session.uds_conf("/" + "d" * 60) == {
+        "spark.python.unix.domain.socket.enabled": "true",
+        "spark.python.unix.domain.socket.dir": "/" + "d" * 60,
+    }
+    assert session.uds_conf("/" + "d" * 61) == {}
+
+
+def test_deep_temp_dir_falls_back_to_tmp(tmp_path, monkeypatch):
+    deep = tmp_path / ("d" * max(1, 52 - len(str(tmp_path))))
+    deep.mkdir()
+    monkeypatch.setattr(tempfile, "tempdir", str(deep))
+    path = session._new_socket_dir()
+    try:
+        assert path and os.path.dirname(path) == "/tmp"
+        assert len(path) <= session.UDS_DIR_MAX
+        assert os.listdir(deep) == []  # the overlong try was removed
+    finally:
+        if path:
+            os.rmdir(path)
+
+
+# Eight range partitions of 2500 rows each; no ORDER BY, so both the
+# streamed and the collected path return them in partition order.
+STREAMED = (
+    "SELECT number AS n, concat('r', toString(number)) AS s "
+    "FROM numbers(20000)"
+)
+
+
+@pytest.fixture()
+def streamed_partitions(monkeypatch):
+    """Partition counts of the results the engine streams."""
+    counts = []
+    stream = ClassicDataFrame.toLocalIterator
+
+    def spy(df, *args, **kwargs):
+        counts.append(df.rdd.getNumPartitions())
+        return stream(df, *args, **kwargs)
+
+    monkeypatch.setattr(ClassicDataFrame, "toLocalIterator", spy)
+    return counts
+
+
+def _http_rows(srv, sql):
+    qs = urllib.parse.urlencode({"query": sql + " FORMAT JSONEachRow"})
+    url = f"http://127.0.0.1:{srv.server_port}/?{qs}"
+    with urllib.request.urlopen(url, timeout=IO_DEADLINE) as r:
+        assert r.headers.get("Transfer-Encoding") == "chunked"
+        return [[d["n"], d["s"]] for d in map(json.loads, r.read().splitlines())]
+
+
+def _ch_rows(srv, sql):
+    c = CHClient(srv.host, srv.port)
+    try:
+        c.read_hello()
+        return c.query(sql)["rows"]
+    finally:
+        c.close()
+
+
+def _pg_rows(srv, sql):
+    c = PGClient(srv.host, srv.port)
+    try:
+        _, rows, err = c.query(sql)
+        assert err is None
+        return rows
+    finally:
+        c.close()
+
+
+def _my_rows(srv, sql):
+    c = MyClient(srv.host, srv.port)
+    try:
+        _, rows, err = c.query(sql)
+        assert err is None
+        return rows
+    finally:
+        c.close()
+
+
+@pytest.mark.parametrize("name, rows", [
+    ("http_srv", _http_rows), ("ch_srv", _ch_rows),
+    ("pg_srv", _pg_rows), ("my_srv", _my_rows),
+])
+def test_multi_partition_stream_matches_collected(
+    request, engine, streamed_partitions, name, rows,
+):
+    collected = engine.execute(STREAMED).rows
+    got = rows(request.getfixturevalue(name), STREAMED)
+    assert streamed_partitions and streamed_partitions[0] >= 4
+    assert [[str(n), s] for n, s in got] == [[str(n), s] for n, s in collected]
+
+
+def _serving_threads(spark) -> int:
+    threads = spark._jvm.java.lang.Thread.getAllStackTraces().keySet().toArray()
+    return sum(t.getName() == "serve toLocalIterator" for t in threads)
+
+
+def test_abandoned_streams_leave_nothing_behind(spark, engine, http_srv):
+    # Long-lived sockets only: the accumulator server's, and one per
+    # Python worker daemon that earlier UDFs started.
+    sockets = set(os.listdir(session._socket_dir))
+    # A client that hangs up after the first chunk: the server's next
+    # write fails mid-stream, with partitions still unread.
+    big = "SELECT number AS n, repeat('x', 200) AS pad FROM numbers(200000)"
+    qs = urllib.parse.urlencode({"query": big + " FORMAT JSONEachRow"})
+    s = _conn("127.0.0.1", http_srv.server_port)
+    try:
+        s.sendall(f"GET /?{qs} HTTP/1.1\r\nHost: x\r\n\r\n".encode())
+        head = b""
+        while b"\r\n\r\n" not in head:
+            chunk = _recv_some(s)
+            assert chunk, "server closed before the first chunk"
+            head += chunk
+        assert b"Transfer-Encoding: chunked" in head
+    finally:
+        s.close()
+    deadline = time.monotonic() + IO_DEADLINE
+    while engine._inflight and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert any(big in e.query and e.error for e in engine.query_log)
+
+    class Sink:
+        def start(self, cols, types):
+            pass
+
+        def write_row(self, row):
+            pass
+
+    for _ in range(100):
+        engine.execute("SELECT number AS n FROM numbers(8)", stream_to=Sink())
+
+    # The JVM serves each stream from its own thread; one left waiting
+    # would outlive the 15 s accept timeout.
+    deadline = time.monotonic() + IO_DEADLINE
+    while _serving_threads(spark) and time.monotonic() < deadline:
+        time.sleep(0.1)
+    assert _serving_threads(spark) == 0
+    assert not engine._inflight
+    assert set(os.listdir(session._socket_dir)) <= sockets
 
 
 class TestGarbageBytes:
