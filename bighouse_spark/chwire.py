@@ -46,13 +46,13 @@ from bighouse_spark.compress import (
     compress_frame,
     read_frame,
 )
+from bighouse_spark.dialect.schema import split_top_level
 from bighouse_spark.engine import BigHouseEngine, QueryRequest
 from bighouse_spark.netutil import NoDelayMixin
 from bighouse_spark.formats import (
     _leb128,
     _leb128_str,
     _render_native,
-    _split_type_args,
     rowbinary_decoder,
 )
 from bighouse_spark.session_settings import (
@@ -233,7 +233,7 @@ def _read_column(src: _Source, t: str, nrows: int) -> list:
                 out.append(flat[start:off])
                 start = off
             return out
-        k_t, v_t = _split_type_args(t[4:-1])
+        k_t, v_t = split_top_level(t[4:-1])
         keys = _read_column(src, k_t, total)
         vals = _read_column(src, v_t, total)
         out = []
@@ -245,7 +245,7 @@ def _read_column(src: _Source, t: str, nrows: int) -> list:
     if t.startswith("Tuple("):
         from bighouse_spark.formats import _native_field_type
 
-        fts = [_native_field_type(f) for f in _split_type_args(t[6:-1])]
+        fts = [_native_field_type(f) for f in split_top_level(t[6:-1])]
         cols = [_read_column(src, ft, nrows) for ft in fts]
         return [tuple(r) for r in zip(*cols)] if nrows else []
     if t.startswith("LowCardinality("):

@@ -82,10 +82,10 @@ def ch_type_to_spark(ch_type: str) -> T.DataType:
     if low.startswith("array(") and s.endswith(")"):
         return T.ArrayType(ch_type_to_spark(s[6:-1]))
     if low.startswith("map(") and s.endswith(")"):
-        k, v = _split_top_level(s[4:-1])
+        k, v = _split_pair(s[4:-1])
         return T.MapType(ch_type_to_spark(k), ch_type_to_spark(v))
     if low.startswith("tuple(") and s.endswith(")"):
-        parts = _split_commas(s[6:-1])
+        parts = split_top_level(s[6:-1])
         fields = []
         for i, part in enumerate(parts):
             name, _, typ = part.strip().partition(" ")
@@ -105,14 +105,14 @@ def ch_type_to_spark(ch_type: str) -> T.DataType:
     if low.startswith("nested(") and s.endswith(")"):
         # CH Nested ≡ parallel arrays of a tuple: array<struct<...>>.
         fields = []
-        for part in _split_commas(s[7:-1]):
+        for part in split_top_level(s[7:-1]):
             name, _, typ = part.strip().partition(" ")
             fields.append(T.StructField(name, ch_type_to_spark(typ)))
         return T.ArrayType(T.StructType(fields))
     if low.startswith("simpleaggregatefunction(") and s.endswith(")"):
         # The state IS the value (same contract as the -SimpleState
         # combinator): type is the wrapped value type.
-        _, typ = _split_top_level(s[24:-1])
+        _, typ = _split_pair(s[24:-1])
         return ch_type_to_spark(typ)
     if low.startswith("aggregatefunction("):
         raise ValueError(
@@ -204,6 +204,37 @@ def _mask_string_literals(sql: str) -> str:
     return "".join(masked)
 
 
+def split_top_level(s: str) -> list[str]:
+    r"""Split ``s`` on the commas outside quotes and outside ``()`` /
+    ``[]`` nesting — the one top-level splitter for argument lists,
+    type parameters, column lists, assignments and SET pairs. Inside
+    a quote span (single, double or backtick) a backslash escapes the
+    next character, and a doubled quote closes and reopens the span,
+    so ``'it''s, x'`` and ``'it\'s, x'`` stay one part. Parts are
+    stripped; a trailing comma adds no empty part."""
+    parts, depth, start, quote, escaped = [], 0, 0, None, False
+    for i, c in enumerate(s):
+        if escaped:
+            escaped = False
+        elif quote:
+            if c == "\\":
+                escaped = True
+            elif c == quote:
+                quote = None
+        elif c in "'\"`":
+            quote = c
+        elif c in "([":
+            depth += 1
+        elif c in ")]":
+            depth -= 1
+        elif c == "," and depth == 0:
+            parts.append(s[start:i].strip())
+            start = i + 1
+    if start < len(s):
+        parts.append(s[start:].strip())
+    return parts
+
+
 # Per-column clause keywords CH allows after the type in a column
 # declaration. DEFAULT is honored (recorded by the engine and used
 # for partial-INSERT fills / CLEAR COLUMN); CODEC/COMMENT/TTL are
@@ -267,7 +298,7 @@ def parse_column_item(item: str) -> tuple[str, str, dict[str, str]]:
 def parse_schema_defaults(schema: str) -> dict[str, str]:
     """``col -> DEFAULT expression`` for columns declaring one."""
     out: dict[str, str] = {}
-    for item in _split_commas(schema):
+    for item in split_top_level(schema):
         if not item.strip():
             continue
         name, _ch_type, clauses = parse_column_item(item)
@@ -287,7 +318,7 @@ def parse_schema_string(schema: str) -> T.StructType:
     schema-on-read semantics).
     """
     fields = []
-    for item in _split_commas(schema):
+    for item in split_top_level(schema):
         item = item.strip()
         if not item:
             continue
@@ -305,32 +336,11 @@ def parse_schema_string(schema: str) -> T.StructType:
     return T.StructType(fields)
 
 
-def _split_commas(s: str) -> list[str]:
-    """Split on commas not nested inside (), '', "", or `` —
-    a backtick-quoted column name may itself contain commas."""
-    parts, depth, start, quote = [], 0, 0, None
-    for i, c in enumerate(s):
-        if quote:
-            if c == quote:
-                quote = None
-        elif c in "'\"`":
-            quote = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        elif c == "," and depth == 0:
-            parts.append(s[start:i])
-            start = i + 1
-    parts.append(s[start:])
-    return parts
-
-
-def _split_top_level(s: str) -> tuple[str, str]:
-    parts = _split_commas(s)
+def _split_pair(s: str) -> tuple[str, str]:
+    parts = split_top_level(s)
     if len(parts) != 2:
         raise ValueError(f"expected two type args in {s!r}")
-    return parts[0].strip(), parts[1].strip()
+    return parts[0], parts[1]
 
 
 _SPARK_TO_CH = {

@@ -35,6 +35,7 @@ import threading
 import random as _random
 import time as _time
 import uuid as _uuid
+import weakref
 from collections import OrderedDict
 from dataclasses import dataclass, field
 
@@ -541,7 +542,7 @@ def _rewrite_if_combinators(sql: str) -> str:
                     elif c == ")":
                         depth -= 1
                     j += 1
-                real = _split_args_top(out[end + pm.end():j - 1])
+                real = split_top_level(out[end + pm.end():j - 1])
                 if len(real) < 2:
                     raise ValueError(f"{fn}(...)(args, cond): missing cond")
                 cond = real[-1]
@@ -611,7 +612,7 @@ def _rewrite_suffix_combinators(sql: str) -> str:
             elif c == ")":
                 depth -= 1
             j += 1
-        return end + pm.end(), j, _split_args_top(s[end + pm.end():j - 1])
+        return end + pm.end(), j, split_top_level(s[end + pm.end():j - 1])
 
     out = sql
     for name in _IF_COMBINATOR_BASES + ("count",):
@@ -927,14 +928,14 @@ def _rewrite_tuple_ops(sql: str) -> str:
             open_l = _match_paren_back(sql, close_l)
             if open_l is None or _is_call(open_l):
                 continue
-            left = _split_args_top(sql[open_l + 1 : close_l])
+            left = split_top_level(sql[open_l + 1 : close_l])
             if len(left) < 2 or _is_subquery(left):
                 continue
             open_r = m.end() - 1
             close_r = _match_paren_fwd(sql, open_r)
             if close_r is None:
                 continue
-            elems = _split_args_top(sql[open_r + 1 : close_r])
+            elems = split_top_level(sql[open_r + 1 : close_r])
             tuples = []
             ok = True
             for e in elems:
@@ -943,7 +944,7 @@ def _rewrite_tuple_ops(sql: str) -> str:
                         and _match_paren_fwd(e, 0) == len(e) - 1):
                     ok = False
                     break
-                vals = _split_args_top(e[1:-1])
+                vals = split_top_level(e[1:-1])
                 if len(vals) != len(left):
                     ok = False
                     break
@@ -971,14 +972,14 @@ def _rewrite_tuple_ops(sql: str) -> str:
             open_l = _match_paren_back(sql, close_l)
             if open_l is None or _is_call(open_l):
                 continue
-            left = _split_args_top(sql[open_l + 1 : close_l])
+            left = split_top_level(sql[open_l + 1 : close_l])
             if len(left) < 2 or _is_subquery(left):
                 continue
             open_r = m.end() - 1
             close_r = _match_paren_fwd(sql, open_r)
             if close_r is None:
                 continue
-            right = _split_args_top(sql[open_r + 1 : close_r])
+            right = split_top_level(sql[open_r + 1 : close_r])
             if len(right) != len(left) or _is_subquery(right):
                 continue
             conj = " AND ".join(
@@ -1511,7 +1512,7 @@ def _rewrite_time_decayed(out: str) -> str:
                 )
             args_start = end + m_args.end() - 1
             args_end = _scan_balanced(out, args_start)
-            args = _split_args_top(out[args_start + 1:args_end - 1])
+            args = split_top_level(out[args_start + 1:args_end - 1])
             m_over = re.match(r"\s*OVER\b\s*", out[args_end:], re.I)
             if not m_over:
                 raise ValueError(
@@ -2331,9 +2332,9 @@ def _struct_literal_fields(s: str) -> list[str] | None:
     s = s.strip()
     for head in ("struct(", "tuple("):  # pre- and post-rewrite forms
         if s.lower().startswith(head) and s.endswith(")"):
-            return _split_args_top(s[len(head):-1])
+            return split_top_level(s[len(head):-1])
     if s.startswith("(") and s.endswith(")"):
-        parts = _split_args_top(s[1:-1])
+        parts = split_top_level(s[1:-1])
         return parts if len(parts) > 1 else None
     return None
 
@@ -7650,7 +7651,7 @@ def _point_in_polygon(a: list) -> str:
         raise ValueError(
             "pointInPolygon: pass the point as a (x, y) tuple"
         )
-    px, py = (s.strip() for s in _split_args_top(inner))
+    px, py = (s.strip() for s in split_top_level(inner))
     poly = a[1].strip()
     if poly.startswith("[") and poly.endswith("]"):
         body = poly[1:-1]
@@ -7663,13 +7664,13 @@ def _point_in_polygon(a: list) -> str:
             "vertices and apply the even-odd rule with a windowed fold"
         )
     xs, ys = [], []
-    for v in _split_args_top(body):
+    for v in split_top_level(body):
         v = v.strip()
         if not (v.startswith("(") and v.endswith(")")):
             raise ValueError(
                 "pointInPolygon: polygon vertices must be (x, y) tuples"
             )
-        x, y = (s.strip() for s in _split_args_top(v[1:-1]))
+        x, y = (s.strip() for s in split_top_level(v[1:-1]))
         xs.append(f"CAST({x} AS DOUBLE)")
         ys.append(f"CAST({y} AS DOUBLE)")
     n = len(xs)
@@ -8241,7 +8242,7 @@ def _tuple_of_intervals(a: list, op: str) -> str:
             "addTupleOfIntervals: pass a literal tuple of INTERVALs"
         )
     out = f"({a[0]})"
-    for iv in _split_args_top(t[1:-1]):
+    for iv in split_top_level(t[1:-1]):
         out = f"({out} {op} ({iv.strip()}))"
     return out
 
@@ -9583,7 +9584,7 @@ def _render_param(name: str, ch_type: str, raw: str) -> str:
                 f"query parameter {{{name}:{ch_type}}}: expected a "
                 f"[...] array literal, got {raw!r}"
             )
-        elems = _split_args_top(body[1:-1])
+        elems = split_top_level(body[1:-1])
         rendered = []
         for e in elems:
             e = e.strip()
@@ -9829,7 +9830,7 @@ def transpile(sql: str, spark: SparkSession | None = None) -> TranspileResult:
     if spark is not None and re.search(
         r"\bbh_(ipv6|is_ipv6|ipv4_to|ip_in_range)", out
     ):
-        _ensure_ip_udfs(spark)
+        _ensure_udfs(spark, "ipfuncs")
     if spark is not None and re.search(
         r"\bbh_(damerau|jaro|base58|base32|punycode|erf|erfc|lgamma|tgamma"
         r"|jumphash|kostikhash"
@@ -9840,9 +9841,9 @@ def transpile(sql: str, spark: SparkSession | None = None) -> TranspileResult:
         r"|json_merge_patch)",
         out,
     ):
-        _ensure_misc_udfs(spark)
+        _ensure_udfs(spark, "miscfuncs")
     if spark is not None and "bh_porter_stem" in out:
-        _ensure_porter_udfs(spark)
+        _ensure_udfs(spark, "porter")
     return TranspileResult(sql=out, views=views, settings=settings, dropped_settings=dropped)
 
 
@@ -9850,8 +9851,17 @@ def transpile(sql: str, spark: SparkSession | None = None) -> TranspileResult:
 # as built-in column expressions, so they run as Arrow-batched pandas
 # UDFs over the stdlib ``ipaddress`` module (vectorized transfer; the
 # per-value work is a tight C-accelerated parse). Registered once per
-# SparkSession, lazily, only when a query actually uses them.
-_IP_UDF_SESSIONS: set[int] = set()
+# SparkSession, lazily, only when a query actually uses them — as are
+# the string-distance / codec / special-math UDFs (miscfuncs) and the
+# Porter stemmer.
+#
+# The registration memo keys on the session OBJECT, held weakly (the
+# sources.readers schema-memo pattern): an id() reused by a session
+# created after another was collected must not read as registered.
+# Values are per-module registration variants.
+_UDF_SESSIONS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
+    weakref.WeakKeyDictionary()
+)
 
 
 def _pickle_udf_module_by_value(module) -> None:
@@ -9863,54 +9873,28 @@ def _pickle_udf_module_by_value(module) -> None:
     ship_by_value(module)
 
 
-def _ensure_ip_udfs(spark: SparkSession) -> None:
-    if id(spark) in _IP_UDF_SESSIONS:
+def _ensure_udfs(spark: SparkSession, module_name: str) -> None:
+    """Register ``bighouse_spark.functions.<module_name>``'s ``ALL``
+    UDFs on ``spark`` once."""
+    registered = _UDF_SESSIONS.setdefault(spark, {})
+    if module_name in registered:
         return
-    from bighouse_spark.functions import ipfuncs
+    import importlib
 
-    _pickle_udf_module_by_value(ipfuncs)
-    for name, fn in ipfuncs.ALL.items():
+    module = importlib.import_module(
+        f"bighouse_spark.functions.{module_name}"
+    )
+    _pickle_udf_module_by_value(module)
+    for name, fn in module.ALL.items():
         spark.udf.register(name, fn)
-    _IP_UDF_SESSIONS.add(id(spark))
-
-
-# Same lazy-registration contract for the string-distance / codec /
-# special-math UDFs (damerauLevenshteinDistance, jaro*, base58*,
-# punycode*, erf/erfc/lgamma/tgamma).
-_MISC_UDF_SESSIONS: set[int] = set()
-
-
-def _ensure_misc_udfs(spark: SparkSession) -> None:
-    if id(spark) in _MISC_UDF_SESSIONS:
-        return
-    from bighouse_spark.functions import miscfuncs
-
-    _pickle_udf_module_by_value(miscfuncs)
-    for name, fn in miscfuncs.ALL.items():
-        spark.udf.register(name, fn)
-    _MISC_UDF_SESSIONS.add(id(spark))
-
-
-_PORTER_UDF_SESSIONS: set[int] = set()
-
-
-def _ensure_porter_udfs(spark: SparkSession) -> None:
-    if id(spark) in _PORTER_UDF_SESSIONS:
-        return
-    from bighouse_spark.functions import porter
-
-    _pickle_udf_module_by_value(porter)
-    for name, fn in porter.ALL.items():
-        spark.udf.register(name, fn)
-    _PORTER_UDF_SESSIONS.add(id(spark))
+    registered[module_name] = True
 
 
 # Bit-exact CityHash64 v1.0.2 (the fidelity path behind
 # cityHash64Exact / SETTINGS exact_cityhash=1) — lazy like the
-# others, but keyed on the UTC-equivalence answer too: a later SET
+# others, but memoized with the UTC-equivalence answer: a later SET
 # of spark.sql.session.timeZone must re-register the UDF or
 # datetime hashing keeps a stale parity assumption.
-_CITYHASH_UDF_SESSIONS: dict[int, bool] = {}
 
 
 def _tz_is_utc_equivalent(tz: str) -> bool:
@@ -9946,41 +9930,15 @@ def _ensure_cityhash_udfs(spark: SparkSession) -> None:
     # and must re-register the UDF (stale-parity fix, ADVICE r6).
     tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
     allow_dt = _tz_is_utc_equivalent(tz)
-    if _CITYHASH_UDF_SESSIONS.get(id(spark)) == allow_dt:
+    registered = _UDF_SESSIONS.setdefault(spark, {})
+    if registered.get("cityhash") == allow_dt:
         return
     from bighouse_spark.functions import cityhash
 
     _pickle_udf_module_by_value(cityhash)
     fn = cityhash.make_cityhash64_row_udf(allow_datetime=allow_dt)
     spark.udf.register("bh_cityhash64_row", fn)
-    _CITYHASH_UDF_SESSIONS[id(spark)] = allow_dt
-
-
-def _split_args_top(s: str) -> list[str]:
-    """Split on top-level commas (quotes and (), [] respected)."""
-    parts, cur, depth, quote = [], [], 0, None
-    for c in s:
-        if quote:
-            cur.append(c)
-            if c == quote:
-                quote = None
-        elif c in "'\"":
-            quote = c
-            cur.append(c)
-        elif c in "([":
-            depth += 1
-            cur.append(c)
-        elif c in ")]":
-            depth -= 1
-            cur.append(c)
-        elif c == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(c)
-    if cur:
-        parts.append("".join(cur).strip())
-    return parts
+    registered["cityhash"] = allow_dt
 
 
 _QUOTED_SPAN = re.compile(
@@ -10324,7 +10282,7 @@ def _rewrite_ch_misc(sql: str) -> str:
             elif c == ")":
                 depth -= 1
             j += 1
-        items = _split_args_top(out[m.end():j - 1])
+        items = split_top_level(out[m.end():j - 1])
         names, exprs = [], []
         for it in items:
             em = re.match(r"(.+)\s+AS\s+(\w+)\s*$", it, re.IGNORECASE | re.DOTALL)
@@ -10341,7 +10299,7 @@ def _rewrite_ch_misc(sql: str) -> str:
     m = re.match(r"^\s*WITH\s+(.+?)\s+(SELECT\b.*)$", out,
                  re.IGNORECASE | re.DOTALL)
     if m:
-        items = _split_args_top(m.group(1))
+        items = split_top_level(m.group(1))
         scalars: list[tuple[str, str]] = []
         is_scalar_form = True
         for it in items:
@@ -11355,7 +11313,7 @@ def _rewrite_parametric(sql: str) -> str:
                 elif c == ")":
                     depth -= 1
                 i += 1
-            args = _split_args_top(out[end + 1:i - 1])
+            args = split_top_level(out[end + 1:i - 1])
             if len(args) != 2:
                 raise ValueError(
                     "approx_top_sum(N)(column, weight) takes two "
@@ -11501,7 +11459,7 @@ def _rewrite_parametric(sql: str) -> str:
                 elif out[i] == ")":
                     depth -= 1
                 i += 1
-            inner = _split_args_top(out[end + 1:i - 1])
+            inner = split_top_level(out[end + 1:i - 1])
             out = (
                 out[:start]
                 + f"{plain}({', '.join(params)})({inner[0]})"
@@ -11558,7 +11516,7 @@ def _rewrite_parametric(sql: str) -> str:
                 elif c == ")":
                     depth -= 1
                 j += 1
-            real = _split_args_top(out[end + span_m.end():j - 1])
+            real = split_top_level(out[end + span_m.end():j - 1])
             if j < len(out) and out[j] == "(":
                 # name(a)(b)(c): a THIRD paren group would splice into
                 # malformed SQL (e.g. quantileGK written with the
@@ -11684,6 +11642,7 @@ def _mask_quoted_spans(sql: str) -> str:
 # the engine and tests.
 from bighouse_spark.dialect.schema import (  # noqa: E402,F401
     _mask_string_literals,
+    split_top_level,
 )
 
 
@@ -12885,7 +12844,7 @@ def _detach_interpolate(sql: str) -> tuple[str, list[tuple[str, str]] | None]:
         return sql, None  # not a balanced final clause
     body = r[1:j]
     items: list[tuple[str, str]] = []
-    for part in _split_args_top(body):
+    for part in split_top_level(body):
         part = part.strip()
         if not part:
             continue
@@ -13686,7 +13645,7 @@ def parse_inline_payload(spark, fmt_name: str, data: str, struct=None):
             )
         names = ", ".join(f.name for f in struct.fields)
         rows_sql = ", ".join(
-            _rewrite_array_literals(r) for r in _split_args_top(data)
+            _rewrite_array_literals(r) for r in split_top_level(data)
         )
         df = spark.sql(
             f"SELECT * FROM VALUES {rows_sql} AS __v({names})"

@@ -34,6 +34,7 @@ from bighouse_spark.dialect.transpile import (
     _mask_string_literals,
     _sub_outside_quotes,
     release_spool_pins,
+    split_top_level,
     transpile,
 )
 from bighouse_spark.operators.caching import release_tracked
@@ -46,35 +47,6 @@ from bighouse_spark.session_settings import parse_set_statement
 # the OUTERMOST one unwinds), ``scope`` is the running statement's
 # conf scope, ``logged_error`` the failure already written to the log.
 _REQ_LOCAL = threading.local()
-
-
-def _split_top_level(s: str) -> list[str]:
-    """Split on commas outside parens/brackets/quotes (for ALTER
-    UPDATE assignment lists). Backticks are tracked too — a
-    backticked column name may contain a comma."""
-    parts, cur, depth, quote = [], [], 0, None
-    for c in s:
-        if quote:
-            cur.append(c)
-            if c == quote:
-                quote = None
-        elif c in "'\"`":
-            quote = c
-            cur.append(c)
-        elif c in "([":
-            depth += 1
-            cur.append(c)
-        elif c in ")]":
-            depth -= 1
-            cur.append(c)
-        elif c == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(c)
-    if cur:
-        parts.append("".join(cur).strip())
-    return parts
 
 
 @dataclass
@@ -129,6 +101,9 @@ class QueryLogEntry:
     row_count: int
     error: str | None = None
     cached: bool = False
+    # ClickHouse's statement kind (Select, Insert, Create, Alter, ...):
+    # the dispatch key of the router (``BigHouseEngine._ROUTES``).
+    query_kind: str = "Select"
 
 
 @dataclass
@@ -168,11 +143,13 @@ class _Statement:
     """One statement as the lifecycle tracks it. Routing rewrites
     replace ``request``, so the log records the text that ran;
     ``views`` are temp views dropped when the statement ends;
-    ``label`` is what a failure logs as ``transpiled``."""
+    ``label`` is what a failure logs as ``transpiled``; ``kind`` is
+    the logged ``query_kind``."""
 
     request: QueryRequest
     views: list[str] = field(default_factory=list)
     label: str = ""
+    kind: str = "Select"
 
 
 def _nanos_columns(path: str) -> list[str]:
@@ -503,11 +480,12 @@ class BigHouseEngine:
         def _query_log() -> None:
             schema = (
                 "query string, transpiled string, elapsed_sec double, "
-                "row_count bigint, error string, cached boolean"
+                "row_count bigint, error string, cached boolean, "
+                "query_kind string"
             )
             rows = [
                 (e.query, e.transpiled, e.elapsed_sec, e.row_count,
-                 e.error, e.cached)
+                 e.error, e.cached, e.query_kind)
                 # list(): a C-level copy no concurrent append can
                 # interleave with (iterating a deque that another
                 # request thread appends to raises)
@@ -918,14 +896,33 @@ class BigHouseEngine:
         "system_functions", "system_aggregate_function_combinators",
     })
 
+    # Statement patterns. Every one matches the statement's
+    # ``_mask_string_literals`` copy (``_route``); groups that may hold
+    # literal text are re-sliced from the raw statement by span
+    # (``_raw_groups``).
     _INTO_OUTFILE_RE = re.compile(
         r"^(.*?)\s+INTO\s+OUTFILE\s+'([^']+)'"
         r"(?:\s+(TRUNCATE))?(?:\s+FORMAT\s+(\w+))?\s*$",
         re.IGNORECASE | re.DOTALL,
     )
+    # ``ON CLUSTER c``: a quoted cluster name reaches the patterns as a
+    # masked literal, so it is matched as one quote span.
+    _ON_CLUSTER = r"(?:\s+ON\s+CLUSTER\s+(?:'[^']*'|\S+))?"
+    # A partition value: a quoted id (''-doubling and backslash
+    # escapes) or a bare token, which may hold masked literals
+    # (``tuple('x')``).
+    _PARTITION_VALUE = (
+        r"(?:'((?:[^'\\]|\\.|'')*)'|((?:[^\s']|'[^']*')+))"
+    )
+    # Query parameters bind in statement text only: the inline data
+    # payload of ``INSERT ... FORMAT <fmt>`` is split off first.
+    _PAYLOAD_SPLIT_RE = re.compile(
+        r"^(\s*INSERT\s+INTO\b.*?\bFORMAT\s+\w+)(\s.+)$",
+        re.IGNORECASE | re.DOTALL,
+    )
     _INSERT_FN_RE = re.compile(
         r"^\s*INSERT\s+INTO\s+FUNCTION\s+(s3|file|url)\s*\(\s*'([^']+)'\s*"
-        r"(?:,\s*'(\w+)'\s*)?\)\s*(.+)$",
+        r"(?:,\s*'([^']*)'\s*)?\)\s*(.+)$",
         re.IGNORECASE | re.DOTALL,
     )
     _INSERT_TBL_RE = re.compile(
@@ -953,75 +950,18 @@ class BigHouseEngine:
         r"\s+(.+)$",
         re.IGNORECASE | re.DOTALL,
     )
+    # ``ALTER TABLE name [ON CLUSTER c]``, matched once per ALTER. The
+    # sub-command patterns below match where it ends
+    # (``pattern.match(masked, head.end())``), so their group offsets
+    # index the whole statement.
+    _ALTER_HEAD_RE = re.compile(
+        r"\s*ALTER\s+TABLE\s+[`\"]?(\w+)[`\"]?" + _ON_CLUSTER + r"\s+",
+        re.IGNORECASE,
+    )
     _ALTER_COLUMN_RE = re.compile(
-        r"^\s*ALTER\s+TABLE\s+[`\"]?(\w+)[`\"]?(?:\s+ON\s+CLUSTER\s+\S+)?"
-        r"\s+(ADD|DROP|RENAME|MODIFY)\s+COLUMN\s+(?:IF\s+(?:NOT\s+)?EXISTS\s+)?"
+        r"(ADD|DROP|RENAME|MODIFY)\s+COLUMN\s+(?:IF\s+(?:NOT\s+)?EXISTS\s+)?"
         r"[`\"]?(\w+)[`\"]?\s*(.*?)\s*$",
         re.IGNORECASE | re.DOTALL,
-    )
-    _ALTER_DELETE_RE = re.compile(
-        r"^\s*ALTER\s+TABLE\s+[`\"]?(\w+)[`\"]?(?:\s+ON\s+CLUSTER\s+\S+)?"
-        r"\s+DELETE\s+WHERE\s+(.+)$",
-        re.IGNORECASE | re.DOTALL,
-    )
-    # MergeTree maintenance family (round 11): data-skipping indices,
-    # TTL, CLEAR COLUMN, FREEZE snapshots, PROJECTION refusal.
-    _ALTER_INDEX_RE = re.compile(
-        r"^\s*ALTER\s+TABLE\s+[`\"]?(\w+)[`\"]?(?:\s+ON\s+CLUSTER\s+\S+)?"
-        r"\s+(ADD|DROP|MATERIALIZE|CLEAR)\s+INDEX\s+"
-        r"(?:IF\s+(?:NOT\s+)?EXISTS\s+)?[`\"]?(\w+)[`\"]?\s*(.*?)\s*$",
-        re.IGNORECASE | re.DOTALL,
-    )
-    _ALTER_PROJECTION_RE = re.compile(
-        r"^\s*ALTER\s+TABLE\s+[`\"]?(\w+)[`\"]?(?:\s+ON\s+CLUSTER\s+\S+)?"
-        r"\s+(?:ADD|DROP|MATERIALIZE|CLEAR)\s+PROJECTION\b",
-        re.IGNORECASE,
-    )
-    _ALTER_TTL_RE = re.compile(
-        r"^\s*ALTER\s+TABLE\s+[`\"]?(\w+)[`\"]?(?:\s+ON\s+CLUSTER\s+\S+)?"
-        r"\s+(?:(REMOVE)\s+TTL|MODIFY\s+TTL\s+(.+))\s*$",
-        re.IGNORECASE | re.DOTALL,
-    )
-    _ALTER_CLEAR_COLUMN_RE = re.compile(
-        r"^\s*ALTER\s+TABLE\s+[`\"]?(\w+)[`\"]?(?:\s+ON\s+CLUSTER\s+\S+)?"
-        r"\s+CLEAR\s+COLUMN\s+(?:IF\s+EXISTS\s+)?[`\"]?(\w+)[`\"]?"
-        r"(\s+IN\s+PARTITION\b.*)?\s*$",
-        re.IGNORECASE | re.DOTALL,
-    )
-    _ALTER_FREEZE_RE = re.compile(
-        r"^\s*ALTER\s+TABLE\s+[`\"]?(\w+)[`\"]?(?:\s+ON\s+CLUSTER\s+\S+)?"
-        r"\s+FREEZE(?:\s+PARTITION\s+(?:ID\s+)?"
-        r"(?:'((?:[^'\\]|\\.|'')*)'|(\S+?)))?"
-        r"(?:\s+WITH\s+NAME\s+'((?:[^'\\]|\\.|'')+)')?\s*$",
-        re.IGNORECASE,
-    )
-    # Head only — the assignments/condition split is NOT a regex:
-    # the first `.+?\s+WHERE` would split inside an assignment's
-    # string literal ('a WHERE b') or scalar subquery. The router
-    # matches this head on a _mask_string_literals copy, then finds
-    # the first paren-depth-0 WHERE on the masked text and slices
-    # the RAW statement at those offsets (VERDICT r13 #2).
-    _ALTER_UPDATE_HEAD_RE = re.compile(
-        r"^\s*ALTER\s+TABLE\s+[`\"]?(\w+)[`\"]?(?:\s+ON\s+CLUSTER\s+\S+)?"
-        r"\s+UPDATE\s+",
-        re.IGNORECASE,
-    )
-    _DROP_PARTITION_RE = re.compile(
-        r"^\s*ALTER\s+TABLE\s+[`\"]?(\w+)[`\"]?"
-        r"(?:\s+ON\s+CLUSTER\s+\S+)?"
-        r"\s+(DROP|DETACH|ATTACH)\s+PARTITION\s+"
-        r"(?:'((?:[^'\\]|\\.|'')*)'|(\S+))\s*$",
-        re.IGNORECASE,
-    )
-    # CH `ALTER TABLE t DROP DETACHED PARTITION p` — remove a parked
-    # partition from .detached without re-attaching it (the cleanup
-    # half of the DETACH lifecycle, shown in system.detached_parts).
-    _DROP_DETACHED_RE = re.compile(
-        r"^\s*ALTER\s+TABLE\s+[`\"]?(\w+)[`\"]?"
-        r"(?:\s+ON\s+CLUSTER\s+\S+)?"
-        r"\s+DROP\s+DETACHED\s+PARTITION\s+"
-        r"(?:'((?:[^'\\]|\\.|'')*)'|(\S+))\s*$",
-        re.IGNORECASE,
     )
     # CH cross-table partition management — the production backfill
     # pattern (swap a staged partition in without rewriting the
@@ -1030,27 +970,102 @@ class BigHouseEngine:
     # PARTITION p TO TABLE dst` (src is the statement table). All
     # three are O(one partition directory) file operations.
     _PARTITION_FROM_RE = re.compile(
-        r"^\s*ALTER\s+TABLE\s+[`\"]?(\w+)[`\"]?"
-        r"(?:\s+ON\s+CLUSTER\s+\S+)?"
-        r"\s+(ATTACH|REPLACE|MOVE)\s+PARTITION\s+(?:ID\s+)?"
-        r"(?:'((?:[^'\\]|\\.|'')*)'|(\S+))"
-        r"\s+(?:FROM|TO\s+TABLE)\s+[`\"]?(\w+)[`\"]?\s*$",
+        r"(ATTACH|REPLACE|MOVE)\s+PARTITION\s+(?:ID\s+)?" + _PARTITION_VALUE
+        + r"\s+(?:FROM|TO\s+TABLE)\s+[`\"]?(\w+)[`\"]?\s*$",
         re.IGNORECASE,
+    )
+    # CH `ALTER TABLE t DROP DETACHED PARTITION p` — remove a parked
+    # partition from .detached without re-attaching it (the cleanup
+    # half of the DETACH lifecycle, shown in system.detached_parts).
+    _DROP_DETACHED_RE = re.compile(
+        r"DROP\s+DETACHED\s+PARTITION\s+" + _PARTITION_VALUE + r"\s*$",
+        re.IGNORECASE,
+    )
+    _DROP_PARTITION_RE = re.compile(
+        r"(DROP|DETACH|ATTACH)\s+PARTITION\s+" + _PARTITION_VALUE + r"\s*$",
+        re.IGNORECASE,
+    )
+    # MergeTree maintenance family (round 11): data-skipping indices,
+    # TTL, CLEAR COLUMN, FREEZE snapshots, PROJECTION refusal.
+    _ALTER_PROJECTION_RE = re.compile(
+        r"(?:ADD|DROP|MATERIALIZE|CLEAR)\s+PROJECTION\b", re.IGNORECASE
+    )
+    _ALTER_INDEX_RE = re.compile(
+        r"(ADD|DROP|MATERIALIZE|CLEAR)\s+INDEX\s+"
+        r"(?:IF\s+(?:NOT\s+)?EXISTS\s+)?[`\"]?(\w+)[`\"]?\s*(.*?)\s*$",
+        re.IGNORECASE | re.DOTALL,
+    )
+    _MATERIALIZE_TTL_RE = re.compile(r"MATERIALIZE\s+TTL\s*$", re.IGNORECASE)
+    _MODIFY_ORDER_BY_RE = re.compile(
+        r"MODIFY\s+ORDER\s+BY\s+(\((?:[^()]|\([^()]*\))*\)|\S+)\s*$",
+        re.IGNORECASE,
+    )
+    _ALTER_TTL_RE = re.compile(
+        r"(?:(REMOVE)\s+TTL|MODIFY\s+TTL\s+(.+))\s*$",
+        re.IGNORECASE | re.DOTALL,
+    )
+    _ALTER_CLEAR_COLUMN_RE = re.compile(
+        r"CLEAR\s+COLUMN\s+(?:IF\s+EXISTS\s+)?[`\"]?(\w+)[`\"]?"
+        r"(\s+IN\s+PARTITION\b.*)?\s*$",
+        re.IGNORECASE | re.DOTALL,
+    )
+    _ALTER_FREEZE_RE = re.compile(
+        r"FREEZE(?:\s+PARTITION\s+(?:ID\s+)?"
+        r"(?:'((?:[^'\\]|\\.|'')*)'|((?:[^\s']|'[^']*')+?)))?"
+        r"(?:\s+WITH\s+NAME\s+'((?:[^'\\]|\\.|'')+)')?\s*$",
+        re.IGNORECASE,
+    )
+    _ALTER_UNFREEZE_RE = re.compile(
+        r"UNFREEZE(?:\s+PARTITION\s+(?:ID\s+)?(?:[^\s']|'[^']*')+)?"
+        r"\s+WITH\s+NAME\s+'((?:[^'\\]|\\.|'')+)'\s*$",
+        re.IGNORECASE,
+    )
+    _ALTER_FETCH_RE = re.compile(r"FETCH\s+PARTITION\b", re.IGNORECASE)
+    # CH `ALTER TABLE t UPDATE/DELETE ... IN PARTITION p WHERE c`:
+    # restrict the mutation to one partition. Folded into the WHERE
+    # as an ANDed partition-key predicate before the mutation
+    # patterns match (the engine tracks PARTITION BY per table).
+    _IN_PARTITION_RE = re.compile(
+        r"(UPDATE\s+.+?|DELETE)\s+IN\s+PARTITION\s+(?:ID\s+)?"
+        + _PARTITION_VALUE + r"\s+WHERE\s+(.+)$",
+        re.IGNORECASE | re.DOTALL,
+    )
+    _ALTER_DELETE_RE = re.compile(
+        r"DELETE\s+WHERE\s+(.+)$", re.IGNORECASE | re.DOTALL
+    )
+    # Head only — the assignments/condition split is NOT a regex:
+    # the first `.+?\s+WHERE` would split inside an assignment's
+    # scalar subquery. The router finds the first paren-depth-0
+    # WHERE on the masked text and slices the RAW statement at those
+    # offsets (VERDICT r13 #2).
+    _ALTER_UPDATE_RE = re.compile(r"UPDATE\s+", re.IGNORECASE)
+    # terminal '([^']*)'$ — a doubled-quote comment fails LOUD
+    _COMMENT_COLUMN_RE = re.compile(
+        r"COMMENT\s+COLUMN\s+(IF\s+EXISTS\s+)?[`\"]?(\w+)[`\"]?"
+        r"\s+'([^']*)'\s*$",
+        re.IGNORECASE,
+    )
+    _ALTER_SETTING_RE = re.compile(
+        r"(?:MODIFY|RESET)\s+SETTING\s+.+$", re.IGNORECASE | re.DOTALL
     )
     _DROP_TRUNCATE_RE = re.compile(
         r"^\s*(DROP|TRUNCATE)\s+TABLE\s+(IF\s+EXISTS\s+)?"
-        r"[`\"]?(\w+)[`\"]?(?:\s+ON\s+CLUSTER\s+\S+)?\s*$",
+        r"[`\"]?(\w+)[`\"]?" + _ON_CLUSTER + r"\s*$",
+        re.IGNORECASE,
+    )
+    _CREATE_OR_REPLACE_RE = re.compile(
+        r"^(\s*CREATE\s+)OR\s+REPLACE\s+(TABLE\s+[`\"]?(\w+))",
         re.IGNORECASE,
     )
     _CREATE_TABLE_HEAD_RE = re.compile(
         r"^\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?"
-        r"[`\"]?(\w+)[`\"]?(?:\s+ON\s+CLUSTER\s+\S+)?\s*\(",
+        r"[`\"]?(\w+)[`\"]?" + _ON_CLUSTER + r"\s*\(",
         re.IGNORECASE,
     )
     _CTAS_RE = re.compile(
         r"^\s*CREATE\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?"
-        r"[`\"]?(\w+)[`\"]?(?:\s+ON\s+CLUSTER\s+\S+)?"
-        r"(?:\s+ENGINE\s*=\s*\w+(?:\([^)]*\))?)?"
+        r"[`\"]?(\w+)[`\"]?" + _ON_CLUSTER
+        + r"(?:\s+ENGINE\s*=\s*\w+(?:\([^)]*\))?)?"
         r"(?:\s+PARTITION\s+BY\s+(\((?:[^()]|\([^()]*\))*\)|\S+))?"
         r"(?:\s+ORDER\s+BY\s+(\((?:[^()]|\([^()]*\))*\)|\S+(?:\s*\(\s*\))?))?"
         r"(?:\s+PRIMARY\s+KEY\s+(?:\((?:[^()]|\([^()]*\))*\)|\S+))?"
@@ -1059,8 +1074,8 @@ class BigHouseEngine:
     )
     _CREATE_VIEW_RE = re.compile(
         r"^\s*CREATE\s+(?:OR\s+REPLACE\s+)?VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-        r"[`\"]?(\w+)[`\"]?(?:\s+ON\s+CLUSTER\s+\S+)?"
-        r"\s+AS\s+(SELECT\b.+|WITH\b.+)$",
+        r"[`\"]?(\w+)[`\"]?" + _ON_CLUSTER
+        + r"\s+AS\s+(SELECT\b.+|WITH\b.+)$",
         re.IGNORECASE | re.DOTALL,
     )
     _DROP_VIEW_RE = re.compile(
@@ -1069,12 +1084,12 @@ class BigHouseEngine:
     )
     _RENAME_RE = re.compile(
         r"^\s*RENAME\s+TABLE\s+[`\"]?(\w+)[`\"]?\s+TO\s+[`\"]?(\w+)[`\"]?"
-        r"(?:\s+ON\s+CLUSTER\s+\S+)?\s*$",
+        + _ON_CLUSTER + r"\s*$",
         re.IGNORECASE,
     )
     _EXCHANGE_RE = re.compile(
         r"^\s*EXCHANGE\s+TABLES\s+[`\"]?(\w+)[`\"]?\s+AND\s+"
-        r"[`\"]?(\w+)[`\"]?(?:\s+ON\s+CLUSTER\s+\S+)?\s*$",
+        r"[`\"]?(\w+)[`\"]?" + _ON_CLUSTER + r"\s*$",
         re.IGNORECASE,
     )
     # Dotted names allowed: EXISTS TABLE system.one answers through
@@ -1092,23 +1107,16 @@ class BigHouseEngine:
     _ATTACH_RE = re.compile(
         r"^\s*ATTACH\s+TABLE\s+(IF\s+NOT\s+EXISTS\s+)?"
         r"[`\"]?(\w+)[`\"]?(?:\s+UUID\s+'[^']*')?"
-        r"(?:\s+ON\s+CLUSTER\s+\S+)?\s*(.*)$",
+        + _ON_CLUSTER + r"\s*(.*)$",
         re.IGNORECASE | re.DOTALL,
     )
     _DETACH_RE = re.compile(
         r"^\s*DETACH\s+TABLE\s+(?:IF\s+EXISTS\s+)?[`\"]?(\w+)[`\"]?"
-        r"(?:\s+ON\s+CLUSTER\s+\S+)?\s*(?:PERMANENTLY\s*)?$",
+        + _ON_CLUSTER + r"\s*(?:PERMANENTLY\s*)?$",
         re.IGNORECASE,
     )
     _UNDROP_RE = re.compile(
-        r"^\s*UNDROP\s+TABLE\s+[`\"]?(\w+)[`\"]?"
-        r"(?:\s+ON\s+CLUSTER\s+\S+)?\s*$",
-        re.IGNORECASE,
-    )
-    _COMMENT_COLUMN_RE = re.compile(
-        r"^\s*ALTER\s+TABLE\s+[`\"]?(\w+)[`\"]?"
-        r"(?:\s+ON\s+CLUSTER\s+\S+)?\s+COMMENT\s+COLUMN\s+"
-        r"(IF\s+EXISTS\s+)?[`\"]?(\w+)[`\"]?\s+'([^']*)'\s*$",
+        r"^\s*UNDROP\s+TABLE\s+[`\"]?(\w+)[`\"]?" + _ON_CLUSTER + r"\s*$",
         re.IGNORECASE,
     )
     _ATTACH_FROM_RE = re.compile(
@@ -1130,38 +1138,30 @@ class BigHouseEngine:
 
     _CREATE_MV_RE = re.compile(
         r"^\s*CREATE\s+MATERIALIZED\s+VIEW\s+(?:IF\s+NOT\s+EXISTS\s+)?"
-        r"[`\"]?(\w+)[`\"]?(?:\s+ON\s+CLUSTER\s+\S+)?"
-        r"(?:\s+ENGINE\s*=\s*\w+(?:\([^)]*\))?)?"
+        r"[`\"]?(\w+)[`\"]?" + _ON_CLUSTER
+        + r"(?:\s+ENGINE\s*=\s*\w+(?:\([^)]*\))?)?"
         r"(?:\s+ORDER\s+BY\s+(?:\([^)]*\)|\w+))?"
         r"(?:\s+(POPULATE))?\s+AS\s+(SELECT\b.+)$",
         re.IGNORECASE | re.DOTALL,
     )
     _OPTIMIZE_RE = re.compile(
-        r"^\s*OPTIMIZE\s+TABLE\s+[`\"]?(\w+)[`\"]?"
-        r"(?:\s+ON\s+CLUSTER\s+\S+)?"
-        r"(?:\s+PARTITION\s+(?:ID\s+)?"
-        r"(?:'((?:[^'\\]|\\.|'')*)'|(\S+)))?"
+        r"^\s*OPTIMIZE\s+TABLE\s+[`\"]?(\w+)[`\"]?" + _ON_CLUSTER
+        + r"(?:\s+PARTITION\s+(?:ID\s+)?" + _PARTITION_VALUE + r")?"
         r"(?:\s+(FINAL))?(?:\s+(DEDUPLICATE))?\s*$",
         re.IGNORECASE,
-    )
-    # CH `ALTER TABLE t UPDATE/DELETE ... IN PARTITION p WHERE c`:
-    # restrict the mutation to one partition. Folded into the WHERE
-    # as an ANDed partition-key predicate before the mutation
-    # regexes match (the engine tracks PARTITION BY per table).
-    _IN_PARTITION_RE = re.compile(
-        r"^(\s*ALTER\s+TABLE\s+[`\"]?(\w+)[`\"]?"
-        r"(?:\s+ON\s+CLUSTER\s+\S+)?\s+"
-        r"(?:UPDATE\s+.+?|DELETE))"
-        r"\s+IN\s+PARTITION\s+(?:ID\s+)?"
-        r"(?:'((?:[^'\\]|\\.|'')*)'|(\S+))"
-        r"\s+WHERE\s+(.+)$",
-        re.IGNORECASE | re.DOTALL,
     )
     _ANALYZE_RE = re.compile(
         r"^\s*ANALYZE\s+TABLE\s+[`\"]?(\w+)[`\"]?"
         r"(?:\s+COMPUTE\s+STATISTICS"
         r"(\s+FOR\s+ALL\s+COLUMNS|\s+FOR\s+COLUMNS\s+[\w,\s`]+|\s+NOSCAN)?"
         r")?\s*$",
+        re.IGNORECASE,
+    )
+    # REVOKE and CREATE/ALTER/DROP USER/ROLE/...: access-control
+    # statements the trust auth model refuses (``_refuse_access_ddl``).
+    _ACCESS_DDL_RE = re.compile(
+        r"^\s*(REVOKE\b|(?:CREATE|ALTER|DROP)\s+"
+        r"(?:USER|ROLE|QUOTA|ROW\s+POLICY|SETTINGS\s+PROFILE)\b)",
         re.IGNORECASE,
     )
 
@@ -1262,7 +1262,7 @@ class BigHouseEngine:
         must we: the old build silently DROPPED unknown assignments
         and rewrote the table unchanged (round-14 probe, live)."""
         pairs: dict[str, str] = {}
-        for part in _split_top_level(assigns):
+        for part in split_top_level(assigns):
             col, expr = self._split_assignment(part)
             pairs[col.strip().strip('`"')] = expr.strip()
         known = set(columns)
@@ -1394,7 +1394,7 @@ class BigHouseEngine:
 
     def _mutation_in_partition(
         self, name: str, head: str, pq: str | None, praw: str | None,
-        cond: str,
+        cond: str, masked_head: str,
     ) -> _Logged | None:
         """``ALTER TABLE t UPDATE/DELETE ... IN PARTITION p WHERE c``
         bounded to ONE partition directory — ClickHouse rewrites only
@@ -1430,8 +1430,9 @@ class BigHouseEngine:
         # assignment token) into the DELETE path and wipe the
         # partition (review-found, round 14). Only a head that does
         # NOT parse as UPDATE may be the DELETE form.
-        masked_head = _mask_string_literals(head)
-        m_h = self._ALTER_UPDATE_HEAD_RE.match(masked_head)
+        m_h = self._ALTER_UPDATE_RE.match(
+            masked_head, self._ALTER_HEAD_RE.match(masked_head).end()
+        )
         if m_h is not None:
             is_delete = False
             assigns = head[m_h.end():].strip()
@@ -1980,12 +1981,12 @@ class BigHouseEngine:
         (a client encodes per the DDL — `a Int64` has no null flags
         even though the parquet field is Spark-nullable), falling
         back to non-nullable schema-derived spellings."""
-        from bighouse_spark.formats import _split_type_args, ch_type_name
+        from bighouse_spark.formats import ch_type_name
 
         _, _, ch_schema = self._attached[name]
         out: dict[str, str] = {}
         if ch_schema:
-            for f in _split_type_args(ch_schema):
+            for f in split_top_level(ch_schema):
                 nm, _, tp = f.strip().partition(" ")
                 if tp:
                     out[nm.strip('`"')] = tp.strip()
@@ -2066,7 +2067,9 @@ class BigHouseEngine:
                 name, target, cols, rows, "<insert native>"
             )
 
-        return self._run(f"INSERT INTO {name} FORMAT Native <binary>", run)
+        return self._run(
+            f"INSERT INTO {name} FORMAT Native <binary>", run, "Insert"
+        )
 
     def insert_rowbinary(
         self,
@@ -2130,7 +2133,7 @@ class BigHouseEngine:
             )
 
         return self._run(
-            f"INSERT INTO {name} FORMAT RowBinary <binary>", run
+            f"INSERT INTO {name} FORMAT RowBinary <binary>", run, "Insert"
         )
 
     def insert_header(
@@ -2172,7 +2175,9 @@ class BigHouseEngine:
                 name, target, cols, rows, "<insert native tcp>"
             )
 
-        return self._run(f"INSERT INTO {name} FORMAT Native <tcp>", run)
+        return self._run(
+            f"INSERT INTO {name} FORMAT Native <tcp>", run, "Insert"
+        )
 
     @staticmethod
     def _select_alias_map(sql: str) -> dict[str, str]:
@@ -2355,8 +2360,6 @@ class BigHouseEngine:
         (CH spelling, round 14)."""
         from pyspark.sql import types as T
 
-        from bighouse_spark.dialect.schema import _split_commas
-
         s = field.dataType.simpleString()
         declared_default = self._column_defaults.get(name, {}).get(
             field.name
@@ -2371,7 +2374,7 @@ class BigHouseEngine:
         schema_str = self._ch_col_ddl.get(name) or self._attached[name][2]
         declared = None
         if schema_str:
-            for item in _split_commas(schema_str):
+            for item in split_top_level(schema_str):
                 m = re.match(
                     r"^\s*(`[^`]+`|\"[^\"]+\"|\S+)\s+(.+?)\s*$", item
                 )
@@ -2413,10 +2416,8 @@ class BigHouseEngine:
         )
         if not schema_str:
             return target
-        from bighouse_spark.dialect.schema import _split_commas
-
         names = []
-        for item in _split_commas(schema_str):
+        for item in split_top_level(schema_str):
             m = re.match(r"^\s*(`[^`]+`|\"[^\"]+\"|\S+)", item)
             if m:
                 names.append(m.group(1).strip('`"'))
@@ -2430,16 +2431,13 @@ class BigHouseEngine:
         """Remove ``DEFAULT <expr>`` from ``col``'s recorded CH DDL
         item (MODIFY COLUMN ... REMOVE DEFAULT) so SHOW CREATE and
         the nullability sniff reflect the post-DDL declaration."""
-        from bighouse_spark.dialect.schema import (
-            _split_commas,
-            parse_column_item,
-        )
+        from bighouse_spark.dialect.schema import parse_column_item
 
         ddl = self._ch_col_ddl.get(name)
         if not ddl:
             return
         items = []
-        for item in _split_commas(ddl):
+        for item in split_top_level(ddl):
             if not item.strip():
                 continue
             try:
@@ -2479,10 +2477,6 @@ class BigHouseEngine:
         row-scoped default computation. A default reading a column
         declared AFTER it fails loudly with Spark's unresolved-column
         error (lateral aliases resolve left-to-right only)."""
-        from bighouse_spark.dialect.transpile import (
-            _mask_string_literals,
-        )
-
         masked = _mask_string_literals(body)
         if not re.search(r"\bDEFAULT\b", masked, re.IGNORECASE):
             return body
@@ -2836,19 +2830,21 @@ class BigHouseEngine:
         re.IGNORECASE,
     )
 
-    def _rewrite_dict_calls(self, sql: str) -> str:
+    def _rewrite_dict_calls(self, sql: str, masked: str) -> str:
         """Rewrite dictGet*/dictHas/dictGetOrDefault over registered
-        dictionaries into correlated scalar subqueries."""
+        dictionaries into correlated scalar subqueries. Calls are
+        located on ``masked`` (``sql``'s masked copy), so a literal
+        spelling dictGet( is data."""
         # Run even with zero registered dictionaries: an unknown-dict
         # dictGet must fail with the CREATE DICTIONARY hint, not
         # Spark's opaque UNRESOLVED_ROUTINE.
-        if "dict" not in sql.lower():
+        if "dict" not in masked.lower():
             return sql
         from bighouse_spark.dialect.transpile import _find_call
 
         out = sql
         pat = re.compile(r"\bdict(Get\w*|Has)\s*\(", re.IGNORECASE)
-        while (m := pat.search(out)) is not None:
+        while (m := pat.search(masked)) is not None:
             kind = m.group(1)
             if kind.lower() in (
                 "gethierarchy", "getchildren", "getdescendants"
@@ -2886,6 +2882,7 @@ class BigHouseEngine:
                 else:
                     repl = sub
             out = out[:start] + repl + out[end:]
+            masked = _mask_string_literals(out)
         return out
 
     def _optimize_partition_dir(
@@ -3086,7 +3083,7 @@ class BigHouseEngine:
 
     def _run(
         self, request: QueryRequest | str,
-        handler: Callable[[_Statement], Any],
+        handler: Callable[[_Statement], Any], kind: str = "Select",
     ) -> Any:
         """The statement lifecycle behind every entry point (the
         reference gives each query its own: spawn, init statements,
@@ -3097,7 +3094,9 @@ class BigHouseEngine:
         of operator scratch persists and HTTP spool pins.
 
         ``handler(stmt)`` routes and runs the statement and returns its
-        result, wrapped in ``_Logged`` when a success is logged. Init
+        result, wrapped in ``_Logged`` when a success is logged;
+        ``kind`` is the ``query_kind`` logged unless the handler sets
+        ``stmt.kind``. Init
         queries and DDL re-enter here as nested statements: a failure
         is logged once, by the innermost statement that raised it, and
         release fires only when the OUTERMOST statement on this thread
@@ -3105,10 +3104,13 @@ class BigHouseEngine:
         enclosing request still references."""
         if isinstance(request, str):
             request = QueryRequest(query=request)
-        stmt = _Statement(replace(
-            request,
-            query_id=request.query_id or f"bh-{uuid.uuid4().hex[:12]}",
-        ))
+        stmt = _Statement(
+            replace(
+                request,
+                query_id=request.query_id or f"bh-{uuid.uuid4().hex[:12]}",
+            ),
+            kind=kind,
+        )
         depth = getattr(_REQ_LOCAL, "depth", 0)
         outer_scope = getattr(_REQ_LOCAL, "scope", None)
         _REQ_LOCAL.depth = depth + 1
@@ -3132,7 +3134,7 @@ class BigHouseEngine:
                     # workflow_query_executor.go:302-310): DDL re-enters
                     # execute so the whole dispatch applies, and a SET
                     # holds its knobs until this statement ends.
-                    if self._ENGINE_STMT_RE.match(init):
+                    if self._route_of(init) != self._QUERY_ROUTE:
                         self.execute(init)
                     elif pairs := parse_set_statement(init):
                         scope.enter_context(self._scoped_conf(pairs))
@@ -3145,7 +3147,7 @@ class BigHouseEngine:
             if isinstance(out, _Logged):
                 entry = QueryLogEntry(
                     stmt.request.query, out.label, 0.0, out.rows,
-                    cached=out.cached,
+                    cached=out.cached, query_kind=stmt.kind,
                 )
                 out = out.result
             return out
@@ -3154,7 +3156,7 @@ class BigHouseEngine:
                 _REQ_LOCAL.logged_error = e
                 entry = QueryLogEntry(
                     stmt.request.query, stmt.label, 0.0, 0,
-                    str(e) or type(e).__name__,
+                    str(e) or type(e).__name__, query_kind=stmt.kind,
                 )
             raise
         finally:
@@ -3229,1109 +3231,1132 @@ class BigHouseEngine:
         never started and the full result returns as usual — callers
         check ``sink.started``."""
         return self._run(
-            request, lambda stmt: self._execute_inner(stmt, stream_to)
+            request, lambda stmt: self._route(stmt, stream_to)
         )
 
-    def _execute_inner(self, stmt: _Statement, stream_to=None) -> Any:
-        """Route ``stmt`` to its handler. A routing rewrite re-binds
-        ``request`` AND ``stmt.request`` so the log records the text
-        that ran."""
+    def _route(self, stmt: _Statement, stream_to=None) -> Any:
+        """Route ``stmt`` to its handler. The statement is masked once
+        (``_mask_string_literals``); clauses that apply to any
+        statement — query parameters, ``INTO OUTFILE`` — run first,
+        then the leading keyword picks one router from ``_ROUTES``.
+        Routers match only the masked copy and re-slice raw text by
+        span (``_raw_groups``); a routing rewrite re-binds
+        ``stmt.request`` (so the log records the text that ran) and
+        re-masks."""
+        masked = _mask_string_literals(stmt.request.query)
+        if stmt.request.params or "{" in stmt.request.query:
+            stmt.kind = self._route_of(masked)[1]  # if binding fails
+            masked = self._bind_params(stmt, masked)
+        router, stmt.kind = self._route_of(masked)
+        # INTO OUTFILE is a clause of queries: an INSERT's inline
+        # payload is data, whatever its rows spell.
+        if router != "_route_insert" and (
+            m_of := self._INTO_OUTFILE_RE.match(masked)
+        ):
+            return self._into_outfile(stmt, m_of)
+        return getattr(self, router)(stmt, masked, stream_to)
+
+    # Leading keyword → (router, ClickHouse ``system.query_log``
+    # ``query_kind``). A router tries its own sub-command patterns in a
+    # fixed order and ends in ``_route_query`` when none applies; a
+    # statement whose leading keyword is not listed — SELECT, WITH,
+    # ``(SELECT``, a comment-prefixed DDL — takes the query path.
+    _ROUTES = {
+        "INSERT": ("_route_insert", "Insert"),
+        "ALTER": ("_route_alter", "Alter"),
+        "CREATE": ("_route_create", "Create"),
+        "DROP": ("_route_drop", "Drop"),
+        "TRUNCATE": ("_route_drop", "Drop"),
+        "ATTACH": ("_route_attach", "Create"),
+        "DETACH": ("_route_detach", "Drop"),
+        "UNDROP": ("_route_undrop", "Undrop"),
+        "RENAME": ("_route_rename", "Rename"),
+        "EXCHANGE": ("_route_rename", "Rename"),
+        "SHOW": ("_route_show", "Show"),
+        "SYSTEM": ("_route_system", "System"),
+        "KILL": ("_route_kill", "KillQuery"),
+        "EXISTS": ("_route_exists", "Exists"),
+        "CHECK": ("_route_check", "Check"),
+        "OPTIMIZE": ("_route_optimize", "Optimize"),
+        # CH gathers column statistics with ALTER TABLE ... MATERIALIZE
+        # STATISTICS, so ANALYZE logs as an Alter.
+        "ANALYZE": ("_route_analyze", "Alter"),
+        "GRANT": ("_route_rbac", "Grant"),
+        "SET ROLE": ("_route_rbac", "Set"),
+        "REVOKE": ("_route_rbac", "Revoke"),
+    }
+    _QUERY_ROUTE = ("_route_query", "Select")
+    _KIND_RE = re.compile(r"\s*(SET\s+ROLE\b|[A-Za-z]+)", re.IGNORECASE)
+
+    @classmethod
+    def _route_of(cls, sql: str) -> tuple[str, str]:
+        """``(router, query_kind)`` of a statement. Only the leading
+        keyword is read, and no string literal can precede it, so raw
+        and masked text give the same answer."""
+        m = cls._KIND_RE.match(sql)
+        key = " ".join(m.group(1).upper().split()) if m else ""
+        return cls._ROUTES.get(key, cls._QUERY_ROUTE)
+
+    def _bind_params(self, stmt: _Statement, masked: str) -> str:
+        """Substitute ``{name:Type}`` query parameters into the
+        statement text and return the new masked copy. Parameters bind
+        in STATEMENT text only — an inline INSERT data payload after
+        FORMAT <fmt> is data, not SQL: a CSV value shaped like
+        {word:Word} must be neither substituted nor rejected. Run
+        whenever a placeholder-shaped token exists, even with zero
+        bound params — an unbound {name:Type} must raise CH's
+        UNKNOWN_QUERY_PARAMETER analog, not a downstream parse
+        error."""
+        from bighouse_spark.dialect.transpile import (
+            _PARAM_PLACEHOLDER_RE,
+            substitute_parameters,
+        )
+
         request = stmt.request
-        if request.params or "{" in request.query:
-            from bighouse_spark.dialect.transpile import (
-                _PARAM_PLACEHOLDER_RE,
-                substitute_parameters,
-            )
-
-            # Parameters bind in STATEMENT text only — an inline
-            # INSERT data payload after FORMAT <fmt> is data, not
-            # SQL: a CSV value shaped like {word:Word} must be
-            # neither substituted nor rejected. Split the payload
-            # off, substitute the head, reattach.
-            # Masked locate, raw slice: a VALUES/SELECT literal
-            # containing ' FORMAT CSV ' must not become the payload
-            # split point (round-14 router sweep).
-            head, payload = request.query, ""
-            m_pl = re.match(
-                r"(?is)^(\s*INSERT\s+INTO\b.*?\bFORMAT\s+\w+)"
-                r"(\s.+)$",
-                _mask_string_literals(request.query),
-            )
-            if m_pl:
-                head, payload = self._raw_groups(m_pl, request.query)
-            # Run substitution whenever a placeholder-shaped token
-            # exists, even with zero bound params — an unbound
-            # {name:Type} must raise CH's UNKNOWN_QUERY_PARAMETER
-            # analog, not a downstream parse error. (Quote-aware:
-            # '{n:UInt64}' inside a string literal never triggers.)
-            if request.params or _PARAM_PLACEHOLDER_RE.search(head):
-                request = stmt.request = replace(
-                    request,
-                    query=substitute_parameters(head, request.params)
-                    + payload,
-                )
-        # SELECT ... INTO OUTFILE '<path>' [FORMAT <fmt>]: run the
-        # inner query and write the rendered result to a local file
-        # (clickhouse-local semantics; default format TabSeparated
-        # like CH). Result = one row with (path, rows_written).
-        # Masked locate, raw slice: ' INTO OUTFILE ' inside a SELECT
-        # literal is data, not a sink clause (round-14 router sweep).
-        m_of = self._INTO_OUTFILE_RE.match(
-            _mask_string_literals(request.query)
+        head, payload, head_end = request.query, "", len(masked)
+        m_pl = self._PAYLOAD_SPLIT_RE.match(masked)
+        if m_pl:
+            head, payload = self._raw_groups(m_pl, request.query)
+            head_end = m_pl.end(1)
+        if not (request.params
+                or _PARAM_PLACEHOLDER_RE.search(masked, 0, head_end)):
+            return masked
+        stmt.request = replace(
+            request,
+            query=substitute_parameters(head, request.params) + payload,
         )
-        if m_of:
-            inner_sql, out_path, truncate, fmt_name = self._raw_groups(
-                m_of, request.query
-            )
-            if request.remote:
-                raise ValueError(
-                    "INTO OUTFILE is a client-side feature and is not "
-                    "served over network endpoints (ClickHouse "
-                    "servers reject it too); fetch the result and "
-                    "write locally, or use INSERT INTO FUNCTION "
-                    "file(...) for an engine-owned sink path"
-                )
-            from bighouse_spark.formats import (
-                normalize_format,
-                render_result,
-            )
+        return _mask_string_literals(stmt.request.query)
 
-            # Validate format and overwrite policy BEFORE running the
-            # (possibly expensive) inner query.
-            fmt = normalize_format(fmt_name or "TabSeparated")
-            if fmt is None:
-                raise ValueError(
-                    f"INTO OUTFILE: unknown FORMAT {fmt_name!r}"
-                )
-            import os as _os
+    def _into_outfile(self, stmt: _Statement, m_of: "re.Match") -> _Logged:
+        """SELECT ... INTO OUTFILE '<path>' [FORMAT <fmt>]: run the
+        inner query and write the rendered result to a local file
+        (clickhouse-local semantics; default format TabSeparated like
+        CH). Result = one row with (path, rows_written)."""
+        request = stmt.request
+        inner_sql, out_path, truncate, fmt_name = self._raw_groups(
+            m_of, request.query
+        )
+        if request.remote:
+            raise ValueError(
+                "INTO OUTFILE is a client-side feature and is not "
+                "served over network endpoints (ClickHouse "
+                "servers reject it too); fetch the result and "
+                "write locally, or use INSERT INTO FUNCTION "
+                "file(...) for an engine-owned sink path"
+            )
+        from bighouse_spark.formats import (
+            normalize_format,
+            render_result,
+        )
 
-            if _os.path.exists(out_path) and not truncate:
-                raise ValueError(
-                    f"INTO OUTFILE: {out_path} exists — add the "
-                    "TRUNCATE modifier to overwrite (CH semantics)"
-                )
-            inner = self.execute(
-                QueryRequest(query=inner_sql, query_id=request.query_id)
+        # Validate format and overwrite policy BEFORE running the
+        # (possibly expensive) inner query.
+        fmt = normalize_format(fmt_name or "TabSeparated")
+        if fmt is None:
+            raise ValueError(
+                f"INTO OUTFILE: unknown FORMAT {fmt_name!r}"
             )
-            body, _ = render_result(
-                inner.cols, inner.rows, fmt, types=inner.types,
-                elapsed=inner.elapsed_sec,
+        import os as _os
+
+        if _os.path.exists(out_path) and not truncate:
+            raise ValueError(
+                f"INTO OUTFILE: {out_path} exists — add the "
+                "TRUNCATE modifier to overwrite (CH semantics)"
             )
-            with open(out_path, "wb") as fh:
-                fh.write(body)
-            return _Logged(
-                QueryResult(
-                    cols=["path", "rows"],
-                    rows=[[out_path, len(inner.rows)]],
-                ),
-                "<outfile>", len(inner.rows),
-            )
+        inner = self.execute(
+            QueryRequest(query=inner_sql, query_id=request.query_id)
+        )
+        body, _ = render_result(
+            inner.cols, inner.rows, fmt, types=inner.types,
+            elapsed=inner.elapsed_sec,
+        )
+        with open(out_path, "wb") as fh:
+            fh.write(body)
+        return _Logged(
+            QueryResult(
+                cols=["path", "rows"],
+                rows=[[out_path, len(inner.rows)]],
+            ),
+            "<outfile>", len(inner.rows),
+        )
+
+    def _route_insert(self, stmt: _Statement, masked: str, stream_to):
+        raw = stmt.request.query
         # CH's INSERT INTO FUNCTION s3/file(...) SELECT ... sink form
         # → distributed write (the engine's execute_to_sink), result =
         # one row with the path (the reference's intended-but-unbuilt
         # "Return S3 url", workflow_query_executor.go:94).
-        m = self._INSERT_FN_RE.match(request.query)
+        m = self._INSERT_FN_RE.match(masked)
         if m:
-            _, path, fmt_name, select_sql = m.groups()
+            _, path, fmt_name, select_sql = self._raw_groups(m, raw)
             fmt = {"parquet": "parquet", "csv": "csv", "csvwithnames": "csv",
-                   "json": "json", "jsoneachrow": "json", "orc": "orc",
-                   None: "parquet"}[(fmt_name or "parquet").lower() if fmt_name else None]
+                   "json": "json", "jsoneachrow": "json",
+                   "orc": "orc"}[(fmt_name or "parquet").lower()]
             meta = self.execute_to_sink(select_sql, path=path, fmt=fmt)
             return QueryResult(cols=["path"], rows=[[meta["path"]]])
-        # input('schema') INSERT transform: parse the payload with
-        # the declared structure, expose it as a temp view, and
-        # re-enter as an ordinary INSERT ... SELECT.
-        # Masked locate, raw slice: the SELECT part may hold literals
-        # containing ' FORMAT ' or 'input(' (round-14 router sweep).
-        m_inp = self._INSERT_INPUT_RE.match(
-            _mask_string_literals(request.query)
-        )
-        if m_inp:
-            name, col_list, select_part, schema_str, fmt_name, payload \
-                = self._raw_groups(m_inp, request.query)
-            from bighouse_spark.dialect.schema import (
-                parse_schema_string,
-            )
-            from bighouse_spark.dialect.transpile import (
-                parse_inline_payload,
-            )
-
-            struct = parse_schema_string(schema_str.strip("'"))
-            df = parse_inline_payload(
-                self.spark, fmt_name, payload, struct
-            )
-            # uuid, not id(df): truncated object addresses can collide
-            # across concurrent INSERTs and clobber each other's view.
-            view = f"__bh_input_{uuid.uuid4().hex}"
-            df.createOrReplaceTempView(view)
-            try:
-                # masked locate: a literal containing input('..')
-                # before the real call must not be substituted
-                m_call = re.search(
-                    r"\binput\s*\(\s*'[^']*'\s*\)",
-                    _mask_string_literals(select_part),
-                )
-                select_rw = (
-                    select_part[:m_call.start()] + view
-                    + select_part[m_call.end():]
-                )
-                cols = f"({col_list})" if col_list else ""
-                stmt.request = replace(
-                    request, query=f"INSERT INTO {name} {cols} {select_rw}"
-                )
-                return self._execute_inner(stmt, stream_to)
-            finally:
-                self.spark.catalog.dropTempView(view)
-        # CH wire-style INSERT ... FORMAT <fmt> <payload>: the shape
-        # every CH client emits over HTTP. JSONEachRow matches columns
-        # BY NAME (CH semantics); Values/CSV/TSV are positional. The
-        # inline payload is driver-parsed — it arrived in the request
-        # body, so it is by construction request-sized, not data-lake
-        # sized; bulk loads use INSERT ... SELECT FROM s3()/file().
-        m_fmt = self._INSERT_FMT_RE.match(request.query)
-        if m_fmt:
-            name, fmt_cols, fmt_name, payload = m_fmt.groups()
-            fmt_name = fmt_name.lower()
-            if name not in self._attached:
-                raise ValueError(
-                    f"INSERT INTO {name}: not an attached table"
-                )
-            full_target = self._target_schema(name)
-            target = full_target
-            if fmt_cols:
-                from pyspark.sql import types as T
-
-                listed = [
-                    c.strip().strip('`"')
-                    for c in fmt_cols.split(",") if c.strip()
-                ]
-                by_name = {f.name: f for f in full_target.fields}
-                unknown = [c for c in listed if c not in by_name]
-                if unknown:
-                    raise ValueError(
-                        f"INSERT INTO {name} ({fmt_cols}): unknown "
-                        f"column(s) {unknown}"
-                    )
-                # the payload carries only the listed columns; the
-                # rest fill NULL / CH type defaults after decode
-                target = T.StructType([by_name[c] for c in listed])
-            if fmt_name == "values":
-                request = stmt.request = replace(
-                    request, query=f"INSERT INTO {name} VALUES {payload}"
-                )
-                return self._insert_into_attached(
-                    request.query, name, len(f"INSERT INTO {name} "),
-                    cols=fmt_cols,
-                )
-            if fmt_name == "jsoneachrow":
-                import json as _json
-
-                rows = [
-                    _json.loads(line)
-                    for line in payload.strip().splitlines()
-                    if line.strip()
-                ]
-                from pyspark.sql import functions as F
-                from pyspark.sql import types as T
-
-                # Build SCALAR fields as strings and cast after —
-                # JSON carries dates/decimals as strings and ints
-                # where the table wants doubles, and createDataFrame
-                # type-checks eagerly (FIELD_DATA_TYPE_UNACCEPTABLE).
-                # Nested types keep their target type.
-                def _nested(dt: "T.DataType") -> bool:
-                    return isinstance(
-                        dt, (T.ArrayType, T.MapType, T.StructType)
-                    )
-
-                build = T.StructType(
-                    [
-                        T.StructField(
-                            f.name,
-                            f.dataType if _nested(f.dataType)
-                            else T.StringType(),
-                            True,
-                        )
-                        for f in target.fields
-                    ]
-                    # per-field ABSENT flags: CH distinguishes a
-                    # missing key (fill the declared/type default —
-                    # input_format_defaults_for_omitted_fields=1,
-                    # the default) from an explicit JSON null
-                    + [
-                        T.StructField(
-                            f"__absent_{f.name}", T.BooleanType(),
-                            False,
-                        )
-                        for f in target.fields
-                    ]
-                )
-
-                def _cell(r: dict, f: "T.StructField"):
-                    v = r.get(f.name)
-                    if v is None or _nested(f.dataType):
-                        return v
-                    if isinstance(v, bool):
-                        return "true" if v else "false"
-                    return str(v)
-
-                df = self.spark.createDataFrame(
-                    [
-                        tuple(_cell(r, f) for f in target.fields)
-                        + tuple(
-                            f.name not in r for f in target.fields
-                        )
-                        for r in rows
-                    ],
-                    build,
-                )
-                aligned = df.select(*[
-                    F.when(
-                        F.col(f"__absent_{f.name}"),
-                        F.expr(
-                            self._missing_col_default_sql(name, f)
-                        ),
-                    )
-                    .otherwise(F.col(f.name))
-                    .cast(f.dataType)
-                    .alias(f.name)
-                    for f in target.fields
-                ])
-            else:  # csv / tsv (positional)
-                from pyspark.sql import functions as F
-
-                if fmt_name in ("csv", "csvwithnames"):
-                    # RFC-quoted CSV — the old naive split(',') +
-                    # strip-quotes corrupted embedded delimiters,
-                    # doubled quotes, and quoted newlines (a quoted
-                    # field spanning lines became extra rows;
-                    # `q""uote` landed with the doubling intact —
-                    # round-14 probe)
-                    import csv as _csv
-                    import io as _io
-
-                    recs = [
-                        rec
-                        for rec in _csv.reader(
-                            _io.StringIO(payload.strip())
-                        )
-                        if rec
-                    ]
-                    header = None
-                    if fmt_name == "csvwithnames":
-                        header = [h.strip() for h in recs[0]]
-                        recs = recs[1:]
-                    data = [
-                        tuple(
-                            None if v in ("", "\\N") else v
-                            for v in rec
-                        )
-                        for rec in recs
-                    ]
-                    data = self._reorder_by_header(
-                        name, data, header, target
-                    )
-                else:  # tsv family: CH backslash escapes, \N NULL
-                    # strip NEWLINES only — a bare .strip() eats a
-                    # trailing TAB, i.e. the last row's empty final
-                    # cell (tab is whitespace), shifting its fields
-                    lines = [
-                        line
-                        for line in payload.strip("\r\n")
-                        .splitlines()
-                        if line != ""
-                    ]
-                    header = None
-                    if fmt_name in (
-                        "tsvwithnames", "tabseparatedwithnames"
-                    ):
-                        header = [
-                            h.strip() for h in lines[0].split("\t")
-                        ]
-                        lines = lines[1:]
-                    _TSV_UN = {
-                        "t": "\t", "n": "\n", "r": "\r",
-                        "0": "\0", "\\": "\\", "'": "'",
-                    }
-
-                    def _unesc_tsv(v: str):
-                        if v == "\\N" or v == "":
-                            return None
-                        out, i = [], 0
-                        while i < len(v):
-                            if v[i] == "\\" and i + 1 < len(v):
-                                out.append(
-                                    _TSV_UN.get(v[i + 1], v[i + 1])
-                                )
-                                i += 2
-                            else:
-                                out.append(v[i])
-                                i += 1
-                        return "".join(out)
-
-                    data = [
-                        tuple(
-                            _unesc_tsv(v) for v in line.split("\t")
-                        )
-                        for line in lines
-                    ]
-                    data = self._reorder_by_header(
-                        name, data, header, target
-                    )
-                df = self.spark.createDataFrame(
-                    data,
-                    ", ".join(f"`{f.name}` string" for f in target.fields),
-                )
-                aligned = df.select(
-                    *[F.col(f.name).cast(f.dataType) for f in target.fields]
-                )
-            if fmt_cols:
-                listed_names = {f.name for f in target.fields}
-                aligned = aligned.select(*[
-                    (F.col(f.name) if f.name in listed_names
-                     else self._missing_col_default(name, f))
-                    .alias(f.name)
-                    for f in full_target.fields
-                ]).select(*[
-                    F.col(f.name).cast(f.dataType)
-                    for f in full_target.fields
-                ])
-            return self._append_aligned(
-                aligned, name, f"<insert {fmt_name}>"
-            )
+        m = self._INSERT_INPUT_RE.match(masked)
+        if m:
+            return self._insert_input(stmt, m, masked, stream_to)
+        m = self._INSERT_FMT_RE.match(masked)
+        if m:
+            return self._insert_format(stmt, m)
         # CH's INSERT INTO <table> append form against ATTACHed
         # storage (positional columns, like CH).
-        m_tbl = self._INSERT_TBL_RE.match(request.query)
-        if m_tbl:
+        m = self._INSERT_TBL_RE.match(masked)
+        if m:
             return self._insert_into_attached(
-                request.query, m_tbl.group(1), m_tbl.start(3),
-                cols=m_tbl.group(2),
+                raw, m.group(1), m.start(3), cols=m.group(2),
             )
-        # CH column DDL. In CH these are metadata-only (old parts get
-        # the column materialized lazily on merge); here they rewrite
-        # storage eagerly — same observable semantics, mutation-cost
-        # model, and zero hidden per-file schema divergence (every
-        # backing file always matches the table schema, so plain
-        # parquet reads never need mergeSchema).
-        m_col = self._ALTER_COLUMN_RE.match(request.query)
-        if m_col:
-            name, op, col, rest = m_col.groups()
-            op = op.upper()
-            self._attached_path_or_raise(name, f"ALTER TABLE {op} COLUMN")
-            if self._attached[name][1] == "csv":
+        return self._route_query(stmt, masked, stream_to)
+
+    def _insert_input(
+        self, stmt: _Statement, m_inp: "re.Match", masked: str, stream_to,
+    ):
+        """input('schema') INSERT transform: parse the payload with
+        the declared structure, expose it as a temp view, and
+        re-enter as an ordinary INSERT ... SELECT."""
+        request = stmt.request
+        name, col_list, select_part, schema_str, fmt_name, payload \
+            = self._raw_groups(m_inp, request.query)
+        from bighouse_spark.dialect.schema import (
+            parse_schema_string,
+        )
+        from bighouse_spark.dialect.transpile import (
+            parse_inline_payload,
+        )
+
+        struct = parse_schema_string(schema_str.strip("'"))
+        df = parse_inline_payload(self.spark, fmt_name, payload, struct)
+        # uuid, not id(df): truncated object addresses can collide
+        # across concurrent INSERTs and clobber each other's view.
+        view = f"__bh_input_{uuid.uuid4().hex}"
+        df.createOrReplaceTempView(view)
+        try:
+            # masked locate: a literal containing input('..')
+            # before the real call must not be substituted
+            m_call = re.search(
+                r"\binput\s*\(\s*'[^']*'\s*\)",
+                masked[m_inp.start(3):m_inp.end(3)],
+            )
+            select_rw = (
+                select_part[:m_call.start()] + view
+                + select_part[m_call.end():]
+            )
+            cols = f"({col_list})" if col_list else ""
+            stmt.request = replace(
+                request, query=f"INSERT INTO {name} {cols} {select_rw}"
+            )
+            return self._route_insert(
+                stmt, _mask_string_literals(stmt.request.query), stream_to
+            )
+        finally:
+            self.spark.catalog.dropTempView(view)
+
+    def _insert_format(self, stmt: _Statement, m_fmt: "re.Match") -> _Logged:
+        """CH wire-style INSERT ... FORMAT <fmt> <payload>: the shape
+        every CH client emits over HTTP. JSONEachRow matches columns
+        BY NAME (CH semantics); Values/CSV/TSV are positional. The
+        inline payload is driver-parsed — it arrived in the request
+        body, so it is by construction request-sized, not data-lake
+        sized; bulk loads use INSERT ... SELECT FROM s3()/file()."""
+        request = stmt.request
+        name, fmt_cols, fmt_name, payload = self._raw_groups(
+            m_fmt, request.query
+        )
+        fmt_name = fmt_name.lower()
+        if name not in self._attached:
+            raise ValueError(
+                f"INSERT INTO {name}: not an attached table"
+            )
+        full_target = self._target_schema(name)
+        target = full_target
+        if fmt_cols:
+            from pyspark.sql import types as T
+
+            listed = [
+                c.strip().strip('`"')
+                for c in fmt_cols.split(",") if c.strip()
+            ]
+            by_name = {f.name: f for f in full_target.fields}
+            unknown = [c for c in listed if c not in by_name]
+            if unknown:
                 raise ValueError(
-                    f"ALTER TABLE {op} COLUMN on a csv-attached table "
-                    "is not supported (the attach-time schema string "
-                    "would go stale); rewrite via INSERT INTO FUNCTION "
-                    "and re-ATTACH"
+                    f"INSERT INTO {name} ({fmt_cols}): unknown "
+                    f"column(s) {unknown}"
                 )
-            tbl = self.spark.table(name)
+            # the payload carries only the listed columns; the
+            # rest fill NULL / CH type defaults after decode
+            target = T.StructType([by_name[c] for c in listed])
+        if fmt_name == "values":
+            request = stmt.request = replace(
+                request, query=f"INSERT INTO {name} VALUES {payload}"
+            )
+            return self._insert_into_attached(
+                request.query, name, len(f"INSERT INTO {name} "),
+                cols=fmt_cols,
+            )
+        if fmt_name == "jsoneachrow":
+            import json as _json
+
+            rows = [
+                _json.loads(line)
+                for line in payload.strip().splitlines()
+                if line.strip()
+            ]
+            from pyspark.sql import functions as F
+            from pyspark.sql import types as T
+
+            # Build SCALAR fields as strings and cast after —
+            # JSON carries dates/decimals as strings and ints
+            # where the table wants doubles, and createDataFrame
+            # type-checks eagerly (FIELD_DATA_TYPE_UNACCEPTABLE).
+            # Nested types keep their target type.
+            def _nested(dt: "T.DataType") -> bool:
+                return isinstance(dt, (T.ArrayType, T.MapType, T.StructType))
+
+            build = T.StructType(
+                [
+                    T.StructField(
+                        f.name,
+                        f.dataType if _nested(f.dataType)
+                        else T.StringType(),
+                        True,
+                    )
+                    for f in target.fields
+                ]
+                # per-field ABSENT flags: CH distinguishes a
+                # missing key (fill the declared/type default —
+                # input_format_defaults_for_omitted_fields=1,
+                # the default) from an explicit JSON null
+                + [
+                    T.StructField(
+                        f"__absent_{f.name}", T.BooleanType(),
+                        False,
+                    )
+                    for f in target.fields
+                ]
+            )
+
+            def _cell(r: dict, f: "T.StructField"):
+                v = r.get(f.name)
+                if v is None or _nested(f.dataType):
+                    return v
+                if isinstance(v, bool):
+                    return "true" if v else "false"
+                return str(v)
+
+            df = self.spark.createDataFrame(
+                [
+                    tuple(_cell(r, f) for f in target.fields)
+                    + tuple(
+                        f.name not in r for f in target.fields
+                    )
+                    for r in rows
+                ],
+                build,
+            )
+            aligned = df.select(*[
+                F.when(
+                    F.col(f"__absent_{f.name}"),
+                    F.expr(
+                        self._missing_col_default_sql(name, f)
+                    ),
+                )
+                .otherwise(F.col(f.name))
+                .cast(f.dataType)
+                .alias(f.name)
+                for f in target.fields
+            ])
+        else:  # csv / tsv (positional)
             from pyspark.sql import functions as F
 
-            from bighouse_spark.dialect.schema import (
-                _split_commas,
-                ch_type_to_spark,
-            )
+            if fmt_name in ("csv", "csvwithnames"):
+                # RFC-quoted CSV — the old naive split(',') +
+                # strip-quotes corrupted embedded delimiters,
+                # doubled quotes, and quoted newlines (a quoted
+                # field spanning lines became extra rows;
+                # `q""uote` landed with the doubling intact —
+                # round-14 probe)
+                import csv as _csv
+                import io as _io
 
-            # The recorded CH DDL (CREATE TABLE / ATTACH schema
-            # string) must track column DDL, or the re-attach after
-            # the storage rewrite pins the PRE-ALTER schema — an
-            # added column was unreadable and positional INSERTs
-            # mis-sized (round-13 probe). Edit the recorded items in
-            # declared order; tables attached without a schema
-            # string keep inferring (None stays None).
-            old_ddl = self._ch_col_ddl.get(name) \
-                or self._attached[name][2]
-            ddl_items = (
-                [it.strip() for it in _split_commas(old_ddl)]
-                if old_ddl else None
-            )
-
-            def _item_name(it: str) -> str:
-                m2 = re.match(r'^\s*(`[^`]+`|"[^"]+"|\S+)', it)
-                return m2.group(1).strip('`"') if m2 else it
-
-            if op == "ADD":
-                dm = re.match(
-                    r"^([\w()\s,]+?)(?:\s+DEFAULT\s+(.+))?$", rest.strip()
-                )
-                if not dm or not dm.group(1).strip():
-                    raise ValueError(
-                        f"ALTER TABLE ADD COLUMN {col}: need a type, got "
-                        f"{rest!r}"
+                recs = [
+                    rec
+                    for rec in _csv.reader(
+                        _io.StringIO(payload.strip())
                     )
-                ch_type, default = dm.group(1).strip(), dm.group(2)
-                dt = ch_type_to_spark(ch_type)
-                expr = (
-                    self._transpile(f"SELECT {default}").sql
-                    .removeprefix("SELECT ")
-                    if default else "NULL"
-                )
-                df = tbl.withColumn(col, F.expr(expr).cast(dt))
-                if default:
-                    # future partial INSERTs fill with this too (CH)
-                    self._column_defaults.setdefault(name, {})[col] = (
-                        default
+                    if rec
+                ]
+                header = None
+                if fmt_name == "csvwithnames":
+                    header = [h.strip() for h in recs[0]]
+                    recs = recs[1:]
+                data = [
+                    tuple(
+                        None if v in ("", "\\N") else v
+                        for v in rec
                     )
-                if ddl_items is not None:
-                    ddl_items.append(
-                        f"`{col}` {ch_type}"
-                        + (f" DEFAULT {default}" if default else "")
-                    )
-            elif op == "DROP":
-                if col not in tbl.columns:
-                    raise ValueError(f"DROP COLUMN {col}: no such column")
-                # CH refuses dropping key columns — and silently
-                # keeping the stale record was worse: a dropped
-                # ORDER BY column made _table_writer's all-present
-                # guard skip the file sort ENTIRELY on every future
-                # write (round-14 probe, live).
-                if col in (self._partitioned.get(name) or []):
-                    raise ValueError(
-                        f"DROP COLUMN {col}: column is the table's "
-                        "PARTITION BY key (ClickHouse refuses "
-                        "dropping key columns)"
-                    )
-                if col in (self._ordered.get(name) or []):
-                    raise ValueError(
-                        f"DROP COLUMN {col}: column is part of the "
-                        "ORDER BY key (ClickHouse refuses dropping "
-                        "key columns)"
-                    )
-                ttl = self._ttl.get(name)
-                if ttl and re.search(
-                    rf"\b{re.escape(col)}\b",
-                    _mask_string_literals(ttl),
+                    for rec in recs
+                ]
+                data = self._reorder_by_header(name, data, header, target)
+            else:  # tsv family: CH backslash escapes, \N NULL
+                # strip NEWLINES only — a bare .strip() eats a
+                # trailing TAB, i.e. the last row's empty final
+                # cell (tab is whitespace), shifting its fields
+                lines = [
+                    line
+                    for line in payload.strip("\r\n")
+                    .splitlines()
+                    if line != ""
+                ]
+                header = None
+                if fmt_name in (
+                    "tsvwithnames", "tabseparatedwithnames"
                 ):
-                    raise ValueError(
-                        f"DROP COLUMN {col}: column is referenced by "
-                        f"the table TTL ({ttl}) — REMOVE TTL or "
-                        "MODIFY TTL first (ClickHouse refuses too)"
-                    )
-                for iname, (iexpr, _ity) in (
-                    self._skip_indices.get(name) or {}
-                ).items():
-                    if re.search(rf"\b{re.escape(col)}\b",
-                                 _mask_string_literals(iexpr)):
-                        raise ValueError(
-                            f"DROP COLUMN {col}: column is used by "
-                            f"index {iname} — DROP INDEX {iname} "
-                            "first (ClickHouse refuses too)"
-                        )
-                for ocol, dexpr in (
-                    self._column_defaults.get(name) or {}
-                ).items():
-                    if ocol != col and re.search(
-                        rf"\b{re.escape(col)}\b",
-                        _mask_string_literals(dexpr),
-                    ):
-                        raise ValueError(
-                            f"DROP COLUMN {col}: column is referenced "
-                            f"by {ocol}'s DEFAULT ({dexpr}) — change "
-                            "that default first (ClickHouse refuses "
-                            "too)"
-                        )
-                df = tbl.drop(col)
-                self._column_defaults.get(name, {}).pop(col, None)
-                if ddl_items is not None:
-                    ddl_items = [
-                        it for it in ddl_items if _item_name(it) != col
-                    ]
-            elif op == "RENAME":
-                rm = re.match(r"^TO\s+[`\"]?(\w+)[`\"]?$", rest.strip(),
-                              re.IGNORECASE)
-                if not rm:
-                    raise ValueError(
-                        f"RENAME COLUMN {col}: expected TO <name>, got "
-                        f"{rest!r}"
-                    )
-                if col in (self._partitioned.get(name) or []):
-                    raise ValueError(
-                        f"RENAME COLUMN {col}: column is the table's "
-                        "PARTITION BY key (its name is baked into "
-                        "every partition directory)"
-                    )
-                r_ttl = self._ttl.get(name)
-                if r_ttl and re.search(
-                    rf"\b{re.escape(col)}\b",
-                    _mask_string_literals(r_ttl),
-                ):
-                    raise ValueError(
-                        f"RENAME COLUMN {col}: column is referenced "
-                        f"by the table TTL ({r_ttl}) — REMOVE TTL or "
-                        "MODIFY TTL first"
-                    )
-                for iname, (iexpr, _ity) in (
-                    self._skip_indices.get(name) or {}
-                ).items():
-                    if re.search(rf"\b{re.escape(col)}\b",
-                                 _mask_string_literals(iexpr)):
-                        raise ValueError(
-                            f"RENAME COLUMN {col}: column is used by "
-                            f"index {iname} — DROP INDEX {iname} "
-                            "first"
-                        )
-                for ocol, dexpr in (
-                    self._column_defaults.get(name) or {}
-                ).items():
-                    if ocol != col and re.search(
-                        rf"\b{re.escape(col)}\b",
-                        _mask_string_literals(dexpr),
-                    ):
-                        raise ValueError(
-                            f"RENAME COLUMN {col}: column is "
-                            f"referenced by {ocol}'s DEFAULT "
-                            f"({dexpr}) — change that default first"
-                        )
-                df = tbl.withColumnRenamed(col, rm.group(1))
-                dflts = self._column_defaults.get(name, {})
-                if col in dflts:
-                    dflts[rm.group(1)] = dflts.pop(col)
-                # the sorting-key record follows the rename, so
-                # future writes keep sorting (a stale name silently
-                # skipped the sort — same class as DROP above)
-                ocols = self._ordered.get(name)
-                if ocols and col in ocols:
-                    self._ordered[name] = [
-                        rm.group(1) if c == col else c for c in ocols
-                    ]
-                if ddl_items is not None:
-                    ddl_items = [
-                        re.sub(r'^\s*(`[^`]+`|"[^"]+"|\S+)',
-                               f"`{rm.group(1)}`", it, count=1)
-                        if _item_name(it) == col else it
-                        for it in ddl_items
-                    ]
-            else:  # MODIFY: retype in place (optionally new DEFAULT)
-                if re.fullmatch(r"REMOVE\s+DEFAULT", rest.strip(),
-                                re.IGNORECASE):
-                    # metadata-only in CH too: stored values keep
-                    # their bytes; future fills revert to the type
-                    # default. The recorded DDL item sheds its
-                    # DEFAULT clause so SHOW CREATE stays truthful.
-                    self._column_defaults.get(name, {}).pop(col, None)
-                    self._strip_ddl_default(name, col)
-                    return QueryResult(
-                        cols=["table", "column"], rows=[[name, col]]
-                    )
-                from bighouse_spark.dialect.schema import (
-                    parse_column_item,
-                )
+                    header = [h.strip() for h in lines[0].split("\t")]
+                    lines = lines[1:]
+                _TSV_UN = {
+                    "t": "\t", "n": "\n", "r": "\r",
+                    "0": "\0", "\\": "\\", "'": "'",
+                }
 
-                _nm, mod_type, mod_clauses = parse_column_item(
-                    f"`{col}` {rest.strip()}"
-                )
-                dt = ch_type_to_spark(mod_type)
-                df = tbl.withColumn(col, F.col(col).cast(dt))
-                if "DEFAULT" in mod_clauses:
-                    self._column_defaults.setdefault(name, {})[col] = (
-                        mod_clauses["DEFAULT"]
+                def _unesc_tsv(v: str):
+                    if v == "\\N" or v == "":
+                        return None
+                    out, i = [], 0
+                    while i < len(v):
+                        if v[i] == "\\" and i + 1 < len(v):
+                            out.append(_TSV_UN.get(v[i + 1], v[i + 1]))
+                            i += 2
+                        else:
+                            out.append(v[i])
+                            i += 1
+                    return "".join(out)
+
+                data = [
+                    tuple(
+                        _unesc_tsv(v) for v in line.split("\t")
                     )
-                if ddl_items is not None:
-                    ddl_items = [
-                        f"`{col}` {mod_type}"
-                        if _item_name(it) == col else it
-                        for it in ddl_items
-                    ]
+                    for line in lines
+                ]
+                data = self._reorder_by_header(name, data, header, target)
+            df = self.spark.createDataFrame(
+                data,
+                ", ".join(f"`{f.name}` string" for f in target.fields),
+            )
+            aligned = df.select(
+                *[F.col(f.name).cast(f.dataType) for f in target.fields]
+            )
+        if fmt_cols:
+            listed_names = {f.name for f in target.fields}
+            aligned = aligned.select(*[
+                (F.col(f.name) if f.name in listed_names
+                 else self._missing_col_default(name, f))
+                .alias(f.name)
+                for f in full_target.fields
+            ]).select(*[
+                F.col(f.name).cast(f.dataType)
+                for f in full_target.fields
+            ])
+        return self._append_aligned(aligned, name, f"<insert {fmt_name}>")
+
+    def _route_alter(self, stmt: _Statement, masked: str, stream_to):
+        head = self._ALTER_HEAD_RE.match(masked)
+        if head is None:
+            self._refuse_access_ddl(masked)
+            return self._route_query(stmt, masked, stream_to)
+        for pattern, handler in self._ALTER_ROUTES:
+            m = pattern.match(masked, head.end())
+            if m:
+                return getattr(self, handler)(stmt, head.group(1), m, masked)
+        return self._route_query(stmt, masked, stream_to)
+
+    # ALTER TABLE sub-commands, tried in this order after the shared
+    # head. Each handler gets ``(stmt, table, match, masked)``.
+    _ALTER_ROUTES = (
+        (_ALTER_COLUMN_RE, "_alter_column"),
+        (_PARTITION_FROM_RE, "_alter_partition_from"),
+        (_DROP_DETACHED_RE, "_alter_drop_detached"),
+        (_DROP_PARTITION_RE, "_alter_partition"),
+        (_ALTER_PROJECTION_RE, "_alter_projection"),
+        (_ALTER_INDEX_RE, "_alter_index"),
+        (_MATERIALIZE_TTL_RE, "_alter_materialize_ttl"),
+        (_MODIFY_ORDER_BY_RE, "_alter_order_by"),
+        (_ALTER_TTL_RE, "_alter_ttl"),
+        (_ALTER_CLEAR_COLUMN_RE, "_alter_clear_column"),
+        (_ALTER_FREEZE_RE, "_alter_freeze"),
+        (_ALTER_UNFREEZE_RE, "_alter_unfreeze"),
+        (_ALTER_FETCH_RE, "_alter_fetch"),
+        # the IN PARTITION fold runs before DELETE/UPDATE match
+        (_IN_PARTITION_RE, "_alter_in_partition"),
+        (_ALTER_DELETE_RE, "_alter_delete"),
+        (_ALTER_UPDATE_RE, "_alter_update"),
+        (_COMMENT_COLUMN_RE, "_alter_comment_column"),
+        (_ALTER_SETTING_RE, "_alter_setting"),
+    )
+
+    def _alter_column(self, stmt, name, m, masked) -> _Logged:
+        """CH column DDL. In CH these are metadata-only (old parts get
+        the column materialized lazily on merge); here they rewrite
+        storage eagerly — same observable semantics, mutation-cost
+        model, and zero hidden per-file schema divergence (every
+        backing file always matches the table schema, so plain
+        parquet reads never need mergeSchema)."""
+        op, col, rest = self._raw_groups(m, stmt.request.query)
+        op = op.upper()
+        self._attached_path_or_raise(name, f"ALTER TABLE {op} COLUMN")
+        if self._attached[name][1] == "csv":
+            raise ValueError(
+                f"ALTER TABLE {op} COLUMN on a csv-attached table "
+                "is not supported (the attach-time schema string "
+                "would go stale); rewrite via INSERT INTO FUNCTION "
+                "and re-ATTACH"
+            )
+        tbl = self.spark.table(name)
+        from pyspark.sql import functions as F
+
+        from bighouse_spark.dialect.schema import ch_type_to_spark
+
+        # The recorded CH DDL (CREATE TABLE / ATTACH schema
+        # string) must track column DDL, or the re-attach after
+        # the storage rewrite pins the PRE-ALTER schema — an
+        # added column was unreadable and positional INSERTs
+        # mis-sized (round-13 probe). Edit the recorded items in
+        # declared order; tables attached without a schema
+        # string keep inferring (None stays None).
+        old_ddl = self._ch_col_ddl.get(name) \
+            or self._attached[name][2]
+        ddl_items = (
+            [it.strip() for it in split_top_level(old_ddl)]
+            if old_ddl else None
+        )
+
+        def _item_name(it: str) -> str:
+            m2 = re.match(r'^\s*(`[^`]+`|"[^"]+"|\S+)', it)
+            return m2.group(1).strip('`"') if m2 else it
+
+        if op == "ADD":
+            dm = re.match(
+                r"^([\w()\s,]+?)(?:\s+DEFAULT\s+(.+))?$", rest.strip()
+            )
+            if not dm or not dm.group(1).strip():
+                raise ValueError(
+                    f"ALTER TABLE ADD COLUMN {col}: need a type, got "
+                    f"{rest!r}"
+                )
+            ch_type, default = dm.group(1).strip(), dm.group(2)
+            dt = ch_type_to_spark(ch_type)
+            expr = (
+                self._transpile(f"SELECT {default}").sql
+                .removeprefix("SELECT ")
+                if default else "NULL"
+            )
+            df = tbl.withColumn(col, F.expr(expr).cast(dt))
+            if default:
+                # future partial INSERTs fill with this too (CH)
+                self._column_defaults.setdefault(name, {})[col] = default
             if ddl_items is not None:
-                new_ddl = ", ".join(ddl_items)
-                path, fmt, _old = self._attached[name]
-                self._attached[name] = (path, fmt, new_ddl)
-                if name in self._ch_col_ddl:
-                    self._ch_col_ddl[name] = new_ddl
-            return self._rewrite_attached(
-                name, df, f"<alter {op.lower()} column>"
-            )
-        # CH partition management: DROP PARTITION deletes the
-        # partition DIRECTORY — an O(metadata) retention operation, no
-        # data rewrite (the reason MergeTree users partition by month;
-        # at 100 TB this is the difference between rm -r one dir and
-        # rewriting the table).
-        m_pf = self._PARTITION_FROM_RE.match(request.query)
-        if m_pf:
-            name, verb, pq, praw, other = m_pf.groups()
-            return self._partition_from(
-                name, verb.upper(),
-                self._unquote_partition_id(pq) if pq is not None
-                else praw,
-                other,
-            )
-        m_dd = self._DROP_DETACHED_RE.match(request.query)
-        if m_dd:
-            import os
-            import shutil
-
-            name = m_dd.group(1)
-            part_val = (
-                self._unquote_partition_id(m_dd.group(2))
-                if m_dd.group(2) is not None else m_dd.group(3)
-            )
-            local = self._attached_path_or_raise(
-                name, "ALTER TABLE DROP DETACHED PARTITION"
-            )
-            pcols = self._partitioned.get(name)
-            if not pcols or len(pcols) != 1:
+                ddl_items.append(
+                    f"`{col}` {ch_type}"
+                    + (f" DEFAULT {default}" if default else "")
+                )
+        elif op == "DROP":
+            if col not in tbl.columns:
+                raise ValueError(f"DROP COLUMN {col}: no such column")
+            # CH refuses dropping key columns — and silently
+            # keeping the stale record was worse: a dropped
+            # ORDER BY column made _table_writer's all-present
+            # guard skip the file sort ENTIRELY on every future
+            # write (round-14 probe, live).
+            if col in (self._partitioned.get(name) or []):
                 raise ValueError(
-                    f"ALTER TABLE {name} DROP DETACHED PARTITION: "
-                    "single-column partitioned tables only"
+                    f"DROP COLUMN {col}: column is the table's "
+                    "PARTITION BY key (ClickHouse refuses "
+                    "dropping key columns)"
                 )
-            parked_dir = os.path.join(local, ".detached")
-            removed = []
-            # only the BARE token is the keyword — the quoted
-            # spelling 'ALL' addresses the partition whose value is
-            # the string ALL, like every other partition router
-            is_all = (
-                m_dd.group(3) is not None
-                and m_dd.group(3).upper() == "ALL"
-            )
-            if is_all:
-                if os.path.isdir(parked_dir):
-                    for frag in sorted(os.listdir(parked_dir)):
-                        fp = os.path.join(parked_dir, frag)
-                        if os.path.isdir(fp):
-                            shutil.rmtree(fp)
-                            removed.append(frag)
-            else:
-                frag = (
-                    f"{pcols[0]}="
-                    f"{self._escape_partition_value(part_val)}"
-                )
-                fp = os.path.join(parked_dir, frag)
-                if not os.path.isdir(fp):
-                    raise ValueError(
-                        f"DROP DETACHED PARTITION {part_val!r}: no "
-                        f"detached partition (expected {frag} under "
-                        ".detached — see system.detached_parts)"
-                    )
-                shutil.rmtree(fp)
-                removed.append(frag)
-            return _Logged(
-                QueryResult(cols=["dropped"], rows=[[f] for f in removed]),
-                "<drop detached partition>",
-            )
-        m_dp = self._DROP_PARTITION_RE.match(request.query)
-        if m_dp:
-            name, verb = m_dp.group(1), m_dp.group(2)
-            part_val = (
-                self._unquote_partition_id(m_dp.group(3))
-                if m_dp.group(3) is not None else m_dp.group(4)
-            )
-            local = self._attached_path_or_raise(
-                name, f"ALTER TABLE {verb.upper()} PARTITION"
-            )
-            pcols = self._partitioned.get(name)
-            if not pcols:
+            if col in (self._ordered.get(name) or []):
                 raise ValueError(
-                    f"ALTER TABLE {name} {verb.upper()} PARTITION: "
-                    "table is not partitioned"
+                    f"DROP COLUMN {col}: column is part of the "
+                    "ORDER BY key (ClickHouse refuses dropping "
+                    "key columns)"
                 )
-            if len(pcols) != 1:
-                raise ValueError(
-                    f"ALTER TABLE {name} {verb.upper()} PARTITION: "
-                    "single-column partition keys only "
-                    f"(table has {pcols})"
-                )
-            import os
-            import shutil
-
-            # Escaped directory spelling (ADVICE r13): a value like
-            # "a:b" or "it's" lands on disk as a%3Ab / it%27s — the
-            # raw join silently no-opped the DROP for partitions
-            # that exist (found by the round-14 ledger-corner tests).
-            frag = f"{pcols[0]}={self._escape_partition_value(part_val)}"
-            live = os.path.join(local, frag)
-            # Dot-prefixed so Spark's file listing ignores parked
-            # partitions (same convention as _SUCCESS/_temporary).
-            parked_dir = os.path.join(local, ".detached")
-            parked = os.path.join(parked_dir, frag)
-            verb = verb.upper()
-            acted = False
-            if verb == "DROP" and os.path.isdir(live):
-                shutil.rmtree(live)
-                acted = True
-            elif verb == "DETACH" and os.path.isdir(live):
-                if os.path.isdir(parked):
-                    # shutil.move into an existing dir would NEST the
-                    # partition inside it and corrupt the layout.
-                    raise ValueError(
-                        f"DETACH PARTITION {part_val!r}: a detached "
-                        "copy already exists; ATTACH or remove it first"
-                    )
-                os.makedirs(parked_dir, exist_ok=True)
-                shutil.move(live, parked)
-                acted = True
-            elif verb == "ATTACH" and os.path.isdir(parked):
-                if os.path.isdir(live):
-                    raise ValueError(
-                        f"ATTACH PARTITION {part_val!r}: live partition "
-                        "already exists (INSERTed since the detach); "
-                        "DROP it first or keep the live data"
-                    )
-                # Column DDL may have run since the DETACH (the
-                # whole-table rewrite skips parked partitions), so
-                # the parked files can carry a STALE schema — a plain
-                # move would hand readers missing columns (silent
-                # NULLs instead of declared defaults) or type
-                # mismatches. Reconcile like CH materializes defaults
-                # for attached parts: fill added columns, drop
-                # removed ones, cast changed types; identical schemas
-                # keep the plain O(1) move.
-                _, fmt_a, _ = self._attached[name]
-                if fmt_a not in ("parquet", "orc"):
-                    # Only self-describing formats can DETECT drift —
-                    # a raw csv/json read infers _c0.. names, making
-                    # the compare always "different" and the
-                    # reconcile below would then replace real data
-                    # with defaults (review-found, round 14). Column
-                    # DDL is REFUSED for csv-attached tables, so
-                    # their parked schema cannot have drifted: the
-                    # plain move is correct.
-                    shutil.move(parked, live)
-                    acted = True
-                    parked = None
-                if parked is not None:
-                    target = self._target_schema(name)
-                    want = [
-                        f for f in target.fields
-                        if f.name not in pcols
-                    ]
-                    pf = self.spark.read.format(fmt_a).load(parked)
-                    same = list(pf.columns) == [
-                        f.name for f in want
-                    ] and all(
-                        pf.schema[f.name].dataType.simpleString()
-                        == f.dataType.simpleString()
-                        for f in want
-                    )
-                if parked is not None and same:
-                    shutil.move(parked, live)
-                elif parked is not None:
-                    from pyspark.sql import functions as F
-
-                    import uuid as _uuid
-
-                    aligned = pf.select(*[
-                        (
-                            F.col(f.name) if f.name in pf.columns
-                            else self._missing_col_default(name, f)
-                        ).cast(f.dataType).alias(f.name)
-                        for f in want
-                    ])
-                    tmp = f"{local}.attp-{_uuid.uuid4().hex[:8]}"
-                    try:
-                        self._table_writer(
-                            aligned, name, fmt_a, "overwrite",
-                            partition_in_path=True,
-                        ).save(tmp)
-                    except BaseException:
-                        shutil.rmtree(tmp, ignore_errors=True)
-                        raise
-                    shutil.move(tmp, live)
-                    shutil.rmtree(parked)
-                acted = True
-            if acted:
-                self.clear_cache()
-                path, fmt, schema = self._attached[name]
-                self.attach_table(name, path, fmt=fmt, schema=schema)
-            return _Logged(
-                QueryResult(
-                    cols=["partition"], rows=[[frag if acted else ""]]
-                ),
-                f"<{verb.lower()} partition>",
+            self._refuse_referenced_column(
+                name, col, "DROP", " (ClickHouse refuses too)"
             )
-        # CH mutations: whole-part rewrites, async/non-atomic in CH
-        # too (docs: "mutations rewrite data parts").
-        if self._ALTER_PROJECTION_RE.match(request.query):
+            df = tbl.drop(col)
+            self._column_defaults.get(name, {}).pop(col, None)
+            if ddl_items is not None:
+                ddl_items = [it for it in ddl_items if _item_name(it) != col]
+        elif op == "RENAME":
+            rm = re.match(r"^TO\s+[`\"]?(\w+)[`\"]?$", rest.strip(),
+                          re.IGNORECASE)
+            if not rm:
+                raise ValueError(
+                    f"RENAME COLUMN {col}: expected TO <name>, got "
+                    f"{rest!r}"
+                )
+            if col in (self._partitioned.get(name) or []):
+                raise ValueError(
+                    f"RENAME COLUMN {col}: column is the table's "
+                    "PARTITION BY key (its name is baked into "
+                    "every partition directory)"
+                )
+            self._refuse_referenced_column(name, col, "RENAME", "")
+            df = tbl.withColumnRenamed(col, rm.group(1))
+            dflts = self._column_defaults.get(name, {})
+            if col in dflts:
+                dflts[rm.group(1)] = dflts.pop(col)
+            # the sorting-key record follows the rename, so
+            # future writes keep sorting (a stale name silently
+            # skipped the sort — same class as DROP above)
+            ocols = self._ordered.get(name)
+            if ocols and col in ocols:
+                self._ordered[name] = [
+                    rm.group(1) if c == col else c for c in ocols
+                ]
+            if ddl_items is not None:
+                ddl_items = [
+                    re.sub(r'^\s*(`[^`]+`|"[^"]+"|\S+)',
+                           f"`{rm.group(1)}`", it, count=1)
+                    if _item_name(it) == col else it
+                    for it in ddl_items
+                ]
+        else:  # MODIFY: retype in place (optionally new DEFAULT)
+            if re.fullmatch(r"REMOVE\s+DEFAULT", rest.strip(),
+                            re.IGNORECASE):
+                # metadata-only in CH too: stored values keep
+                # their bytes; future fills revert to the type
+                # default. The recorded DDL item sheds its
+                # DEFAULT clause so SHOW CREATE stays truthful.
+                self._column_defaults.get(name, {}).pop(col, None)
+                self._strip_ddl_default(name, col)
+                return QueryResult(
+                    cols=["table", "column"], rows=[[name, col]]
+                )
+            from bighouse_spark.dialect.schema import (
+                parse_column_item,
+            )
+
+            _nm, mod_type, mod_clauses = parse_column_item(
+                f"`{col}` {rest.strip()}"
+            )
+            dt = ch_type_to_spark(mod_type)
+            df = tbl.withColumn(col, F.col(col).cast(dt))
+            if "DEFAULT" in mod_clauses:
+                self._column_defaults.setdefault(name, {})[col] = (
+                    mod_clauses["DEFAULT"]
+                )
+            if ddl_items is not None:
+                ddl_items = [
+                    f"`{col}` {mod_type}"
+                    if _item_name(it) == col else it
+                    for it in ddl_items
+                ]
+        if ddl_items is not None:
+            new_ddl = ", ".join(ddl_items)
+            path, fmt, _old = self._attached[name]
+            self._attached[name] = (path, fmt, new_ddl)
+            if name in self._ch_col_ddl:
+                self._ch_col_ddl[name] = new_ddl
+        return self._rewrite_attached(name, df, f"<alter {op.lower()} column>")
+
+    def _refuse_referenced_column(
+        self, name: str, col: str, op: str, tail: str,
+    ) -> None:
+        """Refuse DROP/RENAME COLUMN of a column that the table TTL, a
+        skip index or another column's DEFAULT references; ``tail``
+        ends each message."""
+        ref = re.compile(rf"\b{re.escape(col)}\b")
+        ttl = self._ttl.get(name)
+        if ttl and ref.search(_mask_string_literals(ttl)):
             raise ValueError(
-                "PROJECTIONs are MergeTree-internal precomputations; "
-                "CREATE MATERIALIZED VIEW <name> ENGINE = "
-                "AggregatingMergeTree AS SELECT ... gives the same "
-                "precomputed read path here"
+                f"{op} COLUMN {col}: column is referenced by the table "
+                f"TTL ({ttl}) — REMOVE TTL or MODIFY TTL first{tail}"
             )
-        m_idx = self._ALTER_INDEX_RE.match(request.query)
-        if m_idx:
-            name, op, iname, rest = m_idx.groups()
-            op = op.upper()
-            self._attached_path_or_raise(name, f"ALTER TABLE {op} INDEX")
-            idx = self._skip_indices.setdefault(name, {})
-            if op == "ADD":
-                # masked locate: the index EXPR may hold literals
-                # containing ' TYPE x' (round-14 router sweep)
-                m = re.match(
-                    r"^(.*?)\s+TYPE\s+(\w+)(?:\s*\([^)]*\))?"
-                    r"(?:\s+GRANULARITY\s+\d+)?\s*$",
-                    _mask_string_literals(rest),
-                    re.IGNORECASE | re.DOTALL,
+        for iname, (iexpr, _ity) in (
+            self._skip_indices.get(name) or {}
+        ).items():
+            if ref.search(_mask_string_literals(iexpr)):
+                raise ValueError(
+                    f"{op} COLUMN {col}: column is used by index "
+                    f"{iname} — DROP INDEX {iname} first{tail}"
                 )
-                if not m:
-                    raise ValueError(
-                        "ALTER TABLE ADD INDEX <name> <expr> TYPE "
-                        "{bloom_filter|tokenbf_v1|ngrambf_v1|minmax|"
-                        "set} [GRANULARITY n]"
-                    )
-                expr = rest[m.start(1):m.end(1)].strip()
-                ityp = m.group(2).lower()
-                if ityp not in (
-                    "bloom_filter", "tokenbf_v1", "ngrambf_v1",
-                    "minmax", "set",
-                ):
-                    raise ValueError(
-                        f"ADD INDEX: unsupported type {ityp!r} "
-                        "(bloom_filter/tokenbf_v1/ngrambf_v1/minmax/"
-                        "set are served)"
-                    )
-                col = expr.strip().strip('`"')
-                if ityp in (
-                    "bloom_filter", "tokenbf_v1", "ngrambf_v1"
-                ) and not re.match(r"^\w+$", col):
-                    raise ValueError(
-                        "bloom-family skip indices materialize as "
-                        "parquet column-chunk bloom filters, which "
-                        "need a PLAIN COLUMN — index the column "
-                        "itself, not an expression"
-                    )
-                idx[iname] = (col, ityp)
-                return QueryResult(
-                    cols=["table", "index", "type"],
-                    rows=[[name, iname, ityp]],
+        for ocol, dexpr in (self._column_defaults.get(name) or {}).items():
+            if ocol != col and ref.search(_mask_string_literals(dexpr)):
+                raise ValueError(
+                    f"{op} COLUMN {col}: column is referenced by "
+                    f"{ocol}'s DEFAULT ({dexpr}) — change that default "
+                    f"first{tail}"
                 )
-            if op == "DROP":
-                idx.pop(iname, None)
-                return QueryResult(
-                    cols=["table", "index"], rows=[[name, iname]],
-                )
-            if op == "MATERIALIZE":
-                # rewrite every file so the blooms exist on disk for
-                # data inserted BEFORE the index was added (CH's
-                # MATERIALIZE INDEX backfill)
-                if iname not in idx:
-                    raise ValueError(
-                        f"MATERIALIZE INDEX {iname}: no such index "
-                        f"on {name}"
-                    )
-                return self._rewrite_attached(
-                    name, self.spark.table(name), "<materialize index>"
-                )
-            # CLEAR INDEX: parquet stats/blooms are part of the data
-            # files — clearing is a no-op acknowledged like CH
-            return QueryResult(cols=["table", "index"], rows=[[name, iname]])
-        m_mttl = re.match(
-            r"^\s*ALTER\s+TABLE\s+[`\"]?(\w+)[`\"]?"
-            r"(?:\s+ON\s+CLUSTER\s+\S+)?\s+MATERIALIZE\s+TTL\s*$",
-            request.query, re.IGNORECASE,
+
+    def _alter_partition_from(self, stmt, name, m, masked) -> _Logged:
+        verb, pq, praw, other = self._raw_groups(m, stmt.request.query)
+        return self._partition_from(
+            name, verb.upper(),
+            self._unquote_partition_id(pq) if pq is not None else praw,
+            other,
         )
-        if m_mttl:
-            # CH `ALTER TABLE t MATERIALIZE TTL`: apply the recorded
-            # TTL filter NOW (a part rewrite), instead of waiting for
-            # the next merge/OPTIMIZE.
-            name = m_mttl.group(1)
-            self._attached_path_or_raise(
-                name, "ALTER TABLE MATERIALIZE TTL"
-            )
-            ttl = self._ttl.get(name)
-            if not ttl:
-                raise ValueError(
-                    f"MATERIALIZE TTL: table {name} has no TTL — set "
-                    "one with ALTER TABLE ... MODIFY TTL <expr>"
-                )
-            sel = self._transpile(
-                f"SELECT * FROM {name} WHERE "
-                f"ifNull(({ttl}) > now(), true)"
-            )
-            self._record_mutation(name, "MATERIALIZE TTL")
-            return self._rewrite_attached(
-                name, self.spark.sql(sel.sql), sel.sql
-            )
-        m_mob = re.match(
-            r"^\s*ALTER\s+TABLE\s+[`\"]?(\w+)[`\"]?"
-            r"(?:\s+ON\s+CLUSTER\s+\S+)?\s+MODIFY\s+ORDER\s+BY\s+"
-            r"(\((?:[^()]|\([^()]*\))*\)|\S+)\s*$",
-            request.query, re.IGNORECASE,
+
+    def _alter_drop_detached(self, stmt, name, m, masked) -> _Logged:
+        import os
+        import shutil
+
+        pq, praw = self._raw_groups(m, stmt.request.query)
+        part_val = self._unquote_partition_id(pq) if pq is not None else praw
+        local = self._attached_path_or_raise(
+            name, "ALTER TABLE DROP DETACHED PARTITION"
         )
-        if m_mob:
-            # CH `MODIFY ORDER BY`: metadata-only — the sorting key
-            # may only be EXTENDED (CH requires appended expressions;
-            # existing parts keep their old order until rewritten,
-            # exactly as here: future writes sort by the new key).
-            name = m_mob.group(1)
-            self._attached_path_or_raise(
-                name, "ALTER TABLE MODIFY ORDER BY"
+        pcols = self._partitioned.get(name)
+        if not pcols or len(pcols) != 1:
+            raise ValueError(
+                f"ALTER TABLE {name} DROP DETACHED PARTITION: "
+                "single-column partitioned tables only"
             )
-            raw_key = m_mob.group(2).strip()
-            cols = [
-                c.strip().strip('`"')
-                for c in raw_key.strip("()").split(",")
-                if c.strip()
-            ]
-            have = set(self.spark.table(name).columns)
-            bad = [c for c in cols if c not in have]
-            if bad:
+        parked_dir = os.path.join(local, ".detached")
+        removed = []
+        # only the BARE token is the keyword — the quoted
+        # spelling 'ALL' addresses the partition whose value is
+        # the string ALL, like every other partition router
+        is_all = praw is not None and praw.upper() == "ALL"
+        if is_all:
+            if os.path.isdir(parked_dir):
+                for frag in sorted(os.listdir(parked_dir)):
+                    fp = os.path.join(parked_dir, frag)
+                    if os.path.isdir(fp):
+                        shutil.rmtree(fp)
+                        removed.append(frag)
+        else:
+            frag = (
+                f"{pcols[0]}="
+                f"{self._escape_partition_value(part_val)}"
+            )
+            fp = os.path.join(parked_dir, frag)
+            if not os.path.isdir(fp):
                 raise ValueError(
-                    f"MODIFY ORDER BY: unknown column(s) {bad} — "
-                    "expression keys are not supported here (use "
-                    "stored columns, as CREATE TABLE ORDER BY does)"
+                    f"DROP DETACHED PARTITION {part_val!r}: no "
+                    f"detached partition (expected {frag} under "
+                    ".detached — see system.detached_parts)"
                 )
-            prev = self._ordered.get(name) or []
-            if prev and cols[:len(prev)] != prev:
+            shutil.rmtree(fp)
+            removed.append(frag)
+        return _Logged(
+            QueryResult(cols=["dropped"], rows=[[f] for f in removed]),
+            "<drop detached partition>",
+        )
+
+    def _alter_partition(self, stmt, name, m, masked) -> _Logged:
+        """CH partition management: DROP PARTITION deletes the
+        partition DIRECTORY — an O(metadata) retention operation, no
+        data rewrite (the reason MergeTree users partition by month;
+        at 100 TB this is the difference between rm -r one dir and
+        rewriting the table)."""
+        verb, pq, praw = self._raw_groups(m, stmt.request.query)
+        part_val = self._unquote_partition_id(pq) if pq is not None else praw
+        local = self._attached_path_or_raise(
+            name, f"ALTER TABLE {verb.upper()} PARTITION"
+        )
+        pcols = self._partitioned.get(name)
+        if not pcols:
+            raise ValueError(
+                f"ALTER TABLE {name} {verb.upper()} PARTITION: "
+                "table is not partitioned"
+            )
+        if len(pcols) != 1:
+            raise ValueError(
+                f"ALTER TABLE {name} {verb.upper()} PARTITION: "
+                "single-column partition keys only "
+                f"(table has {pcols})"
+            )
+        import os
+        import shutil
+
+        # Escaped directory spelling (ADVICE r13): a value like
+        # "a:b" or "it's" lands on disk as a%3Ab / it%27s — the
+        # raw join silently no-opped the DROP for partitions
+        # that exist (found by the round-14 ledger-corner tests).
+        frag = f"{pcols[0]}={self._escape_partition_value(part_val)}"
+        live = os.path.join(local, frag)
+        # Dot-prefixed so Spark's file listing ignores parked
+        # partitions (same convention as _SUCCESS/_temporary).
+        parked_dir = os.path.join(local, ".detached")
+        parked = os.path.join(parked_dir, frag)
+        verb = verb.upper()
+        acted = False
+        if verb == "DROP" and os.path.isdir(live):
+            shutil.rmtree(live)
+            acted = True
+        elif verb == "DETACH" and os.path.isdir(live):
+            if os.path.isdir(parked):
+                # shutil.move into an existing dir would NEST the
+                # partition inside it and corrupt the layout.
                 raise ValueError(
-                    f"MODIFY ORDER BY: the new key must extend the "
-                    f"existing sorting key {prev} (ClickHouse only "
-                    "allows appending to ORDER BY)"
+                    f"DETACH PARTITION {part_val!r}: a detached "
+                    "copy already exists; ATTACH or remove it first"
                 )
-            self._ordered[name] = cols
+            os.makedirs(parked_dir, exist_ok=True)
+            shutil.move(live, parked)
+            acted = True
+        elif verb == "ATTACH" and os.path.isdir(parked):
+            if os.path.isdir(live):
+                raise ValueError(
+                    f"ATTACH PARTITION {part_val!r}: live partition "
+                    "already exists (INSERTed since the detach); "
+                    "DROP it first or keep the live data"
+                )
+            # Column DDL may have run since the DETACH (the
+            # whole-table rewrite skips parked partitions), so
+            # the parked files can carry a STALE schema — a plain
+            # move would hand readers missing columns (silent
+            # NULLs instead of declared defaults) or type
+            # mismatches. Reconcile like CH materializes defaults
+            # for attached parts: fill added columns, drop
+            # removed ones, cast changed types; identical schemas
+            # keep the plain O(1) move.
+            _, fmt_a, _ = self._attached[name]
+            if fmt_a not in ("parquet", "orc"):
+                # Only self-describing formats can DETECT drift —
+                # a raw csv/json read infers _c0.. names, making
+                # the compare always "different" and the
+                # reconcile below would then replace real data
+                # with defaults (review-found, round 14). Column
+                # DDL is REFUSED for csv-attached tables, so
+                # their parked schema cannot have drifted: the
+                # plain move is correct.
+                shutil.move(parked, live)
+                acted = True
+                parked = None
+            if parked is not None:
+                target = self._target_schema(name)
+                want = [f for f in target.fields if f.name not in pcols]
+                pf = self.spark.read.format(fmt_a).load(parked)
+                same = list(pf.columns) == [
+                    f.name for f in want
+                ] and all(
+                    pf.schema[f.name].dataType.simpleString()
+                    == f.dataType.simpleString()
+                    for f in want
+                )
+            if parked is not None and same:
+                shutil.move(parked, live)
+            elif parked is not None:
+                from pyspark.sql import functions as F
+
+                import uuid as _uuid
+
+                aligned = pf.select(*[
+                    (
+                        F.col(f.name) if f.name in pf.columns
+                        else self._missing_col_default(name, f)
+                    ).cast(f.dataType).alias(f.name)
+                    for f in want
+                ])
+                tmp = f"{local}.attp-{_uuid.uuid4().hex[:8]}"
+                try:
+                    self._table_writer(
+                        aligned, name, fmt_a, "overwrite",
+                        partition_in_path=True,
+                    ).save(tmp)
+                except BaseException:
+                    shutil.rmtree(tmp, ignore_errors=True)
+                    raise
+                shutil.move(tmp, live)
+                shutil.rmtree(parked)
+            acted = True
+        if acted:
+            self.clear_cache()
+            path, fmt, schema = self._attached[name]
+            self.attach_table(name, path, fmt=fmt, schema=schema)
+        return _Logged(
+            QueryResult(
+                cols=["partition"], rows=[[frag if acted else ""]]
+            ),
+            f"<{verb.lower()} partition>",
+        )
+
+    def _alter_projection(self, stmt, name, m, masked):
+        raise ValueError(
+            "PROJECTIONs are MergeTree-internal precomputations; "
+            "CREATE MATERIALIZED VIEW <name> ENGINE = "
+            "AggregatingMergeTree AS SELECT ... gives the same "
+            "precomputed read path here"
+        )
+
+    def _alter_index(self, stmt, name, m_idx, masked):
+        op, iname, rest = self._raw_groups(m_idx, stmt.request.query)
+        op = op.upper()
+        self._attached_path_or_raise(name, f"ALTER TABLE {op} INDEX")
+        idx = self._skip_indices.setdefault(name, {})
+        if op == "ADD":
+            # masked locate: the index EXPR may hold literals
+            # containing ' TYPE x' (round-14 router sweep)
+            m = re.match(
+                r"^(.*?)\s+TYPE\s+(\w+)(?:\s*\([^)]*\))?"
+                r"(?:\s+GRANULARITY\s+\d+)?\s*$",
+                masked[m_idx.start(3):m_idx.end(3)],
+                re.IGNORECASE | re.DOTALL,
+            )
+            if not m:
+                raise ValueError(
+                    "ALTER TABLE ADD INDEX <name> <expr> TYPE "
+                    "{bloom_filter|tokenbf_v1|ngrambf_v1|minmax|"
+                    "set} [GRANULARITY n]"
+                )
+            expr = rest[m.start(1):m.end(1)].strip()
+            ityp = m.group(2).lower()
+            if ityp not in (
+                "bloom_filter", "tokenbf_v1", "ngrambf_v1",
+                "minmax", "set",
+            ):
+                raise ValueError(
+                    f"ADD INDEX: unsupported type {ityp!r} "
+                    "(bloom_filter/tokenbf_v1/ngrambf_v1/minmax/"
+                    "set are served)"
+                )
+            col = expr.strip().strip('`"')
+            if ityp in (
+                "bloom_filter", "tokenbf_v1", "ngrambf_v1"
+            ) and not re.match(r"^\w+$", col):
+                raise ValueError(
+                    "bloom-family skip indices materialize as "
+                    "parquet column-chunk bloom filters, which "
+                    "need a PLAIN COLUMN — index the column "
+                    "itself, not an expression"
+                )
+            idx[iname] = (col, ityp)
             return QueryResult(
-                cols=["table", "order_by"],
-                rows=[[name, ", ".join(cols)]],
+                cols=["table", "index", "type"],
+                rows=[[name, iname, ityp]],
             )
-        m_ttl = self._ALTER_TTL_RE.match(request.query)
-        if m_ttl:
-            name, remove, expr = m_ttl.groups()
-            self._attached_path_or_raise(name, "ALTER TABLE TTL")
-            if remove:
-                self._ttl.pop(name, None)
-                return QueryResult(cols=["table"], rows=[[name]])
-            expr = expr.strip()
-            # validate now (typecheck via LIMIT 0), apply at OPTIMIZE
-            probe = self._transpile(
-                f"SELECT ifNull(({expr}) > now(), true) AS "
-                f"__ttl_probe FROM {name} LIMIT 0"
+        if op == "DROP":
+            idx.pop(iname, None)
+            return QueryResult(
+                cols=["table", "index"], rows=[[name, iname]],
             )
-            self.spark.sql(probe.sql).schema  # analysis-only
-            self._ttl[name] = expr
-            return QueryResult(cols=["table", "ttl"], rows=[[name, expr]])
-        m_clr = self._ALTER_CLEAR_COLUMN_RE.match(request.query)
-        if m_clr:
-            name, col, in_part = m_clr.groups()
-            self._attached_path_or_raise(name, "ALTER TABLE CLEAR COLUMN")
-            df = self.spark.table(name)
-            if col not in df.columns:
-                raise ValueError(f"CLEAR COLUMN: no column {col!r}")
-            if in_part:
-                return self._clear_column_in_partition(name, col, in_part)
-            clear_sql = self._clear_column_sql(name, col)
-            items = [
-                f"{clear_sql} AS `{c}`" if c == col else f"`{c}`"
-                for c in df.columns
-            ]
-            sel = f"SELECT {', '.join(items)} FROM {name}"
-            return self._rewrite_attached(name, self.spark.sql(sel), sel)
-        m_frz = self._ALTER_FREEZE_RE.match(request.query)
-        if m_frz:
-            name, pq, praw, snap = m_frz.groups()
-            return self._freeze_attached(
-                name, self._unquote_partition_id(snap),
-                partition_val=self._unquote_partition_id(pq)
-                if pq is not None else praw,
+        if op == "MATERIALIZE":
+            # rewrite every file so the blooms exist on disk for
+            # data inserted BEFORE the index was added (CH's
+            # MATERIALIZE INDEX backfill)
+            if iname not in idx:
+                raise ValueError(
+                    f"MATERIALIZE INDEX {iname}: no such index "
+                    f"on {name}"
+                )
+            return self._rewrite_attached(
+                name, self.spark.table(name), "<materialize index>"
             )
-        m_unf = re.match(
-            r"^\s*ALTER\s+TABLE\s+[`\"]?(\w+)[`\"]?"
-            r"(?:\s+ON\s+CLUSTER\s+\S+)?\s+UNFREEZE"
-            r"(?:\s+PARTITION\s+(?:ID\s+)?\S+)?"
-            r"\s+WITH\s+NAME\s+'((?:[^'\\]|\\.|'')+)'\s*$",
-            request.query, re.IGNORECASE,
-        )
-        if m_unf:
-            # UNFREEZE removes the named FREEZE snapshot (CH 21.x+).
-            # Snapshots here are whole shadow trees; the PARTITION
-            # spelling removes the same named tree (a partition-
-            # scoped FREEZE already wrote only that partition).
-            import os
-            import shutil
+        # CLEAR INDEX: parquet stats/blooms are part of the data
+        # files — clearing is a no-op acknowledged like CH
+        return QueryResult(cols=["table", "index"], rows=[[name, iname]])
 
-            name, snap = m_unf.groups()
-            snap = self._unquote_partition_id(snap)
-            local = self._attached_path_or_raise(
-                name, "ALTER TABLE UNFREEZE"
-            )
-            self._check_snapshot_name(snap)
-            dest = os.path.join(f"{local.rstrip('/')}.shadow", snap)
-            if not os.path.isdir(dest):
-                raise ValueError(
-                    f"UNFREEZE {name}: no snapshot named {snap!r}"
-                )
-            shutil.rmtree(dest)
-            return QueryResult(cols=["unfrozen"], rows=[[snap]])
-        if re.match(
-            r"^\s*ALTER\s+TABLE\s+[`\"]?\w+[`\"]?"
-            r"(?:\s+ON\s+CLUSTER\s+\S+)?\s+FETCH\s+PARTITION\b",
-            request.query, re.IGNORECASE,
-        ):
+    def _alter_materialize_ttl(self, stmt, name, m, masked) -> _Logged:
+        # CH `ALTER TABLE t MATERIALIZE TTL`: apply the recorded
+        # TTL filter NOW (a part rewrite), instead of waiting for
+        # the next merge/OPTIMIZE.
+        self._attached_path_or_raise(name, "ALTER TABLE MATERIALIZE TTL")
+        ttl = self._ttl.get(name)
+        if not ttl:
             raise ValueError(
-                "FETCH PARTITION downloads a part from a ClickHouse "
-                "replica's ZooKeeper path — replication-specific "
-                "storage internals this engine does not serve; copy "
-                "partitions between tables with ALTER TABLE ... "
-                "ATTACH/REPLACE PARTITION <p> FROM <table> instead"
+                f"MATERIALIZE TTL: table {name} has no TTL — set "
+                "one with ALTER TABLE ... MODIFY TTL <expr>"
             )
-        # Mutation routers match on a string-literal-masked copy and
-        # re-slice groups from the RAW statement by span — a keyword
-        # (' IN PARTITION ', ' WHERE ') inside an assignment or
-        # condition literal must never split the statement
-        # (VERDICT r13 "What's wrong" #1/#2, reproduced live there).
-        masked_q = _mask_string_literals(request.query)
-        m_inp = self._IN_PARTITION_RE.match(masked_q)
-        if m_inp:
-            head, name, pq, praw, cond = self._raw_groups(
-                m_inp, request.query
+        sel = self._transpile(
+            f"SELECT * FROM {name} WHERE "
+            f"ifNull(({ttl}) > now(), true)"
+        )
+        self._record_mutation(name, "MATERIALIZE TTL")
+        return self._rewrite_attached(name, self.spark.sql(sel.sql), sel.sql)
+
+    def _alter_order_by(self, stmt, name, m, masked) -> QueryResult:
+        # CH `MODIFY ORDER BY`: metadata-only — the sorting key
+        # may only be EXTENDED (CH requires appended expressions;
+        # existing parts keep their old order until rewritten,
+        # exactly as here: future writes sort by the new key).
+        self._attached_path_or_raise(name, "ALTER TABLE MODIFY ORDER BY")
+        raw_key = self._raw_groups(m, stmt.request.query)[0].strip()
+        cols = [
+            c.strip().strip('`"')
+            for c in raw_key.strip("()").split(",")
+            if c.strip()
+        ]
+        have = set(self.spark.table(name).columns)
+        bad = [c for c in cols if c not in have]
+        if bad:
+            raise ValueError(
+                f"MODIFY ORDER BY: unknown column(s) {bad} — "
+                "expression keys are not supported here (use "
+                "stored columns, as CREATE TABLE ORDER BY does)"
             )
-            scoped = self._mutation_in_partition(
-                name, head, pq, praw, cond
+        prev = self._ordered.get(name) or []
+        if prev and cols[:len(prev)] != prev:
+            raise ValueError(
+                f"MODIFY ORDER BY: the new key must extend the "
+                f"existing sorting key {prev} (ClickHouse only "
+                "allows appending to ORDER BY)"
             )
-            if scoped is not None:
-                return scoped
-            request = stmt.request = replace(
-                request,
-                query=(
-                    f"{head} WHERE "
-                    f"({self._partition_predicate(name, pq, praw)}) "
-                    f"AND ({self._coerce_mutation_cond(cond)})"
-                ),
+        self._ordered[name] = cols
+        return QueryResult(
+            cols=["table", "order_by"],
+            rows=[[name, ", ".join(cols)]],
+        )
+
+    def _alter_ttl(self, stmt, name, m, masked):
+        remove, expr = self._raw_groups(m, stmt.request.query)
+        self._attached_path_or_raise(name, "ALTER TABLE TTL")
+        if remove:
+            self._ttl.pop(name, None)
+            return QueryResult(cols=["table"], rows=[[name]])
+        expr = expr.strip()
+        # validate now (typecheck via LIMIT 0), apply at OPTIMIZE
+        probe = self._transpile(
+            f"SELECT ifNull(({expr}) > now(), true) AS "
+            f"__ttl_probe FROM {name} LIMIT 0"
+        )
+        self.spark.sql(probe.sql).schema  # analysis-only
+        self._ttl[name] = expr
+        return QueryResult(cols=["table", "ttl"], rows=[[name, expr]])
+
+    def _alter_clear_column(self, stmt, name, m, masked) -> _Logged:
+        col, in_part = self._raw_groups(m, stmt.request.query)
+        self._attached_path_or_raise(name, "ALTER TABLE CLEAR COLUMN")
+        df = self.spark.table(name)
+        if col not in df.columns:
+            raise ValueError(f"CLEAR COLUMN: no column {col!r}")
+        if in_part:
+            return self._clear_column_in_partition(name, col, in_part)
+        clear_sql = self._clear_column_sql(name, col)
+        items = [
+            f"{clear_sql} AS `{c}`" if c == col else f"`{c}`"
+            for c in df.columns
+        ]
+        sel = f"SELECT {', '.join(items)} FROM {name}"
+        return self._rewrite_attached(name, self.spark.sql(sel), sel)
+
+    def _alter_freeze(self, stmt, name, m, masked) -> _Logged:
+        pq, praw, snap = self._raw_groups(m, stmt.request.query)
+        return self._freeze_attached(
+            name, self._unquote_partition_id(snap),
+            partition_val=self._unquote_partition_id(pq)
+            if pq is not None else praw,
+        )
+
+    def _alter_unfreeze(self, stmt, name, m, masked) -> QueryResult:
+        # UNFREEZE removes the named FREEZE snapshot (CH 21.x+).
+        # Snapshots here are whole shadow trees; the PARTITION
+        # spelling removes the same named tree (a partition-
+        # scoped FREEZE already wrote only that partition).
+        import os
+        import shutil
+
+        (snap,) = self._raw_groups(m, stmt.request.query)
+        snap = self._unquote_partition_id(snap)
+        local = self._attached_path_or_raise(name, "ALTER TABLE UNFREEZE")
+        self._check_snapshot_name(snap)
+        dest = os.path.join(f"{local.rstrip('/')}.shadow", snap)
+        if not os.path.isdir(dest):
+            raise ValueError(
+                f"UNFREEZE {name}: no snapshot named {snap!r}"
             )
-            masked_q = _mask_string_literals(request.query)
-        m_del = self._ALTER_DELETE_RE.match(masked_q)
-        if m_del:
-            name, cond = self._raw_groups(m_del, request.query)
-            cond = self._coerce_mutation_cond(cond)
-            self._attached_path_or_raise(name, "ALTER TABLE DELETE")
-            sel = self._transpile(
-                f"SELECT * FROM {name} WHERE NOT ({cond})"
+        shutil.rmtree(dest)
+        return QueryResult(cols=["unfrozen"], rows=[[snap]])
+
+    def _alter_fetch(self, stmt, name, m, masked):
+        raise ValueError(
+            "FETCH PARTITION downloads a part from a ClickHouse "
+            "replica's ZooKeeper path — replication-specific "
+            "storage internals this engine does not serve; copy "
+            "partitions between tables with ALTER TABLE ... "
+            "ATTACH/REPLACE PARTITION <p> FROM <table> instead"
+        )
+
+    def _alter_in_partition(self, stmt, name, m, masked):
+        """Fold ``IN PARTITION p`` into the mutation: a partition-local
+        rewrite when the table allows one, else an ANDed partition-key
+        predicate on the WHERE, after which the statement routes again
+        (to DELETE or UPDATE)."""
+        raw = stmt.request.query
+        head = raw[:m.end(1)]
+        pq, praw, cond = self._raw_groups(m, raw)[1:]
+        scoped = self._mutation_in_partition(
+            name, head, pq, praw, cond, masked[:m.end(1)]
+        )
+        if scoped is not None:
+            return scoped
+        stmt.request = replace(
+            stmt.request,
+            query=(
+                f"{head} WHERE "
+                f"({self._partition_predicate(name, pq, praw)}) "
+                f"AND ({self._coerce_mutation_cond(cond)})"
+            ),
+        )
+        return self._route_alter(
+            stmt, _mask_string_literals(stmt.request.query), None
+        )
+
+    def _alter_delete(self, stmt, name, m, masked) -> _Logged:
+        (cond,) = self._raw_groups(m, stmt.request.query)
+        cond = self._coerce_mutation_cond(cond)
+        self._attached_path_or_raise(name, "ALTER TABLE DELETE")
+        sel = self._transpile(
+            f"SELECT * FROM {name} WHERE NOT ({cond})"
+        )
+        self._record_mutation(name, f"DELETE WHERE {cond}")
+        return self._rewrite_attached(name, self.spark.sql(sel.sql), sel.sql)
+
+    def _alter_update(self, stmt, name, m, masked) -> _Logged:
+        raw = stmt.request.query
+        self._attached_path_or_raise(name, "ALTER TABLE UPDATE")
+        split = self._first_toplevel_where(masked, m.end())
+        if split is None:
+            raise ValueError(
+                f"ALTER TABLE {name} UPDATE: mutations require "
+                "WHERE <condition> (use WHERE 1 for all rows, "
+                "as in ClickHouse)"
             )
-            self._record_mutation(name, f"DELETE WHERE {cond}")
-            return self._rewrite_attached(
-                name, self.spark.sql(sel.sql), sel.sql
+        assigns = raw[m.end():split[0]].strip()
+        cond = self._coerce_mutation_cond(raw[split[1]:].strip())
+        pairs = self._update_pairs(
+            name, assigns, self.spark.table(name).columns
+        )
+        items = [
+            f"CASE WHEN ({cond}) THEN ({pairs[c]}) ELSE `{c}` END"
+            f" AS `{c}`" if c in pairs else f"`{c}`"
+            for c in self.spark.table(name).columns
+        ]
+        sel = self._transpile(
+            f"SELECT {', '.join(items)} FROM {name}"
+        )
+        self._record_mutation(name, f"UPDATE {assigns} WHERE {cond}")
+        return self._rewrite_attached(name, self.spark.sql(sel.sql), sel.sql)
+
+    def _alter_comment_column(self, stmt, name, m, masked):
+        if_exists, col, comment = self._raw_groups(m, stmt.request.query)
+        try:
+            cols = self.spark.table(name).columns
+        except Exception:
+            raise ValueError(
+                f"COMMENT COLUMN: table {name} not found"
             )
-        m_upd = self._ALTER_UPDATE_HEAD_RE.match(masked_q)
-        if m_upd:
-            name = m_upd.group(1)
-            self._attached_path_or_raise(name, "ALTER TABLE UPDATE")
-            split = self._first_toplevel_where(masked_q, m_upd.end())
-            if split is None:
-                raise ValueError(
-                    f"ALTER TABLE {name} UPDATE: mutations require "
-                    "WHERE <condition> (use WHERE 1 for all rows, "
-                    "as in ClickHouse)"
-                )
-            assigns = request.query[m_upd.end():split[0]].strip()
-            cond = self._coerce_mutation_cond(
-                request.query[split[1]:].strip()
+        if col not in cols:
+            if if_exists:
+                return QueryResult(cols=["commented"], rows=[])
+            raise ValueError(
+                f"COMMENT COLUMN: {name} has no column {col}"
             )
-            pairs = self._update_pairs(
-                name, assigns, self.spark.table(name).columns
-            )
-            items = [
-                f"CASE WHEN ({cond}) THEN ({pairs[c]}) ELSE `{c}` END"
-                f" AS `{c}`" if c in pairs else f"`{c}`"
-                for c in self.spark.table(name).columns
-            ]
-            sel = self._transpile(
-                f"SELECT {', '.join(items)} FROM {name}"
-            )
-            self._record_mutation(
-                name, f"UPDATE {assigns} WHERE {cond}"
-            )
-            return self._rewrite_attached(
-                name, self.spark.sql(sel.sql), sel.sql
-            )
+        self._comments[(name, col)] = comment
+        return _Logged(
+            QueryResult(cols=["commented"], rows=[[f"{name}.{col}"]]),
+            "<comment>",
+        )
+
+    def _alter_setting(self, stmt, name, m, masked) -> _Logged:
+        # ALTER TABLE ... MODIFY/RESET SETTING: MergeTree storage
+        # knobs — accepted and dropped like the CREATE-time SETTINGS
+        # clause (parquet storage has no per-table knobs to honor).
+        return _Logged(QueryResult(cols=["ok"], rows=[[1]]), "<alter-setting>")
+
+    def _route_create(self, stmt: _Statement, masked: str, stream_to):
+        self._refuse_access_ddl(masked)
         # CH CREATE TABLE (MergeTree/Memory/Log — the engine name only
         # affects CH-side storage internals, all of which parquet
         # subsumes here): materialize an empty engine-owned parquet
@@ -4347,352 +4372,435 @@ class BigHouseEngine:
         # (see _ordered / the table-meta order_by record below).
         # SETTINGS (MergeTree storage knobs) are accepted and
         # dropped — they have no Spark-side meaning.
-        # CREATE OR REPLACE TABLE: drop-if-exists, then re-enter as a
+        # CREATE OR REPLACE TABLE: drop-if-exists, then go on as a
         # plain CREATE (CH's atomic swap collapses to this in a
         # single-writer engine).
-        m_cor = re.match(
-            r"^(\s*CREATE\s+)OR\s+REPLACE\s+(TABLE\s+[`\"]?(\w+))",
-            request.query, re.IGNORECASE,
-        )
+        m_cor = self._CREATE_OR_REPLACE_RE.match(masked)
         if m_cor:
             nm = m_cor.group(3)
-            if nm in self._attached or self.spark.catalog.tableExists(
-                nm
-            ):
+            if nm in self._attached or self.spark.catalog.tableExists(nm):
                 self.execute(f"DROP TABLE IF EXISTS {nm}")
-            request = stmt.request = replace(
-                request,
-                query=m_cor.group(1) + request.query[m_cor.start(2):],
+            raw = stmt.request.query
+            stmt.request = replace(
+                stmt.request,
+                query=raw[:m_cor.end(1)] + raw[m_cor.start(2):],
             )
-        # Masked locate, raw slice: the CTAS paren-balancers (ENGINE/
-        # PARTITION BY/ORDER BY specs) must not count parens inside
-        # string literals, and ' AS SELECT' inside a literal is data
-        # (round-14 router sweep).
-        m_ctas = (
-            None if self._CREATE_TABLE_HEAD_RE.match(request.query)
-            else self._CTAS_RE.match(_mask_string_literals(request.query))
-        )
-        if m_ctas:
-            # CTAS: materialize the SELECT into an engine-owned parquet
-            # directory and attach — the result is a real table with
-            # the full write surface, same as CREATE TABLE + INSERT.
-            if_not_exists, name, part_spec, order_spec, select_sql = (
-                self._raw_groups(m_ctas, request.query)
-            )
-            if name in self._attached or name in self._mviews:
-                if if_not_exists:
-                    return QueryResult(cols=["table"], rows=[[name]])
-                raise ValueError(f"CREATE TABLE {name}: name in use")
-            import tempfile
-
-            sel = self._transpile(select_sql)
-            df = self.spark.sql(sel.sql)
-            path = tempfile.mkdtemp(prefix=f"bh_tbl_{name}_")
-            decl_schema = None
-            if part_spec:
-                pcols = self._parse_partition_by(part_spec, df.columns)
-                self._partitioned[name] = pcols
-                # Re-reads of a partitioned dir would otherwise infer
-                # partition columns last (and the empty case not at
-                # all): register with the declared column order/types.
-                from bighouse_spark.dialect.schema import spark_type_to_ch
-
-                decl_schema = ", ".join(
-                    f"`{f.name}` {spark_type_to_ch(f.dataType)}"
-                    for f in df.schema.fields
-                )
-            if order_spec:
-                ocols = self._parse_order_by(order_spec, df.columns)
-                if ocols:
-                    self._ordered[name] = ocols
-            self._table_writer(df, name, "parquet", "overwrite").save(path)
-            # masked: 'ENGINE = Null' inside a SELECT literal must
-            # not mark the table as a Null engine (silent data drop,
-            # found round 14)
-            m_eng = re.search(
-                r"ENGINE\s*=\s*(\w+)",
-                _mask_string_literals(request.query), re.IGNORECASE,
-            )
-            self._null_tables.discard(name)
-            if m_eng and m_eng.group(1).lower() == "null":
-                self._null_tables.add(name)
-            self._drop_views(sel.views)
-            self.attach_table(name, path, schema=decl_schema)
-            self._discard_if_null(name)  # CTAS into Null keeps nothing
-            return _Logged(
-                QueryResult(cols=["table"], rows=[[name]]),
-                "<create table as>",
-            )
-        m_cv = self._CREATE_VIEW_RE.match(
-            _mask_string_literals(request.query)
-        )
-        if m_cv:
+            # the same cut on the masked copy keeps it aligned
+            masked = masked[:m_cor.end(1)] + masked[m_cor.start(2):]
+        # CTAS before the column-list form
+        m = self._CTAS_RE.match(masked)
+        if m and not self._CREATE_TABLE_HEAD_RE.match(masked):
+            return self._create_table_as(stmt, m, masked)
+        m = self._CREATE_VIEW_RE.match(masked)
+        if m:
             # CH CREATE VIEW re-evaluates its SELECT per query — a
             # Spark temp view has identical semantics. Session-scoped,
             # like everything in this engine.
-            name, select_sql = self._raw_groups(m_cv, request.query)
+            name, select_sql = self._raw_groups(m, stmt.request.query)
             sel = self._transpile(select_sql)
             self.spark.sql(sel.sql).createOrReplaceTempView(name)
             self._user_views[name] = sel.sql
             return _Logged(
                 QueryResult(cols=["view"], rows=[[name]]), "<create view>"
             )
-        m_dv = self._DROP_VIEW_RE.match(request.query)
-        if m_dv:
-            name = m_dv.group(1)
+        m = self._CREATE_TABLE_HEAD_RE.match(masked)
+        if m:
+            return self._create_table(stmt, m, masked)
+        m = self._CREATE_DICT_RE.match(masked)
+        if m:
+            return self._create_dictionary(stmt, m, masked)
+        masked = self._bind_dict_calls(stmt, masked)
+        m = self._CREATE_MV_RE.match(masked)
+        if m:
+            name, populate, select_sql = self._raw_groups(
+                m, stmt.request.query
+            )
+            return self._create_materialized_view(
+                name, bool(populate), select_sql
+            )
+        return self._route_query(stmt, masked, stream_to)
+
+    def _create_table_as(self, stmt, m_ctas, masked) -> QueryResult | _Logged:
+        """CTAS: materialize the SELECT into an engine-owned parquet
+        directory and attach — the result is a real table with the
+        full write surface, same as CREATE TABLE + INSERT."""
+        if_not_exists, name, part_spec, order_spec, select_sql = (
+            self._raw_groups(m_ctas, stmt.request.query)
+        )
+        if name in self._attached or name in self._mviews:
+            if if_not_exists:
+                return QueryResult(cols=["table"], rows=[[name]])
+            raise ValueError(f"CREATE TABLE {name}: name in use")
+        import tempfile
+
+        sel = self._transpile(select_sql)
+        df = self.spark.sql(sel.sql)
+        path = tempfile.mkdtemp(prefix=f"bh_tbl_{name}_")
+        decl_schema = None
+        if part_spec:
+            pcols = self._parse_partition_by(part_spec, df.columns)
+            self._partitioned[name] = pcols
+            # Re-reads of a partitioned dir would otherwise infer
+            # partition columns last (and the empty case not at
+            # all): register with the declared column order/types.
+            from bighouse_spark.dialect.schema import spark_type_to_ch
+
+            decl_schema = ", ".join(
+                f"`{f.name}` {spark_type_to_ch(f.dataType)}"
+                for f in df.schema.fields
+            )
+        if order_spec:
+            ocols = self._parse_order_by(order_spec, df.columns)
+            if ocols:
+                self._ordered[name] = ocols
+        self._table_writer(df, name, "parquet", "overwrite").save(path)
+        self._mark_null_engine(name, masked)
+        self._drop_views(sel.views)
+        self.attach_table(name, path, schema=decl_schema)
+        self._discard_if_null(name)  # CTAS into Null keeps nothing
+        return _Logged(
+            QueryResult(cols=["table"], rows=[[name]]),
+            "<create table as>",
+        )
+
+    def _mark_null_engine(self, name: str, masked: str) -> None:
+        """Record whether CREATE declared ``ENGINE = Null``. Searched on
+        the masked statement: 'ENGINE = Null' inside a SELECT literal
+        must not mark the table (silent data drop, found round 14)."""
+        m_eng = re.search(r"ENGINE\s*=\s*(\w+)", masked, re.IGNORECASE)
+        self._null_tables.discard(name)
+        if m_eng and m_eng.group(1).lower() == "null":
+            self._null_tables.add(name)
+
+    def _create_table(self, stmt, m_ct, masked) -> QueryResult | _Logged:
+        if_not_exists, name = m_ct.groups()
+        # balanced-paren scan for the column list (types like
+        # Decimal(20, 4) nest; a regex can't balance them)
+        i, depth, quote = m_ct.end(), 1, None
+        q = stmt.request.query
+        while i < len(masked) and depth:
+            c = masked[i]
+            if quote:
+                quote = None if c == quote else quote
+            elif c in "'\"`":
+                quote = c
+            elif c == "(":
+                depth += 1
+            elif c == ")":
+                depth -= 1
+            i += 1
+        cols, tail = q[m_ct.end(): i - 1], q[i:]
+        m_tail = (
+            None if depth else self._CREATE_TABLE_TAIL_RE.match(masked[i:])
+        )
+        if m_tail is None:
+            raise ValueError(
+                f"CREATE TABLE {name}: unsupported trailing clause "
+                f"{tail.strip()[:60]!r} (PARTITION BY is honored; "
+                "ENGINE/ORDER BY/PRIMARY KEY/SETTINGS are accepted "
+                "and dropped)"
+            )
+        if name in self._attached or name in self._mviews:
+            if if_not_exists:
+                return QueryResult(cols=["table"], rows=[[name]])
+            raise ValueError(f"CREATE TABLE {name}: name in use")
+        import tempfile
+
+        from bighouse_spark.dialect.schema import parse_schema_string
+
+        schema = parse_schema_string(cols)
+        path = tempfile.mkdtemp(prefix=f"bh_tbl_{name}_")
+        decl_schema = None
+        tail_part, tail_order = self._raw_groups(m_tail, tail)
+        if tail_part:
+            self._partitioned[name] = self._parse_partition_by(
+                tail_part, [f.name for f in schema.fields]
+            )
+            # A partitioned dir stores partition values in dir
+            # names, not files — keep the declared schema on the
+            # registration so column order and types (and the
+            # empty-table read) stay exactly as declared.
+            decl_schema = cols
+        if tail_order:
+            ocols = self._parse_order_by(
+                tail_order, [f.name for f in schema.fields]
+            )
+            if ocols:
+                self._ordered[name] = ocols
+        self._table_writer(
+            self.spark.createDataFrame([], schema), name, "parquet",
+            "overwrite",
+        ).save(path)
+        self.attach_table(name, path, schema=decl_schema)
+        self._ch_col_ddl[name] = cols
+        self._column_defaults.pop(name, None)
+        from bighouse_spark.dialect.schema import (
+            parse_schema_defaults,
+        )
+
+        col_defaults = parse_schema_defaults(cols)
+        if col_defaults:
+            self._column_defaults[name] = col_defaults
+        self._mark_null_engine(name, masked)
+        return _Logged(
+            QueryResult(cols=["table"], rows=[[name]]), "<create table>"
+        )
+
+    def _create_dictionary(self, stmt, m_dict, masked) -> _Logged:
+        """CH dictionary DDL: the dictionary IS its source view + key;
+        LAYOUT/LIFETIME are in-memory/refresh tuning, dropped."""
+        name, pk, source = self._raw_groups(m_dict, stmt.request.query)
+        # Masked locate, raw slice: another SOURCE arg's literal
+        # (PASSWORD 'use TABLE x', QUERY '...') could otherwise
+        # feed the sniff a phantom table name — and silently bind
+        # the dictionary to the WRONG source if that name exists
+        # (round-14 ledger corner, closed).
+        sm = re.search(
+            r"TABLE\s*\(?\s*(?:'([^']*)'|([\w.]+))",
+            masked[m_dict.start(3):m_dict.end(3)], re.IGNORECASE,
+        )
+        if not sm:
+            raise ValueError(
+                f"CREATE DICTIONARY {name}: SOURCE must name a "
+                "TABLE (SOURCE(CLICKHOUSE(TABLE 'x')))"
+            )
+        g = 1 if sm.group(1) is not None else 2
+        src = source[sm.start(g):sm.end(g)].split(".")[-1]
+        if pk not in self.spark.table(src).columns:
+            raise ValueError(
+                f"CREATE DICTIONARY {name}: key {pk!r} not in {src}"
+            )
+        self._dicts[name] = (src, pk)
+        return _Logged(
+            QueryResult(cols=["dictionary"], rows=[[name]]),
+            "<create dictionary>",
+        )
+
+    def _route_drop(self, stmt: _Statement, masked: str, stream_to):
+        m = self._DROP_VIEW_RE.match(masked)
+        if m:
+            name = m.group(1)
             self.spark.catalog.dropTempView(name)
             self._user_views.pop(name, None)
             return _Logged(
                 QueryResult(cols=["dropped"], rows=[[name]]), "<drop view>"
             )
-        m_rn = self._RENAME_RE.match(request.query)
+        self._refuse_access_ddl(masked)
+        m = self._DROP_DICT_RE.match(masked)
+        if m:
+            self._dicts.pop(m.group(1), None)
+            return QueryResult(cols=["dropped"], rows=[[m.group(1)]])
+        m = self._DROP_TRUNCATE_RE.match(masked)
+        if m:
+            return self._drop_table(m)
+        return self._route_query(stmt, masked, stream_to)
+
+    def _drop_table(self, m_dt: "re.Match") -> QueryResult | _Logged:
+        op, name = m_dt.group(1).upper(), m_dt.group(3)
+        if_exists = m_dt.group(2) is not None
+        # IF EXISTS silences the unknown-table case (CH
+        # semantics); without it, an unknown name must raise
+        # rather than acknowledge a drop that did nothing.
+        known = (
+            name in self._attached
+            or self.spark.catalog.tableExists(name)
+        )
+        if not known:
+            if if_exists:
+                return QueryResult(cols=["ok"], rows=[])
+            raise ValueError(
+                f"{op} TABLE {name}: unknown table (spell "
+                f"{op} TABLE IF EXISTS to ignore)"
+            )
+        if op == "TRUNCATE":
+            self._attached_path_or_raise(name, "TRUNCATE TABLE")
+            return self._rewrite_attached(
+                name, self.spark.table(name).limit(0), "<truncate>"
+            )
+        # DROP detaches the view; the backing storage is shared
+        # (the reference ATTACHes a common web disk) and is never
+        # deleted from here — so park a tombstone for UNDROP.
+        # Dropping a materialized view also discards its private
+        # data/checkpoint dirs (they belong to the engine, not
+        # the shared storage), so MVs are not undroppable.
+        dropped_comments = {
+            k: v for k, v in self._comments.items() if k[0] == name
+        }
+        if name in self._attached and name not in self._mviews:
+            self._dropped_tables[name] = (
+                self._attached[name],
+                self._partitioned.get(name),
+                self._ordered.get(name),
+                dropped_comments,
+                self._ch_col_ddl.get(name),
+                self._column_defaults.get(name),
+            )
+        # Comments describe THIS table's columns — clear them so
+        # a different dataset later attached under the same name
+        # doesn't inherit stale metadata (UNDROP restores them
+        # from the tombstone).
+        for k in dropped_comments:
+            self._comments.pop(k, None)
+        self._unregister_table(name)
+        # the declared-order / default records die with the
+        # table: leaving them made the first positional INSERT
+        # into a same-named REPLACEMENT table transpose columns
+        # (round-14 probe — the r13 bug class, DROP+recreate axis)
+        self._ch_col_ddl.pop(name, None)
+        self._column_defaults.pop(name, None)
+        self._user_views.pop(name, None)
+        mv = self._mviews.pop(name, None)
+        if mv is not None:
+            import os
+            import shutil
+
+            shutil.rmtree(os.path.dirname(mv["data"]), ignore_errors=True)
+        self.clear_cache()
+        return _Logged(QueryResult(cols=["dropped"], rows=[[name]]), "<drop>")
+
+    def _unregister_table(self, name: str) -> None:
+        """Drop ``name``'s view, its catalog statistics and its
+        per-table records (DROP and DETACH)."""
+        self.spark.catalog.dropTempView(name)
+        if name in self._analyzed:
+            self.spark.sql(f"DROP TABLE IF EXISTS {name}__bhcat")
+            self._analyzed.discard(name)
+        for records in (self._attached, self._partitioned,
+                        self._skip_indices, self._ttl, self._ordered):
+            records.pop(name, None)
+
+    def _route_attach(self, stmt: _Statement, masked: str, stream_to):
+        m_att = self._ATTACH_RE.match(masked)
+        if m_att is None:
+            return self._route_query(stmt, masked, stream_to)
+        # ATTACH defines the table from storage — any stale
+        # ENGINE=Null flag from a previously dropped/renamed name
+        # must not survive onto the new attachment.
+        self._null_tables.discard(m_att.group(2))
+        return self._attach_statement(m_att, stmt.request.query)
+
+    def _route_detach(self, stmt: _Statement, masked: str, stream_to):
+        m_det = self._DETACH_RE.match(masked)
+        if m_det is None:
+            return self._route_query(stmt, masked, stream_to)
+        name = m_det.group(1)
+        if name in self._attached:
+            self._detached[name] = (
+                self._attached[name],
+                self._partitioned.get(name),
+                self._ordered.get(name),
+            )
+            self._unregister_table(name)
+            self._null_tables.discard(name)
+            self.clear_cache()
+        return _Logged(
+            QueryResult(cols=["detached"], rows=[[name]]), "<detach>"
+        )
+
+    def _route_undrop(self, stmt: _Statement, masked: str, stream_to):
+        m_ud = self._UNDROP_RE.match(masked)
+        if m_ud is None:
+            return self._route_query(stmt, masked, stream_to)
+        name = m_ud.group(1)
+        if name not in self._dropped_tables:
+            raise ValueError(
+                f"UNDROP TABLE {name}: no dropped table of that "
+                "name is restorable (materialized views and "
+                "never-attached names cannot be undropped)"
+            )
+        # In-use check BEFORE consuming the tombstone — a failed
+        # UNDROP must stay retryable — and covering every object
+        # class that could occupy the name, not just attached
+        # tables (CH errors whenever the name is taken).
+        if (
+            name in self._attached
+            or name in self._user_views
+            or name in self._mviews
+            or name in self._detached
+            or self.spark.catalog.tableExists(name)
+        ):
+            raise ValueError(
+                f"UNDROP TABLE {name}: the name is in use"
+            )
+        parked = self._dropped_tables.pop(name)
+        (path, fmt, schema), pcols, ocols, comments, col_ddl, \
+            col_defaults = parked
+        if pcols:
+            self._partitioned[name] = pcols
+        if ocols:
+            self._ordered[name] = ocols
+        self._comments.update(comments)
+        self.attach_table(name, path, fmt=fmt, schema=schema)
+        if col_ddl:
+            self._ch_col_ddl[name] = col_ddl
+        if col_defaults:
+            self._column_defaults[name] = col_defaults
+        return _Logged(
+            QueryResult(cols=["undropped"], rows=[[name]]), "<undrop>"
+        )
+
+    def _route_rename(self, stmt: _Statement, masked: str, stream_to):
+        m_rn = self._RENAME_RE.match(masked)
         if m_rn:
             old, new = m_rn.groups()
             self._rename_table(old, new)
             return _Logged(
                 QueryResult(cols=["renamed"], rows=[[new]]), "<rename>"
             )
-        m_ex = self._EXCHANGE_RE.match(request.query)
-        if m_ex:
-            a, b = m_ex.groups()
-            if a == b:
-                # degenerate self-exchange: a no-op, NOT the 3-step
-                # rename (which would strand the table under its temp
-                # name when step 2 finds the original gone)
-                return _Logged(
-                    QueryResult(cols=["status"], rows=[["OK"]]), ""
-                )
-            # Validate BOTH tables before any rename — the three-step
-            # swap below mutates state, so a failure mid-way (e.g. b
-            # is an MV, which _rename_table refuses) must be
-            # impossible once it starts, or a would be stranded under
-            # its temp name.
-            for nm in (a, b):
-                if nm in self._mviews:
-                    raise ValueError(
-                        f"EXCHANGE TABLES: {nm} is a materialized view"
-                    )
-                if not (
-                    nm in self._attached
-                    or self.spark.catalog.tableExists(nm)
-                ):
-                    raise ValueError(f"EXCHANGE TABLES: {nm} not found")
-            tmp = f"__bh_xchg_{a}"
-            self._rename_table(a, tmp)
-            self._rename_table(b, a)
-            self._rename_table(tmp, b)
-            return _Logged(
-                QueryResult(cols=["exchanged"], rows=[[a, b]]), "<exchange>"
-            )
-        m_att = self._ATTACH_RE.match(
-            _mask_string_literals(request.query)
-        )
-        if m_att:
-            # ATTACH defines the table from storage — any stale
-            # ENGINE=Null flag from a previously dropped/renamed name
-            # must not survive onto the new attachment.
-            self._null_tables.discard(m_att.group(2))
-        if m_att:
-            return self._attach_statement(m_att, request.query)
-        m_ud = self._UNDROP_RE.match(request.query)
-        if m_ud:
-            name = m_ud.group(1)
-            if name not in self._dropped_tables:
+        m_ex = self._EXCHANGE_RE.match(masked)
+        if m_ex is None:
+            return self._route_query(stmt, masked, stream_to)
+        a, b = m_ex.groups()
+        if a == b:
+            # degenerate self-exchange: a no-op, NOT the 3-step
+            # rename (which would strand the table under its temp
+            # name when step 2 finds the original gone)
+            return _Logged(QueryResult(cols=["status"], rows=[["OK"]]), "")
+        # Validate BOTH tables before any rename — the three-step
+        # swap below mutates state, so a failure mid-way (e.g. b
+        # is an MV, which _rename_table refuses) must be
+        # impossible once it starts, or a would be stranded under
+        # its temp name.
+        for nm in (a, b):
+            if nm in self._mviews:
                 raise ValueError(
-                    f"UNDROP TABLE {name}: no dropped table of that "
-                    "name is restorable (materialized views and "
-                    "never-attached names cannot be undropped)"
+                    f"EXCHANGE TABLES: {nm} is a materialized view"
                 )
-            # In-use check BEFORE consuming the tombstone — a failed
-            # UNDROP must stay retryable — and covering every object
-            # class that could occupy the name, not just attached
-            # tables (CH errors whenever the name is taken).
-            if (
-                name in self._attached
-                or name in self._user_views
-                or name in self._mviews
-                or name in self._detached
-                or self.spark.catalog.tableExists(name)
+            if not (
+                nm in self._attached
+                or self.spark.catalog.tableExists(nm)
             ):
-                raise ValueError(
-                    f"UNDROP TABLE {name}: the name is in use"
-                )
-            parked = self._dropped_tables.pop(name)
-            (path, fmt, schema), pcols, ocols, comments, col_ddl, \
-                col_defaults = parked
-            if pcols:
-                self._partitioned[name] = pcols
-            if ocols:
-                self._ordered[name] = ocols
-            self._comments.update(comments)
-            self.attach_table(name, path, fmt=fmt, schema=schema)
-            if col_ddl:
-                self._ch_col_ddl[name] = col_ddl
-            if col_defaults:
-                self._column_defaults[name] = col_defaults
-            return _Logged(
-                QueryResult(cols=["undropped"], rows=[[name]]), "<undrop>"
-            )
-        m_cc = self._COMMENT_COLUMN_RE.match(request.query)
-        if m_cc:
-            name, if_exists, col, comment = m_cc.groups()
-            try:
-                cols = self.spark.table(name).columns
-            except Exception:
-                raise ValueError(
-                    f"COMMENT COLUMN: table {name} not found"
-                )
-            if col not in cols:
-                if if_exists:
-                    return QueryResult(cols=["commented"], rows=[])
-                raise ValueError(
-                    f"COMMENT COLUMN: {name} has no column {col}"
-                )
-            self._comments[(name, col)] = comment
-            return _Logged(
-                QueryResult(cols=["commented"], rows=[[f"{name}.{col}"]]),
-                "<comment>",
-            )
-        m_det = self._DETACH_RE.match(request.query)
-        if m_det:
-            name = m_det.group(1)
-            if name in self._attached:
-                self._detached[name] = (
-                    self._attached[name],
-                    self._partitioned.get(name),
-                    self._ordered.get(name),
-                )
-                self.spark.catalog.dropTempView(name)
-                if name in self._analyzed:
-                    self.spark.sql(f"DROP TABLE IF EXISTS {name}__bhcat")
-                    self._analyzed.discard(name)
-                self._attached.pop(name, None)
-                self._null_tables.discard(name)
-                self._partitioned.pop(name, None)
-                self._skip_indices.pop(name, None)
-                self._ttl.pop(name, None)
-                self._ordered.pop(name, None)
-                self.clear_cache()
-            return _Logged(
-                QueryResult(cols=["detached"], rows=[[name]]), "<detach>"
-            )
-        m_kill = re.match(
-            r"^\s*KILL\s+QUERY\s+WHERE\s+query_id\s*=\s*'([^']+)'"
-            r"\s*(?:SYNC|ASYNC)?\s*$",
-            request.query, re.IGNORECASE,
+                raise ValueError(f"EXCHANGE TABLES: {nm} not found")
+        tmp = f"__bh_xchg_{a}"
+        self._rename_table(a, tmp)
+        self._rename_table(b, a)
+        self._rename_table(tmp, b)
+        return _Logged(
+            QueryResult(cols=["exchanged"], rows=[[a, b]]), "<exchange>"
         )
-        if m_kill:
-            qid = m_kill.group(1)
-            # Check-and-mark under ONE lock hold: if the victim
-            # finishes between a separate check and mark, the _killed
-            # entry would outlive it and misclassify a later query
-            # reusing the id.
-            with self._inflight_lock:
-                known = qid in self._inflight
-                if known:
-                    self._killed.add(qid)
-                    self.kill_count += 1
-            if known:
-                # Sticky cancel (Spark 4): also cancels jobs the
-                # victim submits AFTER this call — plain
-                # cancelJobGroup is a no-op if the kill lands while
-                # the victim is still planning. Fallback: re-cancel
-                # until the victim's inflight entry disappears.
-                sc = self.spark.sparkContext
-                try:
-                    sc.cancelJobGroupAndFutureJobs(qid)
-                except Exception:
-                    def _reaper() -> None:
-                        deadline = time.monotonic() + 30
-                        while time.monotonic() < deadline:
-                            with self._inflight_lock:
-                                if qid not in self._inflight:
-                                    return
-                            try:
-                                sc.cancelJobGroup(qid)
-                            except Exception:
-                                pass
-                            time.sleep(0.3)
 
-                    threading.Thread(target=_reaper, daemon=True).start()
-            return QueryResult(
-                cols=["kill_status", "query_id"],
-                rows=[["waiting", qid]] if known else [],
-            )
-        if re.match(r"^\s*SHOW\s+PROCESSLIST\s*$", request.query,
-                    re.IGNORECASE):
+    def _route_show(self, stmt: _Statement, masked: str, stream_to):
+        def _show(pattern: str):
+            return re.match(pattern, masked, re.IGNORECASE)
+
+        rewrite = None
+        if _show(r"^\s*SHOW\s+PROCESSLIST\s*$"):
             # CH lists in-flight queries — exactly the job-group
             # registry (killable query_ids + elapsed). The session's
             # scheduler counters stay available as system_profile.
             self.refresh_system_views({"system_processes"})
-            request = stmt.request = replace(
-                request, query="SELECT * FROM system_processes"
-            )
-        # ALTER TABLE ... MODIFY/RESET SETTING: MergeTree storage
-        # knobs — accepted and dropped like the CREATE-time SETTINGS
-        # clause (parquet storage has no per-table knobs to honor).
-        m_ms = re.match(
-            r"^\s*ALTER\s+TABLE\s+[`\"]?(\w+)[`\"]?"
-            r"(?:\s+ON\s+CLUSTER\s+\S+)?\s+"
-            r"(?:MODIFY|RESET)\s+SETTING\s+.+$",
-            request.query,
-            re.IGNORECASE | re.DOTALL,
-        )
-        if m_ms:
-            return _Logged(
-                QueryResult(cols=["ok"], rows=[[1]]), "<alter-setting>"
-            )
-        if re.match(r"^\s*SHOW\s+CREATE\s+DATABASE\b", request.query,
-                    re.IGNORECASE):
+            rewrite = "SELECT * FROM system_processes"
+        elif _show(r"^\s*SHOW\s+CREATE\s+DATABASE\b"):
             return QueryResult(
                 cols=["statement"],
                 rows=[["CREATE DATABASE default"]],
             )
-        # CH ops surface: SYSTEM ... maintenance statements map onto
-        # the engine's own caches/views; mutations here are eager
-        # (synchronous rewrites), so KILL MUTATION has nothing to
-        # kill by construction.
-        m_sys = re.match(
-            r"^\s*SYSTEM\s+(FLUSH\s+LOGS|DROP\s+QUERY\s+CACHE|"
-            r"RELOAD\s+DICTIONAR(?:Y\s+\w+|IES)|DROP\s+MARK\s+CACHE|"
-            r"DROP\s+UNCOMPRESSED\s+CACHE|DROP\s+FILESYSTEM\s+CACHE|"
-            # background-process toggles: there ARE no background
-            # merges/moves/fetches here (merges are explicit OPTIMIZE,
-            # mutations synchronous) — acknowledged no-ops so ops
-            # tooling scripts run through (round-11 probe)
-            r"(?:STOP|START)\s+(?:TTL\s+)?MERGES(?:\s+\S+)?|"
-            r"(?:STOP|START)\s+(?:MOVES|FETCHES|REPLICATION\s+QUEUES)"
-            r"(?:\s+\S+)?)"
-            r"\s*$",
-            request.query,
-            re.IGNORECASE,
-        )
-        if m_sys:
-            action = re.sub(r"\s+", " ", m_sys.group(1).upper())
-            if action == "FLUSH LOGS":
-                self.refresh_system_views()
-            elif action == "DROP QUERY CACHE":
-                with self._cache_lock:
-                    self._result_cache.clear()
-            elif action.startswith("RELOAD DICTIONAR"):
-                pass  # dictGet reads live views — always current
-            elif action.startswith(("STOP", "START")):
-                pass  # no background merges/moves to toggle
-            else:  # mark / uncompressed / filesystem cache analogs
-                self.spark.catalog.clearCache()
-            return _Logged(QueryResult(cols=["ok"], rows=[[1]]), "<system>")
-        if re.match(r"^\s*KILL\s+MUTATION\b", request.query,
-                    re.IGNORECASE):
-            return QueryResult(cols=["kill_status", "mutation_id"], rows=[])
-        m_shs = re.match(
+        elif m := _show(
             r"^\s*SHOW\s+(CHANGED\s+)?SETTINGS\s+(?:(I)?LIKE\s+)?"
-            r"'([^']*)'\s*$",
-            request.query,
-            re.IGNORECASE,
-        )
-        if m_shs:
+            r"'([^']*)'\s*$"
+        ):
             self.refresh_system_views({"system_settings"})
-            chg, ci, pat = m_shs.groups()
+            chg, ci, pat = self._raw_groups(m, stmt.request.query)
             cond = (
                 f"lower(name) LIKE lower('{pat}')"
                 if ci
@@ -4700,66 +4808,236 @@ class BigHouseEngine:
             )
             if chg:
                 cond += " AND changed = 1"
-            request = stmt.request = replace(
-                request, query=f"SELECT * FROM system_settings WHERE {cond}"
-            )
-        if re.match(r"^\s*SHOW\s+GRANTS\b", request.query,
-                    re.IGNORECASE):
+            rewrite = f"SELECT * FROM system_settings WHERE {cond}"
+        elif _show(r"^\s*SHOW\s+GRANTS\b"):
             # Trust auth model (documented in the wire modules): one
             # implicit all-privileges default user.
             return QueryResult(
                 cols=["grants"],
                 rows=[["GRANT ALL ON *.* TO default"]],
             )
-        if re.match(r"^\s*SHOW\s+USERS\s*$", request.query,
-                    re.IGNORECASE):
-            return QueryResult(cols=["name"], rows=[["default"]])
-        # Trust-model account listings: the single implicit default
-        # entity per kind (round-12 statement sweep: these parsed
-        # into Spark's SHOW and died with syntax errors).
-        if re.match(
-            r"^\s*SHOW\s+(ROLES|QUOTAS|SETTINGS\s+PROFILES|PROFILES)"
-            r"\s*$",
-            request.query, re.IGNORECASE,
+        elif _show(r"^\s*SHOW\s+USERS\s*$") or _show(
+            # Trust-model account listings: the single implicit
+            # default entity per kind (round-12 statement sweep: these
+            # parsed into Spark's SHOW and died with syntax errors).
+            r"^\s*SHOW\s+(ROLES|QUOTAS|SETTINGS\s+PROFILES|PROFILES)\s*$"
         ):
             return QueryResult(cols=["name"], rows=[["default"]])
-        if re.match(r"^\s*SHOW\s+CLUSTERS\s*$", request.query,
-                    re.IGNORECASE):
+        elif _show(r"^\s*SHOW\s+CLUSTERS\s*$"):
             self.refresh_system_views({"system_clusters"})
-            request = stmt.request = replace(
-                request,
-                query=("SELECT DISTINCT cluster_name AS cluster "
-                       "FROM system_clusters ORDER BY cluster"),
-            )
-        if re.match(r"^\s*SHOW\s+ENGINES\s*$", request.query,
-                    re.IGNORECASE):
+            rewrite = ("SELECT DISTINCT cluster_name AS cluster "
+                       "FROM system_clusters ORDER BY cluster")
+        elif _show(r"^\s*SHOW\s+ENGINES\s*$"):
             self.refresh_system_views({"system_table_engines"})
-            request = stmt.request = replace(
-                request,
-                query="SELECT * FROM system_table_engines ORDER BY name",
+            rewrite = "SELECT * FROM system_table_engines ORDER BY name"
+        elif _show(r"^\s*SHOW\s+DICTIONARIES\s*$"):
+            return QueryResult(
+                cols=["name"], rows=[[n] for n in sorted(self._dicts)]
             )
+        elif m := _show(
+            r"^\s*SHOW\s+CREATE\s+(?:TABLE\s+)?[`\"]?([\w.]+)[`\"]?\s*$"
+        ):
+            # dotted system.X routes to its view twin (round 11)
+            name = m.group(1)
+            if name.startswith("system."):
+                name = name.replace(".", "_")
+                self.refresh_system_views({name})
+            return self._show_create_table(name)
+        if rewrite is not None:
+            stmt.request = replace(stmt.request, query=rewrite)
+            masked = _mask_string_literals(rewrite)
+        return self._route_query(stmt, masked, stream_to)
+
+    # CH ops surface: SYSTEM ... maintenance statements map onto
+    # the engine's own caches/views; mutations here are eager
+    # (synchronous rewrites), so KILL MUTATION has nothing to
+    # kill by construction.
+    _SYSTEM_RE = re.compile(
+        r"^\s*SYSTEM\s+(FLUSH\s+LOGS|DROP\s+QUERY\s+CACHE|"
+        r"RELOAD\s+DICTIONAR(?:Y\s+\w+|IES)|DROP\s+MARK\s+CACHE|"
+        r"DROP\s+UNCOMPRESSED\s+CACHE|DROP\s+FILESYSTEM\s+CACHE|"
+        # background-process toggles: there ARE no background
+        # merges/moves/fetches here (merges are explicit OPTIMIZE,
+        # mutations synchronous) — acknowledged no-ops so ops
+        # tooling scripts run through (round-11 probe)
+        r"(?:STOP|START)\s+(?:TTL\s+)?MERGES(?:\s+\S+)?|"
+        r"(?:STOP|START)\s+(?:MOVES|FETCHES|REPLICATION\s+QUEUES)"
+        r"(?:\s+\S+)?)"
+        r"\s*$",
+        re.IGNORECASE,
+    )
+
+    def _route_system(self, stmt: _Statement, masked: str, stream_to):
+        m_sys = self._SYSTEM_RE.match(masked)
+        if m_sys is None:
+            return self._route_query(stmt, masked, stream_to)
+        action = re.sub(r"\s+", " ", m_sys.group(1).upper())
+        if action == "FLUSH LOGS":
+            self.refresh_system_views()
+        elif action == "DROP QUERY CACHE":
+            with self._cache_lock:
+                self._result_cache.clear()
+        elif action.startswith("RELOAD DICTIONAR"):
+            pass  # dictGet reads live views — always current
+        elif action.startswith(("STOP", "START")):
+            pass  # no background merges/moves to toggle
+        else:  # mark / uncompressed / filesystem cache analogs
+            self.spark.catalog.clearCache()
+        return _Logged(QueryResult(cols=["ok"], rows=[[1]]), "<system>")
+
+    def _route_kill(self, stmt: _Statement, masked: str, stream_to):
+        m_kill = re.match(
+            r"^\s*KILL\s+QUERY\s+WHERE\s+query_id\s*=\s*'([^']+)'"
+            r"\s*(?:SYNC|ASYNC)?\s*$",
+            masked, re.IGNORECASE,
+        )
+        if m_kill:
+            return self._kill_query(
+                self._raw_groups(m_kill, stmt.request.query)[0]
+            )
+        if re.match(r"^\s*KILL\s+MUTATION\b", masked, re.IGNORECASE):
+            return QueryResult(cols=["kill_status", "mutation_id"], rows=[])
+        return self._route_query(stmt, masked, stream_to)
+
+    def _kill_query(self, qid: str) -> QueryResult:
+        # Check-and-mark under ONE lock hold: if the victim
+        # finishes between a separate check and mark, the _killed
+        # entry would outlive it and misclassify a later query
+        # reusing the id.
+        with self._inflight_lock:
+            known = qid in self._inflight
+            if known:
+                self._killed.add(qid)
+                self.kill_count += 1
+        if known:
+            # Sticky cancel (Spark 4): also cancels jobs the
+            # victim submits AFTER this call — plain
+            # cancelJobGroup is a no-op if the kill lands while
+            # the victim is still planning. Fallback: re-cancel
+            # until the victim's inflight entry disappears.
+            sc = self.spark.sparkContext
+            try:
+                sc.cancelJobGroupAndFutureJobs(qid)
+            except Exception:
+                def _reaper() -> None:
+                    deadline = time.monotonic() + 30
+                    while time.monotonic() < deadline:
+                        with self._inflight_lock:
+                            if qid not in self._inflight:
+                                return
+                        try:
+                            sc.cancelJobGroup(qid)
+                        except Exception:
+                            pass
+                        time.sleep(0.3)
+
+                threading.Thread(target=_reaper, daemon=True).start()
+        return QueryResult(
+            cols=["kill_status", "query_id"],
+            rows=[["waiting", qid]] if known else [],
+        )
+
+    def _route_exists(self, stmt: _Statement, masked: str, stream_to):
         m_edb = re.match(
             r"^\s*EXISTS\s+DATABASE\s+[`\"]?(\w+)[`\"]?\s*$",
-            request.query, re.IGNORECASE,
+            masked, re.IGNORECASE,
         )
         if m_edb:
             known = m_edb.group(1).lower() in ("default", "system")
             return QueryResult(cols=["result"], rows=[[1 if known else 0]])
-        # RBAC family under the trust model: GRANT and SET ROLE are
-        # vacuously true (the one user already holds ALL privileges,
-        # roles add nothing) and acknowledge so provisioning scripts
-        # run through; REVOKE and CREATE USER/ROLE REFUSE — silently
-        # accepting them would misrepresent an isolation boundary
-        # this engine does not enforce.
-        if re.match(r"^\s*(GRANT\b|SET\s+ROLE\b)", request.query,
-                    re.IGNORECASE):
-            return _Logged(QueryResult(cols=["ok"], rows=[[1]]), "<rbac ack>")
-        if re.match(
-            r"^\s*(REVOKE\b|(?:CREATE|ALTER|DROP)\s+"
-            r"(?:USER|ROLE|QUOTA|ROW\s+POLICY|SETTINGS\s+PROFILE)\b)",
-            request.query,
-            re.IGNORECASE,
+        m_exists = self._EXISTS_RE.match(masked)
+        if m_exists is None:
+            return self._route_query(stmt, masked, stream_to)
+        name = m_exists.group(1)
+        # system.one → the system_one view twin. The dotted→
+        # underscore mapping applies ONLY to system.* (matching
+        # SHOW CREATE / CHECK TABLE) — EXISTS TABLE a.b must not
+        # return 1 because an unrelated table named a_b exists.
+        candidates = {name}
+        if name.startswith("system."):
+            self.refresh_system_views({name.replace(".", "_")})
+            candidates.add(name.replace(".", "_"))
+        def _cat_exists(n: str) -> bool:
+            try:
+                return self.spark.catalog.tableExists(n)
+            except Exception:
+                return False
+        found = any(
+            n in self._attached or n in self._mviews
+            or _cat_exists(n)
+            for n in candidates
+        )
+        return QueryResult(cols=["result"], rows=[[1 if found else 0]])
+
+    def _route_check(self, stmt: _Statement, masked: str, stream_to):
+        m_chk = re.match(
+            r"^\s*CHECK\s+TABLE\s+[`\"]?([\w.]+)[`\"]?\s*$",
+            masked, re.IGNORECASE,
+        )
+        if m_chk is None:
+            return self._route_query(stmt, masked, stream_to)
+        name = m_chk.group(1)
+        if name.startswith("system."):
+            name = name.replace(".", "_")
+            self.refresh_system_views({name})
+        try:
+            # Decode-proving probe: per-column count() forces
+            # every column's data pages to decode — a bare
+            # count(*) on parquet is answered from footer
+            # metadata and would miss corrupt pages.
+            df = self.spark.table(name)
+            df.selectExpr(*[f"count(`{c}`)" for c in df.columns]).collect()
+            ok = 1
+        except Exception:
+            ok = 0
+        return QueryResult(cols=["result"], rows=[[ok]])
+
+    def _route_optimize(self, stmt: _Statement, masked: str, stream_to):
+        m_opt = self._OPTIMIZE_RE.match(masked)
+        if m_opt is None:
+            return self._route_query(stmt, masked, stream_to)
+        name, pq, praw, _final, dedup = self._raw_groups(
+            m_opt, stmt.request.query
+        )
+        if praw is not None and praw.upper() in (
+            "FINAL", "DEDUPLICATE"
         ):
+            # `OPTIMIZE ... PARTITION FINAL`: the token after
+            # PARTITION is the keyword, not a partition id —
+            # invalid in CH too; guide instead of "no such
+            # partition FINAL" (r13 Next #5 probe)
+            raise ValueError(
+                f"OPTIMIZE TABLE {name} PARTITION: a partition "
+                "value must precede FINAL/DEDUPLICATE — spell it "
+                f"OPTIMIZE TABLE {name} PARTITION '<id>' "
+                f"{praw.upper()}"
+            )
+        part_val = self._unquote_partition_id(pq) if pq is not None else praw
+        return self._optimize_attached(
+            name, bool(dedup), partition_val=part_val
+        )
+
+    def _route_analyze(self, stmt: _Statement, masked: str, stream_to):
+        m_an = self._ANALYZE_RE.match(masked)
+        if m_an is None:
+            return self._route_query(stmt, masked, stream_to)
+        return self._analyze_table(m_an.group(1), m_an.group(2))
+
+    def _route_rbac(self, stmt: _Statement, masked: str, stream_to):
+        """RBAC family under the trust model: GRANT and SET ROLE are
+        vacuously true (the one user already holds ALL privileges,
+        roles add nothing) and acknowledge so provisioning scripts
+        run through; REVOKE refuses (``_refuse_access_ddl``)."""
+        if re.match(r"^\s*(GRANT\b|SET\s+ROLE\b)", masked, re.IGNORECASE):
+            return _Logged(QueryResult(cols=["ok"], rows=[[1]]), "<rbac ack>")
+        self._refuse_access_ddl(masked)
+        return self._route_query(stmt, masked, stream_to)
+
+    def _refuse_access_ddl(self, masked: str) -> None:
+        """REVOKE and CREATE/ALTER/DROP USER/ROLE/... REFUSE —
+        silently accepting them would misrepresent an isolation
+        boundary this engine does not enforce."""
+        if self._ACCESS_DDL_RE.match(masked):
             raise ValueError(
                 "this engine runs a trust auth model (one implicit "
                 "all-privileges 'default' user, documented in the "
@@ -4768,348 +5046,65 @@ class BigHouseEngine:
                 "put authentication in front of the server (TLS + "
                 "network policy) instead"
             )
-        m_chk = re.match(
-            r"^\s*CHECK\s+TABLE\s+[`\"]?([\w.]+)[`\"]?\s*$",
-            request.query,
-            re.IGNORECASE,
-        )
-        if m_chk:
-            name = m_chk.group(1)
-            if name.startswith("system."):
-                name = name.replace(".", "_")
-                self.refresh_system_views({name})
-            try:
-                # Decode-proving probe: per-column count() forces
-                # every column's data pages to decode — a bare
-                # count(*) on parquet is answered from footer
-                # metadata and would miss corrupt pages.
-                df = self.spark.table(name)
-                df.selectExpr(
-                    *[f"count(`{c}`)" for c in df.columns]
-                ).collect()
-                ok = 1
-            except Exception:
-                ok = 0
-            return QueryResult(cols=["result"], rows=[[ok]])
-        m_exists = self._EXISTS_RE.match(request.query)
-        if m_exists:
-            name = m_exists.group(1)
-            # system.one → the system_one view twin. The dotted→
-            # underscore mapping applies ONLY to system.* (matching
-            # SHOW CREATE / CHECK TABLE) — EXISTS TABLE a.b must not
-            # return 1 because an unrelated table named a_b exists.
-            candidates = {name}
-            if name.startswith("system."):
-                self.refresh_system_views({name.replace(".", "_")})
-                candidates.add(name.replace(".", "_"))
-            def _cat_exists(n: str) -> bool:
-                try:
-                    return self.spark.catalog.tableExists(n)
-                except Exception:
-                    return False
-            found = any(
-                n in self._attached or n in self._mviews
-                or _cat_exists(n)
-                for n in candidates
-            )
-            return QueryResult(cols=["result"], rows=[[1 if found else 0]])
-        m_ct = self._CREATE_TABLE_HEAD_RE.match(request.query)
-        if m_ct:
-            if_not_exists, name = m_ct.groups()
-            # balanced-paren scan for the column list (types like
-            # Decimal(20, 4) nest; a regex can't balance them)
-            i, depth, quote = m_ct.end(), 1, None
-            q = request.query
-            while i < len(q) and depth:
-                c = q[i]
-                if quote:
-                    quote = None if c == quote else quote
-                elif c in "'\"`":
-                    quote = c
-                elif c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                i += 1
-            cols, tail = q[m_ct.end(): i - 1], q[i:]
-            m_tail = (
-                None if depth else self._CREATE_TABLE_TAIL_RE.match(
-                    _mask_string_literals(tail)
-                )
-            )
-            if m_tail is None:
-                raise ValueError(
-                    f"CREATE TABLE {name}: unsupported trailing clause "
-                    f"{tail.strip()[:60]!r} (PARTITION BY is honored; "
-                    "ENGINE/ORDER BY/PRIMARY KEY/SETTINGS are accepted "
-                    "and dropped)"
-                )
-            if name in self._attached or name in self._mviews:
-                if if_not_exists:
-                    return QueryResult(cols=["table"], rows=[[name]])
-                raise ValueError(f"CREATE TABLE {name}: name in use")
-            import tempfile
 
-            from bighouse_spark.dialect.schema import parse_schema_string
+    def _bind_dict_calls(self, stmt: _Statement, masked: str) -> str:
+        """dictGet/dictHas over registered dictionaries → scalar
+        subqueries; returns the (re-)masked text."""
+        rewritten = self._rewrite_dict_calls(stmt.request.query, masked)
+        if rewritten == stmt.request.query:
+            return masked
+        stmt.request = replace(stmt.request, query=rewritten)
+        return _mask_string_literals(rewritten)
 
-            schema = parse_schema_string(cols)
-            path = tempfile.mkdtemp(prefix=f"bh_tbl_{name}_")
-            decl_schema = None
-            tail_part, tail_order = self._raw_groups(m_tail, tail)
-            if tail_part:
-                self._partitioned[name] = self._parse_partition_by(
-                    tail_part, [f.name for f in schema.fields]
-                )
-                # A partitioned dir stores partition values in dir
-                # names, not files — keep the declared schema on the
-                # registration so column order and types (and the
-                # empty-table read) stay exactly as declared.
-                decl_schema = cols
-            if tail_order:
-                ocols = self._parse_order_by(
-                    tail_order, [f.name for f in schema.fields]
-                )
-                if ocols:
-                    self._ordered[name] = ocols
-            self._table_writer(
-                self.spark.createDataFrame([], schema), name, "parquet",
-                "overwrite",
-            ).save(path)
-            self.attach_table(name, path, schema=decl_schema)
-            self._ch_col_ddl[name] = cols
-            self._column_defaults.pop(name, None)
-            from bighouse_spark.dialect.schema import (
-                parse_schema_defaults,
-            )
+    def _bind_system_names(self, stmt: _Statement, masked: str) -> str:
+        """CH's native dotted spelling for system tables: rewrite
+        system.<name> to the registered system_<name> views (temp
+        views can't hold dots) after refreshing them, and map the
+        infinite system.numbers onto Spark's lazy range (LIMIT
+        pushes into the first partition — nothing materializes).
+        Quote-shielded (round 14): 'system.parts' inside a string
+        literal is DATA. Returns the (re-)masked text."""
+        if not re.search(r"\bsystem\.\w+", masked):
+            return masked
+        numbers_sub = (
+            "(SELECT id AS number FROM range(9223372036854775807))"
+        )
+        rewritten = _sub_outside_quotes(
+            r"\bsystem\.numbers(_mt)?\b", numbers_sub, stmt.request.query
+        )
+        masked_rw = _mask_string_literals(rewritten)
+        referenced = {
+            "system_" + n
+            for n in re.findall(r"\bsystem\.(\w+)", masked_rw)
+        }
+        # A statement can mix spellings (system.tables joined to
+        # the registered system_columns view): underscore-spelled
+        # KNOWN views must refresh too, or the scoped rebuild
+        # leaves them unregistered on a fresh session — the
+        # pre-r15 full rebuild registered everything.
+        referenced |= {
+            m
+            for m in re.findall(r"\bsystem_\w+\b", masked_rw)
+            if m in self._SYSTEM_VIEW_NAMES
+        }
+        if referenced:
+            self.refresh_system_views(referenced)
+        rewritten = _sub_outside_quotes(
+            r"\bsystem\.(\w+)", r"system_\1", rewritten
+        )
+        stmt.request = replace(stmt.request, query=rewritten)
+        return _mask_string_literals(rewritten)
 
-            col_defaults = parse_schema_defaults(cols)
-            if col_defaults:
-                self._column_defaults[name] = col_defaults
-            # masked: 'ENGINE = Null' inside a SELECT literal must
-            # not mark the table as a Null engine (silent data drop,
-            # found round 14)
-            m_eng = re.search(
-                r"ENGINE\s*=\s*(\w+)",
-                _mask_string_literals(request.query), re.IGNORECASE,
-            )
-            self._null_tables.discard(name)
-            if m_eng and m_eng.group(1).lower() == "null":
-                self._null_tables.add(name)
-            return _Logged(
-                QueryResult(cols=["table"], rows=[[name]]), "<create table>"
-            )
-        # CH dictionary DDL: the dictionary IS its source view + key;
-        # LAYOUT/LIFETIME are in-memory/refresh tuning, dropped.
-        # Masked locate, raw slice: SOURCE(...) routinely holds path/
-        # table literals whose parens would shift the lazy boundaries.
-        m_dict = self._CREATE_DICT_RE.match(
-            _mask_string_literals(request.query)
-        )
-        if m_dict:
-            name, pk, source = self._raw_groups(m_dict, request.query)
-            # Masked locate, raw slice: another SOURCE arg's literal
-            # (PASSWORD 'use TABLE x', QUERY '...') could otherwise
-            # feed the sniff a phantom table name — and silently bind
-            # the dictionary to the WRONG source if that name exists
-            # (round-14 ledger corner, closed).
-            sm = re.search(
-                r"TABLE\s*\(?\s*(?:'([^']*)'|([\w.]+))",
-                _mask_string_literals(source), re.IGNORECASE,
-            )
-            if not sm:
-                raise ValueError(
-                    f"CREATE DICTIONARY {name}: SOURCE must name a "
-                    "TABLE (SOURCE(CLICKHOUSE(TABLE 'x')))"
-                )
-            g = 1 if sm.group(1) is not None else 2
-            src = source[sm.start(g):sm.end(g)].split(".")[-1]
-            if pk not in self.spark.table(src).columns:
-                raise ValueError(
-                    f"CREATE DICTIONARY {name}: key {pk!r} not in {src}"
-                )
-            self._dicts[name] = (src, pk)
-            return _Logged(
-                QueryResult(cols=["dictionary"], rows=[[name]]),
-                "<create dictionary>",
-            )
-        if re.match(r"^\s*SHOW\s+DICTIONARIES\s*$", request.query,
-                    re.IGNORECASE):
-            return QueryResult(
-                cols=["name"], rows=[[n] for n in sorted(self._dicts)]
-            )
-        m_sct = re.match(
-            r"^\s*SHOW\s+CREATE\s+(?:TABLE\s+)?[`\"]?([\w.]+)[`\"]?\s*$",
-            request.query, re.IGNORECASE,
-        )
-        if m_sct:
-            # dotted system.X routes to its view twin (round 11)
-            name = m_sct.group(1)
-            if name.startswith("system."):
-                name = name.replace(".", "_")
-                self.refresh_system_views({name})
-            return self._show_create_table(name)
-        m_dd = self._DROP_DICT_RE.match(request.query)
-        if m_dd:
-            self._dicts.pop(m_dd.group(1), None)
-            return QueryResult(cols=["dropped"], rows=[[m_dd.group(1)]])
-        rewritten_q = self._rewrite_dict_calls(request.query)
-        if rewritten_q != request.query:
-            request = stmt.request = replace(request, query=rewritten_q)
-        m_mv = self._CREATE_MV_RE.match(
-            _mask_string_literals(request.query)
-        )
-        if m_mv:
-            name, populate, select_sql = self._raw_groups(
-                m_mv, request.query
-            )
-            return self._create_materialized_view(
-                name, bool(populate), select_sql
-            )
-        m_opt = self._OPTIMIZE_RE.match(request.query)
-        if m_opt:
-            name, pq, praw, _final, dedup = m_opt.groups()
-            if praw is not None and praw.upper() in (
-                "FINAL", "DEDUPLICATE"
-            ):
-                # `OPTIMIZE ... PARTITION FINAL`: the token after
-                # PARTITION is the keyword, not a partition id —
-                # invalid in CH too; guide instead of "no such
-                # partition FINAL" (r13 Next #5 probe)
-                raise ValueError(
-                    f"OPTIMIZE TABLE {name} PARTITION: a partition "
-                    "value must precede FINAL/DEDUPLICATE — spell it "
-                    f"OPTIMIZE TABLE {name} PARTITION '<id>' "
-                    f"{praw.upper()}"
-                )
-            part_val = (
-                self._unquote_partition_id(pq) if pq is not None
-                else praw
-            )
-            return self._optimize_attached(
-                name, bool(dedup), partition_val=part_val
-            )
-        m_an = self._ANALYZE_RE.match(request.query)
-        if m_an:
-            return self._analyze_table(m_an.group(1), m_an.group(2))
-        m_dt = self._DROP_TRUNCATE_RE.match(request.query)
-        if m_dt:
-            op, name = m_dt.group(1).upper(), m_dt.group(3)
-            if_exists = m_dt.group(2) is not None
-            # IF EXISTS silences the unknown-table case (CH
-            # semantics); without it, an unknown name must raise
-            # rather than acknowledge a drop that did nothing.
-            known = (
-                name in self._attached
-                or self.spark.catalog.tableExists(name)
-            )
-            if not known:
-                if if_exists:
-                    return QueryResult(cols=["ok"], rows=[])
-                raise ValueError(
-                    f"{op} TABLE {name}: unknown table (spell "
-                    f"{op} TABLE IF EXISTS to ignore)"
-                )
-            if op == "TRUNCATE":
-                self._attached_path_or_raise(name, "TRUNCATE TABLE")
-                return self._rewrite_attached(
-                    name, self.spark.table(name).limit(0), "<truncate>"
-                )
-            # DROP detaches the view; the backing storage is shared
-            # (the reference ATTACHes a common web disk) and is never
-            # deleted from here — so park a tombstone for UNDROP.
-            # Dropping a materialized view also discards its private
-            # data/checkpoint dirs (they belong to the engine, not
-            # the shared storage), so MVs are not undroppable.
-            dropped_comments = {
-                k: v for k, v in self._comments.items() if k[0] == name
-            }
-            if name in self._attached and name not in self._mviews:
-                self._dropped_tables[name] = (
-                    self._attached[name],
-                    self._partitioned.get(name),
-                    self._ordered.get(name),
-                    dropped_comments,
-                    self._ch_col_ddl.get(name),
-                    self._column_defaults.get(name),
-                )
-            # Comments describe THIS table's columns — clear them so
-            # a different dataset later attached under the same name
-            # doesn't inherit stale metadata (UNDROP restores them
-            # from the tombstone).
-            for k in dropped_comments:
-                self._comments.pop(k, None)
-            self.spark.catalog.dropTempView(name)
-            if name in self._analyzed:
-                self.spark.sql(f"DROP TABLE IF EXISTS {name}__bhcat")
-                self._analyzed.discard(name)
-            self._attached.pop(name, None)
-            self._partitioned.pop(name, None)
-            self._skip_indices.pop(name, None)
-            self._ttl.pop(name, None)
-            self._ordered.pop(name, None)
-            # the declared-order / default records die with the
-            # table: leaving them made the first positional INSERT
-            # into a same-named REPLACEMENT table transpose columns
-            # (round-14 probe — the r13 bug class, DROP+recreate axis)
-            self._ch_col_ddl.pop(name, None)
-            self._column_defaults.pop(name, None)
-            self._user_views.pop(name, None)
-            mv = self._mviews.pop(name, None)
-            if mv is not None:
-                import os
-                import shutil
-
-                shutil.rmtree(os.path.dirname(mv["data"]),
-                              ignore_errors=True)
-            self.clear_cache()
-            return _Logged(
-                QueryResult(cols=["dropped"], rows=[[name]]), "<drop>"
-            )
-        # CH's native dotted spelling for system tables: rewrite
-        # system.<name> to the registered system_<name> views (temp
-        # views can't hold dots) after refreshing them, and map the
-        # infinite system.numbers onto Spark's lazy range (LIMIT
-        # pushes into the first partition — nothing materializes).
-        # Quote-shielded (round 14): 'system.parts' inside a string
-        # literal is DATA — the raw re.sub here silently rewrote it
-        # to 'system_parts' (and system.numbers in a literal became
-        # the range subquery text).
-        if re.search(r"\bsystem\.\w+", _mask_string_literals(request.query)):
-            numbers_sub = (
-                "(SELECT id AS number FROM range(9223372036854775807))"
-            )
-            rewritten = _sub_outside_quotes(
-                r"\bsystem\.numbers(_mt)?\b", numbers_sub, request.query
-            )
-            masked_rw = _mask_string_literals(rewritten)
-            referenced = {
-                "system_" + n
-                for n in re.findall(r"\bsystem\.(\w+)", masked_rw)
-            }
-            # A statement can mix spellings (system.tables joined to
-            # the registered system_columns view): underscore-spelled
-            # KNOWN views must refresh too, or the scoped rebuild
-            # leaves them unregistered on a fresh session — the
-            # pre-r15 full rebuild registered everything.
-            referenced |= {
-                m
-                for m in re.findall(r"\bsystem_\w+\b", masked_rw)
-                if m in self._SYSTEM_VIEW_NAMES
-            }
-            if referenced:
-                self.refresh_system_views(referenced)
-            rewritten = _sub_outside_quotes(
-                r"\bsystem\.(\w+)", r"system_\1", rewritten
-            )
-            request = stmt.request = replace(request, query=rewritten)
+    def _route_query(self, stmt: _Statement, masked: str, stream_to):
+        """The query path: transpile, then collect or stream."""
+        masked = self._bind_dict_calls(stmt, masked)
+        masked = self._bind_system_names(stmt, masked)
+        request = stmt.request
         # Cache-hit fast path: checked on the RAW text before transpile
         # so a hit skips view re-registration entirely.
         # masked locate (the knob may itself appear inside a string
         # literal); the value is read from the RAW text at the span
-        m_uc = re.search(
-            r"use_query_cache\s*=\s*",
-            _mask_string_literals(request.query),
-        )
+        m_uc = re.search(r"use_query_cache\s*=\s*", masked)
         use_cache = m_uc is not None and re.match(
             r"'?(1|true)\b", request.query[m_uc.end():]
         ) is not None
@@ -5262,11 +5257,7 @@ class BigHouseEngine:
             # Stream when nothing forces driver materialization:
             # the result cache needs full rows and max_result_rows
             # needs the count before the first byte leaves.
-            if (
-                stream_to is not None
-                and not use_cache
-                and max_rows is None
-            ):
+            if stream_to is not None and not use_cache and max_rows is None:
                 stream_to.start(cols, types)
                 n_rows = 0
                 for r in df.toLocalIterator(prefetchPartitions=True):
@@ -5293,9 +5284,7 @@ class BigHouseEngine:
                 ) from collect_err
             with self._inflight_lock:
                 was_killed = qid in self._killed
-            if was_killed or "cancelled job group" in str(
-                collect_err
-            ):
+            if was_killed or "cancelled job group" in str(collect_err):
                 raise RuntimeError(
                     f"query {qid} was cancelled (KILL QUERY / "
                     "QUERY_WAS_CANCELLED)"
@@ -5408,16 +5397,6 @@ class BigHouseEngine:
 
         out = self._run(request, run)
         return {"path": path, "cols": out.cols, "elapsed_sec": out.elapsed_sec}
-
-    # Statement keywords owned by the engine's DDL dispatch (vs the
-    # transpile-then-spark.sql path). Init queries starting with one
-    # of these re-enter execute() so ATTACH/CREATE/INSERT/... work
-    # identically whether sent as the main query or as init DDL.
-    _ENGINE_STMT_RE = re.compile(
-        r"^\s*(ATTACH|DETACH|CREATE|DROP|TRUNCATE|RENAME|EXCHANGE|"
-        r"ALTER|INSERT|OPTIMIZE|ANALYZE|EXISTS|SHOW)\b",
-        re.IGNORECASE,
-    )
 
     _ATTACH_EXT_FMTS = (
         (".csv", "csv"), (".csv.gz", "csv"), (".tsv", "csv"),

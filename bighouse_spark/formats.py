@@ -27,6 +27,8 @@ from typing import Any, Sequence
 
 from pyspark.sql import types as T
 
+from bighouse_spark.dialect.schema import split_top_level
+
 # ---------------------------------------------------------------------------
 # Spark schema → ClickHouse type names
 # ---------------------------------------------------------------------------
@@ -609,23 +611,6 @@ def _leb128_str(s: str) -> bytes:
     return _leb128(len(b)) + b
 
 
-def _split_type_args(s: str) -> list[str]:
-    parts, cur, depth = [], [], 0
-    for c in s:
-        if c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-        if c == "," and depth == 0:
-            parts.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(c)
-    if cur:
-        parts.append("".join(cur).strip())
-    return parts
-
-
 def _rb_string(v: Any) -> bytes:
     if isinstance(v, bytes):
         return _leb128(len(v)) + v
@@ -644,7 +629,7 @@ def _rb_dt64(v: Any, precision: int) -> bytes:
 def _parse_enum_values(spec: str) -> dict[str, int]:
     """``'a' = 1, 'b' = 2`` → {'a': 1, 'b': 2}."""
     out: dict[str, int] = {}
-    for part in _split_type_args(spec):
+    for part in split_top_level(spec):
         m = re.match(r"\s*'((?:[^']|'')*)'\s*=\s*(-?\d+)\s*$", part)
         if m:
             out[m.group(1).replace("''", "'")] = int(m.group(2))
@@ -709,7 +694,7 @@ def rowbinary_encoder(ch_type: str):
         inner = rowbinary_encoder(t[6:-1])
         return lambda v: _leb128(len(v)) + b"".join(inner(x) for x in v)
     if t.startswith("Map("):
-        k_t, v_t = _split_type_args(t[4:-1])
+        k_t, v_t = split_top_level(t[4:-1])
         ek, ev = rowbinary_encoder(k_t), rowbinary_encoder(v_t)
         return lambda v: _leb128(len(v)) + b"".join(
             ek(k) + ev(val) for k, val in v.items()
@@ -725,7 +710,7 @@ def rowbinary_encoder(ch_type: str):
 
         encs = [
             rowbinary_encoder(_field_type(f))
-            for f in _split_type_args(t[6:-1])
+            for f in split_top_level(t[6:-1])
         ]
         return lambda v: b"".join(e(x) for e, x in zip(encs, v))
     m = re.match(r"Enum(8|16)\((.*)\)$", t, re.DOTALL)
@@ -857,7 +842,7 @@ def rowbinary_decoder(ch_type: str):
 
         return dec_arr
     if t.startswith("Map("):
-        k_t, v_t = _split_type_args(t[4:-1])
+        k_t, v_t = split_top_level(t[4:-1])
         dk, dv = rowbinary_decoder(k_t), rowbinary_decoder(v_t)
 
         def dec_map(buf: bytes, pos: int):
@@ -879,7 +864,7 @@ def rowbinary_decoder(ch_type: str):
 
         decs = [
             rowbinary_decoder(_field_type(f))
-            for f in _split_type_args(t[6:-1])
+            for f in split_top_level(t[6:-1])
         ]
 
         def dec_tuple(buf: bytes, pos: int):
@@ -1080,7 +1065,7 @@ def _native_column(values: list, t: str) -> bytes:
         out += _native_column(flat, inner)
         return bytes(out)
     if t.startswith("Map("):
-        k_t, v_t = _split_type_args(t[4:-1])
+        k_t, v_t = split_top_level(t[4:-1])
         keys: list = []
         vals: list = []
         total = 0
@@ -1094,7 +1079,7 @@ def _native_column(values: list, t: str) -> bytes:
         return bytes(out)
     if t.startswith("Tuple("):
         fts = [
-            _native_field_type(f) for f in _split_type_args(t[6:-1])
+            _native_field_type(f) for f in split_top_level(t[6:-1])
         ]
         for i, ft in enumerate(fts):
             out += _native_column([v[i] for v in values], ft)
@@ -1136,7 +1121,7 @@ def _native_read_column(
                 out.append(flat[start:off])
                 start = off
             return out, pos
-        k_t, v_t = _split_type_args(t[4:-1])
+        k_t, v_t = split_top_level(t[4:-1])
         keys, pos = _native_read_column(data, pos, k_t, total)
         vals, pos = _native_read_column(data, pos, v_t, total)
         out = []
@@ -1147,7 +1132,7 @@ def _native_read_column(
         return out, pos
     if t.startswith("Tuple("):
         fts = [
-            _native_field_type(f) for f in _split_type_args(t[6:-1])
+            _native_field_type(f) for f in split_top_level(t[6:-1])
         ]
         cols = []
         for ft in fts:

@@ -8,7 +8,7 @@ at registration time, which requires real (non-string) annotations
 with ``pd`` importable at module scope.
 
 Registered once per SparkSession by
-``dialect.transpile._ensure_ip_udfs`` and only when a query uses them.
+``dialect.transpile._ensure_udfs`` and only when a query uses them.
 """
 
 import ipaddress

@@ -4,7 +4,7 @@ Punycode codecs, and special math (erf family, gamma family).
 
 All are Arrow-batched pandas UDFs (vectorized transfer; per-value
 work is tight stdlib code) registered once per SparkSession by
-``dialect.transpile._ensure_misc_udfs`` and only when a query uses
+``dialect.transpile._ensure_udfs`` and only when a query uses
 them — the built-in expression path stays UDF-free. NOTE: no
 ``from __future__ import annotations`` here — pandas_udf resolves the
 ``pd.Series`` hints at registration time.

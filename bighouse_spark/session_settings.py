@@ -12,6 +12,8 @@ from __future__ import annotations
 
 import re
 
+from bighouse_spark.dialect.schema import split_top_level
+
 SET_STMT_RE = re.compile(
     r"^\s*SET\s+(.+?)\s*;?\s*$", re.IGNORECASE | re.DOTALL
 )
@@ -52,26 +54,6 @@ def _find_trailing_settings(sql: str) -> int | None:
     return best
 
 
-def split_top_commas(s: str) -> list[str]:
-    parts, cur, quote = [], [], None
-    for c in s:
-        if quote:
-            cur.append(c)
-            if c == quote:
-                quote = None
-        elif c in "'\"":
-            quote = c
-            cur.append(c)
-        elif c == ",":
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-    if cur:
-        parts.append("".join(cur))
-    return parts
-
-
 def parse_set_statement(sql: str) -> dict[str, str] | None:
     """``SET a = 1, b = 'x'`` (also PG's ``SET a TO 1``) → pair dict;
     None when the statement is not a SET."""
@@ -79,7 +61,7 @@ def parse_set_statement(sql: str) -> dict[str, str] | None:
     if not m:
         return None
     out: dict[str, str] = {}
-    for part in split_top_commas(m.group(1)):
+    for part in split_top_level(m.group(1)):
         pm = _SET_PAIR_RE.match(part)
         if pm:
             out[pm.group(1)] = pm.group(2)

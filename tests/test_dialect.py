@@ -11006,3 +11006,64 @@ class TestRound13SeamProbes:
         assert eng.execute(
             "SELECT s FROM __r13_src LIMIT 1"
         ).rows == [[""]]
+
+
+def test_split_top_level_keeps_quoted_spans_whole():
+    # one splitter for every top-level comma split: backticked names,
+    # escaped and doubled quotes, and bracket nesting stay one part
+    from bighouse_spark.dialect.schema import split_top_level
+
+    assert split_top_level("`a,b`, 1") == ["`a,b`", "1"]
+    assert split_top_level(r"'it\'s, x', 'it''s, y'") == [
+        r"'it\'s, x'", "'it''s, y'",
+    ]
+    assert split_top_level("f(1, 2), [3, 4], ") == ["f(1, 2)", "[3, 4]", ""]
+    assert split_top_level("") == []
+
+
+class _StubUdfs:
+    def __init__(self):
+        self.names: list[str] = []
+
+    def register(self, name, fn):
+        self.names.append(name)
+
+
+class _StubSession:
+    def __init__(self, tz: str = "UTC"):
+        self.udf = _StubUdfs()
+        self.conf = {"spark.sql.session.timeZone": tz}
+
+
+def test_udf_memo_is_keyed_on_the_session_not_its_id():
+    # A session collected after registering can leave its id() to a new
+    # session; the memo must still register on the new one.
+    from bighouse_spark.dialect.transpile import _ensure_udfs
+
+    a = _StubSession()
+    _ensure_udfs(a, "porter")
+    assert a.udf.names
+    dead = id(a)
+    del a
+    for _ in range(10_000):
+        b = _StubSession()
+        if id(b) == dead:
+            break
+    else:
+        pytest.fail("no stub session reused the collected id")
+    _ensure_udfs(b, "porter")
+    assert b.udf.names
+    _ensure_udfs(b, "porter")  # and registers once per session
+    assert len(b.udf.names) == len(set(b.udf.names))
+
+
+def test_cityhash_udf_memo_tracks_the_timezone():
+    from bighouse_spark.dialect.transpile import _ensure_cityhash_udfs
+
+    s = _StubSession()
+    _ensure_cityhash_udfs(s)
+    _ensure_cityhash_udfs(s)
+    assert s.udf.names == ["bh_cityhash64_row"]
+    s.conf["spark.sql.session.timeZone"] = "Europe/Berlin"
+    _ensure_cityhash_udfs(s)
+    assert s.udf.names == ["bh_cityhash64_row"] * 2

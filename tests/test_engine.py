@@ -2849,3 +2849,89 @@ class TestRound13ExchangeKeepsDeclaredOrder:
         assert eng.execute(
             "SELECT k, v FROM __rk13b ORDER BY k"
         ).rows == [[1, 10], [2, 20]]
+
+
+def test_insert_payload_never_routes_as_a_clause(engine, tmp_path):
+    # An inline INSERT payload is data: a TSV row spelling INTO
+    # OUTFILE '<path>' is inserted, not written to <path>.
+    out = tmp_path / "p.tsv"
+    engine.execute(
+        "CREATE TABLE payload_rows (a Int64, b String) ENGINE = Memory"
+    )
+    try:
+        engine.execute(
+            f"INSERT INTO payload_rows FORMAT TSV\n6\tINTO OUTFILE '{out}'"
+        )
+        assert not out.exists()
+        assert engine.execute("SELECT a, b FROM payload_rows").rows == [
+            [6, f"INTO OUTFILE '{out}'"]
+        ]
+    finally:
+        engine.execute("DROP TABLE payload_rows")
+
+
+def test_router_masks_each_statement_once(engine, monkeypatch):
+    from bighouse_spark import engine as engine_mod
+
+    engine.execute(
+        "CREATE TABLE mask_once (a Int64, b String) "
+        "ENGINE = MergeTree ORDER BY a"
+    )
+    calls = []
+    real = engine_mod._mask_string_literals
+    monkeypatch.setattr(
+        engine_mod, "_mask_string_literals",
+        lambda s: calls.append(s) or real(s),
+    )
+    try:
+        engine.execute("SELECT 1 AS a, 'x, y' AS b")
+        assert len(calls) == 1
+        calls.clear()
+        engine.execute("INSERT INTO mask_once FORMAT CSV\n1,x\n2,\"y, z\"")
+        assert len(calls) == 1
+    finally:
+        monkeypatch.undo()
+        engine.execute("DROP TABLE mask_once")
+
+
+def test_query_kind_in_query_log(engine):
+    def last_kinds(n: int) -> list:
+        return [(e.query_kind, e.error is None)
+                for e in list(engine.query_log)[-n:]]
+
+    engine.execute("SELECT 1")
+    assert last_kinds(1) == [("Select", True)]
+    engine.execute("CREATE TABLE qk_t (a Int64) ENGINE = Memory")
+    assert last_kinds(1) == [("Create", True)]
+    with pytest.raises(Exception):
+        engine.execute("INSERT INTO qk_missing VALUES (1)")
+    assert last_kinds(1) == [("Insert", False)]
+    # a nested init statement logs its own kind, then the outer query
+    engine.execute(QueryRequest(
+        query="SELECT count() FROM qk_t",
+        init_queries=["INSERT INTO qk_t VALUES (7)"],
+    ))
+    assert last_kinds(2) == [("Insert", True), ("Select", True)]
+    engine.execute("DROP TABLE qk_t")
+    assert engine.execute(
+        "SELECT query_kind FROM system.query_log "
+        "WHERE query = 'DROP TABLE qk_t'"
+    ).rows == [["Drop"]]
+
+
+def test_update_assignment_holding_an_escaped_quote(engine):
+    # The assignment list splits outside literals, \' escapes included.
+    engine.execute(
+        "CREATE TABLE upd_esc (k Int64, s String, t String) "
+        "ENGINE = MergeTree ORDER BY k"
+    )
+    try:
+        engine.execute("INSERT INTO upd_esc VALUES (1, 'a', 'b')")
+        engine.execute(
+            r"ALTER TABLE upd_esc UPDATE s = 'it\'s, x', t = 'z' WHERE k = 1"
+        )
+        assert engine.execute("SELECT k, s, t FROM upd_esc").rows == [
+            [1, "it's, x", "z"]
+        ]
+    finally:
+        engine.execute("DROP TABLE upd_esc")

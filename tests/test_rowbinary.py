@@ -494,6 +494,17 @@ def test_enum_maps_ids_to_names_both_directions():
     assert parse_rowbinary(b"\x01\x02", [t]) == [["a"], ["b"]]
 
 
+def test_enum_names_holding_commas_and_parens():
+    # Enum names are string literals: a comma or paren inside one is
+    # not an argument boundary.
+    from bighouse_spark.formats import parse_rowbinary
+
+    t = "Enum8('a,b' = 1, 'c' = 2)"
+    assert rowbinary_encoder(t)("a,b") == b"\x01"
+    assert parse_rowbinary(b"\x02\x01", [t]) == [["c"], ["a,b"]]
+    assert rowbinary_encoder("Enum8('a(' = 1, 'b' = 2)")("a(") == b"\x01"
+
+
 def test_wide_ints_and_zoned_datetime_decode():
     from bighouse_spark.formats import parse_rowbinary
 

@@ -5,25 +5,22 @@
 round 13's one bug (the ``IN PARTITION`` fold) evaded it because it
 was a ``.match()`` + f-string splice, not a ``.sub()``. This audit
 closes that hole: it inventories EVERY regex ``match/search/
-fullmatch/finditer/findall`` over RAW ``request.query`` in
-``engine.py`` and compares against a FROZEN allowlist of sites that
-were hand-audited as literal-safe-by-shape.
+fullmatch/finditer/findall`` over the RAW statement text in
+``engine.py`` and compares against a FROZEN allowlist.
 
-A router is literal-safe-by-shape when its pattern is anchored
-(``^\\s*KEYWORD ...``) and every variable-width span before the
-groups is either a keyword alternation, a ``\\w``/charset-limited
-identifier, or a trailing swallow (``(.*)$``): no free-text locator
-(`` .+? KEYWORD ``) can skip OVER a string literal to find its
-boundary. Routers that DO locate a keyword across free text —
-mutations, INSERT payload splits, CTAS/MV/VIEW ``AS SELECT``, ATTACH
-``FROM '<path>'``, the system.* rewrite — must match a
-``_mask_string_literals`` copy and re-slice groups from the raw text
-(``BigHouseEngine._raw_groups``); masked sites are invisible to this
-inventory by design.
+The rule is that routers only see the masked copy: ``_route`` masks
+each statement once (``_mask_string_literals``), every router matches
+that copy, and groups are re-sliced from the raw text by span
+(``BigHouseEngine._raw_groups``) — a keyword inside a string literal
+can then never decide a route or a split point. The raw text is
+spelled ``<x>.request.query`` / ``request.query``, a local alias of
+it (``raw = stmt.request.query``), or a parameter some call in
+``engine.py`` passes it to (``_attach_statement(m, query)``); all
+three are followed here.
 
-Adding a new raw-text router fails this test until it is audited:
-either shield it with the mask, or — if it is safe-by-shape per the
-rule above — add it here with the shape note.
+Adding a raw-text regex fails this test: match the masked copy
+instead. The one raw read left is the ``use_query_cache`` VALUE
+check, which reads at an offset the masked locate produced.
 """
 
 from __future__ import annotations
@@ -31,87 +28,19 @@ from __future__ import annotations
 import ast
 from pathlib import Path
 
+import pytest
+
 ENGINE = Path(__file__).resolve().parent.parent / "bighouse_spark" / "engine.py"
 
 MASK_HELPERS = {"_mask_string_literals", "_mask_quoted_spans"}
+REGEX_METHODS = ("match", "search", "fullmatch", "finditer", "findall")
 
-# (enclosing function, method, receiver, pattern-literal prefix) →
-# audited 2026-08-16 (round 14). Shape notes inline.
+# (enclosing function, method, receiver, pattern-literal prefix).
 ALLOWED = {
-    # -- named router-table regexes: anchored keyword+identifier
-    #    prefixes; free spans are trailing swallows or charset-
-    #    limited (no quote can appear before the match is decided) --
-    ("_execute_inner", "match", "self._ALTER_CLEAR_COLUMN_RE", ""),
-    ("_execute_inner", "match", "self._ALTER_COLUMN_RE", ""),
-    ("_execute_inner", "match", "self._ALTER_FREEZE_RE", ""),
-    ("_execute_inner", "match", "self._ALTER_INDEX_RE", ""),
-    ("_execute_inner", "match", "self._ALTER_PROJECTION_RE", ""),
-    ("_execute_inner", "match", "self._ALTER_TTL_RE", ""),
-    ("_execute_inner", "match", "self._ANALYZE_RE", ""),
-    # terminal '([^']*)'$ — a doubled-quote comment fails LOUD
-    ("_execute_inner", "match", "self._COMMENT_COLUMN_RE", ""),
-    ("_execute_inner", "match", "self._CREATE_TABLE_HEAD_RE", ""),
-    ("_execute_inner", "match", "self._DETACH_RE", ""),
-    ("_execute_inner", "match", "self._DROP_DICT_RE", ""),
-    # terminal partition value, $-anchored
-    ("_execute_inner", "match", "self._DROP_PARTITION_RE", ""),
-    # same shape: anchored keyword prefix, terminal partition value
-    # (quoted with ''/\\ escapes or bare token), $-anchored
-    # (audited 2026-08-16, r14)
-    ("_execute_inner", "match", "self._DROP_DETACHED_RE", ""),
-    # anchored; quoted/charset-limited value then FROM/TO TABLE
-    # keyword + identifier + $ — no free span can cross a literal
-    ("_execute_inner", "match", "self._PARTITION_FROM_RE", ""),
-    ("_execute_inner", "match", "self._DROP_TRUNCATE_RE", ""),
-    ("_execute_inner", "match", "self._DROP_VIEW_RE", ""),
-    ("_execute_inner", "match", "self._EXCHANGE_RE", ""),
-    ("_execute_inner", "match", "self._EXISTS_RE", ""),
-    # fixed prefix, charset-limited col list, then keyword + payload
-    ("_execute_inner", "match", "self._INSERT_FMT_RE", ""),
-    # fixed prefix: the first literal IS the path by construction
-    ("_execute_inner", "match", "self._INSERT_FN_RE", ""),
-    ("_execute_inner", "match", "self._INSERT_TBL_RE", ""),
-    # anchored; value then FINAL/DEDUPLICATE keywords then $
-    ("_execute_inner", "match", "self._OPTIMIZE_RE", ""),
-    ("_execute_inner", "match", "self._RENAME_RE", ""),
-    ("_execute_inner", "match", "self._UNDROP_RE", ""),
-    # -- inline re.* literals: all anchored fixed prefixes --
-    ('_execute_inner', 'match', 're', '^(\\s*CREATE\\s+)OR\\s+REPLACE\\s+(TABLE\\s+[`\\"]?(\\w+))'),
-    ("_execute_inner", "match", "re", "^\\s*(GRANT\\b|SET\\s+ROLE\\b)"),
-    ('_execute_inner', 'match', 're', '^\\s*(REVOKE\\b|(?:CREATE|ALTER|DROP)\\s+(?:USER|ROLE|QUOTA|ROW\\s+POLICY|SETTINGS\\s+PROFILE)\\b)'),
-    # ALTER ... MODIFY/RESET SETTING: prefix + tail swallow
-    ('_execute_inner', 'match', 're', '^\\s*ALTER\\s+TABLE\\s+[`\\"]?(\\w+)[`\\"]?(?:\\s+ON\\s+CLUSTER\\s+\\S+)?\\s+(?:MODIFY|RESET)\\s+SETTING\\s+.'),
-    # MATERIALIZE TTL: anchored keywords + $, no free span
-    # (audited 2026-08-16, r14)
-    ('_execute_inner', 'match', 're', '^\\s*ALTER\\s+TABLE\\s+[`\\"]?(\\w+)[`\\"]?(?:\\s+ON\\s+CLUSTER\\s+\\S+)?\\s+MATERIALIZE\\s+TTL\\s*$'),
-    # MODIFY ORDER BY: terminal charset/paren-balanced key + $ —
-    # unknown columns raise before any use (audited 2026-08-16, r14)
-    ('_execute_inner', 'match', 're', '^\\s*ALTER\\s+TABLE\\s+[`\\"]?(\\w+)[`\\"]?(?:\\s+ON\\s+CLUSTER\\s+\\S+)?\\s+MODIFY\\s+ORDER\\s+BY\\s+(\\((?:[^'),
-    # UNFREEZE: identifier + optional \S+ + terminal escaped-quoted
-    # name + $
-    ('_execute_inner', 'match', 're', '^\\s*ALTER\\s+TABLE\\s+[`\\"]?(\\w+)[`\\"]?(?:\\s+ON\\s+CLUSTER\\s+\\S+)?\\s+UNFREEZE(?:\\s+PARTITION\\s+(?:I'),
-    # FETCH PARTITION guided refusal: prefix-only, raise-only
-    ('_execute_inner', 'match', 're', '^\\s*ALTER\\s+TABLE\\s+[`\\"]?\\w+[`\\"]?(?:\\s+ON\\s+CLUSTER\\s+\\S+)?\\s+FETCH\\s+PARTITION\\b'),
-    ('_execute_inner', 'match', 're', '^\\s*CHECK\\s+TABLE\\s+[`\\"]?([\\w.]+)[`\\"]?\\s*$'),
-    ('_execute_inner', 'match', 're', '^\\s*EXISTS\\s+DATABASE\\s+[`\\"]?(\\w+)[`\\"]?\\s*$'),
-    ("_execute_inner", "match", "re", "^\\s*KILL\\s+MUTATION\\b"),
-    # terminal quoted query_id, $-anchored
-    ('_execute_inner', 'match', 're', "^\\s*KILL\\s+QUERY\\s+WHERE\\s+query_id\\s*=\\s*'([^']+)'\\s*(?:SYNC|ASYNC)?\\s*$"),
-    ('_execute_inner', 'match', 're', "^\\s*SHOW\\s+(CHANGED\\s+)?SETTINGS\\s+(?:(I)?LIKE\\s+)?'([^']*)'\\s*$"),
-    ('_execute_inner', 'match', 're', '^\\s*SHOW\\s+(ROLES|QUOTAS|SETTINGS\\s+PROFILES|PROFILES)\\s*$'),
-    ("_execute_inner", "match", "re", "^\\s*SHOW\\s+CLUSTERS\\s*$"),
-    ('_execute_inner', 'match', 're', '^\\s*SHOW\\s+CREATE\\s+(?:TABLE\\s+)?[`\\"]?([\\w.]+)[`\\"]?\\s*$'),
-    ("_execute_inner", "match", "re", "^\\s*SHOW\\s+CREATE\\s+DATABASE\\b"),
-    ("_execute_inner", "match", "re", "^\\s*SHOW\\s+DICTIONARIES\\s*$"),
-    ("_execute_inner", "match", "re", "^\\s*SHOW\\s+ENGINES\\s*$"),
-    ("_execute_inner", "match", "re", "^\\s*SHOW\\s+GRANTS\\b"),
-    ("_execute_inner", "match", "re", "^\\s*SHOW\\s+PROCESSLIST\\s*$"),
-    ("_execute_inner", "match", "re", "^\\s*SHOW\\s+USERS\\s*$"),
-    ('_execute_inner', 'match', 're', '^\\s*SYSTEM\\s+(FLUSH\\s+LOGS|DROP\\s+QUERY\\s+CACHE|RELOAD\\s+DICTIONAR(?:Y\\s+\\w+|IES)|DROP\\s+MARK\\s+'),
-    # use_query_cache VALUE check: reads request.query at an offset
+    # use_query_cache VALUE check: reads the raw text at an offset
     # the masked locate produced — the slice starts outside any
     # literal by construction
-    ("_execute_inner", "match", "re", "'?(1|true)\\b"),
+    ("_route_query", "match", "re", "'?(1|true)\\b"),
 }
 
 # 96 chars: round 14 found that at 28 two distinct ALTER TABLE
@@ -121,13 +50,13 @@ ALLOWED = {
 PAT_PREFIX = 96  # chars of a literal pattern kept in the site key
 
 
-def _mentions_request_query(node: ast.AST) -> bool:
-    return any(
-        isinstance(n, ast.Attribute)
-        and n.attr == "query"
-        and isinstance(n.value, ast.Name)
-        and n.value.id == "request"
-        for n in ast.walk(node)
+def _is_raw_query(node: ast.AST) -> bool:
+    """``request.query`` or ``<anything>.request.query``."""
+    if not (isinstance(node, ast.Attribute) and node.attr == "query"):
+        return False
+    v = node.value
+    return (isinstance(v, ast.Name) and v.id == "request") or (
+        isinstance(v, ast.Attribute) and v.attr == "request"
     )
 
 
@@ -141,41 +70,135 @@ def _is_mask_call(node: ast.AST) -> bool:
     )
 
 
+def _functions(tree: ast.AST) -> list[ast.FunctionDef]:
+    return [
+        n for n in ast.walk(tree)
+        if isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef))
+    ]
+
+
+def _own_nodes(fn: ast.AST):
+    """Nodes of ``fn``'s body, not descending into nested defs."""
+    stack = list(ast.iter_child_nodes(fn))
+    while stack:
+        n = stack.pop()
+        yield n
+        if not isinstance(n, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            stack.extend(ast.iter_child_nodes(n))
+
+
+def _raw_names(fn, raw_params: set[str]) -> set[str]:
+    """Names bound to the raw text in ``fn``: its raw parameters and
+    every local alias (``raw = stmt.request.query``, ``q = raw``)."""
+    names = set(raw_params)
+    changed = True
+    while changed:
+        changed = False
+        for n in _own_nodes(fn):
+            if isinstance(n, (ast.Assign, ast.AnnAssign, ast.NamedExpr)):
+                value = n.value
+                targets = (
+                    n.targets if isinstance(n, ast.Assign) else [n.target]
+                )
+                if value is None or not _is_raw(value, names):
+                    continue
+                for t in targets:
+                    if isinstance(t, ast.Name) and t.id not in names:
+                        names.add(t.id)
+                        changed = True
+    return names
+
+
+def _is_raw(node: ast.AST, names: set[str]) -> bool:
+    return _is_raw_query(node) or (
+        isinstance(node, ast.Name) and node.id in names
+    )
+
+
+def _mentions_raw(node: ast.AST, names: set[str]) -> bool:
+    return any(_is_raw(n, names) for n in ast.walk(node))
+
+
+def _param_names(fn) -> list[str]:
+    return [a.arg for a in fn.args.posonlyargs + fn.args.args]
+
+
+def _bound_offset(fn) -> int:
+    """Positional offset of a call through ``self.``/``cls.``: 0 for a
+    staticmethod, else 1 (the bound first parameter)."""
+    static = any(
+        isinstance(d, ast.Name) and d.id == "staticmethod"
+        for d in fn.decorator_list
+    )
+    return 0 if static else 1
+
+
+def _raw_params(tree: ast.AST) -> dict[ast.AST, set[str]]:
+    """Per function, the parameters some call in the module passes the
+    raw text to (positionally or by keyword), to a fixpoint."""
+    fns = _functions(tree)
+    by_name: dict[str, list] = {}
+    for fn in fns:
+        by_name.setdefault(fn.name, []).append(fn)
+    params: dict[ast.AST, set[str]] = {fn: set() for fn in fns}
+    changed = True
+    while changed:
+        changed = False
+        for caller in fns:
+            names = _raw_names(caller, params[caller])
+            for call in _own_nodes(caller):
+                if not isinstance(call, ast.Call):
+                    continue
+                f = call.func
+                if isinstance(f, ast.Attribute) and isinstance(
+                    f.value, ast.Name
+                ) and f.value.id in ("self", "cls"):
+                    callees, bound = by_name.get(f.attr, []), True
+                elif isinstance(f, ast.Name):
+                    callees, bound = by_name.get(f.id, []), False
+                else:
+                    continue
+                for callee in callees:
+                    pnames = _param_names(callee)
+                    off = _bound_offset(callee) if bound else 0
+                    hits = {
+                        pnames[i + off]
+                        for i, a in enumerate(call.args)
+                        if i + off < len(pnames) and _is_raw(a, names)
+                    } | {
+                        k.arg for k in call.keywords
+                        if k.arg in pnames and _is_raw(k.value, names)
+                    }
+                    if not hits <= params[callee]:
+                        params[callee] |= hits
+                        changed = True
+    return params
+
+
 def _raw_match_sites(path: Path) -> set[tuple]:
     tree = ast.parse(path.read_text())
-    stack: list[str] = []
+    params = _raw_params(tree)
     sites: set[tuple] = set()
-
-    class V(ast.NodeVisitor):
-        def visit_FunctionDef(self, node):
-            stack.append(node.name)
-            self.generic_visit(node)
-            stack.pop()
-
-        visit_AsyncFunctionDef = visit_FunctionDef
-
-        def visit_Call(self, node):
+    for fn in _functions(tree):
+        names = _raw_names(fn, params[fn])
+        for node in _own_nodes(fn):
+            if not isinstance(node, ast.Call):
+                continue
             f = node.func
-            if isinstance(f, ast.Attribute) and f.attr in (
-                "match", "search", "fullmatch", "finditer", "findall"
+            if not (isinstance(f, ast.Attribute) and f.attr in REGEX_METHODS):
+                continue
+            if not any(
+                _mentions_raw(a, names) and not _is_mask_call(a)
+                for a in node.args
             ):
-                if any(
-                    _mentions_request_query(a) and not _is_mask_call(a)
-                    for a in node.args
-                ):
-                    recv = ast.unparse(f.value)
-                    pat = ""
-                    if recv == "re" and node.args and isinstance(
-                        node.args[0], ast.Constant
-                    ) and isinstance(node.args[0].value, str):
-                        pat = node.args[0].value[:PAT_PREFIX]
-                    sites.add(
-                        (stack[-1] if stack else "<module>",
-                         f.attr, recv, pat)
-                    )
-            self.generic_visit(node)
-
-    V().visit(tree)
+                continue
+            recv = ast.unparse(f.value)
+            pat = ""
+            if recv == "re" and node.args and isinstance(
+                node.args[0], ast.Constant
+            ) and isinstance(node.args[0].value, str):
+                pat = node.args[0].value[:PAT_PREFIX]
+            sites.add((fn.name, f.attr, recv, pat))
     return sites
 
 
@@ -183,21 +206,44 @@ def test_no_unaudited_raw_query_routers():
     found = _raw_match_sites(ENGINE)
     new = found - ALLOWED
     assert not new, (
-        f"engine.py: raw request.query regex site(s) {sorted(new)} "
-        "not in the audited allowlist. A router whose pattern "
-        "locates a keyword across free text will split inside a "
-        "string literal (the r13 IN PARTITION bug class). Match a "
-        "_mask_string_literals(request.query) copy and re-slice "
-        "groups from the raw text via BigHouseEngine._raw_groups, "
-        "or — if the pattern is anchored-prefix literal-safe — add "
-        "it here with the shape note."
+        f"engine.py: raw-text regex site(s) {sorted(new)} not in the "
+        "audited allowlist. A router whose pattern locates a keyword "
+        "across free text will split inside a string literal (the r13 "
+        "IN PARTITION bug class). Match the masked copy the router "
+        "passes every handler and re-slice groups from the raw text "
+        "via BigHouseEngine._raw_groups."
     )
     gone = ALLOWED - found
     assert not gone, (
         f"engine.py: allowlisted site(s) {sorted(gone)} no longer "
-        "match raw request.query — prune the allowlist so it stays "
-        "an exact audit record."
+        "read the raw text — prune the allowlist so it stays an exact "
+        "audit record."
     )
+
+
+def test_audit_follows_aliases_and_parameters(tmp_path):
+    # The three spellings of the raw text, and a masked match that
+    # must stay invisible.
+    src = tmp_path / "engine.py"
+    src.write_text(
+        "import re\n"
+        "class E:\n"
+        "    def _route(self, stmt, masked):\n"
+        "        self._h(stmt.request.query, masked)\n"
+        "        raw = stmt.request.query\n"
+        "        re.match(r'^\\s*ALTER .+? WHERE', raw)\n"
+        "        re.search('x', masked)\n"
+        "    def _h(self, text, masked):\n"
+        "        self._P.match(text)\n"
+        "        re.match('y', _mask_string_literals(text))\n"
+        "    def _q(self, request):\n"
+        "        re.match('z', request.query[3:])\n"
+    )
+    assert _raw_match_sites(src) == {
+        ("_route", "match", "re", "^\\s*ALTER .+? WHERE"),
+        ("_h", "match", "self._P", ""),
+        ("_q", "match", "re", "z"),
+    }
 
 
 TRANSPILE = ENGINE.parent / "dialect" / "transpile.py"
@@ -245,3 +291,81 @@ def test_transpile_reads_files_only_through_read_source():
         and ast.unparse(n.value).endswith("spark")
     ]
     assert reads == []
+
+
+# One example per dispatch-table key, plus the spellings that must
+# NOT change route: case, leading whitespace, parenthesized and WITH
+# queries, and comment-prefixed DDL (which the transpiler owns).
+ROUTE_EXAMPLES = {
+    "INSERT": ("INSERT INTO t VALUES (1)", "_route_insert"),
+    "ALTER": ("ALTER TABLE t DELETE WHERE a = 'x'", "_route_alter"),
+    "CREATE": ("CREATE TABLE t (a Int64) ENGINE = Memory", "_route_create"),
+    "DROP": ("DROP TABLE t", "_route_drop"),
+    "TRUNCATE": ("TRUNCATE TABLE t", "_route_drop"),
+    "ATTACH": ("ATTACH TABLE t FROM '/tmp/t.parquet'", "_route_attach"),
+    "DETACH": ("DETACH TABLE t", "_route_detach"),
+    "UNDROP": ("UNDROP TABLE t", "_route_undrop"),
+    "RENAME": ("RENAME TABLE a TO b", "_route_rename"),
+    "EXCHANGE": ("EXCHANGE TABLES a AND b", "_route_rename"),
+    "SHOW": ("SHOW PROCESSLIST", "_route_show"),
+    "SYSTEM": ("SYSTEM FLUSH LOGS", "_route_system"),
+    "KILL": ("KILL QUERY WHERE query_id = 'q1'", "_route_kill"),
+    "EXISTS": ("EXISTS TABLE t", "_route_exists"),
+    "CHECK": ("CHECK TABLE t", "_route_check"),
+    "OPTIMIZE": ("OPTIMIZE TABLE t FINAL", "_route_optimize"),
+    "ANALYZE": ("ANALYZE TABLE t COMPUTE STATISTICS", "_route_analyze"),
+    "GRANT": ("GRANT SELECT ON *.* TO u", "_route_rbac"),
+    "SET ROLE": ("SET ROLE r", "_route_rbac"),
+    "REVOKE": ("REVOKE SELECT ON *.* FROM u", "_route_rbac"),
+}
+ROUTE_SPELLINGS = [
+    ("select 1", "_route_query"),
+    ("  \n\talter table t delete where 1", "_route_alter"),
+    ("insert into t format CSV\n1,'INTO OUTFILE x'", "_route_insert"),
+    ("(SELECT 1)", "_route_query"),
+    ("WITH x AS (SELECT 1) SELECT * FROM x", "_route_query"),
+    ("-- note\nALTER TABLE t DELETE WHERE 1", "_route_query"),
+    ("/* c */ DROP TABLE t", "_route_query"),
+    ("SET max_threads = 1", "_route_query"),
+    ("SET  role r", "_route_rbac"),
+]
+
+
+def _routed(sql: str) -> str:
+    """The router ``BigHouseEngine._route`` hands ``sql`` to, on an
+    engine with no session (every router stubbed)."""
+    from bighouse_spark.engine import BigHouseEngine, QueryRequest, _Statement
+
+    eng = BigHouseEngine.__new__(BigHouseEngine)
+    routers = {r for r, _kind in BigHouseEngine._ROUTES.values()}
+    for r in routers | {"_route_query"}:
+        setattr(eng, r, lambda stmt, masked, stream_to, r=r: r)
+    return eng._route(_Statement(QueryRequest(sql)))
+
+
+def test_every_route_has_an_example():
+    from bighouse_spark.engine import BigHouseEngine
+
+    assert set(ROUTE_EXAMPLES) == set(BigHouseEngine._ROUTES)
+
+
+@pytest.mark.parametrize(
+    "sql,router",
+    list(ROUTE_EXAMPLES.values()) + ROUTE_SPELLINGS,
+)
+def test_statement_reaches_its_router(sql, router):
+    assert _routed(sql) == router
+
+
+def test_query_kind_is_the_dispatch_key():
+    from bighouse_spark.engine import BigHouseEngine
+
+    kinds = {
+        BigHouseEngine._route_of(sql)[1]
+        for sql, _r in list(ROUTE_EXAMPLES.values()) + ROUTE_SPELLINGS
+    }
+    assert kinds == {
+        "Select", "Insert", "Alter", "Create", "Drop", "Undrop",
+        "Rename", "Show", "System", "KillQuery", "Exists", "Check",
+        "Optimize", "Grant", "Set", "Revoke",
+    }

@@ -28,10 +28,12 @@ ROOT = Path(__file__).resolve().parent.parent / "bighouse_spark"
 # name -> why the .sub() inside it is safe (audited 2026-08-16, r13)
 AUDITED = {
     "bighouse_spark/engine.py": {
-        # placeholder folding over the transpiled statement uses
-        # quote-aware substitute_parameters; the local .sub sites
-        # rewrite ENGINE artifacts (view names it generated itself)
-        "_execute_inner",
+        # renames the leading name token of one item of the engine's
+        # OWN recorded column DDL (RENAME COLUMN), never user SQL
+        "_alter_column",
+        # collapses whitespace in the matched SYSTEM action keywords
+        # (a group of keyword tokens, no literal can be inside)
+        "_route_system",
         # rewrites the MV's own source-table token (an identifier the
         # engine minted, never user literal text)
         "_refresh_mv",
