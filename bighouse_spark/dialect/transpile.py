@@ -7010,8 +7010,9 @@ def _spark_type_ddl(ch_type: str) -> str:
     return ch_type_to_spark(ch_type).simpleString()
 
 
-# Thread-local current query id, set by the engine around transpile
-# so queryID()/initialQueryID() fold to this query's killable id.
+# Thread-local current query id, set by the engine's statement
+# lifecycle for the whole statement so queryID()/initialQueryID() fold
+# to its killable id in every statement text it transpiles.
 _QUERY_ID_LOCAL = threading.local()
 
 

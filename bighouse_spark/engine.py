@@ -34,6 +34,7 @@ from bighouse_spark.dialect.transpile import (
     _mask_string_literals,
     _sub_outside_quotes,
     release_spool_pins,
+    set_current_query_id,
     split_top_level,
     transpile,
 )
@@ -45,7 +46,8 @@ from bighouse_spark.session_settings import parse_set_statement
 # ``depth`` counts nested statements (engine statements re-enter
 # execute for init queries and DDL; resource release fires only when
 # the OUTERMOST one unwinds), ``scope`` is the running statement's
-# conf scope, ``logged_error`` the failure already written to the log.
+# conf scope, ``logged_error`` the failure already written to the log,
+# ``qid``/``watch`` the outermost statement's query id and watchdog.
 _REQ_LOCAL = threading.local()
 
 
@@ -150,6 +152,12 @@ class _Statement:
     views: list[str] = field(default_factory=list)
     label: str = ""
     kind: str = "Select"
+
+
+def _killed_error(qid: str) -> RuntimeError:
+    return RuntimeError(
+        f"query {qid} was cancelled (KILL QUERY / QUERY_WAS_CANCELLED)"
+    )
 
 
 def _nanos_columns(path: str) -> list[str]:
@@ -293,13 +301,13 @@ class BigHouseEngine:
         # attach_table keeps the promotion across writes (REFRESH +
         # NOSCAN re-analyze instead of re-registering a temp view).
         self._analyzed: set[str] = set()
-        # In-flight queries: query_id -> (sql, start_monotonic). Each
-        # SELECT runs under a Spark job group named by its query_id,
-        # so KILL QUERY and SETTINGS max_execution_time can cancel the
-        # group (thread-scoped: PySpark pins one JVM thread per Python
+        # In-flight statements: query_id -> (sql, start_monotonic). Each
+        # runs under a Spark job group named by its query_id, which
+        # KILL QUERY and max_execution_time cancel through _cancel
+        # (thread-scoped: PySpark pins one JVM thread per Python
         # thread, so concurrent server requests don't cross-cancel).
         self._inflight: dict[str, tuple[str, float]] = {}
-        self._killed: set[str] = set()
+        self._cancelled: dict[str, Exception] = {}  # qid -> its error
         self._inflight_lock = threading.Lock()
         # Monotonic count of cancellations (KILL QUERY + watchdog),
         # surfaced by the Prometheus /metrics endpoint.
@@ -368,6 +376,16 @@ class BigHouseEngine:
         else:
             raise ValueError(f"RENAME TABLE {old}: not found")
         self.clear_cache()
+
+    def processes(self) -> list[tuple[str, str, float]]:
+        """``(query_id, query, elapsed_sec)`` per in-flight statement,
+        for system.processes, /debug/threads and /metrics."""
+        with self._inflight_lock:
+            now = time.monotonic()
+            return [
+                (qid, sql, now - t0)
+                for qid, (sql, t0) in self._inflight.items()
+            ]
 
     def clear_cache(self) -> None:
         with self._cache_lock:
@@ -505,13 +523,18 @@ class BigHouseEngine:
         def _processes() -> None:
             # system.processes analog: in-flight queries with their
             # cancellable query ids (KILL QUERY WHERE query_id = ...).
-            with self._inflight_lock:
-                procs = [
-                    (qid, sql, time.monotonic() - t0)
-                    for qid, (sql, t0) in self._inflight.items()
-                ]
-            self.spark.createDataFrame(
-                procs, "query_id string, query string, elapsed_sec double"
+            # An inline table is a local relation: reading it runs no
+            # Spark job, so it never queues behind the queries it lists.
+            procs = self.processes()
+            # one typed placeholder row keeps VALUES well-formed at zero
+            flat = sum(procs or [("", "", 0.0)], ())
+            rows = ", ".join(
+                f"(:p{i}, :p{i + 1}, :p{i + 2})" for i in range(0, len(flat), 3)
+            )
+            self.spark.sql(
+                f"SELECT * FROM VALUES {rows} "
+                f"AS t(query_id, query, elapsed_sec) LIMIT {len(procs)}",
+                args={f"p{i}": v for i, v in enumerate(flat)},
             ).createOrReplaceTempView("system_processes")
 
         # system.tables / system.columns analogs (CH exposes catalog
@@ -3088,19 +3111,21 @@ class BigHouseEngine:
         """The statement lifecycle behind every entry point (the
         reference gives each query its own: spawn, init statements,
         run, tear down — ``temporal/workflow_query_executor.go:70-80``).
-        It owns the start time and query id, the init queries, scoped
-        session conf, temp-view cleanup, the one ``query_log`` write
-        (on success and on failure) and the request-boundary release
-        of operator scratch persists and HTTP spool pins.
+        It owns the start time and query id, cancellation, the init
+        queries, scoped session conf, temp-view cleanup, the one
+        ``query_log`` write (on success and on failure) and the
+        request-boundary release of operator scratch persists and HTTP
+        spool pins.
 
         ``handler(stmt)`` routes and runs the statement and returns its
         result, wrapped in ``_Logged`` when a success is logged;
         ``kind`` is the ``query_kind`` logged unless the handler sets
-        ``stmt.kind``. Init
-        queries and DDL re-enter here as nested statements: a failure
-        is logged once, by the innermost statement that raised it, and
-        release fires only when the OUTERMOST statement on this thread
-        unwinds — a nested boundary must not drop caches/pins the
+        ``stmt.kind``. Init queries and DDL re-enter here as nested
+        statements: a failure is logged once, by the innermost
+        statement that raised it. The OUTERMOST statement on this
+        thread owns, for all nested in it, the query id (its
+        ``_inflight`` entry, job group and ``queryID()``) and the
+        release: a nested boundary must not drop caches/pins the
         enclosing request still references."""
         if isinstance(request, str):
             request = QueryRequest(query=request)
@@ -3111,12 +3136,49 @@ class BigHouseEngine:
             ),
             kind=kind,
         )
+        qid = stmt.request.query_id
         depth = getattr(_REQ_LOCAL, "depth", 0)
         outer_scope = getattr(_REQ_LOCAL, "scope", None)
         _REQ_LOCAL.depth = depth + 1
         t0 = time.monotonic()
-        out = entry = None
+        out = entry = running = timer = None
         try:
+            if depth == 0:
+                # Duplicate client ids are rejected like CH.
+                with self._inflight_lock:
+                    if qid in self._inflight:
+                        raise ValueError(
+                            f"query_id {qid!r} is already running "
+                            "(QUERY_WITH_SAME_ID_IS_ALREADY_RUNNING)"
+                        )
+                    running = self._inflight[qid] = (request.query, t0)
+
+                def watch(raw: Any) -> None:
+                    # SETTINGS max_execution_time=N (CH seconds, 0 =
+                    # unlimited), armed by the first transpile that
+                    # carries it; the deadline counts from the start.
+                    nonlocal timer
+                    _REQ_LOCAL.watch = None
+                    try:
+                        limit = float(str(raw).strip("'\" "))
+                    except ValueError:
+                        return
+                    if limit > 0:
+                        timer = threading.Timer(
+                            t0 + limit - time.monotonic(), self._cancel,
+                            (qid, TimeoutError(
+                                f"query {qid} exceeded max_execution_time"
+                                f"={limit:g}s (TIMEOUT_EXCEEDED)"
+                            ), running),
+                        )
+                        timer.daemon = True
+                        timer.start()
+
+                _REQ_LOCAL.qid, _REQ_LOCAL.watch = qid, watch
+                set_current_query_id(qid)
+                self.spark.sparkContext.setJobGroup(
+                    qid, request.query[:200], interruptOnCancel=True
+                )
             with ExitStack() as scope:
                 _REQ_LOCAL.scope = scope
                 scope.callback(self._drop_views, stmt.views)
@@ -3144,6 +3206,10 @@ class BigHouseEngine:
                         if init_t.sql.strip():
                             self.spark.sql(init_t.sql)
                 out = handler(stmt)
+            if isinstance(err := self._cancelled.get(qid), TimeoutError):
+                # The cancel raced a completing job: the deadline is
+                # still exceeded — CH errors here too.
+                raise err
             if isinstance(out, _Logged):
                 entry = QueryLogEntry(
                     stmt.request.query, out.label, 0.0, out.rows,
@@ -3152,13 +3218,17 @@ class BigHouseEngine:
                 out = out.result
             return out
         except Exception as e:
-            if e is not getattr(_REQ_LOCAL, "logged_error", None):
-                _REQ_LOCAL.logged_error = e
+            logged = getattr(_REQ_LOCAL, "logged_error", None)
+            err = e if e is logged else self._cancel_error(e)
+            if err is not logged:
+                _REQ_LOCAL.logged_error = err
                 entry = QueryLogEntry(
                     stmt.request.query, stmt.label, 0.0, 0,
-                    str(e) or type(e).__name__, query_kind=stmt.kind,
+                    str(err) or type(err).__name__, query_kind=stmt.kind,
                 )
-            raise
+            if err is e:
+                raise
+            raise err from e
         finally:
             elapsed = time.monotonic() - t0
             if isinstance(out, QueryResult):
@@ -3170,9 +3240,60 @@ class BigHouseEngine:
                     self.query_totals.add(entry)
             _REQ_LOCAL.depth, _REQ_LOCAL.scope = depth, outer_scope
             if depth == 0:
-                _REQ_LOCAL.logged_error = None
+                _REQ_LOCAL.logged_error = _REQ_LOCAL.qid = None
+                _REQ_LOCAL.watch = None
+                if running is not None:
+                    if timer is not None:
+                        timer.cancel()
+                    with self._inflight_lock:
+                        self._inflight.pop(qid, None)
+                        self._cancelled.pop(qid, None)
+                    set_current_query_id(None)
+                    try:
+                        self.spark.sparkContext.setJobGroup("", "")
+                    except Exception:
+                        pass
                 release_tracked()
                 release_spool_pins()
+
+    def _cancel_error(self, err: Exception) -> Exception:
+        """What a statement failing with ``err`` raises: the error
+        ``_cancel`` recorded, QUERY_WAS_CANCELLED, or ``err``."""
+        qid = getattr(_REQ_LOCAL, "qid", None)
+        if qid in self._cancelled:
+            return self._cancelled[qid]
+        if "cancelled job group" in str(err):
+            return _killed_error(qid)
+        return err
+
+    def _cancel(
+        self, qid: str, err: Exception | None = None, running=None,
+    ) -> bool:
+        """Cancel the statement running as ``qid``; False if none is.
+        Records ``err`` (default QUERY_WAS_CANCELLED) as the error it
+        raises, then re-issues ``cancelJobGroup`` until it leaves
+        ``_inflight``: one call misses jobs not yet submitted. A
+        sticky cancel would also fail a later statement reusing the
+        id, which CH allows; the watchdog passes its own ``running``
+        entry so that a late fire spares such a statement."""
+        with self._inflight_lock:
+            running = running or self._inflight.get(qid)
+            if running is None or self._inflight.get(qid) is not running:
+                return False
+            self._cancelled.setdefault(qid, err or _killed_error(qid))
+            self.kill_count += 1
+        sc = self.spark.sparkContext
+
+        def reap() -> None:
+            while self._inflight.get(qid) is running:
+                try:
+                    sc.cancelJobGroup(qid)
+                except Exception:
+                    pass
+                time.sleep(0.3)
+
+        threading.Thread(target=reap, daemon=True).start()
+        return True
 
     @contextmanager
     def _scoped_conf(self, knobs: dict[str, str]):
@@ -3205,6 +3326,9 @@ class BigHouseEngine:
         out = transpile(sql, self.spark)
         if out.settings:
             _REQ_LOCAL.scope.enter_context(self._scoped_conf(out.settings))
+        watch = getattr(_REQ_LOCAL, "watch", None)
+        if watch and "max_execution_time" in out.dropped_settings:
+            watch(out.dropped_settings["max_execution_time"])
         return out
 
     def _drop_views(self, views: list[str]) -> None:
@@ -4900,41 +5024,9 @@ class BigHouseEngine:
         return self._route_query(stmt, masked, stream_to)
 
     def _kill_query(self, qid: str) -> QueryResult:
-        # Check-and-mark under ONE lock hold: if the victim
-        # finishes between a separate check and mark, the _killed
-        # entry would outlive it and misclassify a later query
-        # reusing the id.
-        with self._inflight_lock:
-            known = qid in self._inflight
-            if known:
-                self._killed.add(qid)
-                self.kill_count += 1
-        if known:
-            # Sticky cancel (Spark 4): also cancels jobs the
-            # victim submits AFTER this call — plain
-            # cancelJobGroup is a no-op if the kill lands while
-            # the victim is still planning. Fallback: re-cancel
-            # until the victim's inflight entry disappears.
-            sc = self.spark.sparkContext
-            try:
-                sc.cancelJobGroupAndFutureJobs(qid)
-            except Exception:
-                def _reaper() -> None:
-                    deadline = time.monotonic() + 30
-                    while time.monotonic() < deadline:
-                        with self._inflight_lock:
-                            if qid not in self._inflight:
-                                return
-                        try:
-                            sc.cancelJobGroup(qid)
-                        except Exception:
-                            pass
-                        time.sleep(0.3)
-
-                threading.Thread(target=_reaper, daemon=True).start()
         return QueryResult(
             cols=["kill_status", "query_id"],
-            rows=[["waiting", qid]] if known else [],
+            rows=[["waiting", qid]] if self._cancel(qid) else [],
         )
 
     def _route_exists(self, stmt: _Statement, masked: str, stream_to):
@@ -5113,23 +5205,7 @@ class BigHouseEngine:
                 QueryResult(hit.cols, hit.rows, types=hit.types),
                 "<cache hit>", len(hit.rows), cached=True,
             )
-        # Per-query job group (CH query_id analog): names every
-        # Spark job this query submits so KILL QUERY / the
-        # max_execution_time watchdog can cancel exactly this
-        # query. SETTINGS max_execution_time=N (CH seconds) is
-        # enforced by a timer that cancels the group. Set BEFORE
-        # transpile so queryID()/initialQueryID() fold to this id
-        # inside the query text.
-        from bighouse_spark.dialect.transpile import (
-            set_current_query_id,
-        )
-
-        qid = request.query_id
-        set_current_query_id(qid)
-        try:
-            result = self._transpile(request.query)
-        finally:
-            set_current_query_id(None)
+        result = self._transpile(request.query)
         stmt.views.extend(result.views)
         stmt.label = result.sql
         df = self._sql_with_alias_fallback(result.sql)
@@ -5160,15 +5236,6 @@ class BigHouseEngine:
                 for f in df.schema.fields
             ])
         cols = df.columns
-        timeout_s = None
-        raw_timeout = result.dropped_settings.get(
-            "max_execution_time"
-        )
-        if raw_timeout is not None:
-            try:
-                timeout_s = float(str(raw_timeout).strip("'\" "))
-            except ValueError:
-                timeout_s = None
         # SETTINGS max_result_rows (+ result_overflow_mode):
         # enforced via limit(N+1) so an oversized result never
         # reaches the driver — 'throw' (CH default) raises
@@ -5211,95 +5278,19 @@ class BigHouseEngine:
                     for f in df.schema.fields
                 ]
             )
-        # Register in-flight LAST, immediately before the only
-        # job-submitting action, inside one try/finally — an
-        # analysis error above must not leak a ghost entry that
-        # SHOW PROCESSLIST lists forever. Duplicate client ids
-        # are rejected like CH (QUERY_WITH_SAME_ID...).
-        with self._inflight_lock:
-            if qid in self._inflight:
-                raise ValueError(
-                    f"query_id {qid!r} is already running "
-                    "(QUERY_WITH_SAME_ID_IS_ALREADY_RUNNING)"
-                )
-            self._inflight[qid] = (request.query, time.monotonic())
-        timed_out = threading.Event()
-        timer = None
-        try:
-            self.spark.sparkContext.setJobGroup(
-                qid, request.query[:200], interruptOnCancel=True
-            )
-            if timeout_s and timeout_s > 0:
-                def _cancel() -> None:
-                    timed_out.set()
-                    # Under the lock: += on an int is a
-                    # read-modify-write; concurrent timer fires
-                    # would lose increments (the KILL QUERY path
-                    # already increments under this lock).
-                    with self._inflight_lock:
-                        self.kill_count += 1
-                    sc = self.spark.sparkContext
-                    try:
-                        # Sticky (Spark 4): also cancels jobs the
-                        # query submits after the timer fires —
-                        # plain cancelJobGroup no-ops between
-                        # jobs (e.g. mid-AQE replanning).
-                        sc.cancelJobGroupAndFutureJobs(qid)
-                    except Exception:
-                        try:
-                            sc.cancelJobGroup(qid)
-                        except Exception:
-                            pass
-
-                timer = threading.Timer(timeout_s, _cancel)
-                timer.daemon = True
-                timer.start()
-            # Stream when nothing forces driver materialization:
-            # the result cache needs full rows and max_result_rows
-            # needs the count before the first byte leaves.
-            if stream_to is not None and not use_cache and max_rows is None:
-                stream_to.start(cols, types)
-                n_rows = 0
-                for r in df.toLocalIterator(prefetchPartitions=True):
-                    stream_to.write_row(list(r))
-                    n_rows += 1
-                rows = []
-            else:
-                rows = [list(r) for r in df.collect()]
-                n_rows = len(rows)
-            if timed_out.is_set():
-                # The cancel raced a completing job: the deadline
-                # is still exceeded — CH errors here too.
-                raise TimeoutError(
-                    f"query {qid} exceeded max_execution_time="
-                    f"{timeout_s:g}s (TIMEOUT_EXCEEDED)"
-                )
-        except TimeoutError:
-            raise
-        except Exception as collect_err:
-            if timed_out.is_set():
-                raise TimeoutError(
-                    f"query {qid} exceeded max_execution_time="
-                    f"{timeout_s:g}s (TIMEOUT_EXCEEDED)"
-                ) from collect_err
-            with self._inflight_lock:
-                was_killed = qid in self._killed
-            if was_killed or "cancelled job group" in str(collect_err):
-                raise RuntimeError(
-                    f"query {qid} was cancelled (KILL QUERY / "
-                    "QUERY_WAS_CANCELLED)"
-                ) from collect_err
-            raise
-        finally:
-            if timer is not None:
-                timer.cancel()
-            with self._inflight_lock:
-                self._inflight.pop(qid, None)
-                self._killed.discard(qid)
-            try:
-                self.spark.sparkContext.setJobGroup("", "")
-            except Exception:
-                pass
+        # Stream when nothing forces driver materialization: the
+        # result cache needs full rows and max_result_rows needs the
+        # count before the first byte leaves.
+        if stream_to is not None and not use_cache and max_rows is None:
+            stream_to.start(cols, types)
+            n_rows = 0
+            for r in df.toLocalIterator(prefetchPartitions=True):
+                stream_to.write_row(list(r))
+                n_rows += 1
+            rows = []
+        else:
+            rows = [list(r) for r in df.collect()]
+            n_rows = len(rows)
         if max_rows is not None and len(rows) > max_rows:
             if overflow_mode == "break":
                 rows = rows[:max_rows]

@@ -173,12 +173,10 @@ def render(
         "Rows currently held across all result-cache entries.",
         [({}, cache_rows)],
     )
-    with engine._inflight_lock:
-        inflight = len(engine._inflight)
     w.metric(
         "bighouse_queries_inflight", "gauge",
         "Queries executing right now.",
-        [({}, inflight)],
+        [({}, len(engine.processes()))],
     )
 
     with _lock:

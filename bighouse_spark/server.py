@@ -109,16 +109,10 @@ def _debug_threads(engine: BigHouseEngine) -> str:
 
     frames = sys._current_frames()
     by_ident = {t.ident: t for t in threading.enumerate()}
-    with engine._inflight_lock:
-        inflight = [
-            (qid, sql[:200], time.monotonic() - t0)
-            for qid, (sql, t0) in engine._inflight.items()
-        ]
+    inflight = engine.processes()
     out = [f"=== in-flight queries ({len(inflight)}) ==="]
-    for qid, sql, elapsed in sorted(
-        inflight, key=lambda x: -x[2]
-    ):
-        out.append(f"{qid} elapsed={elapsed:.1f}s {sql}")
+    for qid, sql, elapsed in sorted(inflight, key=lambda x: -x[2]):
+        out.append(f"{qid} elapsed={elapsed:.1f}s {sql[:200]}")
     out.append("")
     out.append(f"=== python threads ({len(frames)}) ===")
     for ident, frame in sorted(frames.items()):

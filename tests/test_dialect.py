@@ -11045,12 +11045,17 @@ def test_udf_memo_is_keyed_on_the_session_not_its_id():
     assert a.udf.names
     dead = id(a)
     del a
+    # Misses stay alive, so each try takes the next free block; bare
+    # __new__, so no allocation inside __init__ takes the freed one.
+    held = []
     for _ in range(10_000):
-        b = _StubSession()
+        b = _StubSession.__new__(_StubSession)
         if id(b) == dead:
             break
+        held.append(b)
     else:
         pytest.fail("no stub session reused the collected id")
+    b.__init__()
     _ensure_udfs(b, "porter")
     assert b.udf.names
     _ensure_udfs(b, "porter")  # and registers once per session

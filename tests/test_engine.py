@@ -1683,8 +1683,208 @@ class TestReviewFindingsRound5:
 
 class TestQueryLifecycleControl:
     """max_execution_time enforcement, KILL QUERY, system_processes —
-    the CH query-lifecycle surface (each SELECT runs in its own Spark
-    job group named by a query_id)."""
+    the CH query-lifecycle surface. Every client statement, whatever
+    its kind, runs in its own Spark job group named by its query_id;
+    KILL and the watchdog both cancel through that group."""
+
+    SLOW = (
+        "SELECT count() AS c FROM numbers(500000000) a, numbers(10000) b"
+    )
+    # the same count as an (id, v) row of lc_tbl
+    SLOW_ROW = SLOW.replace("count() AS c", "count() AS id, 0 AS v")
+
+    @staticmethod
+    def _start(engine, query, qid):
+        """Run one statement in a thread; the dict gets its outcome."""
+        import threading
+
+        res = {}
+
+        def victim():
+            try:
+                engine.execute(QueryRequest(query=query, query_id=qid))
+                res["r"] = "finished"
+            except Exception as e:
+                res["r"] = f"{type(e).__name__}: {e}"
+
+        th = threading.Thread(target=victim, daemon=True)
+        th.start()
+        return th, res
+
+    @staticmethod
+    def _stop(engine, spark, th, qid):
+        """Cleanup that cannot hang the suite: KILL the victim, and
+        cancel every job if that did not stop it."""
+        if th.is_alive():
+            engine.execute(f"KILL QUERY WHERE query_id = '{qid}'")
+            th.join(30)
+        if th.is_alive():
+            spark.sparkContext.cancelAllJobs()
+            th.join(30)
+
+    @staticmethod
+    def _wait_running(engine, qid, deadline_s=30):
+        """Wait until ``qid`` is in flight, then read it back from
+        ``system.processes`` — which runs no Spark job, so it answers
+        while the statement holds every task slot."""
+        deadline = time.time() + deadline_s
+        while qid not in engine._inflight:
+            if time.time() > deadline:
+                return False
+            time.sleep(0.1)
+        return engine.execute(
+            f"SELECT query_id FROM system.processes WHERE query_id = '{qid}'"
+        ).rows == [[qid]]
+
+    @staticmethod
+    def _assert_left_nothing(engine, spark, qid):
+        assert not engine._inflight
+        tracker = spark.sparkContext.statusTracker()
+        group = set(tracker.getJobIdsForGroup(qid))
+        assert group, f"no job ran under {qid}'s group"
+        # the status tracker is fed asynchronously
+        deadline = time.time() + 15
+        while group & set(tracker.getActiveJobsIds()):
+            assert time.time() < deadline, "a cancelled job kept running"
+            time.sleep(0.1)
+
+    @pytest.fixture
+    def lc_table(self, engine, spark, tmp_path):
+        d = str(tmp_path / "lc_tbl")
+        spark.createDataFrame(
+            [(i, i) for i in range(5)], "id bigint, v bigint"
+        ).write.parquet(d)
+        engine.attach_table("lc_tbl", d)
+        yield d
+        engine.execute("DROP TABLE lc_tbl")
+        assert not [
+            n for n in os.listdir(tmp_path) if ".mutating-" in n
+        ]
+
+    def _rows(self, engine):
+        return engine.execute(
+            "SELECT count() AS n, sum(v) AS s FROM lc_tbl"
+        ).rows
+
+    def test_watchdog_cancels_before_the_first_job(self, engine, spark):
+        # The deadline passes while the statement is still planning:
+        # a single cancelJobGroup then has nothing to cancel.
+        t0 = time.time()
+        th, res = self._start(
+            engine, self.SLOW + " SETTINGS max_execution_time=0.01", "wd-1"
+        )
+        th.join(30)
+        try:
+            assert "TIMEOUT_EXCEEDED" in res.get("r", ""), res
+            assert time.time() - t0 < 30
+            self._assert_left_nothing(engine, spark, "wd-1")
+        finally:
+            self._stop(engine, spark, th, "wd-1")
+
+    def test_kill_insert_select(self, engine, spark, lc_table):
+        before = self._rows(engine)
+        th, res = self._start(
+            engine, "INSERT INTO lc_tbl " + self.SLOW_ROW, "kill-ins"
+        )
+        try:
+            assert self._wait_running(engine, "kill-ins")
+            out = engine.execute("KILL QUERY WHERE query_id = 'kill-ins'")
+            assert out.rows == [["waiting", "kill-ins"]]
+            th.join(60)
+            assert "QUERY_WAS_CANCELLED" in res.get("r", ""), res
+            self._assert_left_nothing(engine, spark, "kill-ins")
+            assert self._rows(engine) == before
+        finally:
+            self._stop(engine, spark, th, "kill-ins")
+
+    def test_kill_mutation(self, engine, spark, lc_table):
+        before = self._rows(engine)
+        th, res = self._start(
+            engine,
+            "ALTER TABLE lc_tbl UPDATE v = (" + self.SLOW + ") WHERE 1",
+            "kill-mut",
+        )
+        try:
+            assert self._wait_running(engine, "kill-mut")
+            engine.execute("KILL QUERY WHERE query_id = 'kill-mut'")
+            th.join(60)
+            assert "QUERY_WAS_CANCELLED" in res.get("r", ""), res
+            self._assert_left_nothing(engine, spark, "kill-mut")
+            assert self._rows(engine) == before
+        finally:
+            self._stop(engine, spark, th, "kill-mut")
+
+    def test_kill_insert_into_function(self, engine, spark, tmp_path):
+        out = str(tmp_path / "fn_out")
+        th, res = self._start(
+            engine,
+            f"INSERT INTO FUNCTION file('{out}', 'Parquet') " + self.SLOW,
+            "kill-fn",
+        )
+        try:
+            assert self._wait_running(engine, "kill-fn")
+            engine.execute("KILL QUERY WHERE query_id = 'kill-fn'")
+            th.join(60)
+            assert "QUERY_WAS_CANCELLED" in res.get("r", ""), res
+            self._assert_left_nothing(engine, spark, "kill-fn")
+            written = [
+                f for _r, _d, fs in os.walk(out) for f in fs
+                if f.endswith(".parquet")
+            ]
+            assert written == []
+        finally:
+            self._stop(engine, spark, th, "kill-fn")
+
+    def test_insert_select_times_out(self, engine, spark, lc_table):
+        before = self._rows(engine)
+        t0 = time.time()
+        th, res = self._start(
+            engine,
+            "INSERT INTO lc_tbl " + self.SLOW_ROW
+            + " SETTINGS max_execution_time=1",
+            "wd-ins",
+        )
+        th.join(30)
+        try:
+            assert "TIMEOUT_EXCEEDED" in res.get("r", ""), res
+            assert time.time() - t0 < 30
+            self._assert_left_nothing(engine, spark, "wd-ins")
+            assert self._rows(engine) == before
+        finally:
+            self._stop(engine, spark, th, "wd-ins")
+
+    def test_query_id_reusable_after_cancel(self, engine, spark):
+        reuse = "SELECT count() AS c FROM numbers(1000)"
+        th, res = self._start(engine, self.SLOW, "r1")
+        try:
+            assert self._wait_running(engine, "r1")
+            engine.execute("KILL QUERY WHERE query_id = 'r1'")
+            th.join(60)
+            assert "QUERY_WAS_CANCELLED" in res.get("r", ""), res
+        finally:
+            self._stop(engine, spark, th, "r1")
+        assert engine.execute(
+            QueryRequest(query=reuse, query_id="r1")
+        ).rows == [[1000]]
+        with pytest.raises(TimeoutError, match="TIMEOUT_EXCEEDED"):
+            engine.execute(QueryRequest(
+                query=self.SLOW + " SETTINGS max_execution_time=1",
+                query_id="r2",
+            ))
+        assert engine.execute(
+            QueryRequest(query=reuse, query_id="r2")
+        ).rows == [[1000]]
+
+    def test_query_id_outside_the_query_path(self, engine):
+        engine.execute("CREATE TABLE lc_qid (q String)")
+        try:
+            engine.execute(QueryRequest(
+                query="INSERT INTO lc_qid SELECT queryID()",
+                query_id="ins-q",
+            ))
+            assert engine.execute("SELECT q FROM lc_qid").rows == [["ins-q"]]
+        finally:
+            engine.execute("DROP TABLE lc_qid")
 
     def test_max_execution_time_cancels(self, engine):
         import time

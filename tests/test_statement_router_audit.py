@@ -272,6 +272,79 @@ def test_one_query_log_write():
     assert len(writes) == 1, writes
 
 
+# The lifecycle also owns cancellation: the job group, queryID()'s
+# id, the max_execution_time timer and the _inflight entry are set and
+# undone by _run, and cancelled only through _cancel — one path for
+# KILL QUERY and the watchdog, for every statement kind.
+LIFECYCLE = {"_run", "_cancel"}
+_DICT_WRITES = ("pop", "popitem", "clear", "update", "setdefault")
+
+
+def _lifecycle_construct(node: ast.AST) -> str | None:
+    if isinstance(node, ast.Attribute) and node.attr in (
+        "setJobGroup", "cancelJobGroupAndFutureJobs",
+    ):
+        return node.attr
+    if isinstance(node, ast.Attribute) and node.attr == "Timer":
+        return "threading.Timer"
+    if isinstance(node, ast.Name) and node.id == "set_current_query_id":
+        return node.id
+    if isinstance(node, ast.Subscript) and isinstance(
+        node.ctx, (ast.Store, ast.Del)
+    ) and ast.unparse(node.value).endswith("_inflight"):
+        return "_inflight write"
+    if isinstance(node, ast.Call) and isinstance(
+        node.func, ast.Attribute
+    ) and node.func.attr in _DICT_WRITES and ast.unparse(
+        node.func.value
+    ).endswith("_inflight"):
+        return "_inflight write"
+    return None
+
+
+def _lifecycle_sites(path: Path) -> list[tuple[str | None, str]]:
+    """``(outermost enclosing function, construct)`` per site in
+    ``path``; a def nested in a method counts as that method."""
+    sites = []
+
+    def visit(node: ast.AST, owner: str | None) -> None:
+        for child in ast.iter_child_nodes(node):
+            own = owner
+            if own is None and isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ):
+                own = child.name
+            if what := _lifecycle_construct(child):
+                sites.append((own, what))
+            visit(child, own)
+
+    visit(ast.parse(path.read_text()), None)
+    return sites
+
+
+def test_cancellation_lives_in_the_lifecycle():
+    sites = [
+        (p.name, fn, what)
+        for p in sorted(ENGINE.parent.rglob("*.py"))
+        for fn, what in _lifecycle_sites(p)
+    ]
+    stray = [
+        s for s in sites
+        if s[1] not in LIFECYCLE or s[2] == "cancelJobGroupAndFutureJobs"
+    ]
+    assert not stray, (
+        f"{stray}: job groups, the query id, the watchdog timer and "
+        "_inflight writes belong to BigHouseEngine._run; cancel "
+        "through BigHouseEngine._cancel. Sticky future-job cancel "
+        "would fail a later statement reusing the query id."
+    )
+    # the detector sees every construct it guards
+    assert {what for _p, _fn, what in sites} == {
+        "setJobGroup", "set_current_query_id", "threading.Timer",
+        "_inflight write",
+    }
+
+
 def test_transpile_never_writes_session_conf():
     # transpile() only RETURNS mapped SETTINGS: the session conf is
     # shared by every client, and a write there leaked one query's
