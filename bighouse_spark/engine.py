@@ -305,9 +305,11 @@ class BigHouseEngine:
         # runs under a Spark job group named by its query_id, which
         # KILL QUERY and max_execution_time cancel through _cancel
         # (thread-scoped: PySpark pins one JVM thread per Python
-        # thread, so concurrent server requests don't cross-cancel).
+        # thread, so concurrent server requests don't cross-cancel)
+        # until its write lands (_commit).
         self._inflight: dict[str, tuple[str, float]] = {}
         self._cancelled: dict[str, Exception] = {}  # qid -> its error
+        self._committed: set[str] = set()
         self._inflight_lock = threading.Lock()
         # Monotonic count of cancellations (KILL QUERY + watchdog),
         # surfaced by the Prometheus /metrics endpoint.
@@ -379,11 +381,13 @@ class BigHouseEngine:
 
     def processes(self) -> list[tuple[str, str, float]]:
         """``(query_id, query, elapsed_sec)`` per in-flight statement,
-        for system.processes, /debug/threads and /metrics."""
+        for system.processes, /debug/threads and /metrics. ``query`` is
+        cut to 200 characters: an HTTP text INSERT's carries its whole
+        payload."""
         with self._inflight_lock:
             now = time.monotonic()
             return [
-                (qid, sql, now - t0)
+                (qid, sql[:200], now - t0)
                 for qid, (sql, t0) in self._inflight.items()
             ]
 
@@ -1405,7 +1409,7 @@ class BigHouseEngine:
             .alias(c) if c == col else F.col(c)
             for c in file_cols
         ])
-        path = self._write_swap_partition(name, subdir, out, "clrp")
+        path = self._write_swap(name, subdir, out, "clrp")
         self._record_mutation(
             name,
             f"CLEAR COLUMN {col} IN PARTITION {part_val!r}",
@@ -1511,7 +1515,7 @@ class BigHouseEngine:
             # files in the directory never carry the partition key —
             # project back to the file schema before the swap
             out = self.spark.sql(sel.sql).select(*file_cols)
-            path = self._write_swap_partition(
+            path = self._write_swap(
                 name, subdir, out, "mutp"
             )
         finally:
@@ -1594,6 +1598,7 @@ class BigHouseEngine:
                 f"{scol}={dir_val})"
             )
         dst_dir = os.path.join(dst_local, f"{dcol}={dir_val}")
+        self._commit()
         if verb == "REPLACE" and os.path.isdir(dst_dir):
             shutil.rmtree(dst_dir)
         os.makedirs(dst_dir, exist_ok=True)
@@ -1622,12 +1627,8 @@ class BigHouseEngine:
         # data changed under these tables — rebuild dependent MVs
         # (same posture as mutations: safe direction vs CH's silent
         # non-propagation)
-        changed = {dst} | ({src} if verb == "MOVE" else set())
-        for mv_name, mv in self._mviews.items():
-            if mv["source"] in changed:
-                shutil.rmtree(mv["checkpoint"], ignore_errors=True)
-                shutil.rmtree(mv["data"], ignore_errors=True)
-                self._refresh_mv(mv_name)
+        for nm in {dst} | ({src} if verb == "MOVE" else set()):
+            self._rebuild_dependent_mvs(nm)
         return _Logged(
             QueryResult(
                 cols=["source", "destination", "partition", "files"],
@@ -1891,15 +1892,16 @@ class BigHouseEngine:
                 "contain path separators"
             )
 
-    def _write_swap_partition(
-        self, name: str, subdir: str, out, tag: str
+    def _write_swap(
+        self, name: str, subdir: str | None, out, tag: str
     ) -> str:
-        """Shared tail of every partition-scoped rewrite (mutation,
-        CLEAR COLUMN, compaction): write ``out`` to a temp SIBLING of
-        the table root (a failed write must never leave a
-        ``k=1.<tag>-xx`` dir that partition discovery parses as a
-        bogus partition value), swap it into ``subdir``, re-attach,
-        rebuild dependent MVs. Returns the table path."""
+        """Shared tail of every rewrite (mutation, CLEAR COLUMN,
+        compaction, TRUNCATE): write ``out`` to a temp SIBLING of the
+        table root (a failed write must never leave a ``k=1.<tag>-xx``
+        dir that partition discovery parses as a bogus partition
+        value), swap it into partition dir ``subdir`` or, when None,
+        the whole table, re-attach, rebuild dependent MVs. Returns the
+        table path."""
         import shutil
         import uuid
 
@@ -1908,12 +1910,14 @@ class BigHouseEngine:
         tmp = f"{local}.{tag}-{uuid.uuid4().hex[:8]}"
         try:
             self._table_writer(
-                out, name, fmt, "overwrite", partition_in_path=True
+                out, name, fmt, "overwrite", partition_in_path=bool(subdir)
             ).save(tmp)
         except BaseException:
             shutil.rmtree(tmp, ignore_errors=True)
             raise
-        self._swap_in(subdir, tmp, local)
+        self._commit()
+        self._swap_in(subdir or local, tmp, local,
+                      preserve_detached=not subdir)
         self.clear_cache()
         self.attach_table(name, path, fmt=fmt, schema=schema)
         self._rebuild_dependent_mvs(name)
@@ -1952,21 +1956,7 @@ class BigHouseEngine:
         re-attach. Like CH mutations, this is a whole-part rewrite
         and is NOT atomic against concurrent readers of the same
         files — single-writer semantics."""
-        import shutil
-        import uuid
-
-        path, fmt, schema = self._attached[name]
-        local = path[7:] if path.startswith("file://") else path
-        tmp = f"{local}.mutating-{uuid.uuid4().hex[:8]}"
-        try:
-            self._table_writer(df, name, fmt, "overwrite").save(tmp)
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        self._swap_in(local, tmp, local, preserve_detached=True)
-        self.clear_cache()
-        self.attach_table(name, path, fmt=fmt, schema=schema)
-        self._rebuild_dependent_mvs(name)
+        path = self._write_swap(name, None, df, "mutating")
         return _Logged(QueryResult(cols=["path"], rows=[[path]]), label, -1)
 
     def _discard_if_null(self, name: str) -> None:
@@ -1986,10 +1976,13 @@ class BigHouseEngine:
         self.attach_table(name, path, fmt=fmt, schema=schema)
 
     def _append_aligned(self, aligned, name: str, desc: str) -> _Logged:
-        """Shared tail of every payload-INSERT path: append-write the
-        aligned rows to the attached storage, refresh caches/MVs."""
+        """Shared tail of every INSERT path: append-write the aligned
+        rows to the attached storage, refresh caches/MVs (CH MV
+        semantics: an INSERT into the source table triggers the view's
+        incremental refresh, which reads only the new files)."""
         path, fmt, schema = self._attached[name]
         self._table_writer(aligned, name, fmt, "append").save(path)
+        self._commit()
         self.clear_cache()
         self.attach_table(name, path, fmt=fmt, schema=schema)
         for mv_name, mv in self._mviews.items():
@@ -2589,7 +2582,6 @@ class BigHouseEngine:
                 "attach_table()/ATTACH first, or write files with "
                 "INSERT INTO FUNCTION s3/file(path[, format])"
             )
-        path, fmt, schema = self._attached[name]
         body = query[body_start:]
         target = self._target_schema(name)
         if body.upper().startswith("VALUES"):
@@ -2635,18 +2627,7 @@ class BigHouseEngine:
         aligned = df.toDF(*[f.name for f in target.fields]).select(
             *[F.col(f.name).cast(f.dataType) for f in target.fields]
         )
-        self._table_writer(aligned, name, fmt, "append").save(path)
-        self.clear_cache()
-        self.attach_table(name, path, fmt=fmt, schema=schema)
-        # CH MV semantics: INSERT into the source table triggers the
-        # view's incremental refresh (only the new files are read).
-        for mv_name, mv in self._mviews.items():
-            if mv["source"] == name:
-                self._refresh_mv(mv_name)
-        self._discard_if_null(name)
-        return _Logged(
-            QueryResult(cols=["path"], rows=[[path]]), result.sql, -1
-        )
+        return self._append_aligned(aligned, name, result.sql)
 
     def _create_materialized_view(
         self, name: str, populate: bool, select_sql: str,
@@ -2957,7 +2938,7 @@ class BigHouseEngine:
         df = df.distinct().repartition(n_out) if dedup else df.coalesce(n_out)
         # partition_in_path: this df deliberately lacks the partition
         # column (it IS the directory); ORDER BY sort + blooms kept.
-        path = self._write_swap_partition(name, subdir, df, "optp")
+        path = self._write_swap(name, subdir, df, "optp")
         import os
 
         files_after = sum(
@@ -3208,7 +3189,8 @@ class BigHouseEngine:
                 out = handler(stmt)
             if isinstance(err := self._cancelled.get(qid), TimeoutError):
                 # The cancel raced a completing job: the deadline is
-                # still exceeded — CH errors here too.
+                # still exceeded — CH errors here too. A write that
+                # landed has committed, which dropped the error.
                 raise err
             if isinstance(out, _Logged):
                 entry = QueryLogEntry(
@@ -3219,7 +3201,11 @@ class BigHouseEngine:
             return out
         except Exception as e:
             logged = getattr(_REQ_LOCAL, "logged_error", None)
-            err = e if e is logged else self._cancel_error(e)
+            # a cancelled statement raises the error _cancel recorded
+            oqid = getattr(_REQ_LOCAL, "qid", None)
+            err = e if e is logged else self._cancelled.get(oqid) or (
+                _killed_error(oqid) if "cancelled job group" in str(e) else e
+            )
             if err is not logged:
                 _REQ_LOCAL.logged_error = err
                 entry = QueryLogEntry(
@@ -3248,6 +3234,7 @@ class BigHouseEngine:
                     with self._inflight_lock:
                         self._inflight.pop(qid, None)
                         self._cancelled.pop(qid, None)
+                        self._committed.discard(qid)
                     set_current_query_id(None)
                     try:
                         self.spark.sparkContext.setJobGroup("", "")
@@ -3256,44 +3243,56 @@ class BigHouseEngine:
                 release_tracked()
                 release_spool_pins()
 
-    def _cancel_error(self, err: Exception) -> Exception:
-        """What a statement failing with ``err`` raises: the error
-        ``_cancel`` recorded, QUERY_WAS_CANCELLED, or ``err``."""
-        qid = getattr(_REQ_LOCAL, "qid", None)
-        if qid in self._cancelled:
-            return self._cancelled[qid]
-        if "cancelled job group" in str(err):
-            return _killed_error(qid)
-        return err
-
     def _cancel(
         self, qid: str, err: Exception | None = None, running=None,
     ) -> bool:
-        """Cancel the statement running as ``qid``; False if none is.
-        Records ``err`` (default QUERY_WAS_CANCELLED) as the error it
-        raises, then re-issues ``cancelJobGroup`` until it leaves
-        ``_inflight``: one call misses jobs not yet submitted. A
-        sticky cancel would also fail a later statement reusing the
-        id, which CH allows; the watchdog passes its own ``running``
-        entry so that a late fire spares such a statement."""
+        """Cancel the statement running as ``qid``; False if none is or
+        its write has landed (``_commit``). The first cancel records
+        ``err`` (default QUERY_WAS_CANCELLED) as the error it raises
+        and starts re-issuing ``cancelJobGroup`` until the statement
+        leaves ``_inflight`` or commits: one call misses jobs not yet
+        submitted. A sticky cancel would also fail a later statement
+        reusing the id, which CH allows; the watchdog passes its own
+        ``running`` entry so that a late fire spares such a
+        statement."""
         with self._inflight_lock:
             running = running or self._inflight.get(qid)
-            if running is None or self._inflight.get(qid) is not running:
+            if (running is None or self._inflight.get(qid) is not running
+                    or qid in self._committed):
                 return False
-            self._cancelled.setdefault(qid, err or _killed_error(qid))
             self.kill_count += 1
+            if qid in self._cancelled:
+                return True  # its reaper already runs
+            self._cancelled[qid] = err or _killed_error(qid)
         sc = self.spark.sparkContext
 
         def reap() -> None:
-            while self._inflight.get(qid) is running:
-                try:
-                    sc.cancelJobGroup(qid)
-                except Exception:
-                    pass
+            # Each cancel is posted under the lock _commit takes, so
+            # none reaches a job the statement runs after its commit.
+            while True:
+                with self._inflight_lock:
+                    if (self._inflight.get(qid) is not running
+                            or qid in self._committed):
+                        return
+                    try:
+                        sc.cancelJobGroup(qid)
+                    except Exception:
+                        pass
                 time.sleep(0.3)
 
         threading.Thread(target=reap, daemon=True).start()
         return True
+
+    def _commit(self) -> None:
+        """The running statement's write has landed: it now runs to
+        completion, so its outcome matches the data. KILL and the
+        watchdog stop, and a cancel that raced the write is dropped.
+        Call it before any Spark job that follows, e.g. the re-attach."""
+        qid = getattr(_REQ_LOCAL, "qid", None)
+        if qid is not None:
+            with self._inflight_lock:
+                self._committed.add(qid)
+                self._cancelled.pop(qid, None)
 
     @contextmanager
     def _scoped_conf(self, knobs: dict[str, str]):
@@ -3494,6 +3493,7 @@ class BigHouseEngine:
             inner.cols, inner.rows, fmt, types=inner.types,
             elapsed=inner.elapsed_sec,
         )
+        self._commit()
         with open(out_path, "wb") as fh:
             fh.write(body)
         return _Logged(
@@ -4187,6 +4187,7 @@ class BigHouseEngine:
                 shutil.rmtree(parked)
             acted = True
         if acted:
+            self._commit()
             self.clear_cache()
             path, fmt, schema = self._attached[name]
             self.attach_table(name, path, fmt=fmt, schema=schema)
@@ -4578,6 +4579,7 @@ class BigHouseEngine:
             if ocols:
                 self._ordered[name] = ocols
         self._table_writer(df, name, "parquet", "overwrite").save(path)
+        self._commit()
         self._mark_null_engine(name, masked)
         self._drop_views(sel.views)
         self.attach_table(name, path, schema=decl_schema)
@@ -4655,6 +4657,7 @@ class BigHouseEngine:
             self.spark.createDataFrame([], schema), name, "parquet",
             "overwrite",
         ).save(path)
+        self._commit()
         self.attach_table(name, path, schema=decl_schema)
         self._ch_col_ddl[name] = cols
         self._column_defaults.pop(name, None)
@@ -5382,6 +5385,7 @@ class BigHouseEngine:
                         f"parquet.bloom.filter.enabled#{c}", "true"
                     )
             writer.save(path)
+            self._commit()
             return _Logged(
                 QueryResult(cols=df.columns, rows=[]), result.sql, -1
             )

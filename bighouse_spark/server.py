@@ -112,7 +112,7 @@ def _debug_threads(engine: BigHouseEngine) -> str:
     inflight = engine.processes()
     out = [f"=== in-flight queries ({len(inflight)}) ==="]
     for qid, sql, elapsed in sorted(inflight, key=lambda x: -x[2]):
-        out.append(f"{qid} elapsed={elapsed:.1f}s {sql[:200]}")
+        out.append(f"{qid} elapsed={elapsed:.1f}s {sql}")
     out.append("")
     out.append(f"=== python threads ({len(frames)}) ===")
     for ident, frame in sorted(frames.items()):

@@ -1886,6 +1886,90 @@ class TestQueryLifecycleControl:
         finally:
             engine.execute("DROP TABLE lc_qid")
 
+    @pytest.mark.parametrize("query, after", [
+        ("ALTER TABLE lc_tbl UPDATE v = v + 1 WHERE 1", [[5, 15]]),
+        ("INSERT INTO lc_tbl SELECT 5, 5", [[6, 15]]),
+    ])
+    def test_cancel_after_the_write_lands(
+        self, engine, spark, lc_table, monkeypatch, query, after,
+    ):
+        # A KILL between the write and its commit point, then one
+        # after it: the Spark jobs the statement runs after its commit
+        # (here a 1 s one, then the re-attach) are not cancelled, and
+        # it succeeds, so its outcome matches the data.
+        real_commit, seen = engine._commit, []
+
+        def late_kill():
+            seen.append(engine._cancel("cm-1"))
+            time.sleep(0.7)  # the reaper posts its first cancel
+            real_commit()
+            seen.append(engine._cancel("cm-1"))
+            spark.sparkContext.parallelize(range(2), 2).map(
+                lambda x: time.sleep(1) or x
+            ).count()
+
+        monkeypatch.setattr(engine, "_commit", late_kill)
+        engine.execute(QueryRequest(query=query, query_id="cm-1"))
+        assert seen == [True, False]
+        assert not engine._inflight
+        assert self._rows(engine) == after
+
+    def test_timeout_after_the_write_lands(
+        self, engine, lc_table, monkeypatch,
+    ):
+        # The deadline passes after the append landed: the INSERT
+        # reports success, not TIMEOUT_EXCEEDED, so a client retrying
+        # on the error does not write the row twice.
+        real_commit = engine._commit
+
+        def slow_commit():
+            time.sleep(1.0)
+            real_commit()
+
+        monkeypatch.setattr(engine, "_commit", slow_commit)
+        engine.execute(QueryRequest(
+            query="INSERT INTO lc_tbl SELECT 5, 5 "
+            "SETTINGS max_execution_time=0.3",
+            query_id="cm-2",
+        ))
+        assert self._rows(engine) == [[6, 15]]
+
+    def test_processes_cut_a_large_statement(
+        self, engine, lc_table, monkeypatch,
+    ):
+        # An HTTP text INSERT's statement carries its whole payload:
+        # system.processes and /debug/threads list its first 200
+        # characters, as setJobGroup does.
+        import threading
+
+        from bighouse_spark.server import _debug_threads
+
+        text = "INSERT INTO lc_tbl FORMAT CSV\n" + "".join(
+            f"{i},{i}\n" for i in range(5, 20_005)
+        )
+        real_append, held = engine._append_aligned, threading.Event()
+
+        def held_append(*a):
+            held.wait(60)
+            return real_append(*a)
+
+        monkeypatch.setattr(engine, "_append_aligned", held_append)
+        th, res = self._start(engine, text, "big-ins")
+        try:
+            assert self._wait_running(engine, "big-ins")
+            listed = engine.execute(
+                "SELECT query FROM system.processes "
+                "WHERE query_id = 'big-ins'"
+            ).rows
+            assert listed == [[text[:200]]]
+            dump = _debug_threads(engine)
+            assert text[:200] in dump and text[:201] not in dump
+        finally:
+            held.set()
+            th.join(60)
+        assert res.get("r") == "finished", res
+        assert self._rows(engine)[0][0] == 20_005
+
     def test_max_execution_time_cancels(self, engine):
         import time
 
