@@ -12553,9 +12553,11 @@ def _rewrite_functions(sql: str, exact_cityhash: bool = False) -> str:
         lang = loc.split("_")[0].split("-")[0] or "UNICODE"
         return f"collate(CAST({m.group(1)} AS STRING), '{lang}')"
 
+    # The identifier alternatives start only at a word's start: tried
+    # at every character of a long word, each would scan to its end.
     out = re.sub(
-        r"((?:[A-Za-z_][\w.]*\s*\((?:[^()]|\([^()]*\))*\))"
-        r"|[A-Za-z_][\w.]*|`[^`]+`)"
+        r"((?<![\w.])(?:[A-Za-z_][\w.]*\s*\((?:[^()]|\([^()]*\))*\))"
+        r"|(?<![\w.])[A-Za-z_][\w.]*|`[^`]+`)"
         r"\s+COLLATE\s+('[^']*'|\"[^\"]*\")",
         _collate_sub,
         out,

@@ -25,9 +25,10 @@ import uuid
 from collections import OrderedDict, deque
 from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass, field, replace
+from functools import cached_property
 from typing import Any, Callable, NamedTuple
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from bighouse_spark.dialect.transpile import (
     TranspileResult,
@@ -314,6 +315,9 @@ class BigHouseEngine:
         # Monotonic count of cancellations (KILL QUERY + watchdog),
         # surfaced by the Prometheus /metrics endpoint.
         self.kill_count = 0
+        # Statements run on a small-plan clone (_small_plan), for
+        # /metrics.
+        self.small_plan_count = 0
         # Cost-based optimization: with table/column stats from
         # ANALYZE, Catalyst reorders joins and sizes broadcasts from
         # rowCount instead of raw file bytes. Harmless without stats.
@@ -3307,16 +3311,92 @@ class BigHouseEngine:
         conf = self.spark.conf
         with self._conf_lock:
             prior = {k: conf.get(k, None) for k in knobs}
+            _REQ_LOCAL.knobs = getattr(_REQ_LOCAL, "knobs", 0) + 1
             try:
                 for k, v in knobs.items():
                     conf.set(k, v)
                 yield
             finally:
+                _REQ_LOCAL.knobs -= 1
                 for k, v in prior.items():
                     if v is None:
                         conf.unset(k)
                     else:
                         conf.set(k, v)
+
+    # The small-plan tier's execution confs, and the leaves its plans
+    # may read (a CTE's definition is itself a child of the plan).
+    _SMALL_PLAN_CONF = {
+        "spark.sql.adaptive.enabled": "false",
+        "spark.sql.shuffle.partitions": "1",
+    }
+    _SMALL_PLAN_LEAVES = frozenset(
+        {"LogicalRelation", "LocalRelation", "OneRowRelation",
+         "CTERelationRef"}
+    )
+
+    def _small_plan(self, df: DataFrame) -> DataFrame:
+        """``df`` rebuilt from its analyzed plan on a statement clone
+        with AQE off and one shuffle partition, when the statement is
+        small; else ``df`` unchanged. Small: it holds no conf knob (the
+        client's knob wins, and the statement never meets
+        ``_conf_lock``); its leaves are file relations, local rows and
+        CTE references, at least one a file, and the files'
+        ``sizeInBytes`` sum to less than one split
+        (``spark.sql.files.maxPartitionBytes``); it has no ``Generate``
+        (``arrayJoin``/``explode`` can turn a small input into a large
+        one; ``numbers()`` is a ``Range`` leaf) and no subquery, whose
+        leaves ``collectLeaves`` does not visit. Below one split the
+        scan is one task, so AQE's re-planning, range sampling and
+        coalescing only add jobs."""
+        if getattr(_REQ_LOCAL, "knobs", 0):
+            return df
+        plan = df._jdf.queryExecution().analyzed()
+        leaves = plan.collectLeaves()
+        size, files = 0, 0
+        for i in range(leaves.size()):
+            leaf = leaves.apply(i)
+            name = leaf.nodeName()
+            if name not in self._SMALL_PLAN_LEAVES:
+                return df
+            if name == "LogicalRelation":
+                rel = leaf.relation()
+                if rel.getClass().getSimpleName() != "HadoopFsRelation":
+                    return df
+                size, files = size + rel.sizeInBytes(), files + 1
+        if any(plan.containsPattern(p) for p in self._unbounded_patterns):
+            return df
+        if not files or size >= self.spark._jconf.filesMaxPartitionBytes():
+            return df
+        with self._log_lock:
+            self.small_plan_count += 1
+        jds = getattr(self.spark._jvm, "org.apache.spark.sql.classic.Dataset")
+        return DataFrame(
+            jds.ofRows(self._clone_session(self._SMALL_PLAN_CONF), plan),
+            self.spark,
+        )
+
+    @cached_property
+    def _unbounded_patterns(self) -> tuple:
+        """Catalyst tree patterns that bar the small-plan tier."""
+        tp = getattr(
+            self.spark._jvm, "org.apache.spark.sql.catalyst.trees.TreePattern"
+        )
+        return tp.GENERATE(), tp.PLAN_EXPRESSION()
+
+    def _clone_session(self, conf: dict[str, str]):
+        """A statement-scoped JVM clone of the base session with
+        ``conf`` set on it. It shares the SparkContext (job group,
+        cancel) and sees the views and UDFs registered so far; its
+        SQLConf is its own, so the base session's is never written.
+        Wrap its Datasets as ``DataFrame(jds, self.spark)``: a Python
+        SparkSession per clone would rebind pyspark's process-wide
+        ``RDD.toDF`` to it. Dropped with its last Dataset."""
+        jclone = self.spark._jsparkSession.cloneSession()
+        jconf = jclone.sessionState().conf()
+        for k, v in conf.items():
+            jconf.setConfString(k, v)
+        return jclone
 
     def _transpile(self, sql: str) -> TranspileResult:
         """``transpile`` inside the running statement: the mapped
@@ -5211,7 +5291,7 @@ class BigHouseEngine:
         result = self._transpile(request.query)
         stmt.views.extend(result.views)
         stmt.label = result.sql
-        df = self._sql_with_alias_fallback(result.sql)
+        df = self._small_plan(self._sql_with_alias_fallback(result.sql))
         # CH renders interval values as plain numbers in their
         # own unit (Date - Date → Int32 days, DateTime - DateTime
         # → seconds, INTERVAL 3 HOUR → 3); Spark's interval cast

@@ -5,9 +5,9 @@ The reference exposes Prometheus metrics (plus pprof) on an internal
 HTTP port (reference ``observability/internal_http.go:17-29``, wired
 in ``main.go``); this module is the analog for the Spark engine:
 query counters are read at scrape time from the engine's running
-``query_totals`` / result-cache bookkeeping and the file-source schema
-memo's own hit/miss counts (no double accounting), and the four wire
-servers increment live connection counters here.
+``query_totals`` / result-cache bookkeeping and the file-source
+relation memo's own hit/miss counts (no double accounting), and the
+four wire servers increment live connection counters here.
 
 Cardinality discipline (see SCALE.md): every label value in this
 module is a member of a fixed enum (``protocol`` ∈ {http,
@@ -147,16 +147,24 @@ def render(
         "watchdog.",
         [({}, getattr(engine, "kill_count", 0))],
     )
+    w.metric(
+        "bighouse_small_plan_statements_total", "counter",
+        "Queries planned small: run on a session clone with AQE off "
+        "and one shuffle partition, their input under one file split.",
+        [({}, getattr(engine, "small_plan_count", 0))],
+    )
 
     hits, misses = schema_memo_counts()
     w.metric(
         "bighouse_source_schema_memo_hits_total", "counter",
-        "File-source reads served an inferred schema from the memo.",
+        "File-source reads served a resolved relation (schema and "
+        "listing) from the memo.",
         [({}, hits)],
     )
     w.metric(
         "bighouse_source_schema_memo_misses_total", "counter",
-        "Memo-eligible file-source reads that ran schema inference.",
+        "Memo-eligible file-source reads that resolved their "
+        "relation and ran schema inference.",
         [({}, misses)],
     )
 

@@ -19,6 +19,16 @@ Scale posture (100 TB / 1000-executor design targets):
 * File-split sizing (``spark.sql.files.maxPartitionBytes``) is left at
   128 MiB so a 100 TB scan fans out to ~800k tasks, which the Spark
   scheduler handles; do NOT collapse scans into fewer, larger splits.
+* Small served statements are planned small (``BigHouseEngine
+  ._small_plan``): a knob-less query whose file inputs sum to less
+  than one split, with no generator or subquery, runs on a
+  statement-scoped session clone with AQE off and one shuffle
+  partition. Below one split the scan is already one task, so one
+  reduce partition is the right size, and AQE's re-planning, range
+  sampling and coalescing only add jobs. Above one split the gate
+  never fires, so a 100 TB plan keeps AQE and its partition count.
+  The base session's conf is never written, so concurrent statements
+  keep their own plans.
 * Arrow enabled for the Pandas-UDF paths used by the dedup /
   similarity / multimodal operators.
 * Driver↔Python channels (``collect``, ``toLocalIterator``,

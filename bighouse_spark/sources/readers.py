@@ -37,19 +37,25 @@ from pyspark.sql.types import StructType
 
 FILE_COLUMN = "_file"
 
-# Inferred-schema memo. Inference is a Spark job (parquet/ORC footers)
-# or a full scan (CSV/JSON) that every ``file()`` statement paid before
-# its own job: on a 4-CPU VM one local parquet file read in 109 ms with
-# inference and 15 ms with its schema given. Only the StructType is
-# reused: Spark still lists and scans the files on every read, so no
-# row is ever cached. It applies only when
-# the caller gives no schema and every path is a local regular file
-# (globs, directories and remote schemes keep the uncached path). The
-# key fingerprints each file by (inode, size, mtime_ns), and a file
-# modified less than _RACY_NS ago is not stored (git's racy-timestamp
-# rule: mtimes are tick-coarse, so a same-size rewrite within one tick
-# would look unchanged). Entries are weakly keyed by session, as in
-# ``catalog``, in a lock-guarded LRU of fixed size.
+# Resolved-relation memo. Inference is a Spark job (parquet/ORC
+# footers) or a full scan (CSV/JSON), and resolving a DataSource lists
+# its files, which every ``file()`` statement paid before its own job:
+# on a 4-CPU VM one local parquet file read in 109 ms with inference
+# and 15 ms with its schema given. A hit returns the loaded relation
+# itself (the same JVM ``LogicalRelation``, its listing included), so it
+# resolves, lists and infers nothing; the key's fingerprint guards the
+# listing, and no row is ever cached. It applies only when the caller
+# gives no schema and every path is a local regular file or a local
+# directory whose visible entries (Spark skips ``_``/``.`` names) are
+# all regular files; globs, nested directories and remote schemes keep
+# the uncached path. The key fingerprints each file by (path, inode,
+# size, mtime_ns), a directory by its own stat plus each of its files',
+# and a source in which any of these was modified less than _RACY_NS
+# ago is read uncached (git's racy-timestamp rule: mtimes are
+# tick-coarse, so a same-size rewrite within one tick would look
+# unchanged). Entries are weakly keyed by session, as in ``catalog``,
+# in a lock-guarded LRU of fixed size; they hold the JVM Dataset only,
+# never the Python session they are keyed on.
 SCHEMA_MEMO_MAX = 256
 _RACY_NS = 1_000_000_000
 # Session confs that change what inference returns for the same bytes.
@@ -72,14 +78,22 @@ _memo_counts = {"hits": 0, "misses": 0}
 
 
 def schema_memo_counts() -> tuple[int, int]:
-    """(hits, misses) of the inferred-schema memo since process start."""
+    """(hits, misses) of the resolved-relation memo since process
+    start; a racy or ineligible read counts as neither."""
     with _SCHEMA_MEMO_LOCK:
         return _memo_counts["hits"], _memo_counts["misses"]
 
 
+def _hidden(name: str) -> bool:
+    """Spark's listing skips these names (``shouldFilterOutPathName``;
+    a ``_k=v`` partition directory is read)."""
+    return name.startswith(".") or (name.startswith("_") and "=" not in name)
+
+
 def _local_files(paths: list[str]) -> list[tuple[str, os.stat_result]] | None:
-    """Each path resolved with its stat, or None unless every path is
-    a plain local regular file (no glob, no remote scheme)."""
+    """Each path resolved with its stat, a directory followed by each
+    of its visible files, or None unless every path is a plain local
+    regular file or a directory of them (no glob, no remote scheme)."""
     out = []
     for p in paths:
         if p.startswith("file://"):
@@ -90,29 +104,37 @@ def _local_files(paths: list[str]) -> list[tuple[str, os.stat_result]] | None:
             return None
         if any(c in p for c in "*?[{"):
             return None
+        p = os.path.abspath(p)
         try:
             st = os.stat(p)
+            listed = []
+            if stat.S_ISDIR(st.st_mode):
+                with os.scandir(p) as it:
+                    listed = sorted(
+                        (e.path, e.stat()) for e in it if not _hidden(e.name)
+                    )
         except OSError:
             return None
-        if not stat.S_ISREG(st.st_mode):
+        # a file checks itself; so does an empty directory, and fails
+        if not all(stat.S_ISREG(s.st_mode) for _, s in listed or [(p, st)]):
             return None
-        out.append((os.path.abspath(p), st))
+        out += [(p, st), *listed]
     return out
 
 
 def _read_inferred(
     spark: SparkSession, paths: list[str], fmt: str, opts: dict[str, str]
 ) -> DataFrame:
-    """The schema-inferring read, served the memoized schema of
+    """The schema-inferring read, served the memoized relation of
     ``paths`` when they qualify (see ``_SCHEMA_MEMO``). ``header`` and
     ``compression`` reach the reader, and so the key, through ``opts``."""
-    reader = spark.read.format(fmt).options(**opts)
     files = _local_files(paths)
-    if files is None:
-        return reader.load(paths)
     # Judged at stat time, before the read: a later write lands in a
     # later tick, so it changes the mtime the key holds.
-    racy = time.time_ns() - max(st.st_mtime_ns for _, st in files) < _RACY_NS
+    if files is None or (
+        time.time_ns() - max(st.st_mtime_ns for _, st in files) < _RACY_NS
+    ):
+        return spark.read.format(fmt).options(**opts).load(paths)
     key = (
         tuple((p, st.st_ino, st.st_size, st.st_mtime_ns) for p, st in files),
         fmt, tuple(sorted(opts.items())),
@@ -120,22 +142,20 @@ def _read_inferred(
     )
     with _SCHEMA_MEMO_LOCK:
         memo = _SCHEMA_MEMO.get(spark)
-        schema = memo.get(key) if memo is not None else None
-        if schema is not None:
+        jdf = memo.get(key) if memo is not None else None
+        if jdf is not None:
             memo.move_to_end(key)
             _memo_counts["hits"] += 1
         else:
             _memo_counts["misses"] += 1
-    if schema is not None:
-        return reader.schema(schema).load(paths)
-    df = reader.load(paths)
-    if not racy:
-        schema = df.schema
-        with _SCHEMA_MEMO_LOCK:
-            memo = _SCHEMA_MEMO.setdefault(spark, OrderedDict())
-            memo[key] = schema
-            while len(memo) > SCHEMA_MEMO_MAX:
-                memo.popitem(last=False)
+    if jdf is not None:
+        return DataFrame(jdf, spark)
+    df = spark.read.format(fmt).options(**opts).load(paths)
+    with _SCHEMA_MEMO_LOCK:
+        memo = _SCHEMA_MEMO.setdefault(spark, OrderedDict())
+        memo[key] = df._jdf
+        while len(memo) > SCHEMA_MEMO_MAX:
+            memo.popitem(last=False)
     return df
 
 

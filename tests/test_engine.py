@@ -820,6 +820,104 @@ def test_schema_memo_concurrent_reads(spark, tmp_path, monkeypatch):
     # every read counted once, as a hit or a miss
     assert sum(schema_memo_counts()) - before == threads * reads
 
+
+def _leaf(df):
+    """Identity of the JVM leaf relation under ``df``'s plan."""
+    leaf = df._jdf.queryExecution().analyzed().collectLeaves().apply(0)
+    return df.sparkSession._jvm.System.identityHashCode(leaf)
+
+
+def _count_loads(monkeypatch) -> list:
+    """Record each DataSource resolution (``DataFrameReader.load``)."""
+    from pyspark.sql.readwriter import DataFrameReader
+
+    calls, load = [], DataFrameReader.load
+    monkeypatch.setattr(
+        DataFrameReader, "load",
+        lambda self, *a, **k: calls.append(a) or load(self, *a, **k),
+    )
+    return calls
+
+
+def test_relation_memo_hit_is_the_memoized_relation(
+    spark, tmp_path, monkeypatch
+):
+    p = tmp_path / "rel.parquet"
+    _write_memo_source(p, "Parquet")
+    loads = _count_loads(monkeypatch)
+    first = read_source(spark, str(p))
+    assert len(loads) == 1
+    again = read_source(spark, str(p))
+    assert len(loads) == 1  # no second DataSource resolution
+    assert _leaf(again) == _leaf(first)
+    assert again.collect() == first.collect()
+
+
+def test_relation_memo_reads_a_rewrite_fresh(spark, tmp_path, monkeypatch):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = tmp_path / "rew.parquet"
+    pq.write_table(pa.table({"a": [1, 2]}), p)
+    ts = _backdate(p)
+    loads = _count_loads(monkeypatch)
+    first = read_source(spark, str(p))
+    assert first.count() == 2
+    pq.write_table(pa.table({"a": [1, 2, 3, 4]}), p)
+    _backdate(p, ts)  # a new size under the stored mtime
+    fresh = read_source(spark, str(p))
+    assert len(loads) == 2
+    assert _leaf(fresh) != _leaf(first)
+    assert sorted(r.a for r in fresh.collect()) == [1, 2, 3, 4]
+
+
+def _write_parquet_dir(spark, d, ids) -> None:
+    spark.createDataFrame([(i, i * 2) for i in ids], "k bigint, v bigint") \
+        .repartition(2).write.mode("append").parquet(str(d))
+    for n in os.listdir(d):
+        _backdate(d / n)
+    _backdate(d)  # adding a file touches the directory
+
+
+def _stage_names(spark, qid) -> list[str]:
+    tracker = spark.sparkContext.statusTracker()
+    return [
+        tracker.getStageInfo(s).name
+        for j in tracker.getJobIdsForGroup(qid)
+        for s in tracker.getJobInfo(j).stageIds
+    ]
+
+
+def test_relation_memo_takes_a_parquet_directory(engine, spark, tmp_path):
+    d = tmp_path / "pdir"
+    _write_parquet_dir(spark, d, range(10))
+    assert any(n.startswith("_") for n in os.listdir(d))  # _SUCCESS
+    q = f"SELECT count() AS c, sum(v) AS s FROM file('{d}', 'Parquet')"
+    h0, _ = schema_memo_counts()
+    cold = engine.execute(QueryRequest(query=q, query_id="dir-cold"))
+    warm = engine.execute(QueryRequest(query=q, query_id="dir-warm"))
+    assert cold.rows == warm.rows == [[10, 90]]
+    assert schema_memo_counts()[0] == h0 + 1
+    assert any(n.startswith("load") for n in _stage_names(spark, "dir-cold"))
+    assert not any(
+        n.startswith("load") for n in _stage_names(spark, "dir-warm")
+    )
+
+
+def test_relation_memo_sees_a_file_added_to_a_directory(
+    engine, spark, tmp_path
+):
+    d = tmp_path / "grow"
+    _write_parquet_dir(spark, d, range(3))
+    q = f"SELECT count() AS c FROM file('{d}', 'Parquet')"
+    assert engine.execute(q).rows == [[3]]
+    h0, _ = schema_memo_counts()
+    assert engine.execute(q).rows == [[3]]
+    assert schema_memo_counts()[0] == h0 + 1
+    _write_parquet_dir(spark, d, range(3, 7))
+    assert engine.execute(q).rows == [[7]]
+
+
 def test_attach_table_then_query(engine, spark):
     engine.attach_table("gh_events_like", f"{SF_CORRECT}/orders.parquet")
     out = engine.execute(
@@ -2033,6 +2131,155 @@ class TestQueryLifecycleControl:
         )
         # Idle at refresh time: the snapshot is empty but queryable.
         assert out.cols == ["query_id", "query", "elapsed_sec"]
+
+
+class TestSmallPlanTier:
+    """A knob-less statement over less than one file split runs on a
+    statement clone with AQE off and one shuffle partition
+    (``BigHouseEngine._small_plan``); everything else keeps the base
+    session's adaptive plan."""
+
+    LI = f"file('{SF_CORRECT}/lineitem.parquet', 'Parquet')"
+    GROUP_BY = (
+        f"SELECT l_returnflag AS k, sum(l_quantity) AS s FROM {LI} "
+        "GROUP BY k ORDER BY k"
+    )
+
+    @staticmethod
+    def _roots(monkeypatch, before_collect=None) -> dict:
+        """Per thread name, the root of the last collected physical
+        plan (``AdaptiveSparkPlan`` when AQE planned it)."""
+        import threading
+
+        from pyspark.sql.classic.dataframe import DataFrame
+
+        roots, collect = {}, DataFrame.collect
+
+        def spy(df):
+            if before_collect is not None:
+                before_collect()
+            plan = df._jdf.queryExecution().executedPlan()
+            roots[threading.current_thread().name] = plan.nodeName()
+            return collect(df)
+
+        monkeypatch.setattr(DataFrame, "collect", spy)
+        return roots
+
+    def test_small_group_by_runs_one_job(self, engine, spark, monkeypatch):
+        engine.execute(self.GROUP_BY)  # the relation memo is warm
+        roots = self._roots(monkeypatch)
+        n = engine.small_plan_count
+        out = engine.execute(
+            QueryRequest(query=self.GROUP_BY, query_id="tier-gb")
+        )
+        assert [r[0] for r in out.rows] == ["A", "N", "R"]
+        assert engine.small_plan_count == n + 1
+        assert "AdaptiveSparkPlan" not in roots.values()
+        jobs = spark.sparkContext.statusTracker().getJobIdsForGroup("tier-gb")
+        assert len(jobs) == 1
+
+    @pytest.mark.parametrize("query", [
+        f"SELECT count() AS c FROM {LI} AS l "
+        "JOIN numbers(10) AS n ON l.l_linenumber = n.number",
+        f"SELECT count() AS c FROM {LI} ARRAY JOIN [1, 2] AS x",
+        f"SELECT sum(x) AS c FROM (SELECT arrayJoin([1, 2]) AS x FROM {LI})",
+        GROUP_BY + " SETTINGS max_threads = 2",
+    ], ids=["numbers", "ARRAY JOIN", "arrayJoin", "max_threads"])
+    def test_not_small_keeps_aqe(self, engine, monkeypatch, query):
+        roots = self._roots(monkeypatch)
+        n = engine.small_plan_count
+        engine.execute(query)
+        assert engine.small_plan_count == n
+        assert list(roots.values()) == ["AdaptiveSparkPlan"]
+
+    def test_input_over_one_split_keeps_aqe(self, engine, spark, monkeypatch):
+        roots = self._roots(monkeypatch)
+        n = engine.small_plan_count
+        key = "spark.sql.files.maxPartitionBytes"
+        old = spark.conf.get(key)
+        spark.conf.set(key, str(64 * 1024))  # lineitem.parquet is ~1 MB
+        try:
+            out = engine.execute(self.GROUP_BY)
+        finally:
+            spark.conf.set(key, old)
+        assert [r[0] for r in out.rows] == ["A", "N", "R"]
+        assert engine.small_plan_count == n
+        assert list(roots.values()) == ["AdaptiveSparkPlan"]
+
+    def test_concurrent_statements_keep_their_tiers(self, engine, monkeypatch):
+        import threading
+
+        # Both statements plan only once both are past the tier gate.
+        gate = threading.Barrier(2, timeout=60)
+        roots = self._roots(monkeypatch, gate.wait)
+        errors = []
+        stmts = {
+            "tiered": self.GROUP_BY,
+            "untiered":
+                f"SELECT count() AS c FROM {self.LI} ARRAY JOIN [1, 2] AS x",
+        }
+
+        def run(sql):
+            try:
+                engine.execute(sql)
+            except Exception as e:  # noqa: BLE001 - reported below
+                errors.append(e)
+                gate.abort()
+
+        ts = [threading.Thread(target=run, args=(sql,), name=name)
+              for name, sql in stmts.items()]
+        for t in ts:
+            t.start()
+        for t in ts:
+            t.join(120)
+        assert errors == []
+        assert roots["untiered"] == "AdaptiveSparkPlan"
+        assert roots["tiered"] != "AdaptiveSparkPlan"
+
+    def test_kill_a_tiered_statement(self, engine, spark):
+        lc = TestQueryLifecycleControl
+        # a costly predicate over a small file pair: ~3.6e9 row pairs
+        slow = (
+            f"SELECT count() AS c FROM {self.LI} AS a, {self.LI} AS b "
+            "WHERE cityHash64(a.l_orderkey, b.l_partkey) % 7 = 3"
+        )
+        n = engine.small_plan_count
+        th, res = lc._start(engine, slow, "kill-tier")
+        try:
+            tracker = spark.sparkContext.statusTracker()
+            deadline = time.time() + 60
+            while not tracker.getJobIdsForGroup("kill-tier"):
+                assert time.time() < deadline, res
+                time.sleep(0.1)
+            assert engine.small_plan_count == n + 1
+            out = engine.execute("KILL QUERY WHERE query_id = 'kill-tier'")
+            assert out.rows == [["waiting", "kill-tier"]]
+            th.join(60)
+            assert "QUERY_WAS_CANCELLED" in res.get("r", ""), res
+            lc._assert_left_nothing(engine, spark, "kill-tier")
+        finally:
+            lc._stop(engine, spark, th, "kill-tier")
+
+    def test_many_tiered_statements_leave_nothing(
+        self, engine, spark, tmp_path
+    ):
+        p = tmp_path / "tiny.parquet"
+        _write_memo_source(p, "Parquet")
+        q = f"SELECT k, sum(v) AS s FROM file('{p}', 'Parquet') GROUP BY k"
+        bus = spark.sparkContext._jsc.sc().listenerBus().listeners()
+
+        def state():
+            views = [
+                t.name for t in spark.catalog.listTables() if t.isTemporary
+            ]
+            return bus.size(), sorted(views), len(readers._SCHEMA_MEMO[spark])
+
+        engine.execute(q)
+        before, n = state(), engine.small_plan_count
+        for _ in range(500):
+            engine.execute(q)
+        assert engine.small_plan_count == n + 500
+        assert state() == before
 
 
 class TestResultRowLimits:

@@ -97,6 +97,17 @@ def test_schema_memo_counters(eng, srv, tmp_path):
     assert after[misses] - before[misses] == 1
 
 
+def test_small_plan_counter(eng, srv):
+    p = "/root/testdata/sf0.01/nation.parquet"
+    small = f"SELECT count() AS c FROM file('{p}', 'Parquet')"
+    _, before = _scrape(srv)
+    assert eng.execute(small).rows == [[25]]
+    eng.execute(small + " SETTINGS max_threads = 2")  # a knob: not small
+    _, after = _scrape(srv)
+    name = "bighouse_small_plan_statements_total"
+    assert after[name] - before[name] == 1
+
+
 def test_wire_connection_counters(eng, srv):
     _, before = _scrape(srv)
     key = 'bighouse_connections_total{protocol="postgresql"}'
