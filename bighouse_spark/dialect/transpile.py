@@ -12553,11 +12553,14 @@ def _rewrite_functions(sql: str, exact_cityhash: bool = False) -> str:
         lang = loc.split("_")[0].split("-")[0] or "UNICODE"
         return f"collate(CAST({m.group(1)} AS STRING), '{lang}')"
 
-    # The identifier alternatives start only at a word's start: tried
-    # at every character of a long word, each would scan to its end.
+    # The identifier alternative is a dotted chain of plain or
+    # backticked parts (t.v, t.`v`, `t`.`v`). Both alternatives start
+    # only at a word's or a chain's start: tried at every character of
+    # a long word, each would scan to its end.
+    part = r"(?:[A-Za-z_]\w*|`[^`]+`)"
     out = re.sub(
         r"((?<![\w.])(?:[A-Za-z_][\w.]*\s*\((?:[^()]|\([^()]*\))*\))"
-        r"|(?<![\w.])[A-Za-z_][\w.]*|`[^`]+`)"
+        rf"|(?<![\w.`]){part}(?:\.{part})*)"
         r"\s+COLLATE\s+('[^']*'|\"[^\"]*\")",
         _collate_sub,
         out,

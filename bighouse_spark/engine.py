@@ -23,7 +23,6 @@ import threading
 import time
 import uuid
 from collections import OrderedDict, deque
-from contextlib import ExitStack, contextmanager
 from dataclasses import dataclass, field, replace
 from functools import cached_property
 from typing import Any, Callable, NamedTuple
@@ -46,9 +45,10 @@ from bighouse_spark.session_settings import parse_set_statement
 # Per-thread statement state for the lifecycle (BigHouseEngine._run):
 # ``depth`` counts nested statements (engine statements re-enter
 # execute for init queries and DDL; resource release fires only when
-# the OUTERMOST one unwinds), ``scope`` is the running statement's
-# conf scope, ``logged_error`` the failure already written to the log,
-# ``qid``/``watch`` the outermost statement's query id and watchdog.
+# the OUTERMOST one unwinds), ``conf`` the running statement's conf
+# knobs (``_sql`` runs on a clone that holds them), ``logged_error`` the
+# failure already written to the log, ``qid``/``watch`` the outermost
+# statement's query id and watchdog.
 _REQ_LOCAL = threading.local()
 
 
@@ -219,12 +219,6 @@ class BigHouseEngine:
         self._result_cache: OrderedDict[str, QueryResult] = OrderedDict()
         self._cache_rows = 0
         self._cache_lock = threading.Lock()
-        # Serializes statements that set session-global conf (see
-        # _scoped_conf): SQLConf is shared across the
-        # ThreadingHTTPServer's request threads.
-        # RLock: one statement's scopes nest (num_nodes/cores, init
-        # queries, SETTINGS, an MV refresh's state sizing).
-        self._conf_lock = threading.RLock()
         # name → (path, fmt, schema) for attach_table targets, so
         # INSERT INTO <name> can append to the backing storage.
         self._attached: dict[str, tuple[str, str, str | None]] = {}
@@ -656,20 +650,23 @@ class BigHouseEngine:
             # value / changed / description) so migrating
             # introspection queries parse. Rows: the CH-named settings
             # this engine serves, then every Spark SQL conf.
-            def _conf(key: str, default: str) -> str:
+            # The running statement's knobs (an init-query SET) win
+            # over the base conf.
+            knobs = getattr(_REQ_LOCAL, "conf", {})
+
+            def _conf(key: str, default: str | None) -> str | None:
+                if key in knobs:
+                    return knobs[key]
                 try:
                     v = self.spark.conf.get(key)
-                    return default if v is None else str(v)
                 except Exception:
                     return default
+                return default if v is None else str(v)
 
             def _was_set(name: str) -> int:
                 # A bare `SET name = v` lands in the Spark conf under
                 # the raw name — this engine's session-settings store.
-                try:
-                    return int(self.spark.conf.get(name) is not None)
-                except Exception:
-                    return 0
+                return int(_conf(name, None) is not None)
 
             shuffle = _conf("spark.sql.shuffle.partitions", "200")
             ch_rows = [
@@ -1518,7 +1515,7 @@ class BigHouseEngine:
                 )
             # files in the directory never carry the partition key —
             # project back to the file schema before the swap
-            out = self.spark.sql(sel.sql).select(*file_cols)
+            out = self._sql(sel.sql).select(*file_cols)
             path = self._write_swap(
                 name, subdir, out, "mutp"
             )
@@ -1632,7 +1629,7 @@ class BigHouseEngine:
         # (same posture as mutations: safe direction vs CH's silent
         # non-propagation)
         for nm in {dst} | ({src} if verb == "MOVE" else set()):
-            self._rebuild_dependent_mvs(nm)
+            self._refresh_dependent_mvs(nm, rebuild=True)
         return _Logged(
             QueryResult(
                 cols=["source", "destination", "partition", "files"],
@@ -1866,21 +1863,24 @@ class BigHouseEngine:
             writer = writer.partitionBy(*pcols)
         return writer
 
-    def _rebuild_dependent_mvs(self, name: str) -> None:
-        """A rewrite renames every backing file, which would make the
-        next incremental MV refresh re-fold old rows as "new" (double
-        counting). Rebuild dependent MVs from the post-rewrite table
-        instead — diverges from CH (where mutations silently don't
-        propagate) in the safe direction. Shared by every rewrite
-        tail: whole-table and partition-scoped mutations, compaction,
-        and partition swaps."""
+    def _refresh_dependent_mvs(self, name: str, rebuild: bool) -> None:
+        """Refresh the MVs over ``name``: an INSERT folds in its new
+        files. A rewrite (``rebuild``) renames every backing file,
+        which would make the next incremental refresh re-fold old rows
+        as "new" (double counting), so every rewrite tail (whole-table
+        and partition-scoped mutations, compaction, partition swaps)
+        rebuilds dependent MVs from the post-rewrite table instead —
+        diverges from CH (where mutations silently don't propagate) in
+        the safe direction."""
         import shutil
 
-        for mv_name, mv in self._mviews.items():
+        for mv_name, mv in list(self._mviews.items()):
             if mv["source"] == name:
-                shutil.rmtree(mv["checkpoint"], ignore_errors=True)
-                shutil.rmtree(mv["data"], ignore_errors=True)
-                self._refresh_mv(mv_name)
+                with mv["lock"]:
+                    if rebuild:
+                        shutil.rmtree(mv["checkpoint"], ignore_errors=True)
+                        shutil.rmtree(mv["data"], ignore_errors=True)
+                    self._refresh_mv(mv_name)
 
     @staticmethod
     def _check_snapshot_name(snap: str) -> None:
@@ -1924,7 +1924,7 @@ class BigHouseEngine:
                       preserve_detached=not subdir)
         self.clear_cache()
         self.attach_table(name, path, fmt=fmt, schema=schema)
-        self._rebuild_dependent_mvs(name)
+        self._refresh_dependent_mvs(name, rebuild=True)
         return path
 
     @staticmethod
@@ -1989,9 +1989,7 @@ class BigHouseEngine:
         self._commit()
         self.clear_cache()
         self.attach_table(name, path, fmt=fmt, schema=schema)
-        for mv_name, mv in self._mviews.items():
-            if mv["source"] == name:
-                self._refresh_mv(mv_name)
+        self._refresh_dependent_mvs(name, rebuild=False)
         self._discard_if_null(name)
         return _Logged(QueryResult(cols=["path"], rows=[[path]]), desc, -1)
 
@@ -2273,7 +2271,7 @@ class BigHouseEngine:
         current = sql
         for _ in range(8):
             try:
-                return self.spark.sql(current)
+                return self._sql(current)
             except AnalysisException as e:
                 msg = str(e)
                 nm = re.search(
@@ -2360,7 +2358,7 @@ class BigHouseEngine:
                     raise
                 tail = "".join(pieces) + tail_src[last:]
                 current = current[:w_end] + tail + current[c_end:]
-        return self.spark.sql(current)
+        return self._sql(current)
 
     def _missing_col_default(self, name: str, field) -> "object":
         """Fill expression for a column omitted from an INSERT column
@@ -2596,7 +2594,7 @@ class BigHouseEngine:
         from pyspark.sql import functions as F
 
         result = self._transpile(body)
-        df = self.spark.sql(result.sql)
+        df = self._sql(result.sql)
         if cols:
             names = [
                 c.strip().strip('`"') for c in cols.split(",") if c.strip()
@@ -2670,6 +2668,7 @@ class BigHouseEngine:
             raise ValueError(f"CREATE MATERIALIZED VIEW {name}: name in use")
         transpiled = self._transpile(select_sql).sql
         base = tempfile.mkdtemp(prefix=f"bh_mv_{name}_")
+        state_parts = self._mv_state_partitions(src)
         self._mviews[name] = {
             "source": src,
             "select": transpiled,
@@ -2685,10 +2684,23 @@ class BigHouseEngine:
             # 64 MiB of source, capped at the session parallelism;
             # Spark pins the value in the checkpoint metadata so
             # every later refresh stays consistent by construction.
-            "state_partitions": self._mv_state_partitions(src),
+            "state_partitions": state_parts,
+            # The view's stream starts on its own clone of the session,
+            # which holds only the state partition count, so no
+            # request knob is pinned. One clone per view: each session
+            # adds a streaming listener to the SparkContext's bus for
+            # good, so a clone per refresh would grow it per INSERT.
+            "session": self._clone_session(
+                {"spark.sql.shuffle.partitions": str(state_parts)}
+                if state_parts else {}
+            ),
+            # Held across each refresh: two at once would run two
+            # streams on one checkpoint.
+            "lock": threading.Lock(),
         }
         try:
-            self._refresh_mv(name)
+            with self._mviews[name]["lock"]:
+                self._refresh_mv(name)
         except Exception:
             del self._mviews[name]
             raise
@@ -2700,12 +2712,11 @@ class BigHouseEngine:
         """State partition count for a new MV checkpoint: one per
         64 MiB of the source's current backing bytes, in
         [1, cluster default parallelism]. The cap is
-        ``defaultParallelism`` (stable for the session) rather than
-        ``spark.sql.shuffle.partitions``, which a knob-bearing CREATE
-        statement (num_nodes/cores) transiently narrows — a transient
-        request knob must not be pinned into the checkpoint forever.
-        ``None`` (→ session default) when the backing store is not
-        locally statable (remote URLs)."""
+        ``defaultParallelism``, stable for the session. ``None`` when
+        the source is empty or not locally statable (remote URLs): the
+        view's clone then holds the base session's
+        ``spark.sql.shuffle.partitions``, since no request knob reaches
+        it."""
         import math
         import os
 
@@ -2742,7 +2753,7 @@ class BigHouseEngine:
         """One availableNow refresh of a materialized view: stream the
         not-yet-seen source files through the view's plan, fold into
         checkpointed state, republish the result as temp view
-        ``name``."""
+        ``name``. The caller holds ``mv["lock"]``."""
         import os
         import uuid
 
@@ -2758,64 +2769,49 @@ class BigHouseEngine:
             rf"(?<![\w`.]){re.escape(mv['source'])}(?![\w`.])",
             stream_view, mv["select"],
         )
-        sdf = self.spark.sql(sql)
+        # Analyzed on the base session (it sees the current views),
+        # started on the view's clone: a stream takes its conf (the
+        # state partition count, which the checkpoint then pins) and
+        # its query manager from its Dataset's session.
+        plan = self.spark.sql(sql)._jdf.queryExecution().analyzed()
+        jds = getattr(self.spark._jvm, "org.apache.spark.sql.classic.Dataset")
+        sdf = DataFrame(jds.ofRows(mv["session"], plan), self.spark)
         data_dir = mv["data"]
-
-        def _sink_complete(batch_df, _bid):
-            batch_df.write.mode("overwrite").parquet(data_dir)
-
-        def _sink_append(batch_df, _bid):
-            batch_df.write.mode("append").parquet(data_dir)
-
+        # A stateful run builds a streaming query manager on Spark's
+        # own per-run clone of the session, and its listener stays on
+        # the SparkContext's bus for good: drop the ones this run adds.
+        bus = self.spark.sparkContext._jsc.sc().listenerBus()
+        mv["session"].streams()  # the view's own manager stays
+        known = set(bus.listeners())
         modes = [mv["mode"]] if mv["mode"] else ["complete", "append"]
-        last_err: Exception | None = None
-        # Size the streaming-aggregation state to the MV, not the
-        # session: the conf is read at stream start (then pinned in
-        # the checkpoint), so scope it to the run — the same
-        # discipline (and the same exposure) as every statement knob:
-        # knob-BEARING requests serialize against this, knob-less
-        # requests do not and can observe the narrow value for the
-        # refresh's duration.
-        state_parts = mv.get("state_partitions")
-        knobs = (
-            {"spark.sql.shuffle.partitions": str(state_parts)}
-            if state_parts else {}
-        )
         try:
-            with self._scoped_conf(knobs):
-                for mode in modes:
-                    sink = (
-                        _sink_complete if mode == "complete"
-                        else _sink_append
-                    )
-                    try:
-                        q = (
-                            sdf.writeStream.outputMode(mode)
-                            .foreachBatch(sink)
-                            .option("checkpointLocation", mv["checkpoint"])
-                            .trigger(availableNow=True)
-                            .start()
-                        )
-                        q.awaitTermination()
-                        mv["mode"] = mode
-                        last_err = None
-                        break
-                    except Exception as e:
-                        # Complete mode requires a streaming
-                        # aggregation; projection/filter MVs fall
-                        # through to append.
-                        last_err = e
-                        if mv["mode"] or (
-                            "output mode" not in str(e).lower()
-                        ):
-                            raise
+            for mode in modes:
+                write = "overwrite" if mode == "complete" else "append"
+                try:
+                    sdf.writeStream.outputMode(mode).foreachBatch(
+                        lambda b, _i: b.write.mode(write).parquet(data_dir)
+                    ).option(
+                        "checkpointLocation", mv["checkpoint"]
+                    ).trigger(availableNow=True).start().awaitTermination()
+                    mv["mode"] = mode
+                    break
+                except Exception as e:
+                    # Complete mode requires a streaming aggregation;
+                    # projection/filter MVs fall through to append.
+                    if mv["mode"] or mode == modes[-1] or (
+                        "output mode" not in str(e).lower()
+                    ):
+                        raise
         finally:
+            for lst in bus.listeners():
+                if lst not in known and lst.getClass().getSimpleName() == (
+                    "StreamingQueryListenerBus"
+                ):
+                    bus.removeListener(lst)
             try:
                 self.spark.catalog.dropTempView(stream_view)
             except Exception:
                 pass
-        if last_err is not None:
-            raise last_err
         if os.path.isdir(data_dir) and any(
             f.endswith(".parquet") for f in os.listdir(data_dir)
         ):
@@ -2932,7 +2928,7 @@ class BigHouseEngine:
                 # analysis binds the plan to the underlying relation
                 # at sql() time — dropping the temp view after is
                 # safe, and save-to-tmp runs before the dir swap
-                df = self.spark.sql(sel.sql)
+                df = self._sql(sel.sql)
             finally:
                 try:
                     self.spark.catalog.dropTempView(view)
@@ -3070,7 +3066,7 @@ class BigHouseEngine:
                 f"SELECT * FROM {name} WHERE "
                 f"ifNull(({ttl}) > now(), true)"
             )
-            df = self.spark.sql(sel.sql)
+            df = self._sql(sel.sql)
         else:
             df = self.spark.table(name)
         df = df.distinct().repartition(n_out) if dedup else df.coalesce(n_out)
@@ -3097,7 +3093,7 @@ class BigHouseEngine:
         reference gives each query its own: spawn, init statements,
         run, tear down — ``temporal/workflow_query_executor.go:70-80``).
         It owns the start time and query id, cancellation, the init
-        queries, scoped session conf, temp-view cleanup, the one
+        queries, the statement's conf knobs, temp-view cleanup, the one
         ``query_log`` write (on success and on failure) and the
         request-boundary release of operator scratch persists and HTTP
         spool pins.
@@ -3123,8 +3119,11 @@ class BigHouseEngine:
         )
         qid = stmt.request.query_id
         depth = getattr(_REQ_LOCAL, "depth", 0)
-        outer_scope = getattr(_REQ_LOCAL, "scope", None)
+        outer_knobs = getattr(_REQ_LOCAL, "conf", {})
         _REQ_LOCAL.depth = depth + 1
+        # A statement starts from its parent's knobs; its own additions
+        # end with it. The dict is per thread, so it needs no lock.
+        _REQ_LOCAL.conf = knobs = dict(outer_knobs)
         t0 = time.monotonic()
         out = entry = running = timer = None
         try:
@@ -3164,17 +3163,12 @@ class BigHouseEngine:
                 self.spark.sparkContext.setJobGroup(
                     qid, request.query[:200], interruptOnCancel=True
                 )
-            with ExitStack() as scope:
-                _REQ_LOCAL.scope = scope
-                scope.callback(self._drop_views, stmt.views)
+            try:
                 # Cluster-shape knobs → parallelism hint (B18); a
-                # query's own SETTINGS max_threads, applied later in
-                # the same scope, wins.
+                # query's own SETTINGS max_threads, added later, wins.
                 if request.num_nodes or request.cores:
                     parts = (request.num_nodes or 1) * (request.cores or 1)
-                    scope.enter_context(self._scoped_conf(
-                        {"spark.sql.shuffle.partitions": str(max(parts, 1))}
-                    ))
+                    knobs["spark.sql.shuffle.partitions"] = str(max(parts, 1))
                 for init in request.init_queries:
                     # Init queries are full engine statements (the
                     # reference's InitQueries carry ATTACH DDL + SET,
@@ -3184,13 +3178,15 @@ class BigHouseEngine:
                     if self._route_of(init) != self._QUERY_ROUTE:
                         self.execute(init)
                     elif pairs := parse_set_statement(init):
-                        scope.enter_context(self._scoped_conf(pairs))
+                        knobs.update(pairs)
                     else:
                         init_t = self._transpile(init)
                         stmt.views.extend(init_t.views)
                         if init_t.sql.strip():
                             self.spark.sql(init_t.sql)
                 out = handler(stmt)
+            finally:
+                self._drop_views(stmt.views)
             if isinstance(err := self._cancelled.get(qid), TimeoutError):
                 # The cancel raced a completing job: the deadline is
                 # still exceeded — CH errors here too. A write that
@@ -3228,7 +3224,7 @@ class BigHouseEngine:
                 with self._log_lock:
                     self.query_log.append(entry)
                     self.query_totals.add(entry)
-            _REQ_LOCAL.depth, _REQ_LOCAL.scope = depth, outer_scope
+            _REQ_LOCAL.depth, _REQ_LOCAL.conf = depth, outer_knobs
             if depth == 0:
                 _REQ_LOCAL.logged_error = _REQ_LOCAL.qid = None
                 _REQ_LOCAL.watch = None
@@ -3298,31 +3294,16 @@ class BigHouseEngine:
                 self._committed.add(qid)
                 self._cancelled.pop(qid, None)
 
-    @contextmanager
-    def _scoped_conf(self, knobs: dict[str, str]):
-        """Hold session conf ``knobs`` for the ``with`` body and
-        restore the prior values on every exit path. SQLConf is shared
-        by every request thread, so a knob-bearing scope holds
-        ``_conf_lock``; a knob-less one takes no lock, so knob-less
-        statements never serialize."""
+    def _sql(self, text: str):
+        """``spark.sql(text)`` under the running statement's knobs: on
+        the base session when there are none, else on a statement
+        clone that holds them, so the base session's conf is never
+        written. Call it after transpile: the clone sees only the
+        views registered before it."""
+        knobs = getattr(_REQ_LOCAL, "conf", {})
         if not knobs:
-            yield
-            return
-        conf = self.spark.conf
-        with self._conf_lock:
-            prior = {k: conf.get(k, None) for k in knobs}
-            _REQ_LOCAL.knobs = getattr(_REQ_LOCAL, "knobs", 0) + 1
-            try:
-                for k, v in knobs.items():
-                    conf.set(k, v)
-                yield
-            finally:
-                _REQ_LOCAL.knobs -= 1
-                for k, v in prior.items():
-                    if v is None:
-                        conf.unset(k)
-                    else:
-                        conf.set(k, v)
+            return self.spark.sql(text)
+        return DataFrame(self._clone_session(knobs).sql(text), self.spark)
 
     # The small-plan tier's execution confs, and the leaves its plans
     # may read (a CTE's definition is itself a child of the plan).
@@ -3339,17 +3320,16 @@ class BigHouseEngine:
         """``df`` rebuilt from its analyzed plan on a statement clone
         with AQE off and one shuffle partition, when the statement is
         small; else ``df`` unchanged. Small: it holds no conf knob (the
-        client's knob wins, and the statement never meets
-        ``_conf_lock``); its leaves are file relations, local rows and
-        CTE references, at least one a file, and the files'
-        ``sizeInBytes`` sum to less than one split
-        (``spark.sql.files.maxPartitionBytes``); it has no ``Generate``
-        (``arrayJoin``/``explode`` can turn a small input into a large
-        one; ``numbers()`` is a ``Range`` leaf) and no subquery, whose
-        leaves ``collectLeaves`` does not visit. Below one split the
-        scan is one task, so AQE's re-planning, range sampling and
-        coalescing only add jobs."""
-        if getattr(_REQ_LOCAL, "knobs", 0):
+        client's knobs win: ``_sql`` already ran it on their clone); its
+        leaves are file relations, local rows and CTE references, at
+        least one a file, and the files' ``sizeInBytes`` sum to less
+        than one split (``spark.sql.files.maxPartitionBytes``); it has
+        no ``Generate`` (``arrayJoin``/``explode`` can turn a small
+        input into a large one; ``numbers()`` is a ``Range`` leaf) and
+        no subquery, whose leaves ``collectLeaves`` does not visit.
+        Below one split the scan is one task, so AQE's re-planning,
+        range sampling and coalescing only add jobs."""
+        if getattr(_REQ_LOCAL, "conf", None):
             return df
         plan = df._jdf.queryExecution().analyzed()
         leaves = plan.collectLeaves()
@@ -3385,8 +3365,8 @@ class BigHouseEngine:
         return tp.GENERATE(), tp.PLAN_EXPRESSION()
 
     def _clone_session(self, conf: dict[str, str]):
-        """A statement-scoped JVM clone of the base session with
-        ``conf`` set on it. It shares the SparkContext (job group,
+        """A JVM clone of the base session (a statement's, or an MV
+        stream's) with ``conf`` set on it. It shares the SparkContext (job group,
         cancel) and sees the views and UDFs registered so far; its
         SQLConf is its own, so the base session's is never written.
         Wrap its Datasets as ``DataFrame(jds, self.spark)``: a Python
@@ -3400,11 +3380,10 @@ class BigHouseEngine:
 
     def _transpile(self, sql: str) -> TranspileResult:
         """``transpile`` inside the running statement: the mapped
-        SETTINGS it returns hold in session conf until the statement
-        ends (``transpile`` itself never writes the shared conf)."""
+        SETTINGS it returns join the statement's knobs until it ends
+        (``transpile`` itself never writes the shared conf)."""
         out = transpile(sql, self.spark)
-        if out.settings:
-            _REQ_LOCAL.scope.enter_context(self._scoped_conf(out.settings))
+        _REQ_LOCAL.conf.update(out.settings)
         watch = getattr(_REQ_LOCAL, "watch", None)
         if watch and "max_execution_time" in out.dropped_settings:
             watch(out.dropped_settings["max_execution_time"])
@@ -4369,7 +4348,7 @@ class BigHouseEngine:
             f"ifNull(({ttl}) > now(), true)"
         )
         self._record_mutation(name, "MATERIALIZE TTL")
-        return self._rewrite_attached(name, self.spark.sql(sel.sql), sel.sql)
+        return self._rewrite_attached(name, self._sql(sel.sql), sel.sql)
 
     def _alter_order_by(self, stmt, name, m, masked) -> QueryResult:
         # CH `MODIFY ORDER BY`: metadata-only — the sorting key
@@ -4434,7 +4413,7 @@ class BigHouseEngine:
             for c in df.columns
         ]
         sel = f"SELECT {', '.join(items)} FROM {name}"
-        return self._rewrite_attached(name, self.spark.sql(sel), sel)
+        return self._rewrite_attached(name, self._sql(sel), sel)
 
     def _alter_freeze(self, stmt, name, m, masked) -> _Logged:
         pq, praw, snap = self._raw_groups(m, stmt.request.query)
@@ -4506,7 +4485,7 @@ class BigHouseEngine:
             f"SELECT * FROM {name} WHERE NOT ({cond})"
         )
         self._record_mutation(name, f"DELETE WHERE {cond}")
-        return self._rewrite_attached(name, self.spark.sql(sel.sql), sel.sql)
+        return self._rewrite_attached(name, self._sql(sel.sql), sel.sql)
 
     def _alter_update(self, stmt, name, m, masked) -> _Logged:
         raw = stmt.request.query
@@ -4532,7 +4511,7 @@ class BigHouseEngine:
             f"SELECT {', '.join(items)} FROM {name}"
         )
         self._record_mutation(name, f"UPDATE {assigns} WHERE {cond}")
-        return self._rewrite_attached(name, self.spark.sql(sel.sql), sel.sql)
+        return self._rewrite_attached(name, self._sql(sel.sql), sel.sql)
 
     def _alter_comment_column(self, stmt, name, m, masked):
         if_exists, col, comment = self._raw_groups(m, stmt.request.query)
@@ -4639,7 +4618,7 @@ class BigHouseEngine:
         import tempfile
 
         sel = self._transpile(select_sql)
-        df = self.spark.sql(sel.sql)
+        df = self._sql(sel.sql)
         path = tempfile.mkdtemp(prefix=f"bh_tbl_{name}_")
         decl_schema = None
         if part_spec:
@@ -5421,7 +5400,7 @@ class BigHouseEngine:
             result = self._transpile(stmt.request.query)
             stmt.views.extend(result.views)
             stmt.label = result.sql
-            df = self.spark.sql(result.sql)
+            df = self._sql(result.sql)
             if order_by and zorder_by:
                 raise ValueError("order_by and zorder_by are exclusive")
             if order_by:

@@ -29,6 +29,10 @@ Scale posture (100 TB / 1000-executor design targets):
   never fires, so a 100 TB plan keeps AQE and its partition count.
   The base session's conf is never written, so concurrent statements
   keep their own plans.
+* A statement's conf knobs (``num_nodes``/``cores``, init-query
+  ``SET``s, mapped ``SETTINGS``) live on a statement clone too
+  (``BigHouseEngine._sql``), so concurrent clients never serialize on
+  a shared conf.
 * Arrow enabled for the Pandas-UDF paths used by the dedup /
   similarity / multimodal operators.
 * Driver↔Python channels (``collect``, ``toLocalIterator``,

@@ -6514,6 +6514,14 @@ class TestInlineTableFunctions:
         )
         assert [x[0] for x in r2.rows] == ["A", "b"]
 
+    @pytest.mark.parametrize("col", ["t.`v`", "`t`.`v`"])
+    def test_collate_on_backticked_qualified_column(self, eng, col):
+        r = eng.execute(
+            "SELECT v FROM (SELECT 'b' AS v UNION ALL SELECT 'A' "
+            f"UNION ALL SELECT 'a') AS t ORDER BY {col} COLLATE 'en'"
+        )
+        assert [x[0] for x in r.rows] == ["a", "A", "b"]
+
 
 class TestQuantifiedComparisons:
     """op ANY/ALL/SOME (subquery): Spark's parser lacks quantified

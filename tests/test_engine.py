@@ -93,14 +93,23 @@ def test_error_lands_in_query_log(engine, tmp_path, run):
     assert engine.query_log[-1].error is not None
 
 
-def test_settings_are_query_scoped(engine, spark):
+def test_settings_are_query_scoped(engine, spark, monkeypatch):
     # SETTINGS max_threads maps to shuffle.partitions for ITS query
-    # only (winning over num_nodes x cores): session conf is shared by
-    # every client, so the prior value must be back after the query —
-    # also after one that fails in analysis — and the knob's lock must
-    # not outlive it.
+    # only (winning over num_nodes x cores): the knob lives on the
+    # statement's clone, so the shared base conf keeps its value during
+    # and after the query — also after one that fails in analysis.
+    from pyspark.sql.classic.dataframe import DataFrame
+
     before = spark.conf.get("spark.sql.shuffle.partitions")
-    seen = []
+    seen, ran_with, iterate = [], [], DataFrame.toLocalIterator
+
+    def spy(df, *args, **kwargs):
+        ran_with.append(df._jdf.sparkSession().conf().get(
+            "spark.sql.shuffle.partitions"
+        ))
+        return iterate(df, *args, **kwargs)
+
+    monkeypatch.setattr(DataFrame, "toLocalIterator", spy)
 
     class Sink:
         started = False
@@ -118,15 +127,14 @@ def test_settings_are_query_scoped(engine, spark):
         ),
         stream_to=Sink(),
     )
-    assert seen == ["7", "7"]
+    assert ran_with == ["7"]
+    assert seen == [before, before]
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
     with pytest.raises(Exception):
         engine.execute(
             "SELECT no_such_col FROM numbers(2) SETTINGS max_threads = 7"
         )
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
-    # From another thread: the conf lock is re-entrant, so only a
-    # different thread would block on a leaked hold.
     import threading
 
     rows = []
@@ -137,6 +145,137 @@ def test_settings_are_query_scoped(engine, spark):
     t.join(timeout=120)
     assert rows == [[[1]]]
     assert spark.conf.get("spark.sql.shuffle.partitions") == before
+
+
+def test_knobless_statement_reads_base_conf_meanwhile(
+    engine, spark, monkeypatch
+):
+    # One client's SETTINGS live on its statement's clone: a knob-less
+    # statement that runs while it is in flight reads the base conf.
+    import threading
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    before = spark.conf.get("spark.sql.shuffle.partitions")
+    assert before != "3"
+    held, release = threading.Event(), threading.Event()
+    collect = DataFrame.collect
+
+    def spy(df):
+        if threading.current_thread().name == "knobbed":
+            held.set()
+            release.wait(60)
+        return collect(df)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    rows = []
+    t = threading.Thread(name="knobbed", target=lambda: rows.append(
+        engine.execute(
+            "SELECT count() AS c FROM numbers(10) SETTINGS max_threads = 3"
+        ).rows
+    ))
+    t.start()
+    try:
+        assert held.wait(60)
+        out = engine.execute("SET spark.sql.shuffle.partitions")
+    finally:
+        release.set()
+        t.join(120)
+    assert out.rows[0][1] == before
+    assert rows == [[[10]]]
+
+
+def test_knob_bearing_statements_run_concurrently(engine, monkeypatch):
+    # Knob-bearing statements do not serialize: four with different
+    # max_threads all reach collect together, each on its own value.
+    import threading
+
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    gate = threading.Barrier(4, timeout=60)
+    seen, errors, collect = {}, [], DataFrame.collect
+
+    def spy(df):
+        name = threading.current_thread().name
+        if name.startswith("max_threads="):
+            gate.wait()
+            seen[name] = df._jdf.sparkSession().conf().get(
+                "spark.sql.shuffle.partitions"
+            )
+        return collect(df)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+
+    def run(n: int) -> None:
+        try:
+            out = engine.execute(
+                "SELECT number % 3 AS k, count() AS c FROM numbers(30) "
+                f"GROUP BY k ORDER BY k SETTINGS max_threads = {n}"
+            )
+            assert out.rows == [[0, 10], [1, 10], [2, 10]]
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+            gate.abort()
+
+    ns = (2, 3, 5, 6)
+    ts = [threading.Thread(target=run, args=(n,), name=f"max_threads={n}")
+          for n in ns]
+    for t in ts:
+        t.start()
+    for t in ts:
+        t.join(120)
+    assert errors == []
+    assert seen == {f"max_threads={n}": str(n) for n in ns}
+
+
+def test_writes_honour_cluster_shape(engine, spark, monkeypatch, tmp_path):
+    # num_nodes x cores reaches the Dataset an INSERT ... SELECT and
+    # the result sink write, and the base conf keeps its value.
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    seen, write = [], DataFrame.write
+
+    def spy(df):
+        seen.append(
+            (df._jdf.sparkSession().conf().get(key), spark.conf.get(key))
+        )
+        return write.fget(df)
+
+    d = str(tmp_path / "shape_src")
+    spark.createDataFrame([(9,)], "a long").write.parquet(d)
+    engine.attach_table("shape_ins", d)
+    monkeypatch.setattr(DataFrame, "write", property(spy))
+    try:
+        engine.execute(QueryRequest(
+            query="INSERT INTO shape_ins SELECT number FROM numbers(3)",
+            num_nodes=3, cores=4,
+        ))
+        engine.execute_to_sink(
+            QueryRequest(
+                query="SELECT number FROM numbers(3)", num_nodes=3, cores=4
+            ),
+            str(tmp_path / "shape_sink"),
+        )
+    finally:
+        engine.execute("DROP TABLE shape_ins")
+    assert seen == [("12", before), ("12", before)]
+    assert spark.conf.get(key) == before
+
+
+def test_settings_view_sees_init_query_set(engine):
+    # An init-query SET (a URL setting) is the statement's knob: its
+    # system.settings shows it, and the next statement does not.
+    q = (
+        "SELECT value, changed FROM system.settings "
+        "WHERE name = 'max_result_rows'"
+    )
+    out = engine.execute(
+        QueryRequest(query=q, init_queries=["SET max_result_rows = 5"])
+    )
+    assert out.rows == [["5", 1]]
+    assert engine.execute(q).rows[0][0] != "5"
 
 
 def test_query_log_is_bounded_and_totals_keep_counting(spark, monkeypatch):
@@ -618,6 +757,90 @@ def test_materialized_view_incremental(engine, spark, tmp_path):
         engine.execute(
             "CREATE MATERIALIZED VIEW mv_bad AS SELECT 1 AS x FROM range(3)"
         )
+
+
+def test_concurrent_inserts_refresh_one_mv_in_turn(
+    engine, spark, monkeypatch, tmp_path
+):
+    # Two clients INSERT into one MV source: both refreshes start
+    # together, yet only one stream runs on the view's checkpoint at
+    # a time, and the view folds both inserts. The second client
+    # starts once the first has written, so the two appends do not
+    # overlap.
+    import threading
+
+    d = str(tmp_path / "mvc_src")
+    spark.createDataFrame([("a", 1)], ["k", "v"]).write.parquet(d)
+    engine.attach_table("mvc_src", d)
+    engine.execute(
+        "CREATE MATERIALIZED VIEW mvc AS "
+        "SELECT k, sum(v) AS s FROM mvc_src GROUP BY k"
+    )
+    gate, wrote = threading.Barrier(2, timeout=60), threading.Event()
+    dependents, refresh = engine._refresh_dependent_mvs, engine._refresh_mv
+    active, overlap, errors = [], [], []
+
+    def dependents_spy(name, rebuild):
+        wrote.set()
+        gate.wait()
+        return dependents(name, rebuild)
+
+    def refresh_spy(name):
+        active.append(name)
+        overlap.append(len(active))
+        try:
+            return refresh(name)
+        finally:
+            active.remove(name)
+
+    monkeypatch.setattr(engine, "_refresh_dependent_mvs", dependents_spy)
+    monkeypatch.setattr(engine, "_refresh_mv", refresh_spy)
+
+    def run(v: int) -> None:
+        try:
+            engine.execute(f"INSERT INTO mvc_src VALUES ('a', {v})")
+        except Exception as e:  # noqa: BLE001 - reported below
+            errors.append(e)
+            gate.abort()
+
+    ts = [threading.Thread(target=run, args=(v,)) for v in (10, 100)]
+    try:
+        ts[0].start()
+        assert wrote.wait(60)
+        ts[1].start()
+        for t in ts:
+            t.join(120)
+        assert errors == []
+        assert overlap == [1, 1]
+        assert engine.execute("SELECT k, s FROM mvc").rows == [["a", 111]]
+    finally:
+        engine.execute("DROP TABLE mvc")
+        engine.execute("DROP TABLE mvc_src")
+
+
+def test_mv_refreshes_keep_the_listener_bus_flat(engine, spark, tmp_path):
+    # A stream adds its session's streaming listener to the
+    # SparkContext's bus for good: an MV's refreshes and rebuilds all
+    # run on the view's one clone, so they add none.
+    d = str(tmp_path / "mvl_src")
+    spark.createDataFrame([("a", 1)], ["k", "v"]).write.parquet(d)
+    engine.attach_table("mvl_src", d)
+    engine.execute(
+        "CREATE MATERIALIZED VIEW mvl AS "
+        "SELECT k, sum(v) AS s FROM mvl_src GROUP BY k"
+    )
+    # listeners() is a copy: read it afresh each time
+    bus = spark.sparkContext._jsc.sc().listenerBus()
+    try:
+        before = bus.listeners().size()
+        for v in range(2, 6):
+            engine.execute(f"INSERT INTO mvl_src VALUES ('a', {v})")
+        engine.execute("ALTER TABLE mvl_src DELETE WHERE v = 5")
+        assert bus.listeners().size() == before
+        assert engine.execute("SELECT k, s FROM mvl").rows == [["a", 10]]
+    finally:
+        engine.execute("DROP TABLE mvl")
+        engine.execute("DROP TABLE mvl_src")
 
 
 def test_introspection_passthrough(engine):
@@ -2266,13 +2489,15 @@ class TestSmallPlanTier:
         p = tmp_path / "tiny.parquet"
         _write_memo_source(p, "Parquet")
         q = f"SELECT k, sum(v) AS s FROM file('{p}', 'Parquet') GROUP BY k"
-        bus = spark.sparkContext._jsc.sc().listenerBus().listeners()
+        # listeners() is a copy: read it afresh each time
+        bus = spark.sparkContext._jsc.sc().listenerBus()
 
         def state():
             views = [
                 t.name for t in spark.catalog.listTables() if t.isTemporary
             ]
-            return bus.size(), sorted(views), len(readers._SCHEMA_MEMO[spark])
+            return (bus.listeners().size(), sorted(views),
+                    len(readers._SCHEMA_MEMO[spark]))
 
         engine.execute(q)
         before, n = state(), engine.small_plan_count

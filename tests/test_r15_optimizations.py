@@ -348,6 +348,9 @@ class TestMvStateSizing:
         streaming-state partition (not the session's shuffle count),
         the session conf must be restored afterwards, and the view's
         rows must be the aggregate of the source."""
+        import json
+        from pathlib import Path
+
         from bighouse_spark.engine import BigHouseEngine
 
         eng = BigHouseEngine(spark)
@@ -362,6 +365,10 @@ class TestMvStateSizing:
             "SELECT k, sum(v) AS s FROM mvsz_src GROUP BY k"
         )
         assert eng._mviews["mvsz"]["state_partitions"] == 1
+        # the stream ran with it: Spark pinned it in the checkpoint
+        offsets = Path(eng._mviews["mvsz"]["checkpoint"]) / "offsets" / "0"
+        meta = json.loads(offsets.read_text().splitlines()[1])
+        assert meta["conf"]["spark.sql.shuffle.partitions"] == "1"
         assert spark.conf.get("spark.sql.shuffle.partitions") == before
         # refresh path: INSERT folds only the new file, conf restored
         eng.execute("INSERT INTO mvsz_src VALUES ('c', 7)")

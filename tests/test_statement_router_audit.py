@@ -302,9 +302,10 @@ def _lifecycle_construct(node: ast.AST) -> str | None:
     return None
 
 
-def _lifecycle_sites(path: Path) -> list[tuple[str | None, str]]:
-    """``(outermost enclosing function, construct)`` per site in
-    ``path``; a def nested in a method counts as that method."""
+def _sites(path: Path, construct) -> list[tuple[str | None, str]]:
+    """``(outermost enclosing function, construct(node))`` per node of
+    ``path`` that ``construct`` names; a def nested in a method counts
+    as that method."""
     sites = []
 
     def visit(node: ast.AST, owner: str | None) -> None:
@@ -314,7 +315,7 @@ def _lifecycle_sites(path: Path) -> list[tuple[str | None, str]]:
                 child, (ast.FunctionDef, ast.AsyncFunctionDef)
             ):
                 own = child.name
-            if what := _lifecycle_construct(child):
+            if what := construct(child):
                 sites.append((own, what))
             visit(child, own)
 
@@ -326,7 +327,7 @@ def test_cancellation_lives_in_the_lifecycle():
     sites = [
         (p.name, fn, what)
         for p in sorted(ENGINE.parent.rglob("*.py"))
-        for fn, what in _lifecycle_sites(p)
+        for fn, what in _sites(p, _lifecycle_construct)
     ]
     stray = [
         s for s in sites
@@ -350,6 +351,30 @@ def test_transpile_never_writes_session_conf():
     # shared by every client, and a write there leaked one query's
     # knobs into every later statement. The engine scopes them.
     assert _method_calls(TRANSPILE, ("set", "unset"), "conf") == []
+
+
+def _conf_write(node: ast.AST) -> str | None:
+    if isinstance(node, ast.Attribute) and node.attr == "_conf_lock":
+        return "_conf_lock"
+    if isinstance(node, ast.Call) and isinstance(node.func, ast.Attribute):
+        recv = ast.unparse(node.func.value)
+        if node.func.attr in ("set", "unset", "setConfString") and (
+            recv.endswith("conf")
+        ):
+            return f"{recv}.{node.func.attr}"
+    return None
+
+
+def test_statements_never_write_base_session_conf():
+    # A statement's knobs live on its own session clone (_sql): the
+    # base conf is shared by every client, and a write there is seen
+    # by every statement running meanwhile. Only engine construction
+    # (CBO flags) and attach_table's nanos fallback write it.
+    assert _sites(ENGINE, _conf_write) == [
+        ("__init__", "self.spark.conf.set"),
+        ("attach_table", "self.spark.conf.set"),
+        ("_clone_session", "jconf.setConfString"),
+    ]
 
 
 def test_transpile_reads_files_only_through_read_source():
