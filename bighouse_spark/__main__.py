@@ -17,26 +17,6 @@ import argparse
 import sys
 
 
-def _split_statements(script: str) -> list[str]:
-    """Top-level ``;`` split (quote-aware; CH multiquery semantics)."""
-    parts, cur, quote = [], [], None
-    for c in script:
-        if quote:
-            cur.append(c)
-            if c == quote:
-                quote = None
-        elif c in "'\"`":
-            quote = c
-            cur.append(c)
-        elif c == ";":
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(c)
-    parts.append("".join(cur))
-    return [p.strip() for p in parts if p.strip()]
-
-
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(
         prog="python -m bighouse_spark",
@@ -76,6 +56,7 @@ def main(argv: list[str] | None = None) -> int:
             ap.error("no --query given and stdin is empty")
         scripts = [data]
 
+    from bighouse_spark.dialect.lexer import split_top_level
     from bighouse_spark.engine import BigHouseEngine, QueryRequest
     from bighouse_spark.formats import (
         normalize_format,
@@ -90,7 +71,8 @@ def main(argv: list[str] | None = None) -> int:
     eng = BigHouseEngine(get_spark(app_name="bighouse-cli",
                                    cpus=args.cpus))
     for script in scripts:
-        for stmt in _split_statements(script):
+        # CH multiquery: top-level ``;`` outside quoted spans/comments
+        for stmt in [p for p in split_top_level(script, ";") if p]:
             try:
                 sql, fmt_in_sql = split_result_format(stmt)
             except ValueError as e:

@@ -20,6 +20,8 @@ import re
 
 from pyspark.sql import types as T
 
+from bighouse_spark.dialect.lexer import mask, split_top_level
+
 _SIMPLE = {
     "int8": T.ByteType(),
     "int16": T.ShortType(),
@@ -169,72 +171,6 @@ def ch_type_to_spark(ch_type: str) -> T.DataType:
     raise ValueError(f"unsupported ClickHouse type: {ch_type!r}")
 
 
-def _mask_string_literals(sql: str) -> str:
-    """Blank the CONTENT of single-quoted string literals ONLY,
-    keeping the quote delimiters themselves and every identifier-
-    quoting span (`...` / "...") verbatim — offsets preserved, so
-    callers locate on the masked copy and slice the RAW text by
-    span. Canonical home of the router mask (transpile.py re-exports
-    it); lives here because the schema parsers need it too and
-    transpile imports schema, not the reverse."""
-    masked = []
-    quote: str | None = None
-    skip = False
-    for c in sql:
-        if quote == "'":
-            if skip:
-                masked.append(" ")
-                skip = False
-            elif c == "\\":
-                masked.append(" ")
-                skip = True  # \' stays inside the literal
-            elif c == "'":
-                masked.append(c)
-                quote = None
-            else:
-                masked.append(" ")
-        elif quote:  # ` or " identifier span: content kept verbatim
-            masked.append(c)
-            if c == quote:
-                quote = None
-        else:
-            masked.append(c)
-            if c in "'\"`":
-                quote = c
-    return "".join(masked)
-
-
-def split_top_level(s: str) -> list[str]:
-    r"""Split ``s`` on the commas outside quotes and outside ``()`` /
-    ``[]`` nesting — the one top-level splitter for argument lists,
-    type parameters, column lists, assignments and SET pairs. Inside
-    a quote span (single, double or backtick) a backslash escapes the
-    next character, and a doubled quote closes and reopens the span,
-    so ``'it''s, x'`` and ``'it\'s, x'`` stay one part. Parts are
-    stripped; a trailing comma adds no empty part."""
-    parts, depth, start, quote, escaped = [], 0, 0, None, False
-    for i, c in enumerate(s):
-        if escaped:
-            escaped = False
-        elif quote:
-            if c == "\\":
-                escaped = True
-            elif c == quote:
-                quote = None
-        elif c in "'\"`":
-            quote = c
-        elif c in "([":
-            depth += 1
-        elif c in ")]":
-            depth -= 1
-        elif c == "," and depth == 0:
-            parts.append(s[start:i].strip())
-            start = i + 1
-    if start < len(s):
-        parts.append(s[start:].strip())
-    return parts
-
-
 # Per-column clause keywords CH allows after the type in a column
 # declaration. DEFAULT is honored (recorded by the engine and used
 # for partial-INSERT fills / CLEAR COLUMN); CODEC/COMMENT/TTL are
@@ -271,7 +207,7 @@ def parse_column_item(item: str) -> tuple[str, str, dict[str, str]]:
     rest = item[m.start(2):]
     depth = 0
     marks: list[tuple[int, int, str]] = []
-    for mt in _COL_CLAUSE_RE.finditer(_mask_string_literals(rest)):
+    for mt in _COL_CLAUSE_RE.finditer(mask(rest, strings_only=True)):
         tok = mt.group(0)
         if tok == "(":
             depth += 1

@@ -42,6 +42,14 @@ from dataclasses import dataclass, field
 from pyspark.sql import SparkSession
 
 from bighouse_spark.dialect.globs import expand_braces
+from bighouse_spark.dialect.lexer import (
+    QUOTES,
+    close_paren,
+    in_span,
+    mask,
+    spans,
+    split_top_level,
+)
 
 # Module import time = engine process start (uptime() anchor).
 _PROCESS_START = _time.time()
@@ -530,18 +538,7 @@ def _rewrite_if_combinators(sql: str) -> str:
             rest = out[end:]
             pm = re.match(r"\s*\(", rest)
             if pm:
-                j, depth, quote = end + pm.end(), 1, None
-                while j < len(out) and depth:
-                    c = out[j]
-                    if quote:
-                        quote = None if c == quote else quote
-                    elif c in "'\"":
-                        quote = c
-                    elif c == "(":
-                        depth += 1
-                    elif c == ")":
-                        depth -= 1
-                    j += 1
+                j = _group_end(out, end + pm.end() - 1)
                 real = split_top_level(out[end + pm.end():j - 1])
                 if len(real) < 2:
                     raise ValueError(f"{fn}(...)(args, cond): missing cond")
@@ -600,18 +597,7 @@ def _rewrite_suffix_combinators(sql: str) -> str:
         pm = re.match(r"\s*\(", s[end:])
         if not pm:
             return None
-        j, depth, quote = end + pm.end(), 1, None
-        while j < len(s) and depth:
-            c = s[j]
-            if quote:
-                quote = None if c == quote else quote
-            elif c in "'\"":
-                quote = c
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            j += 1
+        j = _group_end(s, end + pm.end() - 1)
         return end + pm.end(), j, split_top_level(s[end + pm.end():j - 1])
 
     out = sql
@@ -839,42 +825,29 @@ def _format_datetime(args: list[str]) -> str:
 
 
 def _match_paren_back(s: str, close_idx: int) -> int | None:
-    """Index of the '(' matching ``s[close_idx] == ')'`` (quote-aware
-    backward scan); None when unbalanced."""
-    depth, i = 0, close_idx
-    while i >= 0:
-        c = s[i]
-        if c == "'":
-            i -= 1
-            while i >= 0 and s[i] != "'":
-                i -= 1
-        elif c == ")":
+    """Index of the '(' matching ``s[close_idx] == ')'``, skipping
+    spans; None when unbalanced."""
+    masked, depth = mask(s), 0
+    for i in range(close_idx, -1, -1):
+        if masked[i] == ")":
             depth += 1
-        elif c == "(":
+        elif masked[i] == "(":
             depth -= 1
             if depth == 0:
                 return i
-        i -= 1
     return None
 
 
-def _match_paren_fwd(s: str, open_idx: int) -> int | None:
-    depth, i, quote = 0, open_idx, None
-    while i < len(s):
-        c = s[i]
-        if quote:
-            if c == quote:
-                quote = None
-        elif c in "'\"":
-            quote = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i
-        i += 1
-    return None
+def _group_end(s: str, i: int, strict: bool = False) -> int:
+    """Index just past the ``)`` closing the ``(`` at ``s[i]``. When
+    it is never closed: the end of ``s``, or ValueError if
+    ``strict``."""
+    close = close_paren(s, i)
+    if close is not None:
+        return close + 1
+    if strict:
+        raise ValueError("unbalanced parentheses")
+    return len(s)
 
 
 _TUPLE_IN_RE = re.compile(r"\)\s*(NOT\s+)?IN\s*\(", re.IGNORECASE)
@@ -932,7 +905,7 @@ def _rewrite_tuple_ops(sql: str) -> str:
             if len(left) < 2 or _is_subquery(left):
                 continue
             open_r = m.end() - 1
-            close_r = _match_paren_fwd(sql, open_r)
+            close_r = close_paren(sql, open_r)
             if close_r is None:
                 continue
             elems = split_top_level(sql[open_r + 1 : close_r])
@@ -941,7 +914,7 @@ def _rewrite_tuple_ops(sql: str) -> str:
             for e in elems:
                 e = e.strip()
                 if not (e.startswith("(") and e.endswith(")")
-                        and _match_paren_fwd(e, 0) == len(e) - 1):
+                        and close_paren(e, 0) == len(e) - 1):
                     ok = False
                     break
                 vals = split_top_level(e[1:-1])
@@ -976,7 +949,7 @@ def _rewrite_tuple_ops(sql: str) -> str:
             if len(left) < 2 or _is_subquery(left):
                 continue
             open_r = m.end() - 1
-            close_r = _match_paren_fwd(sql, open_r)
+            close_r = close_paren(sql, open_r)
             if close_r is None:
                 continue
             right = split_top_level(sql[open_r + 1 : close_r])
@@ -1462,26 +1435,6 @@ _TIME_DECAYED_KINDS = {
 }
 
 
-def _scan_balanced(s: str, i: int) -> int:
-    """``s[i]`` is '(' — return the index just past its match
-    (quote-aware)."""
-    depth, quote = 0, None
-    while i < len(s):
-        c = s[i]
-        if quote:
-            quote = None if c == quote else quote
-        elif c in "'\"":
-            quote = c
-        elif c == "(":
-            depth += 1
-        elif c == ")":
-            depth -= 1
-            if depth == 0:
-                return i + 1
-        i += 1
-    raise ValueError("unbalanced parentheses")
-
-
 def _rewrite_time_decayed(out: str) -> str:
     """``exponentialTimeDecayed{Sum,Avg,Count,Max}(x)(args) OVER w`` —
     CH's time-decayed WINDOW functions: for each row, the frame's
@@ -1511,7 +1464,7 @@ def _rewrite_time_decayed(out: str) -> str:
                     "aggregate use exponentialMovingAverage(h)(v, t)"
                 )
             args_start = end + m_args.end() - 1
-            args_end = _scan_balanced(out, args_start)
+            args_end = _group_end(out, args_start, strict=True)
             args = split_top_level(out[args_start + 1:args_end - 1])
             m_over = re.match(r"\s*OVER\b\s*", out[args_end:], re.I)
             if not m_over:
@@ -1523,7 +1476,7 @@ def _rewrite_time_decayed(out: str) -> str:
                 )
             w_start = args_end + m_over.end()
             if w_start < len(out) and out[w_start] == "(":
-                w_end = _scan_balanced(out, w_start)
+                w_end = _group_end(out, w_start, strict=True)
             else:  # named window reference
                 m_name = re.match(r"\w+", out[w_start:])
                 if m_name is None:
@@ -2374,8 +2327,8 @@ def _rewrite_dollar_quoted_strings(sql: str) -> str:
     escaping. Runs FIRST — the content may hold quotes that would
     confuse every later quote-aware scan. Spans inside existing
     single-quoted / double-quoted / backtick spans are left alone
-    (``_QUOTED_SPAN``, the same scanner every other pass uses, so
-    the two can never disagree about quote parity); a match that
+    (the lexer every other pass uses, so the two can never disagree
+    about quote parity); a match that
     starts inside one is skipped — NOT a stop — so a genuine heredoc
     later in the statement (``SELECT '$$', $$a$$``) still converts.
     A lone unmatched ``$tag$`` is left for Spark's parser to
@@ -2389,8 +2342,7 @@ def _rewrite_dollar_quoted_strings(sql: str) -> str:
         m = _DOLLAR_QUOTE_RE.search(out, pos)
         if not m:
             break
-        quoted = [q.span() for q in _QUOTED_SPAN.finditer(out)]
-        if any(a <= m.start() < b for a, b in quoted):
+        if in_span(out, m.start()):
             pos = m.start() + 1
             continue
         body = m.group(2).replace("'", "''")
@@ -2424,66 +2376,27 @@ def _rewrite_numeric_base_literals(sql: str) -> str:
     return _sub_unquoted(sql, _seg)
 
 
+_DQ_IDENT = re.compile(r'"((?:[^"\\]|\\.|"")*)"', re.DOTALL)
+_DQ_ESCAPE = re.compile(r'""|\\(.)', re.DOTALL)
+
+
 def _rewrite_double_quoted_identifiers(sql: str) -> str:
     """`"name"` → `` `name` `` outside single-quoted literals and
     backtick quotes. CH follows the SQL standard (double quotes are
     identifiers; `""` escapes a quote inside one; string literals
     are single-quoted with backslash or `''` escapes)."""
-    out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":
-            out.append(c)
-            i += 1
-            while i < n:
-                ch = sql[i]
-                if ch == "\\" and i + 1 < n:
-                    out.append(ch)
-                    out.append(sql[i + 1])
-                    i += 2
-                    continue
-                out.append(ch)
-                i += 1
-                if ch == "'":
-                    if i < n and sql[i] == "'":  # '' stays inside
-                        out.append("'")
-                        i += 1
-                        continue
-                    break
-        elif c == "`":
-            out.append(c)
-            i += 1
-            while i < n:
-                out.append(sql[i])
-                i += 1
-                if sql[i - 1] == "`":
-                    break
-        elif c == '"':
-            ident: list[str] = []
-            j = i + 1
-            closed = False
-            while j < n:
-                if sql[j] == '"':
-                    if j + 1 < n and sql[j + 1] == '"':
-                        ident.append('"')
-                        j += 2
-                        continue
-                    closed = True
-                    j += 1
-                    break
-                ident.append(sql[j])
-                j += 1
-            if not closed:
-                out.append(c)
-                i += 1
-                continue
-            name = "".join(ident).replace("`", "``")
-            out.append(f"`{name}`")
-            i = j
-        else:
-            out.append(c)
-            i += 1
+    out, last = [], 0
+    for a, b in spans(sql, '"'):
+        m = _DQ_IDENT.fullmatch(sql, a, b)
+        if m is None:
+            continue  # unterminated: left for Spark's parser
+        name = _DQ_ESCAPE.sub(
+            lambda e: '"' if e.group(1) in (None, '"') else e.group(0),
+            m.group(1),
+        )
+        out += (sql[last:a], "`" + name.replace("`", "``") + "`")
+        last = b
+    out.append(sql[last:])
     return "".join(out)
 
 
@@ -3606,6 +3519,27 @@ def _parse_time_delta(a: list[str]) -> str:
     )
 
 
+_QUOTED_LITERAL = re.compile(
+    r"'((?:[^'\\]|\\.|'')*)'|\"((?:[^\"\\]|\\.|\"\")*)\"", re.DOTALL
+)
+
+
+def _literal_text(arg: str) -> str | None:
+    """The text of ``arg`` when it is one quoted literal, with its
+    quote escapes (a doubled or backslashed quote) collapsed, so the
+    caller re-escapes it once on output; None otherwise."""
+    m = _QUOTED_LITERAL.fullmatch(arg.strip())
+    if m is None:
+        return None
+    q, body = ("'", m.group(1)) if m.group(1) is not None else ('"', m.group(2))
+    return re.sub(
+        r"\\(.)|" + q * 2,
+        lambda e: q if e.group(1) in (None, q) else e.group(0),
+        body,
+        flags=re.DOTALL,
+    )
+
+
 def _format_builder(a: list[str]) -> str:
     """format('{} and {}', x, y) / format('{1}-{0}', x, y): CH's
     fmt-style placeholder substitution, compiled at transpile time —
@@ -3614,17 +3548,13 @@ def _format_builder(a: list[str]) -> str:
     and ``}}`` escape literal braces."""
     if len(a) < 1:
         raise ValueError("format() needs a pattern argument")
-    raw = a[0].strip()
-    if not (len(raw) >= 2 and raw[0] == raw[-1] and raw[0] in "'\""):
+    pat = _literal_text(a[0])
+    if pat is None:
         raise ValueError(
             "format(): the pattern must be a string literal (it is "
             "compiled into a concat expression); for dynamic "
             "patterns build the string with concat/replaceOne"
         )
-    # collapse the SQL-literal quote escape so the emitted concat
-    # literal does not double it again (it''s -> it's, re-escaped
-    # once on output)
-    pat = raw[1:-1].replace(raw[0] * 2, raw[0])
     args = a[1:]
     parts: list[str] = []
     lit = ""
@@ -3730,8 +3660,8 @@ def _cut_url_parameter(a: list[str]) -> str:
     compiled into the pattern regex-escaped."""
     if len(a) != 2:
         raise ValueError("cutURLParameter() needs (url, name)")
-    raw = a[1].strip()
-    if not (len(raw) >= 2 and raw[0] == raw[-1] and raw[0] in "'\""):
+    name = _literal_text(a[1])
+    if name is None:
         raise ValueError(
             "cutURLParameter(): the parameter name must be a string "
             "literal (it is compiled into the match pattern); for a "
@@ -3740,7 +3670,7 @@ def _cut_url_parameter(a: list[str]) -> str:
         )
     import re as _re
 
-    esc = _re.escape(raw[1:-1]).replace("\\", "\\\\").replace("'", "''")
+    esc = _re.escape(name).replace("\\", "\\\\").replace("'", "''")
     inner = (
         f"regexp_replace({a[0]}, "
         f"'(?<=[?&]){esc}(=[^&#]*)?&', '')"
@@ -8088,17 +8018,6 @@ _ARG_REWRITES["toIPv4"] = lambda a: _ARG_REWRITES["IPv4NumToString"](
 )
 
 
-def _pos_in_string(sql: str, pos: int) -> bool:
-    """True when ``pos`` falls inside a single-quoted literal
-    (''-escapes handled by parity: each quote flips state, so the
-    doubled quote flips twice and stays inside)."""
-    in_q = False
-    for i in range(pos):
-        if sql[i] == "'":
-            in_q = not in_q
-    return in_q
-
-
 def _rewrite_column_matchers(sql: str, spark) -> str:
     """CH ``COLUMNS('regex') [APPLY(fn)]`` and ``[t.]* APPLY(fn)`` —
     SELECT-list matchers expanded against the single simple FROM
@@ -8147,11 +8066,11 @@ def _rewrite_column_matchers(sql: str, spark) -> str:
         ).search(out, pos)
         if m is None:
             break
-        if _pos_in_string(out, m.start()):
+        if in_span(out, m.start()):
             pos = m.start() + 1
             continue
         pat, fn = m.groups()
-        if out[m.end(1) + 1 : m.end(1) + 2] == "'":
+        if (m.start(1) - 1, m.end(1) + 1) not in spans(out, "'"):
             raise ValueError(
                 "COLUMNS(): patterns with escaped quotes are not "
                 "supported; match on a simpler pattern"
@@ -8178,7 +8097,7 @@ def _rewrite_column_matchers(sql: str, spark) -> str:
         )
         if m_res is None:
             break
-        if _pos_in_string(out, m_res.start()):
+        if in_span(out, m_res.start()):
             scan = m_res.start() + 1
             continue
         raise ValueError(
@@ -8194,7 +8113,7 @@ def _rewrite_column_matchers(sql: str, spark) -> str:
         ).search(out, pos)
         if m is None:
             break
-        if _pos_in_string(out, m.start()):
+        if in_span(out, m.start()):
             pos = m.start() + 1
             continue
         fn = m.group(1)
@@ -9656,46 +9575,22 @@ def _render_param(name: str, ch_type: str, raw: str) -> str:
 def substitute_parameters(sql: str, params: dict[str, str]) -> str:
     """ClickHouse query parameters: replace ``{name:Type}``
     placeholders with typed literals from ``params`` (the public
-    ``param_<name>`` HTTP / ``--param`` CLI surface). Quote-aware —
-    placeholders inside string literals or backtick identifiers are
-    left alone, like CH. Unbound placeholders raise the guided error
-    CH raises (UNKNOWN_QUERY_PARAMETER)."""
-    out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c in "'`\"":
-            q = c
-            j = i + 1
-            while j < n:
-                if sql[j] == "\\" and q == "'":
-                    j += 2
-                    continue
-                if sql[j] == q:
-                    if j + 1 < n and sql[j + 1] == q:
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(sql[i:j + 1])
-            i = j + 1
-            continue
-        if c == "{":
-            m = _PARAM_PLACEHOLDER_RE.match(sql, i)
-            if m:
-                name, ch_type = m.group(1), m.group(2)
-                if name not in params:
-                    raise ValueError(
-                        f"query parameter {{{name}:{ch_type}}} has no "
-                        f"bound value; pass it as param_{name} (HTTP) "
-                        f"or --param {name}=... (CLI)"
-                    )
-                out.append(_render_param(name, ch_type, params[name]))
-                i = m.end()
-                continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+    ``param_<name>`` HTTP / ``--param`` CLI surface). Placeholders
+    inside quoted spans or comments are left alone, like CH. Unbound
+    placeholders raise the guided error CH raises
+    (UNKNOWN_QUERY_PARAMETER)."""
+
+    def render(m: re.Match) -> str:
+        name, ch_type = m.group(1), m.group(2)
+        if name not in params:
+            raise ValueError(
+                f"query parameter {{{name}:{ch_type}}} has no "
+                f"bound value; pass it as param_{name} (HTTP) "
+                f"or --param {name}=... (CLI)"
+            )
+        return _render_param(name, ch_type, params[name])
+
+    return _sub_outside_quotes(_PARAM_PLACEHOLDER_RE, render, sql)
 
 
 @dataclass
@@ -9942,10 +9837,6 @@ def _ensure_cityhash_udfs(spark: SparkSession) -> None:
     registered["cityhash"] = allow_dt
 
 
-_QUOTED_SPAN = re.compile(
-    r"('(?:[^']|'')*'|`[^`]*`|\"(?:[^\"]|\"\")*\")"
-)
-
 _NAN_INF = re.compile(
     r"(?<![\w.])(nan|inf)(?![\w.(])", re.IGNORECASE
 )
@@ -9956,12 +9847,14 @@ _PAREN_LAMBDA = re.compile(r"\(\s*([A-Za-z_]\w*)\s*\)\s*->")
 
 
 def _sub_unquoted(sql: str, fn) -> str:
-    """Apply ``fn`` to the segments of ``sql`` outside string /
-    backtick / double-quote spans."""
-    parts = _QUOTED_SPAN.split(sql)
-    return "".join(
-        p if i % 2 else fn(p) for i, p in enumerate(parts)
-    )
+    """Apply ``fn`` to the segments of ``sql`` outside quoted spans
+    and comments."""
+    out, last = [], 0
+    for a, b in spans(sql):
+        out += (fn(sql[last:a]), sql[a:b])
+        last = b
+    out.append(fn(sql[last:]))
+    return "".join(out)
 
 
 def _sub_outside_quotes(pattern, repl, sql: str, flags=0) -> str:
@@ -9970,11 +9863,8 @@ def _sub_outside_quotes(pattern, repl, sql: str, flags=0) -> str:
     itself may legitimately CONTAIN a quoted span (e.g. a string
     argument inside ``INTERVAL toUInt8('3') DAY``) — only matches
     that begin inside a string literal are left alone."""
-    quoted = [m.span() for m in _QUOTED_SPAN.finditer(sql)]
-
     def guarded(m: re.Match):
-        s = m.start()
-        if any(a <= s < b for a, b in quoted):
+        if in_span(sql, m.start()):
             return m.group(0)
         return repl(m) if callable(repl) else m.expand(repl)
 
@@ -9998,9 +9888,7 @@ def _rewrite_token_spellings(sql: str) -> str:
 
     # Alias-collision guard: `SELECT x AS inf ... ORDER BY inf`
     # would turn the second `inf` into Infinity. Refuse up front.
-    unquoted_all = "".join(
-        p for i, p in enumerate(_QUOTED_SPAN.split(sql)) if i % 2 == 0
-    )
+    unquoted_all = mask(sql)
     for tok in ("nan", "inf"):
         aliased = re.search(
             rf"(?i)(?:^|[^\w.])as\s+{tok}(?![\w.])", unquoted_all
@@ -10188,7 +10076,7 @@ def _rewrite_ch_misc(sql: str) -> str:
         flags=re.IGNORECASE,
     )
     # -- DISTINCT ON (k, ...) (masked locate) ----------------------
-    m = re.search(r"\bDISTINCT\s+ON\s*\(", _mask_quoted_spans(out),
+    m = re.search(r"\bDISTINCT\s+ON\s*\(", mask(out),
                   re.IGNORECASE)
     if m:
         depth, j = 1, m.end()
@@ -10215,7 +10103,7 @@ def _rewrite_ch_misc(sql: str) -> str:
     # id' keeps its spelling (r12 shipped these over the raw text —
     # the same bug class _sub_unquoted exists for).
     if re.search(r"\b(SEMI|ANTI)\s+RIGHT\s+JOIN\b",
-                 _mask_quoted_spans(out), re.IGNORECASE):
+                 mask(out), re.IGNORECASE):
         raise ValueError(
             "SEMI/ANTI RIGHT JOIN keeps right-table rows, which "
             "Spark joins cannot spell directly; swap the tables and "
@@ -10241,7 +10129,7 @@ def _rewrite_ch_misc(sql: str) -> str:
     )
     any_m = re.search(
         r"\bANY\s+((?:LEFT|RIGHT|INNER)\s+)?JOIN\s+",
-        _mask_quoted_spans(out), re.IGNORECASE
+        mask(out), re.IGNORECASE
     )
     if any_m:
         rest = out[any_m.end():]
@@ -10270,19 +10158,7 @@ def _rewrite_ch_misc(sql: str) -> str:
     # -- * REPLACE (expr AS col, ...) ------------------------------
     m = re.search(r"\*\s+REPLACE\s*\(", out, re.IGNORECASE)
     if m:
-        depth, j = 1, m.end()
-        quote = None
-        while j < len(out) and depth:
-            c = out[j]
-            if quote:
-                quote = None if c == quote else quote
-            elif c in "'\"":
-                quote = c
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            j += 1
+        j = _group_end(out, m.end() - 1)
         items = split_top_level(out[m.end():j - 1])
         names, exprs = [], []
         for it in items:
@@ -10317,10 +10193,8 @@ def _rewrite_ch_misc(sql: str) -> str:
                 # Quote-aware substitution: an alias inside a string
                 # literal is data, not a reference.
                 pat = re.compile(rf"\b{re.escape(name)}\b")
-                parts = re.split(r"('(?:[^']|'')*')", body)
-                body = "".join(
-                    p if i % 2 else pat.sub(f"({expr})", p)
-                    for i, p in enumerate(parts)
+                body = _sub_unquoted(
+                    body, lambda p: pat.sub(f"({expr})", p)
                 )
             out = body
     return out
@@ -10354,54 +10228,37 @@ def _rewrite_get_setting(out: str, raw: dict[str, str]) -> str:
     return _GET_SETTING_RE.sub(sub, out)
 
 
+_SETTINGS_WORD = re.compile(r"(?<![A-Za-z0-9_])settings(?![A-Za-z0-9_])",
+                            re.IGNORECASE)
+_PAREN = re.compile(r"[()]")
+
+
 def _settings_spans(sql: str) -> list[tuple[int, int]]:
     """(start, end) of every SETTINGS clause, quote- and paren-aware:
     a top-level clause runs to end-of-statement, a subquery-level one
     stops at the ``)`` that closes its subquery — the old ``(.+)$``
     regex swallowed that paren into the last value AND stripped the
     rest of the outer query."""
-    spans: list[tuple[int, int]] = []
-    low = sql.lower()
-    quote: str | None = None
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if quote:
-            if c == quote:
-                quote = None
-            i += 1
-            continue
-        if c in "'\"":
-            quote = c
-            i += 1
-            continue
-        if (
-            low.startswith("settings", i)
-            and (i == 0 or not (low[i - 1].isalnum() or low[i - 1] == "_"))
-            and (
-                i + 8 >= n
-                or not (low[i + 8].isalnum() or low[i + 8] == "_")
-            )
-        ):
-            j, d, q = i + 8, 0, None
-            while j < n:
-                cj = sql[j]
-                if q:
-                    q = None if cj == q else q
-                elif cj in "'\"":
-                    q = cj
-                elif cj == "(":
-                    d += 1
-                elif cj == ")":
-                    if d == 0:
-                        break  # closes the enclosing subquery
-                    d -= 1
-                j += 1
-            spans.append((i, j))
-            i = j
-            continue
-        i += 1
-    return spans
+    found: list[tuple[int, int]] = []
+    masked = mask(sql)
+    pos = 0
+    while True:
+        m = _SETTINGS_WORD.search(masked, pos)
+        if m is None:
+            return found
+        depth = 0
+        for p in _PAREN.finditer(masked, m.end()):
+            if p.group() == "(":
+                depth += 1
+            elif depth == 0:
+                end = p.start()  # closes the enclosing subquery
+                break
+            else:
+                depth -= 1
+        else:
+            end = len(sql)
+        found.append((m.start(), end))
+        pos = end
 
 
 def _strip_settings(sql: str) -> tuple[str, dict[str, str], dict[str, str]]:
@@ -10459,6 +10316,9 @@ _AJ_TERMINATORS = (
 )
 
 
+_SUBQUERY_OPEN = re.compile(r"\(\s*(SELECT|WITH)\b", re.IGNORECASE)
+
+
 def _qualify_toplevel(seg: str, pat: re.Pattern, name: str) -> str:
     """Rewrite ``pat`` matches to ``__aj.<name>`` in ``seg`` —
     everywhere EXCEPT inside string/backtick literals and inside
@@ -10466,73 +10326,28 @@ def _qualify_toplevel(seg: str, pat: re.Pattern, name: str) -> str:
     which keep their own name scopes. Function-call argument parens
     (``sum(arr)``) ARE substituted: those references see the
     ARRAY JOIN element like any other outer-query expression."""
-    out: list[str] = []
-    buf: list[str] = []
-    i, n = 0, len(seg)
 
-    def flush() -> None:
-        if buf:
-            txt = "".join(buf)
+    def qualify(txt: str) -> str:
+        def _sub(m: re.Match) -> str:
+            # An alias TARGET (`... AS arr`) defines a new name;
+            # qualifying it would emit `AS __aj.arr` — a syntax
+            # error, not a reference to the exploded element.
+            if re.search(r"(?i)\bAS\s*$", txt[: m.start()]):
+                return m.group(0)
+            return f"__aj.{name}"
 
-            def _sub(m: re.Match) -> str:
-                # An alias TARGET (`... AS arr`) defines a new name;
-                # qualifying it would emit `AS __aj.arr` — a syntax
-                # error, not a reference to the exploded element.
-                if re.search(r"(?i)\bAS\s*$", txt[: m.start()]):
-                    return m.group(0)
-                return f"__aj.{name}"
+        return pat.sub(_sub, txt)
 
-            out.append(pat.sub(_sub, txt))
-            buf.clear()
-
-    def skip_quoted(j: int) -> int:
-        q = seg[j]
-        k = j + 1
-        while k < n:
-            if seg[k] == q:
-                return k + 1
-            k += 1
-        return n
-
-    def skip_balanced(j: int) -> int:
-        # j points at '('; returns index past the matching ')'.
-        depth = 0
-        k = j
-        while k < n:
-            c = seg[k]
-            if c in "'\"`":
-                k = skip_quoted(k)
-                continue
-            if c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    return k + 1
-            k += 1
-        return n
-
-    while i < n:
-        c = seg[i]
-        if c in "'\"`":
-            j = skip_quoted(i)
-            flush()
-            out.append(seg[i:j])
-            i = j
-            continue
-        if c == "(":
-            if re.match(r"\(\s*(SELECT|WITH)\b", seg[i:], re.IGNORECASE):
-                j = skip_balanced(i)
-                flush()
-                out.append(seg[i:j])
-                i = j
-                continue
-            buf.append(c)
-            i += 1
-            continue
-        buf.append(c)
-        i += 1
-    flush()
+    kept = list(spans(seg)) + [
+        (m.start(), _group_end(seg, m.start()))
+        for m in _SUBQUERY_OPEN.finditer(mask(seg))
+    ]
+    out, last = [], 0
+    for a, b in sorted(kept):
+        if a >= last:  # not nested in a span or subquery already kept
+            out += (qualify(seg[last:a]), seg[a:b])
+            last = b
+    out.append(qualify(seg[last:]))
     return "".join(out)
 
 
@@ -10584,7 +10399,7 @@ def _rewrite_arrayjoin_calls(sql: str) -> str:
     scope and is left alone."""
     if "arrayJoin" not in sql:
         return sql
-    s = _mask_quoted_spans(sql)
+    s = mask(sql)
     depth, sub = _paren_depths(s)
 
     calls: list[tuple[int, int, int]] = []
@@ -10647,7 +10462,7 @@ def _rewrite_arrayjoin_calls(sql: str) -> str:
         for i, arg in enumerate(args_in_order)
     )
 
-    s2 = _mask_quoted_spans(out)
+    s2 = mask(out)
     depth2, _ = _paren_depths(s2)
 
     def _depth0_in(pat: str, from_pos: int = 0):
@@ -10685,48 +10500,36 @@ def _rewrite_array_join_clause(sql: str) -> str:
     out = sql
     while True:
         # masked locate: 'ARRAY JOIN arr' inside a literal is data
+        masked = mask(out)
         m = re.search(
-            r"\b(LEFT\s+)?ARRAY\s+JOIN\s+", _mask_quoted_spans(out),
-            re.IGNORECASE
+            r"\b(LEFT\s+)?ARRAY\s+JOIN\s+", masked, re.IGNORECASE
         )
         if m is None:
             return out
         fn = "explode_outer" if m.group(1) else "explode"
         # Scan the clause body: up to the next top-level terminator.
-        i, depth, brackets, quote = m.end(), 0, 0, None
-        parts, cur = [], []
+        i = start = m.end()
+        depth, parts = 0, []
         while i < len(out):
-            c = out[i]
-            if quote:
-                cur.append(c)
-                if c == quote:
-                    quote = None
-            elif c in "'\"":
-                quote = c
-                cur.append(c)
-            elif c in "([":
+            c = masked[i]
+            if c in "([":
                 depth += 1
-                cur.append(c)
             elif c in ")]":
                 if depth == 0:
                     break  # closing a subquery that contains us
                 depth -= 1
-                cur.append(c)
             elif c == "," and depth == 0:
-                parts.append("".join(cur).strip())
-                cur = []
-            else:
-                if depth == 0 and c.isalpha():
-                    word = re.match(r"[A-Za-z_]+", out[i:]).group(0)
-                    if word.upper() in _AJ_TERMINATORS:
-                        break
-                    cur.append(word)
-                    i += len(word)
-                    continue
-                cur.append(c)
+                parts.append(out[start:i].strip())
+                start = i + 1
+            elif depth == 0 and c.isalpha():
+                word = re.match(r"[A-Za-z_]+", masked[i:]).group(0)
+                if word.upper() in _AJ_TERMINATORS:
+                    break
+                i += len(word)
+                continue
             i += 1
-        if cur:
-            parts.append("".join(cur).strip())
+        if start < i:
+            parts.append(out[start:i].strip())
         if len(parts) != 1 or not parts[0]:
             raise ValueError(
                 "ARRAY JOIN with multiple lockstep arrays is not "
@@ -10760,6 +10563,11 @@ def _rewrite_array_join_clause(sql: str) -> str:
         out = prefix + repl + suffix
 
 
+_LB_ORDER_SCAN = re.compile(
+    r"[()]|(?<![A-Za-z0-9_])ORDER\s+BY\s+", re.IGNORECASE
+)
+
+
 def _rewrite_limit_by(sql: str) -> str:
     """CH ``LIMIT n BY k1, k2`` → windowed row_number filter.
 
@@ -10770,7 +10578,7 @@ def _rewrite_limit_by(sql: str) -> str:
     preserved outside the wrapper.
     """
     # masked locate: 'LIMIT 5 BY k' inside a literal is data
-    masked = _mask_quoted_spans(sql)
+    masked = mask(sql)
     m = _LIMIT_BY_RE.search(masked)
     if not m:
         return sql
@@ -10795,26 +10603,14 @@ def _rewrite_limit_by(sql: str) -> str:
     # depth-0 scan, not re.search — an ORDER BY inside a FROM
     # subquery previously matched with its trailing ')' and emitted
     # unbalanced SQL (round-11 fix).
-    order_at = None
-    depth, quote = 0, None
-    for i, c in enumerate(head):
-        if quote:
-            quote = None if c == quote else quote
-        elif c in "'\"`":
-            quote = c
-        elif c == "(":
+    order_at, depth = None, 0
+    for t in _LB_ORDER_SCAN.finditer(masked, 0, len(head)):
+        if t.group() == "(":
             depth += 1
-        elif c == ")":
+        elif t.group() == ")":
             depth -= 1
-        elif (
-            depth == 0
-            and c in "oO"
-            and (i == 0 or not (head[i - 1].isalnum()
-                                or head[i - 1] == "_"))
-        ):
-            om = re.match(r"ORDER\s+BY\s+", head[i:], re.IGNORECASE)
-            if om:
-                order_at = (i, i + om.end())
+        elif depth == 0:
+            order_at = t.span()
     if order_at is None:
         raise ValueError(
             "LIMIT BY requires an ORDER BY at the same query level "
@@ -10931,7 +10727,7 @@ def _rewrite_ch_clauses(sql: str) -> str:
     out = _rewrite_array_join_clause(out)
     m = re.search(
         r"\bGROUP\s+BY\s+(.+?)\s+WITH\s+TOTALS\b",
-        _mask_quoted_spans(out),
+        mask(out),
         re.IGNORECASE | re.DOTALL,
     )
     if m:
@@ -10956,6 +10752,26 @@ _PW_CLAUSE_RE = re.compile(
 )
 
 
+def _predicate_end(sql: str, masked: str, i: int) -> tuple[int, bool]:
+    """``(end, is_where)`` of the predicate starting at ``sql[i]``:
+    the ``)`` closing its enclosing group, or the next depth-0 clause
+    keyword after whitespace (``is_where`` when that is WHERE)."""
+    depth = 0
+    for j in range(i, len(sql)):
+        c = masked[j]
+        if c == "(":
+            depth += 1
+        elif c == ")":
+            if depth == 0:
+                return j, False
+            depth -= 1
+        elif depth == 0 and (j == 0 or sql[j - 1].isspace()):
+            mm = _PW_CLAUSE_RE.match(masked, j)
+            if mm:
+                return j, mm.group(1).upper() == "WHERE"
+    return len(sql), False
+
+
 def _rewrite_prewhere(sql: str) -> str:
     """``PREWHERE p [WHERE w]`` → ``WHERE (p) AND (w)`` — PREWHERE is
     a storage-read hint with WHERE semantics, and CH allows BOTH
@@ -10966,34 +10782,11 @@ def _rewrite_prewhere(sql: str) -> str:
     out = sql
     while True:
         # masked locate: 'PREWHERE x' inside a literal is data
-        m = re.search(r"\bPREWHERE\b", _mask_quoted_spans(out),
-                      re.IGNORECASE)
+        masked = mask(out)
+        m = re.search(r"\bPREWHERE\b", masked, re.IGNORECASE)
         if not m:
             return out
-        i, n = m.end(), len(out)
-        quote: str | None = None
-        depth = 0
-        end, merge = n, False
-        while i < n:
-            c = out[i]
-            if quote:
-                quote = None if c == quote else quote
-            elif c in "'\"":
-                quote = c
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                if depth == 0:
-                    end = i
-                    break
-                depth -= 1
-            elif depth == 0 and out[i - 1].isspace():
-                mm = _PW_CLAUSE_RE.match(out, i)
-                if mm:
-                    end = i
-                    merge = mm.group(1).upper() == "WHERE"
-                    break
-            i += 1
+        end, merge = _predicate_end(out, masked, m.end())
         pred = out[m.end():end].strip()
         if merge:
             after = re.sub(
@@ -11001,29 +10794,8 @@ def _rewrite_prewhere(sql: str) -> str:
             )
             # Parenthesize the WHERE predicate too: with a top-level
             # OR in w, `(p) AND w` would regroup as ((p) AND x) OR y.
-            # Same quote/paren/clause-keyword walk finds w's end.
-            j, nn = 0, len(after)
-            wq: str | None = None
-            wdepth = 0
-            wend = nn
-            while j < nn:
-                c = after[j]
-                if wq:
-                    wq = None if c == wq else wq
-                elif c in "'\"":
-                    wq = c
-                elif c == "(":
-                    wdepth += 1
-                elif c == ")":
-                    if wdepth == 0:
-                        wend = j
-                        break
-                    wdepth -= 1
-                elif wdepth == 0 and (j == 0 or after[j - 1].isspace()):
-                    if _PW_CLAUSE_RE.match(after, j):
-                        wend = j
-                        break
-                j += 1
+            # Same paren/clause-keyword walk finds w's end.
+            wend, _ = _predicate_end(after, mask(after), 0)
             w = after[:wend].strip()
             out = (
                 out[:m.start()]
@@ -11301,19 +11073,7 @@ def _rewrite_parametric(sql: str) -> str:
                     "approx_top_sum(N)(column, weight) takes one "
                     "parameter"
                 )
-            depth, i, quote = 1, end + 1, None
-            while i < len(out) and depth > 0:
-                c = out[i]
-                if quote:
-                    if c == quote:
-                        quote = None
-                elif c in "'\"":
-                    quote = c
-                elif c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                i += 1
+            i = _group_end(out, end)
             args = split_top_level(out[end + 1:i - 1])
             if len(args) != 2:
                 raise ValueError(
@@ -11505,18 +11265,7 @@ def _rewrite_parametric(sql: str) -> str:
                 # parametric one in the same query
                 pos = end
                 continue
-            j, depth, quote = end + span_m.end(), 1, None
-            while j < len(out) and depth:
-                c = out[j]
-                if quote:
-                    quote = None if c == quote else quote
-                elif c in "'\"":
-                    quote = c
-                elif c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                j += 1
+            j = _group_end(out, end + span_m.end() - 1)
             real = split_top_level(out[end + span_m.end():j - 1])
             if j < len(out) and out[j] == "(":
                 # name(a)(b)(c): a THIRD paren group would splice into
@@ -11592,59 +11341,13 @@ def _rewrite_parametric(sql: str) -> str:
             start, end, params = call
             if end >= len(out) or out[end] != "(":
                 break  # not the parametric form; leave it
-            depth, i = 1, end + 1
-            while i < len(out) and depth > 0:
-                if out[i] == "(":
-                    depth += 1
-                elif out[i] == ")":
-                    depth -= 1
-                i += 1
+            i = _group_end(out, end)
             col = out[end + 1:i - 1]
             levels = ", ".join(params)
             if len(params) > 1 or ch.startswith("quantiles"):
                 levels = f"array({levels})"
             out = out[:start] + f"{sp}({col}, {levels})" + out[i:]
     return out
-
-
-def _mask_quoted_spans(sql: str) -> str:
-    """Blank out string-literal AND quoted-identifier contents (keeps
-    offsets) so scans over the SQL text can't trip on quoted data
-    like '(?1)(?2)'. Backtick spans are masked too (round 13): a
-    column named `` `GROUP BY x WITH TOTALS` `` is an identifier,
-    not a clause — every masked locator must skip it. Backslash is
-    an escape inside '/" only; inside backticks it is literal."""
-    masked = []
-    quote: str | None = None
-    skip = False
-    for c in sql:
-        if quote:
-            masked.append(" ")
-            if skip:
-                skip = False
-            elif c == "\\" and quote != "`":
-                skip = True  # \' stays inside the literal
-            elif c == quote:
-                quote = None
-        elif c in "'\"`":
-            quote = c
-            masked.append(" ")
-        else:
-            masked.append(c)
-    return "".join(masked)
-
-
-# The statement-router mask (engine.py matches router regexes on a
-# masked copy and re-slices groups from the raw text): blanks
-# single-quoted literal CONTENT only, keeps delimiters and
-# identifier-quoting spans, offsets preserved. Canonical
-# implementation lives in schema.py (the schema parsers need it and
-# transpile imports schema, not the reverse); re-exported here for
-# the engine and tests.
-from bighouse_spark.dialect.schema import (  # noqa: E402,F401
-    _mask_string_literals,
-    split_top_level,
-)
 
 
 def _bare_parametric_guard(sql: str) -> None:
@@ -11660,7 +11363,7 @@ def _bare_parametric_guard(sql: str) -> None:
     ]
     if not hit:
         return
-    s = _mask_quoted_spans(sql)
+    s = mask(sql)
     for n in hit:
         if re.search(rf"(?<![\w.]){re.escape(n)}\s*\(", s):
             raise ValueError(
@@ -11678,7 +11381,7 @@ def _unknown_parametric_guard(sql: str) -> None:
     guided error instead, naming the head. String literals are
     masked first so pattern arguments like '(?1)(?2)' can't trip
     the scan."""
-    s = _mask_quoted_spans(sql)
+    s = mask(sql)
     # SQL keywords can legitimately precede two adjacent paren groups
     # (``WITH t AS (SELECT 1) (SELECT * FROM t)``, ``x IN (...) (...)``
     # inside a larger expression) — they are never parametric heads.
@@ -11731,37 +11434,30 @@ def _rewrite_array_literals(sql: str) -> str:
         "not", "by", "on", "as", "return", "case", "having", "union",
         "all", "distinct", "between", "from", "end", "is", "like",
     }
-    out: list[str] = []
+    masked = mask(sql)
+    value_ends = {b - 1 for _, b in spans(sql, QUOTES)}
+    out = list(sql)
     stack: list[bool] = []  # True = converted to array(
-    quote = None
     prev_sig = ""  # last non-whitespace char
     prev_raw = ""  # last char, including whitespace
     word: list[str] = []  # the identifier token ending at prev_sig
-    for c in sql:
-        if quote:
-            out.append(c)
-            if c == quote:
-                quote = None
-            prev_raw = c
-            continue
-        if c in "'\"`":
-            quote = c
-            out.append(c)
-        elif c == "[":
+    for i, c in enumerate(masked):
+        if i in value_ends:
+            c = ")"  # a quoted span ends a value, like ')'
+        if c == "[":
             is_subscript = bool(prev_sig) and (
-                prev_sig in ")]'\"`"
+                prev_sig in ")]"
                 or (
                     (prev_sig.isalnum() or prev_sig == "_")
                     and "".join(word).lower() not in keywords
                 )
             )
             stack.append(not is_subscript)
-            out.append(c if is_subscript else "array(")
+            if not is_subscript:
+                out[i] = "array("
         elif c == "]":
-            converted = stack.pop() if stack else False
-            out.append(")" if converted else c)
-        else:
-            out.append(c)
+            if stack.pop() if stack else False:
+                out[i] = ")"
         if c.isalnum() or c == "_":
             word = word + [c] if (prev_raw.isalnum() or prev_raw == "_") else [c]
         elif not c.isspace():
@@ -11781,80 +11477,59 @@ def _rewrite_subscripts(sql: str) -> str:
     out-of-range / missing map key (CH returns the type default
     there — NULL is the honest Spark spelling of "no such element").
     """
-    def _ident_walk_back(s: str, k: int) -> int:
-        # identifier walk that steps over backtick-quoted segments
-        # (`tbl`.`col`) as well as plain name characters
-        while k >= 0:
-            if s[k] == "`":
-                k -= 1
-                while k >= 0 and s[k] != "`":
-                    k -= 1
-                k -= 1
-            elif s[k].isalnum() or s[k] in "_.":
-                k -= 1
-            else:
-                break
-        return k
-
     while True:
-        # Forward scan for the first subscript '[' outside strings
-        # and backtick identifiers (round 13: `x[1]` as an IDENTIFIER
-        # must keep its spelling; `x`[1] IS a subscript).
-        quote = None
-        pos = -1
-        for i, c in enumerate(sql):
-            if quote:
-                if c == quote:
-                    quote = None
-                continue
-            if c in "'\"`":
-                quote = c
-            elif c == "[":
-                prev = sql[:i].rstrip()
-                if prev and (prev[-1] in ")]`" or prev[-1].isalnum()
-                             or prev[-1] == "_"):
-                    pos = i
+        # First subscript '[' outside quoted spans (round 13: `x[1]`
+        # as an IDENTIFIER keeps its spelling; `x`[1] IS a subscript).
+        masked = mask(sql)
+        idents = {b - 1: a for a, b in spans(sql, "`")}
+
+        def ident_walk_back(k: int) -> int:
+            # steps over backtick-quoted segments (`tbl`.`col`) as
+            # well as plain name characters
+            while k >= 0:
+                if k in idents:
+                    k = idents[k] - 1
+                elif masked[k].isalnum() or masked[k] in "_.":
+                    k -= 1
+                else:
                     break
+            return k
+
+        pos = -1
+        for m in re.finditer(r"\[", masked):
+            k = len(sql[:m.start()].rstrip()) - 1
+            if k >= 0 and (k in idents or masked[k] in ")]"
+                           or masked[k].isalnum() or masked[k] == "_"):
+                pos = m.start()
+                break
         if pos < 0:
             return sql
         # Matching ']' (subscript indexes contain no brackets after
-        # literal conversion, but track strings + parens anyway).
-        depth, quote, end = 1, None, -1
-        for j in range(pos + 1, len(sql)):
-            c = sql[j]
-            if quote:
-                if c == quote:
-                    quote = None
-                continue
-            if c in "'\"`":
-                quote = c
-            elif c in "([":
-                depth += 1
-            elif c in ")]":
-                depth -= 1
-                if depth == 0:
-                    end = j
-                    break
+        # literal conversion, but track parens anyway).
+        depth, end = 1, -1
+        for b in re.finditer(r"[()\[\]]", masked[pos + 1:]):
+            depth += 1 if b.group() in "([" else -1
+            if depth == 0:
+                end = pos + 1 + b.start()
+                break
         if end < 0:
             return sql  # unbalanced — leave for Spark's parser
         # Backward walk for the base expression start.
         k = pos - 1
         while k >= 0 and sql[k].isspace():
             k -= 1
-        if sql[k] in ")]":
-            closer, opener = sql[k], "(" if sql[k] == ")" else "["
+        if masked[k] in ")]":
+            closer, opener = masked[k], "(" if masked[k] == ")" else "["
             d = 1
             k -= 1
             while k >= 0 and d:
-                if sql[k] == closer:
+                if masked[k] == closer:
                     d += 1
-                elif sql[k] == opener:
+                elif masked[k] == opener:
                     d -= 1
                 k -= 1
-            # function name / identifier preceding the paren group
-            k = _ident_walk_back(sql, k)
-        else:
-            k = _ident_walk_back(sql, k)
+        # the identifier before it (a call's name, for a paren group)
+        k = ident_walk_back(k)
         start = k + 1
         base, idx = sql[start:pos], sql[pos + 1:end]
         sql = (
@@ -11983,7 +11658,7 @@ def _rewrite_contextual(sql: str) -> str:
         qm = _QUANTIFIED_CMP_RE.search(out, _qpos)
         if qm is None:
             break
-        if _inside_string_literal(out, qm.start()):
+        if in_span(out, qm.start()):
             _qpos = qm.end()
             continue
         op, quant = qm.group(1), qm.group(2).upper()
@@ -12101,32 +11776,10 @@ def _rewrite_contextual(sql: str) -> str:
     return out
 
 
-def _inside_string_literal(s: str, pos: int) -> bool:
-    """True when ``pos`` falls inside a single-quoted SQL string
-    ('' and backslash escapes honored) — the guard every textual
-    rewrite pass needs before touching a match."""
-    in_q = False
-    i = 0
-    while i < pos:
-        c = s[i]
-        if in_q:
-            if c == "\\":
-                i += 2
-                continue
-            if c == "'":
-                if i + 1 < len(s) and s[i + 1] == "'":
-                    i += 2
-                    continue
-                in_q = False
-        elif c == "'":
-            in_q = True
-        i += 1
-    return in_q
-
-
 _QUANTIFIED_CMP_RE = re.compile(
     r"(=|!=|<>|>=|<=|>|<)\s*(ANY|ALL|SOME)\s*\(", re.IGNORECASE
 )
+_CAST_AS_SCAN = re.compile(r"[()\[\]]|\s+AS\s+", re.IGNORECASE)
 _COLONCOLON_TYPE_RE = re.compile(
     r"\s*([A-Za-z_][A-Za-z0-9_]*(\([^()]*\))?)"
 )
@@ -12156,27 +11809,16 @@ def _rewrite_cast_types(sql: str) -> str:
             body = args[0]
             # Rightmost top-level `AS` (any whitespace around it)
             # splits expr from the type.
-            depth, quote = 0, None
-            as_span = None
-            i = 0
-            while i < len(body):
-                c = body[i]
-                if quote:
-                    if c == quote:
-                        quote = None
-                elif c in "'\"":
-                    quote = c
-                elif c in "([":
+            depth, as_span = 0, None
+            for t in _CAST_AS_SCAN.finditer(body):
+                if in_span(body, t.start()):
+                    continue
+                if t.group() in "([":
                     depth += 1
-                elif c in ")]":
+                elif t.group() in ")]":
                     depth -= 1
-                elif depth == 0 and c.isspace():
-                    m_as = re.match(r"\s+AS\s+", body[i:], re.IGNORECASE)
-                    if m_as:
-                        as_span = (i, i + m_as.end())
-                        i += m_as.end()
-                        continue
-                i += 1
+                elif depth == 0:
+                    as_span = t.span()
             if as_span is None:
                 continue
             expr, ty = body[: as_span[0]], body[as_span[1] :].strip()
@@ -12198,36 +11840,18 @@ def _rewrite_cast_types(sql: str) -> str:
             out = out[:start] + f"{kw}({expr} AS {spark_ty})" + out[end:]
     # expr::Type postfix casts.
     if "::" in out:
-        res, i, quote = [], 0, None
-        while i < len(out):
-            c = out[i]
-            if quote:
-                res.append(c)
-                if c == quote:
-                    quote = None
-                i += 1
-            elif c in "'\"`":
-                quote = c
-                res.append(c)
-                i += 1
-            elif c == ":" and out[i : i + 2] == "::":
-                m = _COLONCOLON_TYPE_RE.match(out, i + 2)
-                if m:
-                    try:
-                        spark_ty = ch_type_to_spark(
-                            m.group(1)
-                        ).simpleString()
-                        res.append(f"::{spark_ty}")
-                        i = m.end()
-                        continue
-                    except Exception:
-                        pass
-                res.append("::")
-                i += 2
-            else:
-                res.append(c)
-                i += 1
-        out = "".join(res)
+        res, last = [], 0
+        for cc in re.finditer("::", mask(out)):
+            m = _COLONCOLON_TYPE_RE.match(out, cc.end())
+            if cc.start() < last or not m:
+                continue
+            try:
+                spark_ty = ch_type_to_spark(m.group(1)).simpleString()
+            except Exception:
+                continue
+            res += (out[last:cc.start()], f"::{spark_ty}")
+            last = m.end()
+        out = "".join(res) + out[last:]
     return out
 
 
@@ -12272,20 +11896,7 @@ def _rewrite_cityhash_exact(sql: str, exact: bool = False) -> str:
             if m_over:
                 j = end + m_over.end()
                 if j < len(out) and out[j] == "(":
-                    depth, i, quote = 1, j + 1, None
-                    while i < len(out) and depth > 0:
-                        c = out[i]
-                        if quote:
-                            if c == quote:
-                                quote = None
-                        elif c in "'\"":
-                            quote = c
-                        elif c == "(":
-                            depth += 1
-                        elif c == ")":
-                            depth -= 1
-                        i += 1
-                    expr_end = i
+                    expr_end = _group_end(out, j)
                 else:
                     m_name = re.match(r"[A-Za-z_]\w*", out[j:])
                     if m_name:
@@ -12370,21 +11981,9 @@ def _rewrite_in_frame(sql: str) -> str:
                 )
                 continue
             spec_start = end + m.end()
-            # Quote-aware paren scan: string literals in the window
+            # Span-aware paren scan: string literals in the window
             # spec may contain parens.
-            depth, i, quote = 1, spec_start, None
-            while i < len(out) and depth > 0:
-                c = out[i]
-                if quote:
-                    if c == quote:
-                        quote = None
-                elif c in "'\"":
-                    quote = c
-                elif c == "(":
-                    depth += 1
-                elif c == ")":
-                    depth -= 1
-                i += 1
+            i = _group_end(out, spec_start - 1)
             spec = out[spec_start : i - 1]
             stripped = _IN_FRAME_UNBOUNDED_RE.sub("", spec)
             if ch == "lagInFrame":
@@ -12566,7 +12165,7 @@ def _rewrite_functions(sql: str, exact_cityhash: bool = False) -> str:
         out,
     )
     leftover = re.search(r"\bCOLLATE\s+['\"]", out, re.IGNORECASE)
-    if leftover and not _inside_string_literal(out, leftover.start()):
+    if leftover and not in_span(out, leftover.start()):
         raise ValueError(
             "COLLATE after this expression shape is not rewritten; "
             "spell it directly as collate(<expr>, '<lang>') in the "
@@ -12750,7 +12349,7 @@ _QUALIFY_RE = re.compile(
 
 def _rewrite_qualify(sql: str) -> str:
     # masked gate + locate: 'QUALIFY rn = 1' in a literal is data
-    masked = _mask_quoted_spans(sql)
+    masked = mask(sql)
     if not re.search(r"\bQUALIFY\b", masked, re.IGNORECASE):
         return sql
     m = _QUALIFY_RE.search(masked)
@@ -12778,7 +12377,7 @@ _LIMIT_TIES_RE = re.compile(
 
 def _rewrite_limit_ties(sql: str) -> str:
     # masked gate + locate: 'LIMIT 3 WITH TIES' in a literal is data
-    masked = _mask_quoted_spans(sql)
+    masked = mask(sql)
     if not re.search(r"\bWITH\s+TIES\b", masked, re.IGNORECASE):
         return sql
     m = _LIMIT_TIES_RE.search(masked)
@@ -12829,7 +12428,7 @@ def _detach_interpolate(sql: str) -> tuple[str, list[tuple[str, str]] | None]:
     last = None
     for cand in re.finditer(r"\bINTERPOLATE\b", sql, re.IGNORECASE):
         last = cand
-    if last is None or _inside_string_literal(sql, last.start()):
+    if last is None or in_span(sql, last.start()):
         return sql, None
     rest = sql[last.end():]
     if not rest.strip():
@@ -12873,7 +12472,7 @@ def _rewrite_with_fill(
     sql: str, spark: SparkSession | None, views: list[str]
 ) -> str:
     # masked gate: 'WITH FILL FROM 1' inside a literal is data
-    if not re.search(r"\bWITH\s+FILL\b", _mask_quoted_spans(sql),
+    if not re.search(r"\bWITH\s+FILL\b", mask(sql),
                      re.IGNORECASE):
         # A bare INTERPOLATE word (a literal, a column named
         # interpolate) is NOT a clause — pass through untouched; a
@@ -13152,27 +12751,12 @@ def _alias_protected_spans(sql: str, alias: str) -> list[tuple[int, int]]:
         rf"\b(?:FROM|JOIN)\s+[\w.]+\s+(?:AS\s+)?{re.escape(alias)}\b",
         re.IGNORECASE,
     )
-    spans: list[tuple[int, int]] = []
-    for m in re.finditer(r"\(\s*SELECT\b", sql, re.IGNORECASE):
-        depth, i, quote = 0, m.start(), None
-        while i < len(sql):
-            c = sql[i]
-            if quote:
-                if c == quote:
-                    quote = None
-            elif c in "'\"":
-                quote = c
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-                if depth == 0:
-                    break
-            i += 1
-        span = (m.start(), i + 1)
+    found: list[tuple[int, int]] = []
+    for m in re.finditer(r"\(\s*SELECT\b", mask(sql), re.IGNORECASE):
+        span = (m.start(), _group_end(sql, m.start()))
         if rebind.search(sql[span[0]: span[1]]):
-            spans.append(span)
-    return spans
+            found.append(span)
+    return found
 
 
 def _sub_alias_refs(sql: str, alias: str, col_map) -> str:
@@ -13180,30 +12764,13 @@ def _sub_alias_refs(sql: str, alias: str, col_map) -> str:
     literals and outside subqueries that rebind ``alias``."""
     protected = _alias_protected_spans(sql, alias)
     pat = re.compile(rf"\b{re.escape(alias)}\.(\w+)")
-    pieces: list[str] = []
-    i, quote = 0, None
-    last = 0
-    while i < len(sql):
-        c = sql[i]
-        if quote:
-            if c == quote:
-                quote = None
-            i += 1
-            continue
-        if c in "'\"":
-            quote = c
-            i += 1
-            continue
-        m = pat.match(sql, i)
-        if m and not any(s <= i < e for s, e in protected):
-            pieces.append(sql[last: i])
-            pieces.append(col_map(m.group(1)))
-            i = m.end()
-            last = i
-        else:
-            i += 1
-    pieces.append(sql[last:])
-    return "".join(pieces)
+
+    def sub(m: re.Match) -> str:
+        if any(s <= m.start() < e for s, e in protected):
+            return m.group(0)
+        return col_map(m.group(1))
+
+    return _sub_outside_quotes(pat, sub, sql)
 
 
 # Process-wide monotonic counter for table-function view names.
@@ -13319,67 +12886,23 @@ def _find_call(
     ``pos`` lets context-sensitive rewrites skip an occurrence they
     decided to leave alone without rescanning it forever.
 
-    Quote-shielded (round 13): a match starting inside a string /
-    backtick / double-quote span is SQL-shaped data, not a call —
+    Quote-shielded (round 13): a match starting inside a quoted span
+    or a comment is SQL-shaped data, not a call —
     ``SELECT 'toDate(...)'`` keeps its spelling. This is the shared
     choke point for every _CAST_FUNCS/_WRAP_FUNCS/builder rewrite,
     so shielding here covers the whole rename surface at once."""
     pat = _call_pattern(fn)
-    spans: list[tuple[int, int]] | None = None
     while True:
         m = pat.search(sql, pos)
         if not m:
             return None
-        if spans is None:  # lazy: most calls never match in-quote
-            spans = [q.span() for q in _QUOTED_SPAN.finditer(sql)]
-        s = m.start()
-        if any(a <= s < b for a, b in spans):
-            pos = s + 1
-            continue
-        break
-    i, depth, brackets, quote = m.end(), 1, 0, None
-    args, cur = [], []
-    while i < len(sql) and depth > 0:
-        c = sql[i]
-        if quote:
-            cur.append(c)
-            if quote == "'" and c == "\\":
-                # CH backslash escape: the next char stays inside
-                # the literal (a \' used to CLOSE the quote here and
-                # a following ')' miscounted as the call's close —
-                # "unbalanced parens" on valid VALUES, round 14)
-                i += 1
-                if i < len(sql):
-                    cur.append(sql[i])
-            elif c == quote:
-                quote = None
-        elif c in "'\"`":
-            quote = c
-            cur.append(c)
-        elif c == "(":
-            depth += 1
-            cur.append(c)
-        elif c == ")":
-            depth -= 1
-            if depth > 0:
-                cur.append(c)
-        elif c == "[":
-            brackets += 1
-            cur.append(c)
-        elif c == "]":
-            brackets -= 1
-            cur.append(c)
-        elif c == "," and depth == 1 and brackets == 0:
-            args.append("".join(cur).strip())
-            cur = []
-        else:
-            cur.append(c)
-        i += 1
-    if depth != 0:
+        if not in_span(sql, m.start()):  # spans only on a name match
+            break
+        pos = m.start() + 1
+    close = close_paren(sql, m.end() - 1)
+    if close is None:
         raise ValueError(f"unbalanced parens in {fn}() call")
-    if cur:
-        args.append("".join(cur).strip())
-    return m.start(), i, args
+    return m.start(), close + 1, split_top_level(sql[m.end():close])
 
 
 def _unquote(s: str) -> str:

@@ -31,16 +31,18 @@ from pyspark.sql import DataFrame, SparkSession
 
 from bighouse_spark.dialect.transpile import (
     TranspileResult,
-    _mask_string_literals,
     _sub_outside_quotes,
     release_spool_pins,
     set_current_query_id,
-    split_top_level,
     transpile,
 )
+from bighouse_spark.dialect.lexer import close_paren, mask, split_top_level
 from bighouse_spark.operators.caching import release_tracked
 from bighouse_spark.session import get_spark
 from bighouse_spark.session_settings import parse_set_statement
+
+# Select-list scan of ``_select_alias_map``, run on a masked copy.
+_SELECT_LIST_SCAN = re.compile(r"[()\[\],]|(?<![\w])FROM\b", re.IGNORECASE)
 
 # Per-thread statement state for the lifecycle (BigHouseEngine._run):
 # ``depth`` counts nested statements (engine statements re-enter
@@ -306,6 +308,8 @@ class BigHouseEngine:
         self._cancelled: dict[str, Exception] = {}  # qid -> its error
         self._committed: set[str] = set()
         self._inflight_lock = threading.Lock()
+        # One writer at a time per attached table (_write_lock).
+        self._write_locks: dict[str, threading.RLock] = {}
         # Monotonic count of cancellations (KILL QUERY + watchdog),
         # surfaced by the Prometheus /metrics endpoint.
         self.kill_count = 0
@@ -925,7 +929,7 @@ class BigHouseEngine:
     })
 
     # Statement patterns. Every one matches the statement's
-    # ``_mask_string_literals`` copy (``_route``); groups that may hold
+    # ``mask(..., strings_only=True)`` copy (``_route``); groups that may hold
     # literal text are re-sliced from the raw statement by span
     # (``_raw_groups``).
     _INTO_OUTFILE_RE = re.compile(
@@ -1201,7 +1205,7 @@ class BigHouseEngine:
     @staticmethod
     def _raw_groups(m: "re.Match", raw: str) -> tuple:
         """Re-slice every group of a masked-text match from the RAW
-        statement. ``_mask_string_literals`` preserves offsets, so a
+        statement. ``mask(..., strings_only=True)`` preserves offsets, so a
         group whose content the mask blanked (a quoted partition id,
         an assignment expression holding a literal) is recovered
         intact by span — the r13 house pattern (locate masked,
@@ -1218,15 +1222,9 @@ class BigHouseEngine:
         backticked column name may itself contain ``=``
         (``UPDATE `a=b` = 5``), which the old first-raw-``=``
         partition split inside (round-14 ledger corner)."""
-        quote = None
-        for i, c in enumerate(part):
-            if quote:
-                if c == quote:
-                    quote = None
-            elif c in "'\"`":
-                quote = c
-            elif c == "=":
-                return part[:i], part[i + 1:]
+        i = mask(part).find("=")
+        if i >= 0:
+            return part[:i], part[i + 1:]
         raise ValueError(
             f"ALTER TABLE UPDATE: malformed assignment {part!r} "
             "(expected <column> = <expression>)"
@@ -1904,27 +1902,29 @@ class BigHouseEngine:
         table root (a failed write must never leave a ``k=1.<tag>-xx``
         dir that partition discovery parses as a bogus partition
         value), swap it into partition dir ``subdir`` or, when None,
-        the whole table, re-attach, rebuild dependent MVs. Returns the
-        table path."""
+        the whole table, re-attach, rebuild dependent MVs, all under
+        the table's write lock. Returns the table path."""
         import shutil
         import uuid
 
         path, fmt, schema = self._attached[name]
         local = path[7:] if path.startswith("file://") else path
         tmp = f"{local}.{tag}-{uuid.uuid4().hex[:8]}"
-        try:
-            self._table_writer(
-                out, name, fmt, "overwrite", partition_in_path=bool(subdir)
-            ).save(tmp)
-        except BaseException:
-            shutil.rmtree(tmp, ignore_errors=True)
-            raise
-        self._commit()
-        self._swap_in(subdir or local, tmp, local,
-                      preserve_detached=not subdir)
-        self.clear_cache()
-        self.attach_table(name, path, fmt=fmt, schema=schema)
-        self._refresh_dependent_mvs(name, rebuild=True)
+        with self._write_lock(name):
+            try:
+                self._table_writer(
+                    out, name, fmt, "overwrite",
+                    partition_in_path=bool(subdir),
+                ).save(tmp)
+            except BaseException:
+                shutil.rmtree(tmp, ignore_errors=True)
+                raise
+            self._commit()
+            self._swap_in(subdir or local, tmp, local,
+                          preserve_detached=not subdir)
+            self.clear_cache()
+            self.attach_table(name, path, fmt=fmt, schema=schema)
+            self._refresh_dependent_mvs(name, rebuild=True)
         return path
 
     @staticmethod
@@ -1985,13 +1985,23 @@ class BigHouseEngine:
         semantics: an INSERT into the source table triggers the view's
         incremental refresh, which reads only the new files)."""
         path, fmt, schema = self._attached[name]
-        self._table_writer(aligned, name, fmt, "append").save(path)
-        self._commit()
-        self.clear_cache()
-        self.attach_table(name, path, fmt=fmt, schema=schema)
-        self._refresh_dependent_mvs(name, rebuild=False)
-        self._discard_if_null(name)
+        with self._write_lock(name):
+            self._table_writer(aligned, name, fmt, "append").save(path)
+            self._commit()
+            self.clear_cache()
+            self.attach_table(name, path, fmt=fmt, schema=schema)
+            self._refresh_dependent_mvs(name, rebuild=False)
+            self._discard_if_null(name)
         return _Logged(QueryResult(cols=["path"], rows=[[path]]), desc, -1)
+
+    def _write_lock(self, name: str) -> threading.RLock:
+        """The write lock of attached table ``name``, held from the
+        save through the re-attach (and the MV refreshes, whose locks
+        are only ever taken inside it). Two unlocked appends share
+        the output committer's ``<table>/_temporary/0`` directory, so
+        one job's commit deleted the other's task files: failed
+        INSERTs, or rows lost with no error."""
+        return self._write_locks.setdefault(name, threading.RLock())
 
     def _declared_ch_types(self, name: str, target) -> dict[str, str]:
         """Column → CH type spelling for binary payload decode: the
@@ -2205,32 +2215,22 @@ class BigHouseEngine:
         m = re.match(r"\s*SELECT\s+(?:DISTINCT\s+)?", sql, re.IGNORECASE)
         if not m:
             return {}
-        i, depth, quote = m.end(), 0, None
-        start, items = i, []
-        n = len(sql)
-        while i < n:
-            c = sql[i]
-            if quote:
-                if c == quote:
-                    quote = None
-            elif c in "'\"`":
-                quote = c
-            elif c in "([":
+        masked = mask(sql)
+        end = len(sql)
+        depth, start, items = 0, m.end(), []
+        for t in _SELECT_LIST_SCAN.finditer(masked, m.end()):
+            c = t.group()
+            if c in "([":
                 depth += 1
             elif c in ")]":
                 depth -= 1
             elif depth == 0:
-                if c == ",":
-                    items.append(sql[start:i])
-                    start = i + 1
-                elif (
-                    re.match(r"FROM\b", sql[i:], re.IGNORECASE)
-                    and (i == 0 or not (sql[i - 1].isalnum()
-                                        or sql[i - 1] in "_`\""))
-                ):
+                if c != ",":  # the top-level FROM
+                    end = t.start()
                     break
-            i += 1
-        items.append(sql[start:i])
+                items.append(sql[start:t.start()])
+                start = t.end()
+        items.append(sql[start:end])
         out: dict[str, str] = {}
         for item in items:
             am = re.search(r"\s+AS\s+[`\"]?(\w+)[`\"]?\s*$", item,
@@ -2250,7 +2250,7 @@ class BigHouseEngine:
         real source column always wins (no shadowing).
 
         The substitution is quote-masked and scope-restricted: alias
-        occurrences are located on a ``_mask_quoted_spans`` copy of
+        occurrences are located on a ``mask`` copy of
         the statement (a ``WHERE s LIKE 's%'`` literal keeps its
         spelling), only the OUTER query's WHERE clause is touched
         (the first WHERE at paren depth 0, up to the next top-level
@@ -2258,8 +2258,6 @@ class BigHouseEngine:
         rewritten — a correlated subquery whose own column shares
         the alias name is left for Spark to re-report."""
         from pyspark.errors import AnalysisException
-
-        from bighouse_spark.dialect.transpile import _mask_quoted_spans
 
         _CLAUSE_END = re.compile(
             r"\b(GROUP\s+BY|HAVING|QUALIFY|WINDOW|ORDER\s+BY|LIMIT|"
@@ -2281,7 +2279,7 @@ class BigHouseEngine:
                     raise
                 name = nm.group(1)
                 # offsets align: the mask blanks literal CONTENT only
-                masked = _mask_quoted_spans(current)
+                masked = mask(current)
                 # alias map of the OUTER select: skip a leading WITH
                 # clause (CTE bodies are depth>0) to the first
                 # top-level SELECT
@@ -2495,7 +2493,7 @@ class BigHouseEngine:
         row-scoped default computation. A default reading a column
         declared AFTER it fails loudly with Spark's unresolved-column
         error (lateral aliases resolve left-to-right only)."""
-        masked = _mask_string_literals(body)
+        masked = mask(body, strings_only=True)
         if not re.search(r"\bDEFAULT\b", masked, re.IGNORECASE):
             return body
         if cols:
@@ -2886,7 +2884,7 @@ class BigHouseEngine:
                 else:
                     repl = sub
             out = out[:start] + repl + out[end:]
-            masked = _mask_string_literals(out)
+            masked = mask(out, strings_only=True)
         return out
 
     def _optimize_partition_dir(
@@ -3418,14 +3416,14 @@ class BigHouseEngine:
 
     def _route(self, stmt: _Statement, stream_to=None) -> Any:
         """Route ``stmt`` to its handler. The statement is masked once
-        (``_mask_string_literals``); clauses that apply to any
+        (``mask(..., strings_only=True)``); clauses that apply to any
         statement — query parameters, ``INTO OUTFILE`` — run first,
         then the leading keyword picks one router from ``_ROUTES``.
         Routers match only the masked copy and re-slice raw text by
         span (``_raw_groups``); a routing rewrite re-binds
         ``stmt.request`` (so the log records the text that ran) and
         re-masks."""
-        masked = _mask_string_literals(stmt.request.query)
+        masked = mask(stmt.request.query, strings_only=True)
         if stmt.request.params or "{" in stmt.request.query:
             stmt.kind = self._route_of(masked)[1]  # if binding fails
             masked = self._bind_params(stmt, masked)
@@ -3507,7 +3505,7 @@ class BigHouseEngine:
             request,
             query=substitute_parameters(head, request.params) + payload,
         )
-        return _mask_string_literals(stmt.request.query)
+        return mask(stmt.request.query, strings_only=True)
 
     def _into_outfile(self, stmt: _Statement, m_of: "re.Match") -> _Logged:
         """SELECT ... INTO OUTFILE '<path>' [FORMAT <fmt>]: run the
@@ -3630,7 +3628,7 @@ class BigHouseEngine:
                 request, query=f"INSERT INTO {name} {cols} {select_rw}"
             )
             return self._route_insert(
-                stmt, _mask_string_literals(stmt.request.query), stream_to
+                stmt, mask(stmt.request.query, strings_only=True), stream_to
             )
         finally:
             self.spark.catalog.dropTempView(view)
@@ -4051,7 +4049,7 @@ class BigHouseEngine:
         ends each message."""
         ref = re.compile(rf"\b{re.escape(col)}\b")
         ttl = self._ttl.get(name)
-        if ttl and ref.search(_mask_string_literals(ttl)):
+        if ttl and ref.search(mask(ttl, strings_only=True)):
             raise ValueError(
                 f"{op} COLUMN {col}: column is referenced by the table "
                 f"TTL ({ttl}) — REMOVE TTL or MODIFY TTL first{tail}"
@@ -4059,13 +4057,13 @@ class BigHouseEngine:
         for iname, (iexpr, _ity) in (
             self._skip_indices.get(name) or {}
         ).items():
-            if ref.search(_mask_string_literals(iexpr)):
+            if ref.search(mask(iexpr, strings_only=True)):
                 raise ValueError(
                     f"{op} COLUMN {col}: column is used by index "
                     f"{iname} — DROP INDEX {iname} first{tail}"
                 )
         for ocol, dexpr in (self._column_defaults.get(name) or {}).items():
-            if ocol != col and ref.search(_mask_string_literals(dexpr)):
+            if ocol != col and ref.search(mask(dexpr, strings_only=True)):
                 raise ValueError(
                     f"{op} COLUMN {col}: column is referenced by "
                     f"{ocol}'s DEFAULT ({dexpr}) — change that default "
@@ -4474,7 +4472,7 @@ class BigHouseEngine:
             ),
         )
         return self._route_alter(
-            stmt, _mask_string_literals(stmt.request.query), None
+            stmt, mask(stmt.request.query, strings_only=True), None
         )
 
     def _alter_delete(self, stmt, name, m, masked) -> _Logged:
@@ -4661,22 +4659,13 @@ class BigHouseEngine:
         if_not_exists, name = m_ct.groups()
         # balanced-paren scan for the column list (types like
         # Decimal(20, 4) nest; a regex can't balance them)
-        i, depth, quote = m_ct.end(), 1, None
         q = stmt.request.query
-        while i < len(masked) and depth:
-            c = masked[i]
-            if quote:
-                quote = None if c == quote else quote
-            elif c in "'\"`":
-                quote = c
-            elif c == "(":
-                depth += 1
-            elif c == ")":
-                depth -= 1
-            i += 1
+        close = close_paren(q, m_ct.end() - 1)
+        i = len(q) + 1 if close is None else close + 1
         cols, tail = q[m_ct.end(): i - 1], q[i:]
         m_tail = (
-            None if depth else self._CREATE_TABLE_TAIL_RE.match(masked[i:])
+            None if close is None
+            else self._CREATE_TABLE_TAIL_RE.match(masked[i:])
         )
         if m_tail is None:
             raise ValueError(
@@ -5031,7 +5020,7 @@ class BigHouseEngine:
             return self._show_create_table(name)
         if rewrite is not None:
             stmt.request = replace(stmt.request, query=rewrite)
-            masked = _mask_string_literals(rewrite)
+            masked = mask(rewrite, strings_only=True)
         return self._route_query(stmt, masked, stream_to)
 
     # CH ops surface: SYSTEM ... maintenance statements map onto
@@ -5208,7 +5197,7 @@ class BigHouseEngine:
         if rewritten == stmt.request.query:
             return masked
         stmt.request = replace(stmt.request, query=rewritten)
-        return _mask_string_literals(rewritten)
+        return mask(rewritten, strings_only=True)
 
     def _bind_system_names(self, stmt: _Statement, masked: str) -> str:
         """CH's native dotted spelling for system tables: rewrite
@@ -5226,7 +5215,7 @@ class BigHouseEngine:
         rewritten = _sub_outside_quotes(
             r"\bsystem\.numbers(_mt)?\b", numbers_sub, stmt.request.query
         )
-        masked_rw = _mask_string_literals(rewritten)
+        masked_rw = mask(rewritten, strings_only=True)
         referenced = {
             "system_" + n
             for n in re.findall(r"\bsystem\.(\w+)", masked_rw)
@@ -5247,7 +5236,7 @@ class BigHouseEngine:
             r"\bsystem\.(\w+)", r"system_\1", rewritten
         )
         stmt.request = replace(stmt.request, query=rewritten)
-        return _mask_string_literals(rewritten)
+        return mask(rewritten, strings_only=True)
 
     def _route_query(self, stmt: _Statement, masked: str, stream_to):
         """The query path: transpile, then collect or stream."""
@@ -5467,7 +5456,7 @@ class BigHouseEngine:
         web-disk MergeTree form is refused with guidance: MergeTree
         part files belong to the delegated ClickHouse storage engine;
         this engine's shared storage is parquet/csv/json/orc."""
-        # m matched a _mask_string_literals copy — slice raw (the
+        # m matched a strings_only mask copy — slice raw (the
         # path/schema groups hold literal content the mask blanked)
         if_not_exists, name, rest = self._raw_groups(m, query)
         rest = (rest or "").strip()
@@ -5491,7 +5480,7 @@ class BigHouseEngine:
             return _Logged(
                 QueryResult(cols=["attached"], rows=[[name]]), "<attach>"
             )
-        m_from = self._ATTACH_FROM_RE.match(_mask_string_literals(rest))
+        m_from = self._ATTACH_FROM_RE.match(mask(rest, strings_only=True))
         if m_from is None:
             if re.search(
                 r"disk\s*\(\s*type\s*=\s*web", rest, re.IGNORECASE
@@ -5509,7 +5498,7 @@ class BigHouseEngine:
             )
         cols, path, fmt_name, tail = self._raw_groups(m_from, rest)
         m_tail = self._CREATE_TABLE_TAIL_RE.match(
-            _mask_string_literals(tail or "")
+            mask(tail or "", strings_only=True)
         )
         if m_tail is None:
             raise ValueError(

@@ -34,6 +34,7 @@ from __future__ import annotations
 import hashlib
 import hmac
 import os
+import re
 import socketserver
 import struct
 import threading
@@ -41,6 +42,7 @@ from datetime import date, datetime
 from decimal import Decimal
 from typing import Any
 
+from bighouse_spark.dialect.lexer import mask
 from bighouse_spark.engine import BigHouseEngine, QueryRequest
 from bighouse_spark.netutil import NoDelayMixin
 from bighouse_spark.session_settings import (
@@ -155,28 +157,11 @@ def _read_lenenc(buf: bytes, pos: int) -> tuple[int, int]:
 
 
 # -- prepared statements ---------------------------------------------
-# ``?`` placeholders live OUTSIDE string literals / quoted
-# identifiers; the scan respects '...', "..." and `...` quoting.
+# ``?`` placeholders live OUTSIDE string literals, quoted identifiers
+# and comments.
 
 def _placeholder_positions(sql: str) -> list[int]:
-    out, quote, i = [], None, 0
-    while i < len(sql):
-        c = sql[i]
-        if quote:
-            if c == quote:
-                # doubled quote inside a literal stays inside it
-                if i + 1 < len(sql) and sql[i + 1] == quote:
-                    i += 1
-                else:
-                    quote = None
-            elif c == "\\" and quote != "`":
-                i += 1
-        elif c in "'\"`":
-            quote = c
-        elif c == "?":
-            out.append(i)
-        i += 1
-    return out
+    return [m.start() for m in re.finditer(r"\?", mask(sql))]
 
 
 def _sql_literal(v: Any) -> str:

@@ -53,6 +53,7 @@ from datetime import date, datetime
 from decimal import Decimal
 from typing import Any
 
+from bighouse_spark.dialect.lexer import in_span
 from bighouse_spark.engine import BigHouseEngine, QueryRequest
 from bighouse_spark.netutil import NoDelayMixin
 from bighouse_spark.session_settings import (
@@ -165,37 +166,18 @@ def _pg_literal(v: str | None) -> str:
 def _substitute_params(sql: str, params: list) -> str:
     """Bind text-format params: ``$n`` → quoted literal (NULL for
     null). Token-exact (``$13`` never partially matches ``$1``),
-    quote-aware (``$n`` inside a SQL string literal is data, not a
-    parameter), and out-of-range tokens are left untouched so the
+    span-aware (``$n`` inside a string literal, quoted identifier
+    or comment is data, not a parameter), and out-of-range tokens are left untouched so the
     engine reports them. String literals are fine for numerics too —
     the engine's analyzer coerces them (ANSI implicit cast)."""
-    out: list[str] = []
-    i, n = 0, len(sql)
-    while i < n:
-        c = sql[i]
-        if c == "'":  # copy the string literal verbatim ('' escapes)
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(sql[i:j + 1])
-            i = j + 1
-            continue
-        if c == "$":
-            m = _PARAM_TOKEN_RE.match(sql, i)
-            if m:
-                idx = int(m.group(1))
-                if 1 <= idx <= len(params):
-                    out.append(_pg_literal(params[idx - 1]))
-                    i = m.end()
-                    continue
-        out.append(c)
-        i += 1
-    return "".join(out)
+
+    def bind(m: re.Match) -> str:
+        idx = int(m.group(1))
+        if in_span(sql, m.start()) or not 1 <= idx <= len(params):
+            return m.group(0)
+        return _pg_literal(params[idx - 1])
+
+    return _PARAM_TOKEN_RE.sub(bind, sql)
 
 
 def _msg(tag: bytes, payload: bytes) -> bytes:

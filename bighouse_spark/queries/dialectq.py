@@ -2748,7 +2748,7 @@ def dialect_literal_shield_roundtrip(spark, sf_dir):
 # text is clause/function/subscript-shaped must reach the result
 # schema verbatim — before r13, `PREWHERE x` was rewritten as the
 # clause and `x[1]` by the subscript pass (transpile
-# `_mask_quoted_spans` backtick masking). DuckDB spells the same
+# backtick masking, now `dialect.lexer.mask`). DuckDB spells the same
 # identifiers with ANSI double quotes; the driver compares column
 # NAMES, so a corrupted alias is a schema mismatch.
 @query(

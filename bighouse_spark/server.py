@@ -40,6 +40,7 @@ from decimal import Decimal
 from http.server import BaseHTTPRequestHandler, ThreadingHTTPServer
 from typing import Any
 
+from bighouse_spark.dialect.lexer import mask
 from bighouse_spark.engine import BigHouseEngine, QueryRequest
 from bighouse_spark.netutil import NoDelayMixin
 from bighouse_spark.session_settings import (
@@ -237,28 +238,17 @@ def _rewrite_names_outside_strings(sql: str, names: dict[str, str]) -> str:
         return sql
     out: list[str] = []
     i, n = 0, len(sql)
+    masked = mask(sql, strings_only=True)
     expect_table = False   # next identifier is a table reference
     in_from_list = False   # commas re-arm expect_table
     while i < n:
-        c = sql[i]
-        if c == "'":
-            j = i + 1
-            while j < n:
-                if sql[j] == "'":
-                    if j + 1 < n and sql[j + 1] == "'":
-                        j += 2
-                        continue
-                    break
-                j += 1
-            out.append(sql[i:j + 1])
-            i = j + 1
-            continue
+        c = masked[i]
         if c == "," and in_from_list:
             expect_table = True
             out.append(c)
             i += 1
             continue
-        m = _IDENT_RE.match(sql, i)
+        m = _IDENT_RE.match(masked, i)
         if m:
             word = m.group(0)
             upper = word.upper()
@@ -277,7 +267,7 @@ def _rewrite_names_outside_strings(sql: str, names: dict[str, str]) -> str:
                 out.append(word)
             i = m.end()
             continue
-        out.append(c)
+        out.append(sql[i])
         i += 1
     return "".join(out)
 

@@ -12,7 +12,7 @@ from __future__ import annotations
 
 import re
 
-from bighouse_spark.dialect.schema import split_top_level
+from bighouse_spark.dialect.lexer import mask, split_top_level
 
 SET_STMT_RE = re.compile(
     r"^\s*SET\s+(.+?)\s*;?\s*$", re.IGNORECASE | re.DOTALL
@@ -21,37 +21,16 @@ _SET_PAIR_RE = re.compile(
     r"^\s*([A-Za-z_][A-Za-z0-9_.]*)\s*(?:=|\s+TO\s+)\s*(.+?)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+_SETTINGS_WORD = re.compile(r"(?<!\w)SETTINGS(?!\w)", re.IGNORECASE)
 SELECTISH_RE = re.compile(r"^\s*(\(|SELECT\b|WITH\b)", re.IGNORECASE)
 
 
 def _find_trailing_settings(sql: str) -> int | None:
     """Index of the LAST word-bounded ``SETTINGS`` keyword that sits
-    OUTSIDE string literals/backticks, or None. A quote-aware scan —
+    OUTSIDE quoted spans and comments, or None —
     ``WHERE msg = 'see SETTINGS docs'`` has no clause."""
-    best = None
-    quote = None
-    i = 0
-    n = len(sql)
-    while i < n:
-        c = sql[i]
-        if quote:
-            if c == quote:
-                quote = None
-            elif c == "\\" and quote != "`":
-                i += 1
-        elif c in "'\"`":
-            quote = c
-        elif c in "Ss" and sql[i:i + 8].upper() == "SETTINGS":
-            before_ok = i == 0 or not (
-                sql[i - 1].isalnum() or sql[i - 1] == "_"
-            )
-            after = sql[i + 8: i + 9]
-            after_ok = after == "" or not (after.isalnum() or after == "_")
-            if before_ok and after_ok:
-                best = i
-            i += 7
-        i += 1
-    return best
+    found = list(_SETTINGS_WORD.finditer(mask(sql)))
+    return found[-1].start() if found else None
 
 
 def parse_set_statement(sql: str) -> dict[str, str] | None:

@@ -36,3 +36,30 @@ def test_cli_error_exit_code():
     )
     assert proc.returncode == 1
     assert "Error:" in proc.stderr.decode()
+
+
+def test_cli_splits_statements_by_the_ch_quote_rule(monkeypatch):
+    # `\'` stays inside the literal, so its `;` does not end the
+    # statement; an apostrophe in a comment opens nothing. In process:
+    # the engine is a stub that records what it was asked to run.
+    from bighouse_spark import __main__ as cli
+    from bighouse_spark import engine as engine_mod
+    from bighouse_spark import session
+
+    seen = []
+
+    class StubEngine:
+        def __init__(self, spark):
+            pass
+
+        def execute(self, req):
+            seen.append(req.query)
+            return engine_mod.QueryResult(cols=["x"], rows=[[1]])
+
+    monkeypatch.setattr(engine_mod, "BigHouseEngine", StubEngine)
+    monkeypatch.setattr(session, "get_spark", lambda **kw: None)
+    assert cli.main(["-q", r"SELECT 'a\';b'; SELECT 2"]) == 0
+    assert seen == [r"SELECT 'a\';b'", "SELECT 2"]
+    seen.clear()
+    assert cli.main(["-q", "SELECT 1 -- don't\n; SELECT 2"]) == 0
+    assert seen == ["SELECT 1 -- don't", "SELECT 2"]

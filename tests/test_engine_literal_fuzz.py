@@ -7,7 +7,7 @@ routers: every router keyword, spelled INSIDE a string literal,
 must come back byte-identical through CREATE (as a DEFAULT
 expression), INSERT VALUES, ALTER UPDATE assignments, CTAS SELECTs,
 and plain SELECT echo. Round 14 masked the whole router table
-(engine.py `_mask_string_literals` + `_raw_groups`); this fuzz keeps
+(engine.py `mask(..., strings_only=True)` + `_raw_groups`); this fuzz keeps
 the class extinct.
 """
 

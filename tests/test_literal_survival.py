@@ -88,37 +88,94 @@ PAYLOADS = [
     "WITH t AS (SELECT 1)",
     "EXCHANGE TABLES",
     "WHERE w LIKE 'x'",
+    "it's toDate(x)",
+    "a'::Int32",
+    "x'] PREWHERE y",
 ]
 
+# ClickHouse's two spellings of a quote inside '…': doubled and
+# backslash-escaped. Every payload must survive in both.
+SPELLINGS = ("''", "\\'")
 
-def _lit(p: str) -> str:
-    return p.replace("'", "''")
+
+def _lit(p: str, quote: str = "''") -> str:
+    return p.replace("'", quote)
 
 
 @pytest.mark.parametrize("payload", PAYLOADS)
 def test_literal_content_survives_transpile(payload):
-    lit = _lit(payload)
-    sql = (
-        f"SELECT '{lit}' AS s, number FROM numbers(3) "
-        f"WHERE number = 1"
-    )
-    out = transpile(sql).sql
-    assert f"'{lit}'" in out, (
-        f"literal {payload!r} was rewritten by the transpiler:\n{out}"
-    )
+    for quote in SPELLINGS:
+        lit = _lit(payload, quote)
+        sql = (
+            f"SELECT '{lit}' AS s, number FROM numbers(3) "
+            f"WHERE number = 1"
+        )
+        out = transpile(sql).sql
+        assert f"'{lit}'" in out, (
+            f"literal {lit!r} was rewritten by the transpiler:\n{out}"
+        )
 
 
 @pytest.mark.parametrize("payload", PAYLOADS)
 def test_two_literals_and_a_filter_survive(payload):
     # the payload twice (projection + comparison) plus a real WHERE:
     # position-sensitivity (before/after the clause) covered
-    lit = _lit(payload)
-    sql = (
-        f"SELECT '{lit}' AS a, number FROM numbers(3) "
-        f"WHERE number = 1 AND 'x{lit}' != 'never'"
-    )
-    out = transpile(sql).sql
-    assert f"'{lit}'" in out and f"'x{lit}'" in out
+    for quote in SPELLINGS:
+        lit = _lit(payload, quote)
+        sql = (
+            f"SELECT '{lit}' AS a, number FROM numbers(3) "
+            f"WHERE number = 1 AND 'x{lit}' != 'never'"
+        )
+        out = transpile(sql).sql
+        assert f"'{lit}'" in out and f"'x{lit}'" in out, out
+
+
+class TestOneQuoteRule:
+    """Each ``\\'`` spelling reads like its ``''`` twin, and a quote
+    character inside a comment opens nothing (ClickHouse's lexer:
+    one rule for every quoted span)."""
+
+    def test_backslash_quote_keeps_a_call_shaped_literal(self):
+        out = transpile(r"SELECT 'it\'s toDate(x)' AS s").sql
+        assert out == r"SELECT 'it\'s toDate(x)' AS s"
+
+    def test_backslash_quote_keeps_a_cast_shaped_literal(self):
+        out = transpile(r"SELECT CAST('a\'::Int32' AS String)").sql
+        assert r"'a\'::Int32'" in out
+
+    def test_backslash_quote_in_an_array_literal(self):
+        out = transpile(r"SELECT ['a\']', 'b'] AS arr").sql
+        assert out == r"SELECT array('a\']', 'b') AS arr"
+
+    def test_backslash_quote_in_a_prewhere_predicate(self):
+        out = transpile(
+            r"SELECT s FROM t PREWHERE s = 'it\'s' WHERE 1"
+        ).sql
+        assert out == r"SELECT s FROM t WHERE (s = 'it\'s') AND (1)"
+
+    def test_backslash_quote_in_the_select_alias_map(self):
+        from bighouse_spark.engine import BigHouseEngine
+
+        assert BigHouseEngine._select_alias_map(
+            r"SELECT 'a\', FROM' AS x, y FROM t"
+        ) == {"x": r"'a\', FROM'"}
+
+    def test_comment_apostrophe_leaves_the_router_mask_open(self):
+        from bighouse_spark.dialect.lexer import mask
+
+        masked = mask("SELECT 1 -- don't\nFROM t", strings_only=True)
+        assert masked == "SELECT 1 -- don't\nFROM t"
+
+    def test_comment_apostrophe_leaves_the_splitter_open(self):
+        from bighouse_spark.dialect.schema import split_top_level
+
+        assert split_top_level("f(1 -- don't\n, 2), g(3)") == [
+            "f(1 -- don't\n, 2)", "g(3)",
+        ]
+
+    def test_call_after_a_comment_apostrophe_still_rewrites(self):
+        out = transpile("SELECT 1 AS a -- don't\n, toString(1) AS b").sql
+        assert out == "SELECT 1 AS a -- don't\n, CAST(1 AS STRING) AS b"
 
 
 class TestRealClauseNextToLiteralTwin:
@@ -276,7 +333,7 @@ class TestLiteralCompositions:
 # Backtick-quoted IDENTIFIERS shaped like clauses/functions: CH and
 # Spark both allow arbitrary identifier text inside backticks; every
 # masked locator must skip them like string literals (round 13:
-# _mask_quoted_spans gained backtick spans — 6 of these corrupted,
+# the rewrite mask (now dialect.lexer.mask) gained backtick spans — 6 of these corrupted,
 # 2 raised, before the fix; `x[1]`-as-identifier corrupted via the
 # subscript pass and `a :: Int64` via the postfix-cast scan).
 BACKTICK_PAYLOADS = [

@@ -13,8 +13,8 @@ The engine's mutation routers used to match RAW statement text:
    path has, so CH's canonical all-rows spelling ``WHERE 1`` failed
    with DATATYPE_MISMATCH.
 
-Now the routers match a ``_mask_string_literals`` copy and re-slice
-groups from the raw statement (engine.py ``_raw_groups`` /
+Now the routers match a ``mask(..., strings_only=True)`` copy and
+re-slice groups from the raw statement (engine.py ``_raw_groups`` /
 ``_first_toplevel_where``), and the condition goes through
 ``_coerce_mutation_cond``. Reference parity: ClickHouse mutations
 (ALTER TABLE ... UPDATE/DELETE) as exercised through the reference's
@@ -178,46 +178,38 @@ class TestMaskStringLiterals:
     and identifier-quoting spans preserved, offsets identical."""
 
     def test_blanks_literal_content_keeps_offsets(self):
-        from bighouse_spark.dialect.transpile import (
-            _mask_string_literals,
-        )
+        from bighouse_spark.dialect.lexer import mask
 
         raw = "UPDATE v = 'a WHERE b' WHERE k = 1"
-        masked = _mask_string_literals(raw)
+        masked = mask(raw, strings_only=True)
         assert len(masked) == len(raw)
         assert "a WHERE b" not in masked
         assert masked.endswith("WHERE k = 1")
         assert masked.count("'") == 2
 
     def test_identifier_spans_kept(self):
-        from bighouse_spark.dialect.transpile import (
-            _mask_string_literals,
-        )
+        from bighouse_spark.dialect.lexer import mask
 
         raw = 'ALTER TABLE `tbl` UPDATE "col" = \'x\' WHERE k = 1'
-        masked = _mask_string_literals(raw)
+        masked = mask(raw, strings_only=True)
         assert "`tbl`" in masked
         assert '"col"' in masked
         assert "'x'" not in masked
 
     def test_quote_inside_identifier_does_not_open_literal(self):
-        from bighouse_spark.dialect.transpile import (
-            _mask_string_literals,
-        )
+        from bighouse_spark.dialect.lexer import mask
 
         raw = "SELECT `it's` , 'a WHERE b' FROM t WHERE k = 1"
-        masked = _mask_string_literals(raw)
+        masked = mask(raw, strings_only=True)
         assert "`it's`" in masked
         assert "a WHERE b" not in masked
         assert masked.endswith("WHERE k = 1")
 
     def test_backslash_escape_stays_inside_literal(self):
-        from bighouse_spark.dialect.transpile import (
-            _mask_string_literals,
-        )
+        from bighouse_spark.dialect.lexer import mask
 
         raw = r"UPDATE v = 'a\' WHERE b' WHERE k = 1"
-        masked = _mask_string_literals(raw)
+        masked = mask(raw, strings_only=True)
         assert masked.endswith("WHERE k = 1")
         assert "WHERE b" not in masked
 

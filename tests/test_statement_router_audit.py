@@ -9,7 +9,7 @@ fullmatch/finditer/findall`` over the RAW statement text in
 ``engine.py`` and compares against a FROZEN allowlist.
 
 The rule is that routers only see the masked copy: ``_route`` masks
-each statement once (``_mask_string_literals``), every router matches
+each statement once (``dialect.lexer.mask``), every router matches
 that copy, and groups are re-sliced from the raw text by span
 (``BigHouseEngine._raw_groups``) — a keyword inside a string literal
 can then never decide a route or a split point. The raw text is
@@ -32,7 +32,7 @@ import pytest
 
 ENGINE = Path(__file__).resolve().parent.parent / "bighouse_spark" / "engine.py"
 
-MASK_HELPERS = {"_mask_string_literals", "_mask_quoted_spans"}
+MASK_HELPERS = {"mask"}  # dialect.lexer.mask, both flavours
 REGEX_METHODS = ("match", "search", "fullmatch", "finditer", "findall")
 
 # (enclosing function, method, receiver, pattern-literal prefix).
@@ -235,7 +235,7 @@ def test_audit_follows_aliases_and_parameters(tmp_path):
         "        re.search('x', masked)\n"
         "    def _h(self, text, masked):\n"
         "        self._P.match(text)\n"
-        "        re.match('y', _mask_string_literals(text))\n"
+        "        re.match('y', mask(text, strings_only=True))\n"
         "    def _q(self, request):\n"
         "        re.match('z', request.query[3:])\n"
     )

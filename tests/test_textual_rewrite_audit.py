@@ -6,7 +6,7 @@ literals (OFFSET/FETCH + INTERVAL `cb08a6c`, backtick spans
 `f0a7dea`, and the judge-found alias-in-WHERE literal corruption in
 engine.py). The rule adopted in round 13: EVERY textual rewrite over
 statement text goes through a quote shield (``_sub_unquoted`` /
-``_sub_outside_quotes`` / a ``_mask_quoted_spans`` locate-then-splice)
+``_sub_outside_quotes`` / a ``dialect.lexer.mask`` locate-then-splice)
 — and this test enforces the rule mechanically.
 
 It inventories every function in engine.py / transpile.py whose body
@@ -46,12 +46,20 @@ AUDITED = {
     "bighouse_spark/dialect/transpile.py": {
         # the shields themselves
         "_sub_outside_quotes",
+        # decode the content of ONE quoted span the lexer delimited
+        # (a "…" identifier, a pattern/name literal argument): the
+        # whole input is span content, no surrounding SQL
+        "_rewrite_double_quoted_identifiers",
+        "_literal_text",
+        # _qualify_toplevel's callback: runs only on the gaps between
+        # quoted spans, comments and subqueries
+        "qualify",
         # segment callbacks INVOKED by _sub_unquoted (they only ever
         # see the outside-quotes segments)
         "_seg",
         "_fetch_seg",
         "_misc_seg",
-        # locate on _mask_quoted_spans output / operate on spans the
+        # locate on lexer.mask output / operate on spans the
         # caller already masked
         "_rewrite_arrayjoin_calls",
         "_rewrite_array_join_clause",
@@ -67,8 +75,6 @@ AUDITED = {
         "_rewrite_prewhere",
         "_rewrite_with_fill",
         "_strip_format",
-        # FORMAT spool writer: rewrites its own temp-path strings
-        "flush",
         # final whitespace normalization over the finished statement
         "transpile",
     },
@@ -107,7 +113,7 @@ def test_no_unaudited_textual_rewrites():
             f"{rel}: function(s) {sorted(new)} introduce a regex "
             ".sub() call not in the audited allowlist. Textual "
             "rewrites over SQL must go through _sub_unquoted / "
-            "_sub_outside_quotes or locate on _mask_quoted_spans "
+            "_sub_outside_quotes or locate on dialect.lexer.mask "
             "output (three literal-corruption bugs shipped this way "
             "in r12). Shield it, or audit it and add it here with a "
             "why-safe note."
@@ -118,3 +124,109 @@ def test_no_unaudited_textual_rewrites():
             "contain .sub() — prune the allowlist so it stays an "
             "exact audit record."
         )
+
+
+# One quote rule: only ``dialect/lexer.py`` scans SQL for quoted spans.
+# A function elsewhere that loops over text testing a character
+# against a quote-bearing string constant (``c == "'"``,
+# ``c in "'\"`"``) is a hand-written quote tracker, the bug class that
+# let ``\'`` and comments desync five scanners. Frozen allowlist:
+# literal DECODERS only — each strips one known quote pair from a
+# value the lexer (or the wire protocol) already delimited; none of
+# them scans SQL.
+LEXER = "bighouse_spark/dialect/lexer.py"
+QUOTE_DECODERS = {
+    # one ``[...]`` array parameter element: strips the element's own
+    # quote pair before rendering it as a typed literal
+    ("bighouse_spark/dialect/transpile.py", "_render_param"),
+    # a session's ``SET param_<name> = '…'`` value: strips its one
+    # quote pair before binding it as a query parameter
+    ("bighouse_spark/server.py", "_ch_http"),
+}
+_QUOTE_CHARS = set("'\"`")
+
+
+def _quote_trackers(path: Path, rel: str) -> set[tuple[str, str]]:
+    tree = ast.parse(path.read_text())
+    hits: set[tuple[str, str]] = set()
+
+    def quote_const(node: ast.AST) -> bool:
+        return (
+            isinstance(node, ast.Constant)
+            and isinstance(node.value, str)
+            and bool(_QUOTE_CHARS & set(node.value))
+        )
+
+    def char_vs_quote(node: ast.AST) -> bool:
+        if not isinstance(node, ast.Compare):
+            return False
+        ops = [node.left, *node.comparators]
+        return any(quote_const(o) for o in ops) and any(
+            isinstance(o, (ast.Name, ast.Subscript)) for o in ops
+        )
+
+    def own_nodes(node: ast.AST):
+        # a nested def is reported under its own name
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                continue
+            yield child
+            yield from own_nodes(child)
+
+    for fn in ast.walk(tree):
+        if not isinstance(fn, (ast.FunctionDef, ast.AsyncFunctionDef)):
+            continue
+        for loop in own_nodes(fn):
+            if isinstance(loop, (ast.For, ast.While)) and any(
+                char_vs_quote(n) for n in own_nodes(loop)
+            ):
+                hits.add((rel, fn.name))
+                break
+    return hits
+
+
+def _package_quote_trackers() -> set[tuple[str, str]]:
+    found: set[tuple[str, str]] = set()
+    for path in sorted(ROOT.rglob("*.py")):
+        rel = str(path.relative_to(ROOT.parent))
+        if rel != LEXER:
+            found |= _quote_trackers(path, rel)
+    return found
+
+
+def test_quote_state_lives_in_the_lexer():
+    found = _package_quote_trackers()
+    new = found - QUOTE_DECODERS
+    assert not new, (
+        f"{sorted(new)} track quote state by hand. Scan a "
+        "dialect.lexer.mask() copy and slice the raw text, or ask "
+        "lexer.spans()/in_span()/close_paren()/split_top_level()."
+    )
+    gone = QUOTE_DECODERS - found
+    assert not gone, (
+        f"allowlisted decoder(s) {sorted(gone)} no longer loop over "
+        "quote characters; prune the allowlist."
+    )
+
+
+def test_quote_tracker_detector_sees_the_old_loops(tmp_path):
+    # the detector must flag the shape every ported scanner had
+    src = tmp_path / "m.py"
+    src.write_text(
+        "def scan(s, i):\n"
+        "    depth, quote = 0, None\n"
+        "    while i < len(s):\n"
+        "        c = s[i]\n"
+        "        if quote:\n"
+        "            quote = None if c == quote else quote\n"
+        "        elif c in \"'\\\"\":\n"
+        "            quote = c\n"
+        "        i += 1\n"
+        "def decode(v):\n"
+        "    return v[1:-1] if v[0] in \"'\\\"\" else v\n"
+        "def walk(s):\n"
+        "    for c in s:\n"
+        "        if s.strip('`') == c:\n"
+        "            pass\n"
+    )
+    assert _quote_trackers(src, "m.py") == {("m.py", "scan")}
