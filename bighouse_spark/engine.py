@@ -309,7 +309,7 @@ class BigHouseEngine:
         self._committed: set[str] = set()
         self._inflight_lock = threading.Lock()
         # One writer at a time per attached table (_write_lock).
-        self._write_locks: dict[str, threading.RLock] = {}
+        self._write_locks: dict[str, threading.Lock] = {}
         # Monotonic count of cancellations (KILL QUERY + watchdog),
         # surfaced by the Prometheus /metrics endpoint.
         self.kill_count = 0
@@ -928,10 +928,10 @@ class BigHouseEngine:
         "system_functions", "system_aggregate_function_combinators",
     })
 
-    # Statement patterns. Every one matches the statement's
-    # ``mask(..., strings_only=True)`` copy (``_route``); groups that may hold
-    # literal text are re-sliced from the raw statement by span
-    # (``_raw_groups``).
+    # Statement patterns. Every one matches the statement's router
+    # mask, ``mask(..., strings_only=True)`` (``_route``); groups that
+    # may hold literal text are re-sliced from the raw statement by
+    # span (``_raw_groups``).
     _INTO_OUTFILE_RE = re.compile(
         r"^(.*?)\s+INTO\s+OUTFILE\s+'([^']+)'"
         r"(?:\s+(TRUNCATE))?(?:\s+FORMAT\s+(\w+))?\s*$",
@@ -1205,7 +1205,7 @@ class BigHouseEngine:
     @staticmethod
     def _raw_groups(m: "re.Match", raw: str) -> tuple:
         """Re-slice every group of a masked-text match from the RAW
-        statement. ``mask(..., strings_only=True)`` preserves offsets, so a
+        statement. The router mask preserves offsets, so a
         group whose content the mask blanked (a quoted partition id,
         an assignment expression holding a literal) is recovered
         intact by span — the r13 house pattern (locate masked,
@@ -1902,8 +1902,8 @@ class BigHouseEngine:
         table root (a failed write must never leave a ``k=1.<tag>-xx``
         dir that partition discovery parses as a bogus partition
         value), swap it into partition dir ``subdir`` or, when None,
-        the whole table, re-attach, rebuild dependent MVs, all under
-        the table's write lock. Returns the table path."""
+        the whole table and re-attach, under the table's write lock,
+        then rebuild dependent MVs. Returns the table path."""
         import shutil
         import uuid
 
@@ -1924,7 +1924,7 @@ class BigHouseEngine:
                           preserve_detached=not subdir)
             self.clear_cache()
             self.attach_table(name, path, fmt=fmt, schema=schema)
-            self._refresh_dependent_mvs(name, rebuild=True)
+        self._refresh_dependent_mvs(name, rebuild=True)
         return path
 
     @staticmethod
@@ -1990,18 +1990,18 @@ class BigHouseEngine:
             self._commit()
             self.clear_cache()
             self.attach_table(name, path, fmt=fmt, schema=schema)
-            self._refresh_dependent_mvs(name, rebuild=False)
-            self._discard_if_null(name)
+        self._refresh_dependent_mvs(name, rebuild=False)
+        self._discard_if_null(name)
         return _Logged(QueryResult(cols=["path"], rows=[[path]]), desc, -1)
 
-    def _write_lock(self, name: str) -> threading.RLock:
+    def _write_lock(self, name: str) -> threading.Lock:
         """The write lock of attached table ``name``, held from the
-        save through the re-attach (and the MV refreshes, whose locks
-        are only ever taken inside it). Two unlocked appends share
-        the output committer's ``<table>/_temporary/0`` directory, so
-        one job's commit deleted the other's task files: failed
-        INSERTs, or rows lost with no error."""
-        return self._write_locks.setdefault(name, threading.RLock())
+        save through the re-attach. Two unlocked appends share the
+        output committer's ``<table>/_temporary/0`` directory, so one
+        job's commit deleted the other's task files: failed INSERTs,
+        or rows lost with no error. MV refreshes run after it is
+        released, so no MV lock is ever held with it."""
+        return self._write_locks.setdefault(name, threading.Lock())
 
     def _declared_ch_types(self, name: str, target) -> dict[str, str]:
         """Column → CH type spelling for binary payload decode: the
