@@ -64,12 +64,20 @@ def main(argv: list[str] | None = None) -> int:
         split_result_format,
     )
     from bighouse_spark.session import get_spark
+    from bighouse_spark.session_settings import (
+        init_queries,
+        merge,
+        parse_set_statement,
+    )
 
     default_fmt = normalize_format(args.format)
     if default_fmt is None:
         ap.error(f"unknown format {args.format!r}")
     eng = BigHouseEngine(get_spark(app_name="bighouse-cli",
                                    cpus=args.cpus))
+    # The run is one scope, like a client session: its SETs go with
+    # every later statement as that statement's init SET.
+    settings: dict[str, str] = {}
     for script in scripts:
         # CH multiquery: top-level ``;`` outside quoted spans/comments
         for stmt in [p for p in split_top_level(script, ";") if p]:
@@ -80,10 +88,15 @@ def main(argv: list[str] | None = None) -> int:
                 return 1
             fmt = fmt_in_sql or default_fmt
             try:
-                r = eng.execute(QueryRequest(query=sql, params=params))
+                r = eng.execute(QueryRequest(
+                    query=sql, params=params,
+                    init_queries=init_queries(settings),
+                ))
             except Exception as e:
                 print(f"Error: {e}", file=sys.stderr)
                 return 1
+            if set_pairs := parse_set_statement(sql):
+                settings = merge(settings, set_pairs)
             out, _ = render_result(
                 r.cols, r.rows, fmt, types=r.types,
                 elapsed=r.elapsed_sec,

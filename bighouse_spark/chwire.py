@@ -56,8 +56,8 @@ from bighouse_spark.formats import (
     rowbinary_decoder,
 )
 from bighouse_spark.session_settings import (
-    merge_settings_clause,
-    normalize_set_statement,
+    init_queries,
+    merge,
     parse_set_statement,
 )
 
@@ -489,15 +489,14 @@ class _Conn:
                 break
             externals.append((name, cols, rows))
 
-        settings = dict(self.settings)
-        settings.update(packet_settings)
+        # The connection's SETs, then this query's packet settings
+        # (raw values), reach the engine as the query's init SET.
+        settings = merge(self.settings, packet_settings)
         # CH's network_compression_method picks the server's OUTPUT
         # codec (each frame is self-describing via its method byte, so
         # the read side needs no negotiation — it dispatches per
         # frame). lz4 is CH's default.
-        meth = str(
-            settings.get("network_compression_method", "lz4")
-        ).strip("'\"").lower()
+        meth = settings.get("network_compression_method", "lz4").lower()
         if meth == "zstd":
             self.comp_method = METHOD_ZSTD
         elif meth == "none":
@@ -593,17 +592,14 @@ class _Conn:
                     self.pending = []
 
         sink = _Sink()
-        sql = normalize_set_statement(query) or merge_settings_clause(
-            query, settings
-        )
         try:
             result = self.engine.execute(
-                QueryRequest(query=sql, query_id=query_id, remote=True),
+                QueryRequest(query=query, query_id=query_id, remote=True,
+                             init_queries=init_queries(settings)),
                 stream_to=sink,
             )
-            set_pairs = parse_set_statement(query)
-            if set_pairs:
-                self.settings.update(set_pairs)
+            if set_pairs := parse_set_statement(query):
+                self.settings = merge(self.settings, set_pairs)
             if sink.started:
                 sink.flush()
                 rows_sent, nblocks = sink.rows_sent, sink.blocks

@@ -10,7 +10,8 @@ comment opens nothing.
 
 Scanners work on a :func:`mask` copy (offsets preserved) and slice
 the raw text: a keyword, comma or paren found on the mask is never
-inside a span. This module imports nothing from the package, so the
+inside a span. :func:`quote`, :func:`literal` and :func:`unquote`
+render and decode one value. This module imports nothing from the package, so the
 schema parser, the transpiler, the engine and the wires can all use
 it.
 """
@@ -32,6 +33,13 @@ _SPAN = re.compile(
     re.DOTALL,
 )
 _CLOSED_STRING = re.compile(r"'(?:[^'\\]+|\\.|'')*+'", re.DOTALL)
+_CLOSED_VALUE = re.compile(
+    _CLOSED_STRING.pattern + r'|"(?:[^"\\]+|\\.|"")*+"', re.DOTALL
+)
+_ESCAPE = {q: re.compile(r"\\(.)|" + q * 2, re.DOTALL) for q in "'\""}
+_NUMBER = re.compile(r"-?\d+(?:\.\d+)?")
+_ESCAPED = {"n": "\n", "t": "\t", "r": "\r", "0": "\0", "b": "\b",
+            "f": "\f", "a": "\a", "v": "\v"}
 _SPAN_OR_PAREN = re.compile(_SPAN.pattern + r"|[()]", re.DOTALL)
 
 
@@ -128,3 +136,28 @@ def split_top_level(s: str, sep: str = ",") -> list[str]:
     if start < len(s):
         parts.append(s[start:].strip())
     return parts
+
+
+def quote(value: str) -> str:
+    """``value`` as a ``'…'`` string literal that ClickHouse and Spark
+    both read back as ``value`` (``\\`` and ``'`` escaped)."""
+    return "'" + value.replace("\\", "\\\\").replace("'", "''") + "'"
+
+
+def literal(value: str) -> str:
+    """``value`` as SQL: a number bare, anything else :func:`quote`."""
+    return value if _NUMBER.fullmatch(value) else quote(value)
+
+
+def unquote(text: str) -> str:
+    r"""A value decoded once: a whole ``'…'`` or ``"…"`` span loses
+    its quotes, a doubled quote and ``\'`` become one quote, and
+    ``\n``-style escapes their character (``'it''s'`` and
+    ``'it\'s'`` → ``it's``). Any other text is returned as is."""
+    if not _CLOSED_VALUE.fullmatch(text):
+        return text
+    return _ESCAPE[text[0]].sub(
+        lambda m: m.group()[0] if m.group(1) is None
+        else _ESCAPED.get(m.group(1), m.group(1)),
+        text[1:-1],
+    )

@@ -37,7 +37,7 @@ import time as _time
 import uuid as _uuid
 import weakref
 from collections import OrderedDict
-from dataclasses import dataclass, field
+from dataclasses import dataclass, field, replace
 
 from pyspark.sql import SparkSession
 
@@ -46,7 +46,9 @@ from bighouse_spark.dialect.lexer import (
     QUOTES,
     close_paren,
     in_span,
+    literal,
     mask,
+    quote,
     spans,
     split_top_level,
 )
@@ -9449,15 +9451,6 @@ _CAST_FUNCS = {
     "toString": "STRING",
 }
 
-# CH settings → Spark conf (SURVEY.md §2 B18). Unknown settings are
-# dropped with a note — they are tuning hints, not semantics.
-_SETTINGS_MAP = {
-    "max_parallel_replicas": "spark.sql.shuffle.partitions",
-    "max_threads": "spark.sql.shuffle.partitions",
-    "max_download_threads": "spark.hadoop.fs.s3a.threads.max",
-}
-
-
 _PARAM_PLACEHOLDER_RE = re.compile(
     r"\{\s*([A-Za-z_][A-Za-z0-9_]*)\s*:\s*([^{}]+?)\s*\}"
 )
@@ -9468,10 +9461,6 @@ _PARAM_UUID_RE = re.compile(
     r"^[0-9a-fA-F]{8}-[0-9a-fA-F]{4}-[0-9a-fA-F]{4}-"
     r"[0-9a-fA-F]{4}-[0-9a-fA-F]{12}$"
 )
-
-
-def _param_sql_str(v: str) -> str:
-    return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
 
 
 def _render_param(name: str, ch_type: str, raw: str) -> str:
@@ -9553,18 +9542,18 @@ def _render_param(name: str, ch_type: str, raw: str) -> str:
             )
         return f"CAST({raw} AS DOUBLE)"
     if tl in ("date", "date32"):
-        return f"CAST({_param_sql_str(raw)} AS DATE)"
+        return f"CAST({quote(raw)} AS DATE)"
     if tl.startswith(("datetime", "timestamp")):
-        return f"CAST({_param_sql_str(raw)} AS TIMESTAMP)"
+        return f"CAST({quote(raw)} AS TIMESTAMP)"
     if tl == "uuid":
         if not _PARAM_UUID_RE.match(raw):
             raise ValueError(
                 f"query parameter {{{name}:UUID}}: {raw!r} is not a "
                 "UUID"
             )
-        return _param_sql_str(raw.lower())
+        return quote(raw.lower())
     if tl in ("string", "fixedstring") or tl.startswith("fixedstring"):
-        return _param_sql_str(raw)
+        return quote(raw)
     raise ValueError(
         f"query parameter {{{name}:{ch_type}}}: unsupported parameter "
         "type; supported: Int*/UInt*/Float*/Decimal/String/"
@@ -9601,14 +9590,21 @@ class TranspileResult:
     dropped_settings: dict[str, str] = field(default_factory=dict)
 
 
-def transpile(sql: str, spark: SparkSession | None = None) -> TranspileResult:
+def transpile(
+    sql: str, spark: SparkSession | None = None,
+    settings: dict[str, str] | None = None,
+) -> TranspileResult:
     """Rewrite ClickHouse-dialect ``sql`` to Spark SQL.
 
     When ``spark`` is given, table-function sources are registered as
     temp views (``__bh_src_N``); otherwise table functions raise.
-    ``settings`` carries the SETTINGS clause mapped to Spark conf keys;
-    the caller applies them for the query's duration (session conf is
-    never written here — it is shared by every client).
+    ``settings`` are the statement's pairs from its other channels
+    (its scope's init ``SET``s); the query's own ``SETTINGS`` clause
+    is layered over them, and the merge is split
+    (``session_settings.split_settings``): the result's ``settings``
+    are Spark conf keys the caller applies for the query's duration
+    (session conf is never written here — it is shared by every
+    client), its ``dropped_settings`` the names the engine reads.
     """
     out = sql.strip().rstrip(";")
     # CH (ANSI) double-quoted strings are IDENTIFIERS; Spark's
@@ -9643,41 +9639,34 @@ def transpile(sql: str, spark: SparkSession | None = None) -> TranspileResult:
     )
     if ex:
         mode, rest = re.sub(r"\s+", " ", ex.group(1).upper()), ex.group(2)
-        inner = transpile(rest, spark)
+        inner = transpile(rest, spark, settings)
         if mode == "SYNTAX":
             lit = inner.sql.replace("'", "''")
-            return TranspileResult(
-                sql=f"SELECT '{lit}' AS rewritten_sql",
-                views=inner.views, settings=inner.settings,
-                dropped_settings=inner.dropped_settings,
-            )
+            return replace(inner, sql=f"SELECT '{lit}' AS rewritten_sql")
         spark_mode = {
             "AST": "EXTENDED", "PLAN": "FORMATTED",
             "PIPELINE": "FORMATTED", "ESTIMATE": "COST",
             "QUERY TREE": "EXTENDED",
         }[mode]
-        return TranspileResult(
-            sql=f"EXPLAIN {spark_mode} {inner.sql}",
-            views=inner.views, settings=inner.settings,
-            dropped_settings=inner.dropped_settings,
-        )
+        return replace(inner, sql=f"EXPLAIN {spark_mode} {inner.sql}")
     fn_ddl = _rewrite_create_function(out)
     if fn_ddl is not None:
         return TranspileResult(sql=fn_ddl)
-    out, settings, dropped = _strip_settings(out)
+    from bighouse_spark.session_settings import split_settings
+
+    out, pairs = _strip_settings(out, settings)
+    settings, dropped = split_settings(pairs)
     # exact_cityhash=1 is OUR setting (no CH analog): flip cityHash64
     # from the xxhash64 capability path to the bit-exact v1.0.2 UDF.
-    exact_cityhash = str(dropped.pop("exact_cityhash", "0")).lower() in (
-        "1",
-        "true",
-    )
+    exact_cityhash = dropped.pop("exact_cityhash", "0").lower() in (
+        "1", "true")
     # max_funnel_group_events=N is OUR setting (no CH analog): the
     # strict_order funnel's per-group buffer cap; 0 disables.
     funnel_cap_raw = dropped.pop("max_funnel_group_events", None)
     funnel_cap: int | None = None
     if funnel_cap_raw is not None:
         try:
-            funnel_cap = int(str(funnel_cap_raw).strip().strip("'\""))
+            funnel_cap = int(funnel_cap_raw)
         except ValueError:
             raise ValueError(
                 "SETTINGS max_funnel_group_events expects an integer "
@@ -9685,17 +9674,7 @@ def transpile(sql: str, spark: SparkSession | None = None) -> TranspileResult:
             )
     out = _strip_format(out)
     if "getSetting" in out:
-        raw_settings = dict(dropped)
-        if exact_cityhash:
-            raw_settings["exact_cityhash"] = "1"
-        if funnel_cap is not None:
-            raw_settings["max_funnel_group_events"] = str(funnel_cap)
-        inv = {v: k for k, v in _SETTINGS_MAP.items()}
-        for sk, sv in settings.items():
-            ch_name = inv.get(sk)
-            if ch_name is not None:
-                raw_settings[ch_name] = sv
-        out = _rewrite_get_setting(out, raw_settings)
+        out = _rewrite_get_setting(out, pairs)
     if spark is not None and "hasColumnInTable" in out:
         out = _rewrite_has_column_in_table(out, spark)
     if spark is not None and re.search(
@@ -10206,30 +10185,24 @@ _GET_SETTING_RE = re.compile(
 
 
 def _rewrite_get_setting(out: str, raw: dict[str, str]) -> str:
-    """getSetting('name') → the literal value the query (or the
-    wire session, which merges its SET state into the SETTINGS
-    clause) assigned — numerics inline, everything else as a string
-    literal. A name never SET falls through to the guided error
-    (CH would return the server default; this engine's defaults
-    live in the system_settings view)."""
-
-    def sub(m: "re.Match[str]") -> str:
-        name = m.group(1)
-        if name in raw:
-            v = raw[name]
-            if re.fullmatch(r"-?\d+(\.\d+)?", v):
-                return v
-            # The SETTINGS parser strips the outer quotes but keeps
-            # the '' escape — collapse it before re-escaping.
-            v = v.replace("''", "'")
-            return "'" + v.replace("'", "''") + "'"
-        return m.group(0)
-
-    return _GET_SETTING_RE.sub(sub, out)
+    """getSetting('name') → the decoded value the statement's pairs
+    (its scope's SETs, then its SETTINGS clause) assign — numerics
+    inline, everything else as a string literal. A name never SET
+    falls through to the guided error (CH would return the server
+    default; this engine's defaults live in the system_settings
+    view)."""
+    return _GET_SETTING_RE.sub(
+        lambda m: literal(raw[m.group(1)]) if m.group(1) in raw
+        else m.group(0),
+        out,
+    )
 
 
-_SETTINGS_WORD = re.compile(r"(?<![A-Za-z0-9_])settings(?![A-Za-z0-9_])",
-                            re.IGNORECASE)
+# The SETTINGS keyword, then a ``name =`` pair: a column or alias
+# named ``settings`` opens no clause.
+_SETTINGS_WORD = re.compile(
+    r"(?<![A-Za-z0-9_.])settings(?=\s+[A-Za-z_][\w.]*\s*=)", re.IGNORECASE
+)
 _PAREN = re.compile(r"[()]")
 
 
@@ -10261,14 +10234,15 @@ def _settings_spans(sql: str) -> list[tuple[int, int]]:
         pos = end
 
 
-def _strip_settings(sql: str) -> tuple[str, dict[str, str], dict[str, str]]:
-    spans = _settings_spans(sql)
-    if not spans:
-        return sql, {}, {}
-    mapped: dict[str, str] = {}
-    dropped: dict[str, str] = {}
-    spans2: list[tuple[int, int]] = []
-    for start, end in spans:
+def _strip_settings(
+    sql: str, settings: dict[str, str] | None = None,
+) -> tuple[str, dict[str, str]]:
+    """``sql`` without its SETTINGS clauses, and ``settings`` with the
+    clauses' pairs layered over them in order (later pairs win)."""
+    from bighouse_spark.session_settings import merge, parse_set_statement
+
+    pairs, spans = settings or {}, []
+    for start, end in _settings_spans(sql):
         # CH grammar puts FORMAT after SETTINGS — keep it in the SQL
         # instead of leaking it into the last setting's value
         fm = re.search(
@@ -10276,23 +10250,13 @@ def _strip_settings(sql: str) -> tuple[str, dict[str, str], dict[str, str]]:
         )
         if fm:
             end = start + 8 + fm.start()
-        spans2.append((start, end))
-    spans = spans2
-    for start, end in spans:
-        for pair in sql[start + 8:end].split(","):
-            k, _, v = pair.partition("=")
-            k, v = k.strip(), v.strip().strip("'\"")
-            if not k:
-                continue
-            if k in _SETTINGS_MAP:
-                mapped[_SETTINGS_MAP[k]] = v
-            else:
-                dropped[k] = v
+        spans.append((start, end))
+        pairs = merge(pairs, parse_set_statement(sql[start:end]) or {})
     out = sql
     for start, end in reversed(spans):
         out = out[:start].rstrip() + " " + out[end:].lstrip() \
             if end < len(out) else out[:start].rstrip()
-    return out, mapped, dropped
+    return out, pairs
 
 
 # CH forms: LIMIT n BY k | LIMIT off, n BY k | LIMIT n OFFSET off BY k

@@ -31,6 +31,7 @@ from pyspark.sql import DataFrame, SparkSession
 
 from bighouse_spark.dialect.transpile import (
     TranspileResult,
+    _strip_settings,
     _sub_outside_quotes,
     release_spool_pins,
     set_current_query_id,
@@ -39,7 +40,11 @@ from bighouse_spark.dialect.transpile import (
 from bighouse_spark.dialect.lexer import close_paren, mask, split_top_level
 from bighouse_spark.operators.caching import release_tracked
 from bighouse_spark.session import get_spark
-from bighouse_spark.session_settings import parse_set_statement
+from bighouse_spark.session_settings import (
+    merge,
+    parse_set_statement,
+    split_settings,
+)
 
 # Select-list scan of ``_select_alias_map``, run on a masked copy.
 _SELECT_LIST_SCAN = re.compile(r"[()\[\],]|(?<![\w])FROM\b", re.IGNORECASE)
@@ -47,11 +52,18 @@ _SELECT_LIST_SCAN = re.compile(r"[()\[\],]|(?<![\w])FROM\b", re.IGNORECASE)
 # Per-thread statement state for the lifecycle (BigHouseEngine._run):
 # ``depth`` counts nested statements (engine statements re-enter
 # execute for init queries and DDL; resource release fires only when
-# the OUTERMOST one unwinds), ``conf`` the running statement's conf
-# knobs (``_sql`` runs on a clone that holds them), ``logged_error`` the
+# the OUTERMOST one unwinds), ``settings`` the running statement's
+# setting pairs (cluster shape, then init ``SET``s, then the Spark conf
+# of its ``SETTINGS``; ``_sql`` runs on a clone that holds their Spark
+# conf half, ``_statement_conf``), ``logged_error`` the
 # failure already written to the log, ``qid``/``watch`` the outermost
 # statement's query id and watchdog.
 _REQ_LOCAL = threading.local()
+
+
+def _statement_conf() -> dict[str, str]:
+    """The Spark conf half of the running statement's settings."""
+    return split_settings(getattr(_REQ_LOCAL, "settings", {}))[0]
 
 
 @dataclass
@@ -214,11 +226,12 @@ class BigHouseEngine:
         self._log_lock = threading.Lock()
         # Result cache (the CH query-cache analog, ch/config.xml:1348;
         # SURVEY.md §2.C "Query result cache"). Opt-in per query via
-        # ``SETTINGS use_query_cache=1``; keyed by the raw SQL text.
+        # ``use_query_cache=1``; keyed by the raw SQL text and the
+        # statement's scope settings.
         # LRU with entry + row bounds; no source-version invalidation
         # — callers clear_cache() after writes, same contract as CH's
         # TTL-less cache default.
-        self._result_cache: OrderedDict[str, QueryResult] = OrderedDict()
+        self._result_cache: OrderedDict[tuple, QueryResult] = OrderedDict()
         self._cache_rows = 0
         self._cache_lock = threading.Lock()
         # name → (path, fmt, schema) for attach_table targets, so
@@ -398,14 +411,14 @@ class BigHouseEngine:
             self._result_cache.clear()
             self._cache_rows = 0
 
-    def _cache_get(self, key: str) -> QueryResult | None:
+    def _cache_get(self, key: tuple) -> QueryResult | None:
         with self._cache_lock:
             hit = self._result_cache.get(key)
             if hit is not None:
                 self._result_cache.move_to_end(key)
             return hit
 
-    def _cache_put(self, key: str, result: QueryResult) -> None:
+    def _cache_put(self, key: tuple, result: QueryResult) -> None:
         n_rows = len(result.rows)
         if n_rows > self.CACHE_MAX_ROWS:
             return  # larger than the whole budget; never cacheable
@@ -653,62 +666,35 @@ class BigHouseEngine:
             # system.settings analog in CH's column shape (name /
             # value / changed / description) so migrating
             # introspection queries parse. Rows: the CH-named settings
-            # this engine serves, then every Spark SQL conf.
-            # The running statement's knobs (an init-query SET) win
-            # over the base conf.
-            knobs = getattr(_REQ_LOCAL, "conf", {})
-
-            def _conf(key: str, default: str | None) -> str | None:
-                if key in knobs:
-                    return knobs[key]
-                try:
-                    v = self.spark.conf.get(key)
-                except Exception:
-                    return default
-                return default if v is None else str(v)
-
-            def _was_set(name: str) -> int:
-                # A bare `SET name = v` lands in the Spark conf under
-                # the raw name — this engine's session-settings store.
-                return int(_conf(name, None) is not None)
-
-            shuffle = _conf("spark.sql.shuffle.partitions", "200")
-            ch_rows = [
-                ("max_threads", _conf("max_threads", shuffle),
-                 _was_set("max_threads"),
-                 "Query parallelism; maps to "
-                 "spark.sql.shuffle.partitions."),
-                ("max_parallel_replicas",
-                 _conf("max_parallel_replicas", shuffle),
-                 _was_set("max_parallel_replicas"),
+            # this engine serves, then every Spark SQL conf. Only the
+            # running statement's pairs (an init-query SET: a URL
+            # setting or its scope's SETs) change a CH-named setting.
+            pairs = getattr(_REQ_LOCAL, "settings", {})
+            shuffle = _statement_conf().get(
+                "spark.sql.shuffle.partitions"
+            ) or self.spark.conf.get("spark.sql.shuffle.partitions", "200")
+            ch_rows = [(name, pairs.get(name, default), int(name in pairs),
+                        text) for name, default, text in (
+                ("max_threads", shuffle,
+                 "Query parallelism; maps to spark.sql.shuffle.partitions."),
+                ("max_parallel_replicas", shuffle,
                  "Maps to spark.sql.shuffle.partitions."),
-                ("max_download_threads",
-                 _conf("max_download_threads", "4"),
-                 _was_set("max_download_threads"),
+                ("max_download_threads", "4",
                  "Maps to spark.hadoop.fs.s3a.threads.max."),
-                ("max_execution_time",
-                 _conf("max_execution_time", "0"),
-                 _was_set("max_execution_time"),
+                ("max_execution_time", "0",
                  "Per-query wall-clock cap in seconds; 0 = unlimited."),
-                ("max_result_rows", _conf("max_result_rows", "0"),
-                 _was_set("max_result_rows"),
-                 "Result-row cap enforced before collect; 0 = "
-                 "unlimited."),
-                ("result_overflow_mode",
-                 _conf("result_overflow_mode", "throw"),
-                 _was_set("result_overflow_mode"),
+                ("max_result_rows", "0",
+                 "Result-row cap enforced before collect; 0 = unlimited."),
+                ("result_overflow_mode", "throw",
                  "'throw' raises on max_result_rows overflow, 'break' "
                  "truncates."),
-                ("exact_cityhash", _conf("exact_cityhash", "0"),
-                 _was_set("exact_cityhash"),
+                ("exact_cityhash", "0",
                  "1 = bit-exact CityHash64 v1.0.2 UDF instead of the "
                  "xxhash64 capability path."),
-                ("max_funnel_group_events",
-                 _conf("max_funnel_group_events", "0"),
-                 _was_set("max_funnel_group_events"),
+                ("max_funnel_group_events", "0",
                  "strict_order windowFunnel per-group buffer cap; "
                  "0 = unlimited."),
-            ]
+            )]
             spark_rows = [
                 (r["key"], r["value"], 0, r["meaning"])
                 for r in self.spark.sql("SET -v")
@@ -3117,11 +3103,10 @@ class BigHouseEngine:
         )
         qid = stmt.request.query_id
         depth = getattr(_REQ_LOCAL, "depth", 0)
-        outer_knobs = getattr(_REQ_LOCAL, "conf", {})
-        _REQ_LOCAL.depth = depth + 1
-        # A statement starts from its parent's knobs; its own additions
-        # end with it. The dict is per thread, so it needs no lock.
-        _REQ_LOCAL.conf = knobs = dict(outer_knobs)
+        # A statement starts from its parent's settings; its own
+        # additions (each a new dict, ``merge``) end with it.
+        outer = getattr(_REQ_LOCAL, "settings", {})
+        _REQ_LOCAL.depth, _REQ_LOCAL.settings = depth + 1, outer
         t0 = time.monotonic()
         out = entry = running = timer = None
         try:
@@ -3136,13 +3121,13 @@ class BigHouseEngine:
                     running = self._inflight[qid] = (request.query, t0)
 
                 def watch(raw: Any) -> None:
-                    # SETTINGS max_execution_time=N (CH seconds, 0 =
-                    # unlimited), armed by the first transpile that
-                    # carries it; the deadline counts from the start.
+                    # max_execution_time=N (CH seconds, 0 = unlimited),
+                    # armed by the first transpile whose settings carry
+                    # it; the deadline counts from the start.
                     nonlocal timer
                     _REQ_LOCAL.watch = None
                     try:
-                        limit = float(str(raw).strip("'\" "))
+                        limit = float(raw)
                     except ValueError:
                         return
                     if limit > 0:
@@ -3162,21 +3147,23 @@ class BigHouseEngine:
                     qid, request.query[:200], interruptOnCancel=True
                 )
             try:
-                # Cluster-shape knobs → parallelism hint (B18); a
-                # query's own SETTINGS max_threads, added later, wins.
+                # Cluster-shape knobs → parallelism hint (B18); an init
+                # SET or the query's SETTINGS max_threads, later, wins.
                 if request.num_nodes or request.cores:
                     parts = (request.num_nodes or 1) * (request.cores or 1)
-                    knobs["spark.sql.shuffle.partitions"] = str(max(parts, 1))
+                    _REQ_LOCAL.settings = merge(outer, {
+                        "spark.sql.shuffle.partitions": str(max(parts, 1))
+                    })
                 for init in request.init_queries:
                     # Init queries are full engine statements (the
                     # reference's InitQueries carry ATTACH DDL + SET,
-                    # workflow_query_executor.go:302-310): DDL re-enters
-                    # execute so the whole dispatch applies, and a SET
-                    # holds its knobs until this statement ends.
-                    if self._route_of(init) != self._QUERY_ROUTE:
+                    # workflow_query_executor.go:302-310): a SET's
+                    # pairs are this statement's until it ends, and DDL
+                    # re-enters execute so the whole dispatch applies.
+                    if pairs := parse_set_statement(init):
+                        _REQ_LOCAL.settings = merge(_REQ_LOCAL.settings, pairs)
+                    elif self._route_of(init) != self._QUERY_ROUTE:
                         self.execute(init)
-                    elif pairs := parse_set_statement(init):
-                        knobs.update(pairs)
                     else:
                         init_t = self._transpile(init)
                         stmt.views.extend(init_t.views)
@@ -3222,7 +3209,7 @@ class BigHouseEngine:
                 with self._log_lock:
                     self.query_log.append(entry)
                     self.query_totals.add(entry)
-            _REQ_LOCAL.depth, _REQ_LOCAL.conf = depth, outer_knobs
+            _REQ_LOCAL.depth, _REQ_LOCAL.settings = depth, outer
             if depth == 0:
                 _REQ_LOCAL.logged_error = _REQ_LOCAL.qid = None
                 _REQ_LOCAL.watch = None
@@ -3293,15 +3280,15 @@ class BigHouseEngine:
                 self._cancelled.pop(qid, None)
 
     def _sql(self, text: str):
-        """``spark.sql(text)`` under the running statement's knobs: on
-        the base session when there are none, else on a statement
-        clone that holds them, so the base session's conf is never
-        written. Call it after transpile: the clone sees only the
-        views registered before it."""
-        knobs = getattr(_REQ_LOCAL, "conf", {})
-        if not knobs:
+        """``spark.sql(text)`` under the running statement's Spark
+        conf: on the base session when it has none, else on a
+        statement clone that holds it, so the base session's conf is
+        never written. Call it after transpile: the clone sees only
+        the views registered before it."""
+        conf = _statement_conf()
+        if not conf:
             return self.spark.sql(text)
-        return DataFrame(self._clone_session(knobs).sql(text), self.spark)
+        return DataFrame(self._clone_session(conf).sql(text), self.spark)
 
     # The small-plan tier's execution confs, and the leaves its plans
     # may read (a CTE's definition is itself a child of the plan).
@@ -3317,8 +3304,8 @@ class BigHouseEngine:
     def _small_plan(self, df: DataFrame) -> DataFrame:
         """``df`` rebuilt from its analyzed plan on a statement clone
         with AQE off and one shuffle partition, when the statement is
-        small; else ``df`` unchanged. Small: it holds no conf knob (the
-        client's knobs win: ``_sql`` already ran it on their clone); its
+        small; else ``df`` unchanged. Small: it holds no Spark conf (the
+        client's conf wins: ``_sql`` already ran it on its clone); its
         leaves are file relations, local rows and CTE references, at
         least one a file, and the files' ``sizeInBytes`` sum to less
         than one split (``spark.sql.files.maxPartitionBytes``); it has
@@ -3327,7 +3314,7 @@ class BigHouseEngine:
         no subquery, whose leaves ``collectLeaves`` does not visit.
         Below one split the scan is one task, so AQE's re-planning,
         range sampling and coalescing only add jobs."""
-        if getattr(_REQ_LOCAL, "conf", None):
+        if _statement_conf():
             return df
         plan = df._jdf.queryExecution().analyzed()
         leaves = plan.collectLeaves()
@@ -3377,11 +3364,12 @@ class BigHouseEngine:
         return jclone
 
     def _transpile(self, sql: str) -> TranspileResult:
-        """``transpile`` inside the running statement: the mapped
-        SETTINGS it returns join the statement's knobs until it ends
-        (``transpile`` itself never writes the shared conf)."""
-        out = transpile(sql, self.spark)
-        _REQ_LOCAL.conf.update(out.settings)
+        """``transpile`` under the running statement's settings: the
+        Spark conf it returns (theirs with the SETTINGS clause over
+        them) joins them until the statement ends (``transpile``
+        itself never writes the shared conf)."""
+        out = transpile(sql, self.spark, _REQ_LOCAL.settings)
+        _REQ_LOCAL.settings = merge(_REQ_LOCAL.settings, out.settings)
         watch = getattr(_REQ_LOCAL, "watch", None)
         if watch and "max_execution_time" in out.dropped_settings:
             watch(out.dropped_settings["max_execution_time"])
@@ -3463,6 +3451,7 @@ class BigHouseEngine:
         "ANALYZE": ("_route_analyze", "Alter"),
         "GRANT": ("_route_rbac", "Grant"),
         "SET ROLE": ("_route_rbac", "Set"),
+        "SET": ("_route_set", "Set"),
         "REVOKE": ("_route_rbac", "Revoke"),
     }
     _QUERY_ROUTE = ("_route_query", "Select")
@@ -5238,20 +5227,33 @@ class BigHouseEngine:
         stmt.request = replace(stmt.request, query=rewritten)
         return mask(rewritten, strings_only=True)
 
+    def _route_set(self, stmt: _Statement, masked: str, stream_to):
+        """``SET k = v[, …]`` answers Spark's ``key``/``value`` rows and
+        writes nothing: the calling scope (an HTTP session, a wire
+        connection, the CLI) keeps the pairs. A ``SET`` with no pairs
+        (``SET -v``, ``SET spark.sql.shuffle.partitions``) reads conf
+        on the query path."""
+        if not (pairs := parse_set_statement(stmt.request.query)):
+            return self._route_query(stmt, masked, stream_to)
+        rows = [list(p) for p in pairs.items()]
+        return _Logged(QueryResult(["key", "value"], rows,
+                                   types=["String", "String"]),
+                       "<set>", len(rows))
+
     def _route_query(self, stmt: _Statement, masked: str, stream_to):
         """The query path: transpile, then collect or stream."""
         masked = self._bind_dict_calls(stmt, masked)
         masked = self._bind_system_names(stmt, masked)
         request = stmt.request
-        # Cache-hit fast path: checked on the RAW text before transpile
-        # so a hit skips view re-registration entirely.
-        # masked locate (the knob may itself appear inside a string
-        # literal); the value is read from the RAW text at the span
-        m_uc = re.search(r"use_query_cache\s*=\s*", masked)
-        use_cache = m_uc is not None and re.match(
-            r"'?(1|true)\b", request.query[m_uc.end():]
-        ) is not None
-        if use_cache and (hit := self._cache_get(request.query)) is not None:
+        # Cache-hit fast path: the statement's settings with its
+        # SETTINGS clause over them, read before transpile so a hit
+        # skips view re-registration entirely.
+        scope = _REQ_LOCAL.settings
+        use_cache = _strip_settings(request.query, scope)[1].get(
+            "use_query_cache", "0"
+        ).lower() in ("1", "true")
+        key = (request.query, tuple(scope.items()))
+        if use_cache and (hit := self._cache_get(key)) is not None:
             return _Logged(
                 QueryResult(hit.cols, hit.rows, types=hit.types),
                 "<cache hit>", len(hit.rows), cached=True,
@@ -5287,23 +5289,18 @@ class BigHouseEngine:
                 for f in df.schema.fields
             ])
         cols = df.columns
-        # SETTINGS max_result_rows (+ result_overflow_mode):
-        # enforced via limit(N+1) so an oversized result never
-        # reaches the driver — 'throw' (CH default) raises
-        # TOO_MANY_ROWS, 'break' truncates to N. CH semantics:
-        # 0 means unlimited.
-        max_rows = None
-        raw_mr = result.dropped_settings.get("max_result_rows")
-        if raw_mr is not None:
-            try:
-                max_rows = int(str(raw_mr).strip("'\" "))
-            except ValueError:
-                max_rows = None
-            if max_rows is not None and max_rows <= 0:
-                max_rows = None
-        overflow_mode = str(
-            result.dropped_settings.get("result_overflow_mode", "throw")
-        ).strip("'\" ").lower()
+        # max_result_rows (+ result_overflow_mode): enforced via
+        # limit(N+1) so an oversized result never reaches the driver
+        # — 'throw' (CH default) raises TOO_MANY_ROWS, 'break'
+        # truncates to N. CH semantics: 0 means unlimited.
+        try:
+            max_rows = int(result.dropped_settings.get("max_result_rows", 0))
+        except ValueError:
+            max_rows = 0
+        max_rows = max_rows if max_rows > 0 else None
+        overflow_mode = result.dropped_settings.get(
+            "result_overflow_mode", "throw"
+        ).lower()
         if max_rows is not None:
             df = df.limit(max_rows + 1)
         from bighouse_spark.formats import ch_type_names
@@ -5353,7 +5350,7 @@ class BigHouseEngine:
                 )
         out = QueryResult(cols=cols, rows=rows, types=types)
         if use_cache:
-            self._cache_put(request.query, out)
+            self._cache_put(key, out)
         return _Logged(out, result.sql, n_rows)
 
     def execute_to_sink(

@@ -46,8 +46,8 @@ from bighouse_spark.dialect.lexer import mask
 from bighouse_spark.engine import BigHouseEngine, QueryRequest
 from bighouse_spark.netutil import NoDelayMixin
 from bighouse_spark.session_settings import (
-    merge_settings_clause,
-    normalize_set_statement,
+    init_queries,
+    merge,
     parse_set_statement,
 )
 from bighouse_spark.formats import ch_base_type
@@ -385,8 +385,8 @@ class _Handler(socketserver.BaseRequestHandler):
         self._stmts: dict[int, dict[str, Any]] = {}
         self._next_stmt_id = 1
         # Per-connection settings (MySQL semantics: SET is
-        # session-scoped): re-injected into later SELECTs as a
-        # trailing SETTINGS clause.
+        # session-scoped): sent with every later statement as its
+        # init SET.
         self._settings: dict[str, str] = {}
         try:
             self._handshake(conn)
@@ -538,9 +538,7 @@ class _Handler(socketserver.BaseRequestHandler):
         try:
             result = self.server.engine.execute(  # type: ignore[attr-defined]
                 QueryRequest(
-                    query=(normalize_set_statement(sql)
-                           or merge_settings_clause(
-                               sql, self._settings)),
+                    query=sql, init_queries=init_queries(self._settings),
                     remote=True,
                 ),
                 stream_to=sink,
@@ -549,9 +547,8 @@ class _Handler(socketserver.BaseRequestHandler):
             # An ERR packet legally terminates an in-flight resultset.
             self._send_err(conn, 1064, str(e)[:1500])
             return
-        set_pairs = parse_set_statement(sql)
-        if set_pairs:
-            self._settings.update(set_pairs)
+        if set_pairs := parse_set_statement(sql):
+            self._settings = merge(self._settings, set_pairs)
         if sink.started:
             self._send_eof(conn)
             return
@@ -681,18 +678,15 @@ class _Handler(socketserver.BaseRequestHandler):
         try:
             result = self.server.engine.execute(  # type: ignore[attr-defined]
                 QueryRequest(
-                    query=(normalize_set_statement(sql)
-                           or merge_settings_clause(
-                               sql, self._settings)),
+                    query=sql, init_queries=init_queries(self._settings),
                     remote=True,
                 )
             )
         except Exception as e:
             self._send_err(conn, 1064, str(e)[:1500])
             return
-        set_pairs = parse_set_statement(sql)
-        if set_pairs:
-            self._settings.update(set_pairs)
+        if set_pairs := parse_set_statement(sql):
+            self._settings = merge(self._settings, set_pairs)
         self._send_resultset(conn, result, binary=True)
 
     def _send_ok(self, conn: _Conn) -> None:

@@ -53,12 +53,12 @@ from datetime import date, datetime
 from decimal import Decimal
 from typing import Any
 
-from bighouse_spark.dialect.lexer import in_span
+from bighouse_spark.dialect.lexer import in_span, quote
 from bighouse_spark.engine import BigHouseEngine, QueryRequest
 from bighouse_spark.netutil import NoDelayMixin
 from bighouse_spark.session_settings import (
-    merge_settings_clause,
-    normalize_set_statement,
+    init_queries,
+    merge,
     parse_set_statement,
 )
 from bighouse_spark.formats import ch_base_type
@@ -155,12 +155,9 @@ _PARAM_TOKEN_RE = re.compile(r"\$(\d+)")
 
 
 def _pg_literal(v: str | None) -> str:
-    if v is None:
-        return "NULL"
-    # Escape BOTH quote styles Spark's parser honors: '' for quotes
-    # and \\ for backslashes (a trailing backslash must not swallow
-    # the closing quote — that was an injection-shaped bug).
-    return "'" + v.replace("\\", "\\\\").replace("'", "''") + "'"
+    # lexer.quote escapes \\ too: a trailing backslash must not
+    # swallow the closing quote (an injection-shaped bug).
+    return "NULL" if v is None else quote(v)
 
 
 def _substitute_params(sql: str, params: list) -> str:
@@ -260,8 +257,8 @@ class _Handler(socketserver.BaseRequestHandler):
         self._portals: dict[str, dict[str, Any]] = {}
         self._ext_error = False  # swallow until Sync after an error
         # Per-connection settings (PG semantics: SET lasts for the
-        # session/connection): re-injected into later SELECTs as a
-        # trailing SETTINGS clause; 'SET k TO v' accepted too.
+        # session/connection; 'SET k TO v' accepted too): sent with
+        # every later statement as its init SET.
         self._settings: dict[str, str] = {}
         try:
             sock = self._startup(sock)
@@ -586,9 +583,7 @@ class _Handler(socketserver.BaseRequestHandler):
         try:
             result = self.server.engine.execute(
                 QueryRequest(
-                    query=(normalize_set_statement(sql)
-                           or merge_settings_clause(
-                               sql, self._settings)),
+                    query=sql, init_queries=init_queries(self._settings),
                     remote=True,
                 ),
                 stream_to=sink,
@@ -600,9 +595,8 @@ class _Handler(socketserver.BaseRequestHandler):
             sink.flush()
             self._send_error(sock, "42601", str(e)[:2000])
             return
-        set_pairs = parse_set_statement(sql)
-        if set_pairs:
-            self._settings.update(set_pairs)
+        if set_pairs := parse_set_statement(sql):
+            self._settings = merge(self._settings, set_pairs)
         if sink.started:
             sink.flush()
             sock.sendall(_msg(b"C", _cstr(f"SELECT {sink.rows_sent}")))
@@ -710,15 +704,13 @@ class _Handler(socketserver.BaseRequestHandler):
         if portal["result"] is None:
             portal["result"] = self.server.engine.execute(
                 QueryRequest(
-                    query=(normalize_set_statement(portal["sql"])
-                           or merge_settings_clause(
-                               portal["sql"], self._settings)),
+                    query=portal["sql"],
+                    init_queries=init_queries(self._settings),
                     remote=True,
                 )
             )
-            set_pairs = parse_set_statement(portal["sql"])
-            if set_pairs:
-                self._settings.update(set_pairs)
+            if set_pairs := parse_set_statement(portal["sql"]):
+                self._settings = merge(self._settings, set_pairs)
         return portal["result"]
 
     def _ext_describe(self, sock, payload: bytes) -> None:

@@ -44,8 +44,8 @@ from bighouse_spark.dialect.lexer import mask
 from bighouse_spark.engine import BigHouseEngine, QueryRequest
 from bighouse_spark.netutil import NoDelayMixin
 from bighouse_spark.session_settings import (
-    SELECTISH_RE,
-    merge_settings_clause,
+    init_queries,
+    merge,
     parse_set_statement,
 )
 from bighouse_spark.formats import (
@@ -137,6 +137,7 @@ _CREATE_TMP_RE = re.compile(
     r"([A-Za-z_][A-Za-z0-9_]*)",
     re.IGNORECASE,
 )
+_SELECTISH_RE = re.compile(r"^\s*(\(|SELECT\b|WITH\b)", re.IGNORECASE)
 _DROP_TMP_RE = re.compile(
     r"^\s*DROP\s+(?:TEMPORARY\s+)?TABLE\s+(IF\s+EXISTS\s+)?"
     r"([A-Za-z_][A-Za-z0-9_]*)\s*;?\s*$",
@@ -615,9 +616,9 @@ class _Handler(BaseHTTPRequestHandler):
             or normalize_format(self.headers.get("X-ClickHouse-Format"))
             or DEFAULT_FORMAT
         )
-        # SET-able URL params (CH accepts settings as query params;
-        # per-request, even inside a session — only SET statements
-        # persist to the session, matching CH).
+        # URL settings (CH accepts settings as query params): raw
+        # values, this request's only, even inside a session — only
+        # SET statements persist to the session, matching CH.
         # CH query parameters: ?param_<name>=value binds {name:Type}
         # placeholders (substituted engine-side, injection-safe).
         qparams = {
@@ -625,14 +626,14 @@ class _Handler(BaseHTTPRequestHandler):
             for k, v in params.items()
             if k.startswith("param_")
         }
-        init = [
-            f"SET {k} = {v[0]}"
+        pairs = {
+            k: v[0]
             for k, v in params.items()
             if k not in ("query", "default_format", "database", "user",
                          "password", "session_id", "query_id",
                          "session_timeout", "session_check")
             and not k.startswith("param_")
-        ]
+        }
         qid = (params.get("query_id") or [None])[0]
         sid = (params.get("session_id") or [None])[0]
         sess = None
@@ -682,17 +683,14 @@ class _Handler(BaseHTTPRequestHandler):
                 # SET param_<name> in a session binds {name:Type}
                 # placeholders in later requests (CH's session query
                 # parameters); URL param_<name> wins on collision.
+                # The session's other SETs go first, the URL's after.
                 for k, v in sess.settings.items():
                     if k.startswith("param_"):
-                        raw = v.strip()
-                        if (len(raw) >= 2 and raw[0] == raw[-1]
-                                and raw[0] in "'\""):
-                            raw = raw[1:-1].replace("''", "'")
-                        qparams.setdefault(k[len("param_"):], raw)
-                sql = merge_settings_clause(
-                    sql,
+                        qparams.setdefault(k[len("param_"):], v)
+                pairs = merge(
                     {k: v for k, v in sess.settings.items()
                      if not k.startswith("param_")},
+                    pairs,
                 )
             # Streamed results: line-based formats render from
             # toLocalIterator with chunked transfer-encoding — at most
@@ -707,7 +705,7 @@ class _Handler(BaseHTTPRequestHandler):
             if (
                 fmt in STREAMABLE_FORMATS
                 and not accept_compressed
-                and SELECTISH_RE.match(sql)  # SET/DDL keep ack paths
+                and _SELECTISH_RE.match(sql)  # SET/DDL keep ack paths
             ):
                 sink = _HTTPStreamSink(self, StreamRenderer(fmt), fmt, qid)
             try:
@@ -726,7 +724,8 @@ class _Handler(BaseHTTPRequestHandler):
                         )
                 else:
                     result = self.engine.execute(
-                        QueryRequest(query=sql, init_queries=init,
+                        QueryRequest(query=sql,
+                                     init_queries=init_queries(pairs),
                                      query_id=qid, remote=True,
                                      params=qparams),
                         stream_to=sink,
@@ -763,9 +762,8 @@ class _Handler(BaseHTTPRequestHandler):
                     sess.temp_tables[pending_create[0]] = pending_create[1]
                 if pending_drop:
                     sess.temp_tables.pop(pending_drop, None)
-                set_pairs = parse_set_statement(sql)
-                if set_pairs:
-                    sess.settings.update(set_pairs)
+                if set_pairs := parse_set_statement(sql):
+                    sess.settings = merge(sess.settings, set_pairs)
         finally:
             if sess is not None:
                 # Sliding TTL: every request in the session renews it.

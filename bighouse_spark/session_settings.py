@@ -1,41 +1,44 @@
-"""Shared SET-statement parsing and SETTINGS-clause merging.
+"""Settings: the one parser, the one renderer and the one split.
 
-Used by the HTTP ``session_id`` layer (server.py) and the
-per-connection state of the PG / MySQL wire endpoints: a ``SET k = v``
-persists to the scope (HTTP session / wire connection) and is
-re-injected into later SELECTs as a trailing ``SETTINGS`` clause —
-the engine's per-query settings channel, covering both conf-mapped
-and engine-enforced names. The query's own SETTINGS win on conflict.
+A setting means the same thing however it arrives: a URL or native
+packet setting, a ``SET`` kept by an HTTP session, a wire connection
+or a CLI run, or the query's own ``SETTINGS`` clause. Every scope hands
+its pairs to the engine as one init ``SET`` (:func:`set_statement`),
+the reference's channel (``temporal/workflow_query_executor.go:302-310``);
+the statement holds them, later pairs winning (:func:`merge`), and
+:func:`split_settings` alone decides what a name means. No channel
+writes the base session's conf.
 """
 
 from __future__ import annotations
 
 import re
 
-from bighouse_spark.dialect.lexer import mask, split_top_level
+from bighouse_spark.dialect.lexer import literal, split_top_level, unquote
 
+# ``SET`` statements, and ``SETTINGS`` clauses cut out of a query.
 SET_STMT_RE = re.compile(
-    r"^\s*SET\s+(.+?)\s*;?\s*$", re.IGNORECASE | re.DOTALL
+    r"^\s*SET(?:TINGS)?\s+(.+?)\s*;?\s*$", re.IGNORECASE | re.DOTALL
 )
 _SET_PAIR_RE = re.compile(
     r"^\s*([A-Za-z_][A-Za-z0-9_.]*)\s*(?:=|\s+TO\s+)\s*(.+?)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
-_SETTINGS_WORD = re.compile(r"(?<!\w)SETTINGS(?!\w)", re.IGNORECASE)
-SELECTISH_RE = re.compile(r"^\s*(\(|SELECT\b|WITH\b)", re.IGNORECASE)
 
-
-def _find_trailing_settings(sql: str) -> int | None:
-    """Index of the LAST word-bounded ``SETTINGS`` keyword that sits
-    OUTSIDE quoted spans and comments, or None —
-    ``WHERE msg = 'see SETTINGS docs'`` has no clause."""
-    found = list(_SETTINGS_WORD.finditer(mask(sql)))
-    return found[-1].start() if found else None
+# CH settings → Spark conf (SURVEY.md §2 B18); ``spark.*`` names pass
+# through. Every other name is a setting the engine reads, or a tuning
+# hint it drops.
+_SETTINGS_MAP = {
+    "max_parallel_replicas": "spark.sql.shuffle.partitions",
+    "max_threads": "spark.sql.shuffle.partitions",
+    "max_download_threads": "spark.hadoop.fs.s3a.threads.max",
+}
 
 
 def parse_set_statement(sql: str) -> dict[str, str] | None:
-    """``SET a = 1, b = 'x'`` (also PG's ``SET a TO 1``) → pair dict;
-    None when the statement is not a SET."""
+    """``SET a = 1, b = 'x'`` (also PG's ``SET a TO 1``, and a
+    ``SETTINGS …`` clause) → pair dict with each quoted value decoded
+    once; None when the text is neither."""
     m = SET_STMT_RE.match(sql)
     if not m:
         return None
@@ -43,37 +46,44 @@ def parse_set_statement(sql: str) -> dict[str, str] | None:
     for part in split_top_level(m.group(1)):
         pm = _SET_PAIR_RE.match(part)
         if pm:
-            out[pm.group(1)] = pm.group(2)
+            out[pm.group(1)] = unquote(pm.group(2))
     return out
 
 
-def normalize_set_statement(sql: str) -> str | None:
-    """Rewrite a SET statement to the ``SET k = v`` spelling the
-    engine accepts (PG clients send ``SET k TO v``); None when the
-    statement is not a SET or has no parseable pairs."""
-    pairs = parse_set_statement(sql)
-    if not pairs:
-        return None
-    return "SET " + ", ".join(f"{k} = {v}" for k, v in pairs.items())
+def set_statement(pairs: dict[str, str]) -> str:
+    """The ``SET`` statement :func:`parse_set_statement` reads back as
+    ``pairs``: numbers bare, every other value a quoted literal."""
+    return "SET " + ", ".join(
+        f"{k} = {literal(v)}" for k, v in pairs.items()
+    )
 
 
-def merge_settings_clause(sql: str, settings: dict[str, str]) -> str:
-    """Inject persisted settings as a trailing SETTINGS clause on a
-    SELECT-ish statement; the query's own SETTINGS win on conflict.
-    Appending at the very END is deliberate: the engine's transpile
-    strips SETTINGS first and FORMAT second, so its supported clause
-    order is ``... [FORMAT x] SETTINGS ...`` — a wire statement with
-    a trailing FORMAT keeps working. Non-SELECT statements pass
-    through unchanged."""
-    if not settings or not SELECTISH_RE.match(sql):
-        return sql
-    merged = dict(settings)
-    base = sql
-    idx = _find_trailing_settings(sql)
-    if idx is not None:
-        existing = parse_set_statement("SET " + sql[idx + 8:])
-        if existing:
-            base = sql[:idx].rstrip()
-            merged.update(existing)
-    clause = ", ".join(f"{k} = {v}" for k, v in merged.items())
-    return f"{base} SETTINGS {clause}"
+def init_queries(pairs: dict[str, str]) -> list[str]:
+    """A scope's pairs as a request's init queries: one ``SET``, or
+    none when the scope has set nothing."""
+    return [set_statement(pairs)] if pairs else []
+
+
+def merge(base: dict[str, str], top: dict[str, str]) -> dict[str, str]:
+    """``top`` layered over ``base``. A name set again moves to the
+    end, so where two names map to one conf key the later one wins."""
+    out = {k: v for k, v in base.items() if k not in top}
+    out.update(top)
+    return out
+
+
+def split_settings(
+    pairs: dict[str, str],
+) -> tuple[dict[str, str], dict[str, str]]:
+    """``(spark_conf, engine_settings)``: the one place that decides
+    what a setting name means."""
+    conf: dict[str, str] = {}
+    engine: dict[str, str] = {}
+    for k, v in pairs.items():
+        if k in _SETTINGS_MAP:
+            conf[_SETTINGS_MAP[k]] = v
+        elif k.startswith("spark."):
+            conf[k] = v
+        else:
+            engine[k] = v
+    return conf, engine

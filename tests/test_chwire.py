@@ -441,6 +441,22 @@ def test_set_statement_persists_on_connection(client):
     assert out["rows"][0][0] == 11160318154034397263
 
 
+def test_set_is_scoped_to_its_connection(ch_server, client, spark):
+    # A connection's SET is its own: a second connection, and the base
+    # session's conf, keep the base value.
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.getAll
+    other = CHClient(ch_server.host, ch_server.port)
+    other.read_hello()
+    try:
+        client.query(f"SET {key} = 3")
+        assert client.query(f"SET {key}")["rows"] == [[key, "3"]]
+        assert other.query(f"SET {key}")["rows"] == [[key, before[key]]]
+    finally:
+        other.close()
+    assert spark.conf.getAll == before
+
+
 def test_exception_then_connection_survives(client):
     with pytest.raises(RuntimeError):
         client.query("SELECT definitely_not_a_function(1)")

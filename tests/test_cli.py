@@ -63,3 +63,22 @@ def test_cli_splits_statements_by_the_ch_quote_rule(monkeypatch):
     seen.clear()
     assert cli.main(["-q", "SELECT 1 -- don't\n; SELECT 2"]) == 0
     assert seen == ["SELECT 1 -- don't", "SELECT 2"]
+
+
+def test_cli_script_set_is_the_scripts_scope(spark, monkeypatch, capsys):
+    # A script's SET goes with each later statement of the run, as the
+    # statement's init SET; the base session's conf is not written.
+    from bighouse_spark import __main__ as cli
+    from bighouse_spark import session
+    from bighouse_spark.engine import BigHouseEngine
+
+    BigHouseEngine(spark)  # sets its CBO flags before the snapshot
+    before = spark.conf.getAll
+    monkeypatch.setattr(session, "get_spark", lambda **kw: spark)
+    assert cli.main(
+        ["-q", "SET max_result_rows = 2; SELECT number FROM numbers(5)"]
+    ) == 1
+    assert "TOO_MANY_ROWS" in capsys.readouterr().err
+    assert cli.main(["-q", "SELECT number FROM numbers(5)"]) == 0
+    assert capsys.readouterr().out.split()[-5:] == ["0", "1", "2", "3", "4"]
+    assert spark.conf.getAll == before

@@ -15,6 +15,7 @@ from bighouse_spark.dialect.transpile import (
     _wrap_calls,
     transpile,
 )
+from bighouse_spark.session_settings import split_settings
 
 
 class TestGlobs:
@@ -249,11 +250,12 @@ class TestTranspileText:
         assert "CAST(xxhash64(a, b) AS DECIMAL(38,0))" in r.sql
 
     def test_settings_stripped_and_mapped(self):
-        sql, mapped, dropped = _strip_settings(
+        sql, pairs = _strip_settings(
             "SELECT 1 SETTINGS max_parallel_replicas=10, "
             "use_hedged_requests=0"
         )
         assert sql == "SELECT 1"
+        mapped, dropped = split_settings(pairs)
         assert mapped == {"spark.sql.shuffle.partitions": "10"}
         assert dropped == {"use_hedged_requests": "0"}
 
@@ -5739,17 +5741,14 @@ class TestGetSetting:
             eng.execute("SELECT getSetting('never_set_xyz')")
 
     def test_session_set_persists_into_get_setting(self, eng):
-        # The wire layers merge per-connection SET state into the
-        # SETTINGS clause — same mechanism, exercised engine-level
-        # via merge_settings_clause.
-        from bighouse_spark.session_settings import (
-            merge_settings_clause,
-        )
+        # The wire layers send per-connection SET state as the
+        # statement's init SET — exercised engine-level here.
+        from bighouse_spark.engine import QueryRequest
 
-        sql = merge_settings_clause(
-            "SELECT getSetting('mood') AS m", {"mood": "'calm'"}
-        )
-        assert eng.execute(sql).rows == [["calm"]]
+        assert eng.execute(QueryRequest(
+            query="SELECT getSetting('mood') AS m",
+            init_queries=["SET mood = 'calm'"],
+        )).rows == [["calm"]]
 
 
 class TestRound7ProbeTranche2:

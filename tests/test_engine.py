@@ -278,6 +278,83 @@ def test_settings_view_sees_init_query_set(engine):
     assert engine.execute(q).rows[0][0] != "5"
 
 
+# An init SET (a URL setting, or a session's or connection's SET)
+# means what the same name means in the SETTINGS clause.
+
+
+def test_init_query_set_max_result_rows_caps_the_result(engine):
+    with pytest.raises(ValueError, match="TOO_MANY_ROWS"):
+        engine.execute(QueryRequest(
+            query="SELECT number FROM numbers(100)",
+            init_queries=["SET max_result_rows = 5"],
+        ))
+
+
+def test_init_query_set_max_threads_reaches_the_dataset(
+    engine, spark, monkeypatch,
+):
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    seen, collect = [], DataFrame.collect
+
+    def spy(df):
+        seen.append(df._jdf.sparkSession().conf().get(key))
+        return collect(df)
+
+    monkeypatch.setattr(DataFrame, "collect", spy)
+    out = engine.execute(QueryRequest(
+        query="SELECT count() AS c FROM numbers(10)",
+        init_queries=["SET max_threads = 3"],
+    ))
+    assert out.rows == [[10]]
+    assert seen == ["3"]
+    assert spark.conf.get(key) == before
+
+
+def test_init_query_set_max_execution_time_times_out(engine):
+    # ~10 s to completion on 4 CPUs; the watchdog stops it at 0.5 s.
+    t0 = time.time()
+    with pytest.raises(TimeoutError, match="TIMEOUT_EXCEEDED"):
+        engine.execute(QueryRequest(
+            query="SELECT count() AS c FROM numbers(20000000) a, "
+            "numbers(1000) b",
+            init_queries=["SET max_execution_time = 0.5"],
+        ))
+    assert time.time() - t0 < 30
+
+
+def test_init_query_set_use_query_cache(engine):
+    # The result cache reads the statement's settings, not a regex
+    # over its text: an alias named use_query_cache turns nothing on.
+    engine.clear_cache()
+    req = QueryRequest(
+        query="SELECT rand() AS r", init_queries=["SET use_query_cache = 1"]
+    )
+    first = engine.execute(req).rows
+    assert engine.execute(req).rows == first
+    assert engine.query_log[-1].cached is True
+    q = ("WITH 1 AS use_query_cache "
+         "SELECT use_query_cache = 1 AS x, rand() AS r")
+    engine.execute(q)
+    engine.execute(q)
+    assert engine.query_log[-1].cached is False
+    engine.clear_cache()
+
+
+def test_standalone_set_writes_nothing(engine, spark):
+    # A bare SET answers like Spark's and leaves no trace: its pairs
+    # are the calling scope's to keep.
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.get(key)
+    out = engine.execute(f"SET {key} = 3, max_result_rows = 5")
+    assert out.cols == ["key", "value"]
+    assert out.rows == [[key, "3"], ["max_result_rows", "5"]]
+    assert spark.conf.get(key) == before
+    assert len(engine.execute("SELECT number FROM numbers(100)").rows) == 100
+
+
 def test_query_log_is_bounded_and_totals_keep_counting(spark, monkeypatch):
     from bighouse_spark import metrics
 
@@ -3216,16 +3293,23 @@ class TestRound12StatementSweep2:
         assert {"MergeTree", "Memory", "Null"} <= names
 
     def test_settings_view_ch_shape(self, eng):
-        eng.execute("SET max_result_rows = 123")
-        r = eng.execute(
+        # A setting is the statement's: it arrives as an init SET (a
+        # URL setting, or a session's SET).
+        init = ["SET max_result_rows = 123"]
+        q = (
             "SELECT name, value, changed FROM system.settings "
             "WHERE name = 'max_result_rows'"
-        ).rows
+        )
+        r = eng.execute(QueryRequest(query=q, init_queries=init)).rows
         assert r == [["max_result_rows", "123", 1]]
         # SHOW [CHANGED] SETTINGS filters on the CH column
-        assert eng.execute(
-            "SHOW CHANGED SETTINGS LIKE 'max_result%'"
-        ).rows[0][:2] == ["max_result_rows", "123"]
+        assert eng.execute(QueryRequest(
+            query="SHOW CHANGED SETTINGS LIKE 'max_result%'",
+            init_queries=init,
+        )).rows[0][:2] == ["max_result_rows", "123"]
+        # An in-process standalone SET leaves no trace.
+        eng.execute("SET max_result_rows = 123")
+        assert eng.execute(q).rows == [["max_result_rows", "0", 0]]
 
     def test_drop_truncate_if_exists(self, eng):
         assert eng.execute("TRUNCATE TABLE IF EXISTS __nope").rows == []
@@ -3714,6 +3798,11 @@ def test_query_kind_in_query_log(engine):
         init_queries=["INSERT INTO qk_t VALUES (7)"],
     ))
     assert last_kinds(2) == [("Insert", True), ("Select", True)]
+    # CH logs a SET as Set, with pairs or without
+    engine.execute("SET max_threads = 2")
+    assert last_kinds(1) == [("Set", True)]
+    engine.execute("SET spark.sql.shuffle.partitions")
+    assert last_kinds(1) == [("Set", True)]
     engine.execute("DROP TABLE qk_t")
     assert engine.execute(
         "SELECT query_kind FROM system.query_log "

@@ -78,6 +78,54 @@ def test_session_knob_does_not_leak_into_other_sessions(base, spark):
     assert out.split() == ["spark.sql.shuffle.partitions", original]
 
 
+
+def test_session_set_reaches_insert_select(base, spark, monkeypatch):
+    # A session's SET goes with every later statement of the session,
+    # not only its SELECTs: max_threads reaches the Dataset an
+    # INSERT ... SELECT writes, and the base conf keeps its value.
+    from pyspark.sql.classic.dataframe import DataFrame
+
+    key = "spark.sql.shuffle.partitions"
+    before = spark.conf.getAll
+    seen, write = [], DataFrame.write
+
+    def spy(df):
+        seen.append(df._jdf.sparkSession().conf().get(key))
+        return write.fget(df)
+
+    _q(base, "CREATE TABLE sess_ins (a Int64) ENGINE = MergeTree ORDER BY a")
+    try:
+        _q(base, "SET max_threads = 3", session_id="s_ins")
+        monkeypatch.setattr(DataFrame, "write", property(spy))
+        _q(base, "INSERT INTO sess_ins SELECT number FROM numbers(3)",
+           session_id="s_ins")
+        monkeypatch.undo()
+        assert _q(base, "SELECT count() FROM sess_ins").strip() == "3"
+    finally:
+        monkeypatch.undo()
+        _q(base, "DROP TABLE sess_ins")
+    assert seen and set(seen) == {"3"}
+    assert spark.conf.getAll == before
+
+
+def test_plain_set_is_invisible_to_the_next_request(base, spark):
+    # Without a session a SET has no scope to keep it: it answers and
+    # changes nothing, neither the next request nor the base conf.
+    before = spark.conf.getAll
+    assert _q(base, "SET max_result_rows = 5").split() == [
+        "max_result_rows", "5",
+    ]
+    assert len(_q(base, "SELECT number FROM numbers(100)").split()) == 100
+    assert spark.conf.getAll == before
+
+
+def test_url_setting_means_what_the_clause_means(base):
+    # ?max_result_rows=5 reaches the engine as an init SET.
+    code, body, _ = _q_err(
+        base, "SELECT number FROM numbers(100)", max_result_rows="5"
+    )
+    assert code == 400 and "TOO_MANY_ROWS" in body
+
 def test_temp_table_is_session_scoped(base):
     _q(
         base,

@@ -427,6 +427,22 @@ class TestMySQLConnectionSettings:
             c1.close()
             c2.close()
 
+    def test_set_is_scoped_to_its_connection(self, my, spark):
+        # A connection's SET is its own: a second connection, and the
+        # base session's conf, keep the base value.
+        key = "spark.sql.shuffle.partitions"
+        before = spark.conf.getAll
+        c1 = MyClient(my.host, my.port)
+        c2 = MyClient(my.host, my.port)
+        try:
+            assert c1.query(f"SET {key} = 3")[2] is None
+            assert c1.query(f"SET {key}")[1] == [[key, "3"]]
+            assert c2.query(f"SET {key}")[1] == [[key, before[key]]]
+        finally:
+            c1.close()
+            c2.close()
+        assert spark.conf.getAll == before
+
 
 class TestMySQLStreaming:
     def test_large_result_streams_identically(self, my):

@@ -397,6 +397,22 @@ class TestPGConnectionSettings:
             c1.close()
             c2.close()
 
+    def test_set_is_scoped_to_its_connection(self, pg, spark):
+        # A connection's SET is its own: a second connection, and the
+        # base session's conf, keep the base value.
+        key = "spark.sql.shuffle.partitions"
+        before = spark.conf.getAll
+        c1 = PGClient(pg.host, pg.port)
+        c2 = PGClient(pg.host, pg.port)
+        try:
+            assert c1.query(f"SET {key} = 3")[2] is None
+            assert c1.query(f"SET {key}")[1] == [[key, "3"]]
+            assert c2.query(f"SET {key}")[1] == [[key, before[key]]]
+        finally:
+            c1.close()
+            c2.close()
+        assert spark.conf.getAll == before
+
 
 class TestPGStreaming:
     def test_large_result_streams_identically(self, pg):

@@ -6,49 +6,79 @@ from __future__ import annotations
 
 import time
 
+import pytest
+
+from bighouse_spark.dialect.transpile import transpile
 from bighouse_spark.session_settings import (
-    merge_settings_clause,
-    normalize_set_statement,
     parse_set_statement,
+    set_statement,
+    split_settings,
 )
-
-
-class TestMergeSettingsClause:
-    def test_settings_inside_string_literal_untouched(self):
-        sql = "SELECT * FROM t WHERE msg = 'see SETTINGS docs'"
-        out = merge_settings_clause(sql, {"max_execution_time": "5"})
-        assert out == sql + " SETTINGS max_execution_time = 5"
-
-    def test_existing_clause_with_quoted_comma_value(self):
-        out = merge_settings_clause(
-            "SELECT 1 SETTINGS x = 'a,b'", {"y": "2"}
-        )
-        # the quoted comma survives; session value merges alongside
-        assert out == "SELECT 1 SETTINGS y = 2, x = 'a,b'"
-
-    def test_query_clause_wins_on_conflict(self):
-        out = merge_settings_clause(
-            "SELECT 1 SETTINGS x = 9", {"x": "1", "z": "3"}
-        )
-        assert out == "SELECT 1 SETTINGS x = 9, z = 3"
-
-    def test_settings_named_column_not_a_clause(self):
-        sql = "SELECT settings FROM t"
-        out = merge_settings_clause(sql, {"x": "1"})
-        assert out == sql + " SETTINGS x = 1"
-
-    def test_non_select_untouched(self):
-        sql = "INSERT INTO t VALUES (1)"
-        assert merge_settings_clause(sql, {"x": "1"}) == sql
 
 
 class TestSetStatementParsing:
     def test_to_spelling_and_multi_pairs(self):
         assert parse_set_statement("SET a TO 1, b = 'x,y'") == {
-            "a": "1", "b": "'x,y'",
+            "a": "1", "b": "x,y",
         }
-        assert normalize_set_statement("SET a TO 1") == "SET a = 1"
         assert parse_set_statement("SELECT 1") is None
+
+    @pytest.mark.parametrize(
+        "value", [",", "it's", "a\\b", "lz4", "5", "-1.5", ""],
+    )
+    def test_set_statement_round_trips(self, value):
+        # Raw values (URL settings, native packet settings) render as
+        # literals the one parser decodes back to the same string.
+        pairs = {"k": value, "max_threads": "2"}
+        assert parse_set_statement(set_statement(pairs)) == pairs
+
+    def test_values_decode_once(self):
+        assert parse_set_statement(
+            "SET a = 'it''s', b = 'it\\'s', c = '', d = 'a\\\\b'"
+        ) == {"a": "it's", "b": "it's", "c": "", "d": "a\\b"}
+
+    def test_split_decides_what_a_name_means(self):
+        assert split_settings({
+            "max_threads": "3", "spark.sql.ansi.enabled": "false",
+            "max_result_rows": "5",
+        }) == (
+            {"spark.sql.shuffle.partitions": "3",
+             "spark.sql.ansi.enabled": "false"},
+            {"max_result_rows": "5"},
+        )
+
+
+class TestSettingsClause:
+    """The query's SETTINGS clause, parsed by the SET parser and
+    layered over the statement's other settings in ``transpile``."""
+
+    def test_clause_values_split_quote_aware(self):
+        r = transpile(
+            "SELECT 1 SETTINGS format_csv_delimiter = ',', max_threads = 2"
+        )
+        assert r.sql == "SELECT 1"
+        assert r.dropped_settings == {"format_csv_delimiter": ","}
+        assert r.settings == {"spark.sql.shuffle.partitions": "2"}
+
+    def test_settings_inside_string_literal_is_no_clause(self):
+        sql = "SELECT * FROM t WHERE msg = 'see SETTINGS docs'"
+        r = transpile(sql, None, {"max_execution_time": "5"})
+        assert r.sql == sql
+        assert r.dropped_settings == {"max_execution_time": "5"}
+
+    def test_settings_named_column_is_no_clause(self):
+        for sql in ("SELECT settings FROM t", "SELECT t.settings, a FROM t"):
+            r = transpile(sql, None, {"x": "1"})
+            assert r.sql == sql
+            assert r.dropped_settings == {"x": "1"}
+
+    def test_query_clause_wins_over_scope(self):
+        r = transpile(
+            "SELECT 1 SETTINGS x = 9, max_threads = 4", None,
+            {"x": "1", "z": "3", "max_parallel_replicas": "7"},
+        )
+        assert r.dropped_settings == {"x": "9", "z": "3"}
+        assert r.settings == {"spark.sql.shuffle.partitions": "4"}
 
 
 class TestSessionStoreLifecycle:

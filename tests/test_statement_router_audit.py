@@ -19,13 +19,13 @@ it (``raw = stmt.request.query``), or a parameter some call in
 three are followed here.
 
 Adding a raw-text regex fails this test: match the masked copy
-instead. The one raw read left is the ``use_query_cache`` VALUE
-check, which reads at an offset the masked locate produced.
+instead.
 """
 
 from __future__ import annotations
 
 import ast
+import re
 from pathlib import Path
 
 import pytest
@@ -36,12 +36,7 @@ MASK_HELPERS = {"mask"}  # dialect.lexer.mask, both flavours
 REGEX_METHODS = ("match", "search", "fullmatch", "finditer", "findall")
 
 # (enclosing function, method, receiver, pattern-literal prefix).
-ALLOWED = {
-    # use_query_cache VALUE check: reads the raw text at an offset
-    # the masked locate produced — the slice starts outside any
-    # literal by construction
-    ("_route_query", "match", "re", "'?(1|true)\\b"),
-}
+ALLOWED: set[tuple] = set()
 
 # 96 chars: round 14 found that at 28 two distinct ALTER TABLE
 # routers collapsed to one key, letting a NEW router ship invisibly
@@ -377,6 +372,116 @@ def test_statements_never_write_base_session_conf():
     ]
 
 
+PACKAGE = ENGINE.parent
+# Setting names the program gives a meaning to.
+SETTING_NAMES = (
+    "max_threads", "max_parallel_replicas", "max_download_threads",
+    "max_result_rows", "result_overflow_mode", "max_execution_time",
+    "use_query_cache", "exact_cityhash", "max_funnel_group_events",
+    "network_compression_method",
+)
+# Built text that is a SET statement, or ends in a SETTINGS clause
+# whose pairs are formatted in (``{}`` stands for a formatted part).
+_SETTINGS_TEXT = re.compile(r"^\s*SET\s|\bSETTINGS\s*(?:\{\}|$)", re.I)
+_SETTING_NAME = re.compile(rf"\b(?:{'|'.join(SETTING_NAMES)})\b")
+_RE_CALLS = (
+    "compile", "match", "search", "fullmatch", "finditer", "findall",
+    "sub", "subn", "split",
+)
+
+
+def _built_text(node: ast.AST) -> str | None:
+    """The text an f-string or a ``+``/``%`` chain with a string part
+    builds, each formatted part spelled ``{}``; None for any other
+    node."""
+    if isinstance(node, ast.JoinedStr):
+        return "".join(
+            v.value if isinstance(v, ast.Constant) else "{}"
+            for v in node.values
+        )
+    if isinstance(node, ast.BinOp) and isinstance(node.op, (ast.Add, ast.Mod)):
+        parts = [
+            n.value if isinstance(n, ast.Constant) and isinstance(n.value, str)
+            else _built_text(n)
+            for n in (node.left, node.right)
+        ]
+        if parts == [None, None]:
+            return None
+        return "".join("{}" if t is None else t for t in parts)
+    return None
+
+
+def _scoped(tree: ast.AST):
+    """Every node with the name of the function it sits in."""
+    stack = [(tree, "<module>")]
+    while stack:
+        node, fn = stack.pop()
+        yield node, fn
+        for child in ast.iter_child_nodes(node):
+            stack.append((child, getattr(child, "name", fn) if isinstance(
+                child, (ast.FunctionDef, ast.AsyncFunctionDef)
+            ) else fn))
+
+
+def _settings_text_sites(root: Path) -> set[tuple[str, str, str]]:
+    """``(file, function, what)`` of every site that builds SET /
+    SETTINGS text, or whose regex names a setting."""
+    sites = set()
+    for path in sorted(root.rglob("*.py")):
+        rel = path.relative_to(root).as_posix()
+        for node, fn in _scoped(ast.parse(path.read_text())):
+            text = _built_text(node)
+            if text is not None and _SETTINGS_TEXT.search(text):
+                sites.add((rel, fn, "builds settings text"))
+            if (
+                isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and ast.unparse(node.func.value) == "re"
+                and node.func.attr in _RE_CALLS
+                and node.args
+            ):
+                pat = node.args[0]
+                text = pat.value if isinstance(pat, ast.Constant) else (
+                    _built_text(pat)
+                )
+                if isinstance(text, str) and _SETTING_NAME.search(text):
+                    sites.add((rel, fn, "regex names a setting"))
+    return sites
+
+
+def test_settings_are_parsed_and_rendered_in_one_place():
+    # Every channel hands the engine its settings as one init SET, and
+    # session_settings holds the one parser and the one renderer:
+    # splicing SET or SETTINGS text elsewhere, or reading a setting out
+    # of the statement with a regex, is a second settings path.
+    allowed = {
+        ("session_settings.py", "set_statement", "builds settings text"),
+    }
+    sites = {
+        s for s in _settings_text_sites(PACKAGE)
+        if s[0] != "session_settings.py" or s[2] != "regex names a setting"
+    }
+    sites.discard(("dialect/transpile.py", "_settings_spans",
+                   "regex names a setting"))
+    assert sites == allowed
+
+
+def test_settings_guard_sees_splices_and_regexes(tmp_path):
+    (tmp_path / "wire.py").write_text(
+        "import re\n"
+        "def run(sql, k, v, pairs):\n"
+        "    init = f'SET {k} = {v}'\n"
+        "    q = sql + ' SETTINGS ' + pairs\n"
+        "    ok = f'SELECT {k} FROM t'\n"
+        "    re.search(r'use_query_cache\\s*=', sql)\n"
+        "    re.search(r'settings_word', sql)\n"
+    )
+    assert _settings_text_sites(tmp_path) == {
+        ("wire.py", "run", "builds settings text"),
+        ("wire.py", "run", "regex names a setting"),
+    }
+
+
 def test_transpile_reads_files_only_through_read_source():
     # file()/s3()/url() sources go through sources.readers.read_source,
     # which owns the inferred-schema memo; a direct spark.read here
@@ -414,6 +519,7 @@ ROUTE_EXAMPLES = {
     "ANALYZE": ("ANALYZE TABLE t COMPUTE STATISTICS", "_route_analyze"),
     "GRANT": ("GRANT SELECT ON *.* TO u", "_route_rbac"),
     "SET ROLE": ("SET ROLE r", "_route_rbac"),
+    "SET": ("SET max_threads = 1, exact_cityhash = 1", "_route_set"),
     "REVOKE": ("REVOKE SELECT ON *.* FROM u", "_route_rbac"),
 }
 ROUTE_SPELLINGS = [
@@ -424,7 +530,7 @@ ROUTE_SPELLINGS = [
     ("WITH x AS (SELECT 1) SELECT * FROM x", "_route_query"),
     ("-- note\nALTER TABLE t DELETE WHERE 1", "_route_query"),
     ("/* c */ DROP TABLE t", "_route_query"),
-    ("SET max_threads = 1", "_route_query"),
+    ("SET max_threads = 1", "_route_set"),
     ("SET  role r", "_route_rbac"),
 ]
 

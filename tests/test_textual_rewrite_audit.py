@@ -139,9 +139,6 @@ QUOTE_DECODERS = {
     # one ``[...]`` array parameter element: strips the element's own
     # quote pair before rendering it as a typed literal
     ("bighouse_spark/dialect/transpile.py", "_render_param"),
-    # a session's ``SET param_<name> = '…'`` value: strips its one
-    # quote pair before binding it as a query parameter
-    ("bighouse_spark/server.py", "_ch_http"),
 }
 _QUOTE_CHARS = set("'\"`")
 
