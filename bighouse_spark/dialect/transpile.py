@@ -39,7 +39,7 @@ import weakref
 from collections import OrderedDict
 from dataclasses import dataclass, field, replace
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
 
 from bighouse_spark.dialect.globs import expand_braces
 from bighouse_spark.dialect.lexer import (
@@ -52,6 +52,7 @@ from bighouse_spark.dialect.lexer import (
     spans,
     split_top_level,
 )
+from bighouse_spark.session import base_session, create_view, epoch
 
 # Module import time = engine process start (uptime() anchor).
 _PROCESS_START = _time.time()
@@ -9733,10 +9734,33 @@ def transpile(
 # The registration memo keys on the session OBJECT, held weakly (the
 # sources.readers schema-memo pattern): an id() reused by a session
 # created after another was collected must not read as registered.
-# Values are per-module registration variants.
+# Values map a module to (variant, epoch of the registration). A
+# statement session copied its base's function registry when it was
+# ``born``, so it holds what the base registered before then.
 _UDF_SESSIONS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
+
+
+def _holds_udfs(spark: SparkSession, module: str, variant=True) -> bool:
+    base = base_session(spark)
+    got = _UDF_SESSIONS.get(spark, {}).get(module)
+    if got is None and base is not spark:
+        got = _UDF_SESSIONS.get(base, {}).get(module)
+        got = got if got and got[1] < spark.born else None
+    return got is not None and got[0] == variant
+
+
+def _register_udfs(spark: SparkSession, module: str, fns: dict,
+                   variant=True, on_base: bool = True) -> None:
+    """Register ``fns`` on ``spark``, and on its base when ``on_base``
+    and the base lacks them, so later statement sessions copy them."""
+    base = base_session(spark)
+    for s in {spark, base} if on_base else {spark}:
+        if s is spark or not _holds_udfs(base, module, variant):
+            for name, fn in fns.items():
+                s.udf.register(name, fn)
+            _UDF_SESSIONS.setdefault(s, {})[module] = (variant, epoch())
 
 
 def _pickle_udf_module_by_value(module) -> None:
@@ -9751,8 +9775,7 @@ def _pickle_udf_module_by_value(module) -> None:
 def _ensure_udfs(spark: SparkSession, module_name: str) -> None:
     """Register ``bighouse_spark.functions.<module_name>``'s ``ALL``
     UDFs on ``spark`` once."""
-    registered = _UDF_SESSIONS.setdefault(spark, {})
-    if module_name in registered:
+    if _holds_udfs(spark, module_name):
         return
     import importlib
 
@@ -9760,9 +9783,7 @@ def _ensure_udfs(spark: SparkSession, module_name: str) -> None:
         f"bighouse_spark.functions.{module_name}"
     )
     _pickle_udf_module_by_value(module)
-    for name, fn in module.ALL.items():
-        spark.udf.register(name, fn)
-    registered[module_name] = True
+    _register_udfs(spark, module_name, module.ALL)
 
 
 # Bit-exact CityHash64 v1.0.2 (the fidelity path behind
@@ -9803,17 +9824,21 @@ def _ensure_cityhash_udfs(spark: SparkSession) -> None:
     # The timezone is re-read on EVERY transpile that reaches here:
     # SET spark.sql.session.timeZone mid-session flips the answer
     # and must re-register the UDF (stale-parity fix, ADVICE r6).
-    tz = spark.conf.get("spark.sql.session.timeZone", "UTC")
-    allow_dt = _tz_is_utc_equivalent(tz)
-    registered = _UDF_SESSIONS.setdefault(spark, {})
-    if registered.get("cityhash") == allow_dt:
+    # A statement session's time zone may not be its base's: the base
+    # takes only the variant its own time zone gives.
+    tz = "spark.sql.session.timeZone"
+    allow_dt = _tz_is_utc_equivalent(spark.conf.get(tz, "UTC"))
+    if _holds_udfs(spark, "cityhash", allow_dt):
         return
     from bighouse_spark.functions import cityhash
 
     _pickle_udf_module_by_value(cityhash)
     fn = cityhash.make_cityhash64_row_udf(allow_datetime=allow_dt)
-    spark.udf.register("bh_cityhash64_row", fn)
-    registered["cityhash"] = allow_dt
+    base_tz = base_session(spark).conf.get(tz, "UTC")
+    _register_udfs(
+        spark, "cityhash", {"bh_cityhash64_row": fn}, allow_dt,
+        on_base=allow_dt == _tz_is_utc_equivalent(base_tz),
+    )
 
 
 _NAN_INF = re.compile(
@@ -12737,12 +12762,9 @@ def _sub_alias_refs(sql: str, alias: str, col_map) -> str:
     return _sub_outside_quotes(pat, sub, sql)
 
 
-# Process-wide monotonic counter for table-function view names.
-# Naming views per-call (__bh_src_0, __bh_src_1, ...) raced under the
-# ThreadingHTTPServer: two concurrent queries both registered
-# __bh_src_0 and could silently read each other's source. Temp views
-# are session-scoped shared state, so uniqueness must be process-wide;
-# the engine drops them after execution.
+# Names for the views a transpile registers: unique among the
+# transpiles that share one session (a statement's init queries and
+# nested statements, or callers that pass the base session).
 _VIEW_COUNTER = itertools.count()
 
 
@@ -12802,7 +12824,7 @@ def _rewrite_table_functions(
                     f"table function {fn}() requires a SparkSession to transpile"
                 )
             view = f"__bh_src_{next(_VIEW_COUNTER)}"
-            _register_source(spark, fn, args, view, uses_file)
+            create_view(spark, _source_frame(spark, fn, args, uses_file), view)
             views.append(view)
             out = out[:start] + view + out[end:]
     return out, views
@@ -13153,10 +13175,10 @@ def parse_inline_payload(spark, fmt_name: str, data: str, struct=None):
     )
 
 
-def _register_source(
-    spark: SparkSession, fn: str, args: list[str], view: str, uses_file: bool
-) -> None:
-    """Interpret a CH table-function arg list and register the read.
+def _source_frame(
+    spark: SparkSession, fn: str, args: list[str], uses_file: bool
+) -> DataFrame:
+    """Interpret a CH table-function arg list as the DataFrame it reads.
 
     Arg shapes (reference ``test.go:41-70``, ``README.md:148-163``):
       s3(url[, format[, schema[, compression]]])
@@ -13198,8 +13220,7 @@ def _register_source(
                 text_col=text_col,
                 k=int(args[3]) if len(args) > 3 else 3,
             )
-        df.createOrReplaceTempView(view)
-        return
+        return df
     if fn in ("postgresql", "mysql"):
         # postgresql('host:port', 'database', 'table', 'user',
         # 'password'[, 'schema'][, 'tls'|'tls_ca=/path']) /
@@ -13305,10 +13326,7 @@ def _register_source(
                 for i in dec_idx:
                     if isinstance(row[i], _Dec):
                         row[i] = float(row[i])
-        spark.createDataFrame(rows, schema).createOrReplaceTempView(
-            view
-        )
-        return
+        return spark.createDataFrame(rows, schema)
     if fn in ("cluster", "clusterAllReplicas"):
         # cluster('name', [db.]table): route a query at a named
         # cluster. One Spark session IS the cluster, so this is the
@@ -13317,8 +13335,7 @@ def _register_source(
         if len(args) < 2:
             raise ValueError(f"{fn}() needs (cluster, table) arguments")
         tbl = _unquote(args[1]).split(".")[-1]
-        spark.table(tbl).createOrReplaceTempView(view)
-        return
+        return spark.table(tbl)
     if fn in ("remote", "remoteSecure"):
         # remote('addrs', [db,] table [, user, password]): read a
         # table on another server. One warm session serves every
@@ -13342,8 +13359,7 @@ def _register_source(
         tbl = parts[-1]
         if db == "system":
             tbl = f"system_{tbl}"
-        spark.table(tbl).createOrReplaceTempView(view)
-        return
+        return spark.table(tbl)
     if fn == "format":
         # format(Format[, 'structure'], '<data>'): inline data as a
         # table — the clickhouse-local idiom for querying a pasted
@@ -13377,10 +13393,7 @@ def _register_source(
             .replace("\\n", "\n").replace("\\t", "\t")
             .replace("\x00", "\\")
         )
-        parse_inline_payload(
-            spark, fmt_name, data, struct
-        ).createOrReplaceTempView(view)
-        return
+        return parse_inline_payload(spark, fmt_name, data, struct)
     if fn == "null":
         # null('schema'): typed empty table (CH's Null-engine
         # blackhole as a source reads zero rows).
@@ -13389,8 +13402,7 @@ def _register_source(
         from bighouse_spark.dialect.schema import parse_schema_string
 
         struct = parse_schema_string(_unquote(args[0]))
-        spark.createDataFrame([], struct).createOrReplaceTempView(view)
-        return
+        return spark.createDataFrame([], struct)
     if fn in ("zeros", "zeros_mt"):
         # zeros(N): N rows of a single UInt8 `zero` column (CH's
         # cheapest row generator; _mt parallelism is Spark's job).
@@ -13398,10 +13410,9 @@ def _register_source(
             raise ValueError(f"{fn}() takes exactly one argument")
         from pyspark.sql import functions as F
 
-        spark.range(0, int(_unquote(args[0]))).select(
+        return spark.range(0, int(_unquote(args[0]))).select(
             F.lit(0).cast("smallint").alias("zero")
-        ).createOrReplaceTempView(view)
-        return
+        )
     if fn == "values":
         # values('a T, b U', (..), (..)): inline literal table. Spark's
         # VALUES syntax provides the rows; the CH schema string names
@@ -13418,8 +13429,7 @@ def _register_source(
         df = spark.sql(f"SELECT * FROM VALUES {rows} AS __v({names})")
         for f in struct.fields:
             df = df.withColumn(f.name, df[f.name].cast(f.dataType))
-        df.createOrReplaceTempView(view)
-        return
+        return df
     if fn == "generateRandom":
         # generateRandom('schema'[, seed]): deterministic pseudorandom
         # rows typed by the schema — hash-derived from a lazy infinite
@@ -13477,8 +13487,7 @@ def _register_source(
             *[rand_col(i, f.dataType).alias(f.name)
               for i, f in enumerate(struct.fields)]
         )
-        out_df.createOrReplaceTempView(view)
-        return
+        return out_df
     if fn == "merge":
         # merge([db,] 'tables_regexp'): union of every registered
         # table whose name matches — CH's multi-table read. Strict
@@ -13496,8 +13505,7 @@ def _register_source(
         out = spark.table(names[0])
         for n in names[1:]:
             out = out.unionByName(spark.table(n))
-        out.createOrReplaceTempView(view)
-        return
+        return out
     if fn.endswith("Cluster"):
         args = args[1:]  # drop '{cluster}' — vacuous in Spark (B2)
     if not args:
@@ -13538,8 +13546,7 @@ def _register_source(
                 add_file_column=uses_file,
                 options=options,
             )
-            df.createOrReplaceTempView(view)
-            return
+            return df
         # Small sets / other formats: driver-local spool (concurrent
         # fetch, LRU + pin-refcounted). No Hadoop FS speaks http, and
         # for a handful of public CSVs (the reference's use, run.sh:17)
@@ -13560,7 +13567,7 @@ def _register_source(
         add_file_column=uses_file,
         options=options,
     )
-    df.createOrReplaceTempView(view)
+    return df
 
 
 # -If x -State stackings (round-11 seam sweep #2): the

@@ -39,7 +39,7 @@ from bighouse_spark.dialect.transpile import (
 )
 from bighouse_spark.dialect.lexer import close_paren, mask, split_top_level
 from bighouse_spark.operators.caching import release_tracked
-from bighouse_spark.session import get_spark
+from bighouse_spark.session import StatementSession, create_view, get_spark
 from bighouse_spark.session_settings import (
     merge,
     parse_set_statement,
@@ -54,9 +54,10 @@ _SELECT_LIST_SCAN = re.compile(r"[()\[\],]|(?<![\w])FROM\b", re.IGNORECASE)
 # execute for init queries and DDL; resource release fires only when
 # the OUTERMOST one unwinds), ``settings`` the running statement's
 # setting pairs (cluster shape, then init ``SET``s, then the Spark conf
-# of its ``SETTINGS``; ``_sql`` runs on a clone that holds their Spark
-# conf half, ``_statement_conf``), ``logged_error`` the
-# failure already written to the log, ``qid``/``watch`` the outermost
+# of its ``SETTINGS``; its session holds their Spark conf half,
+# ``_statement_conf``), ``session`` the outermost statement's session
+# (``BigHouseEngine._stmt_session``), ``logged_error`` the failure
+# already written to the log, ``qid``/``watch`` the outermost
 # statement's query id and watchdog.
 _REQ_LOCAL = threading.local()
 
@@ -159,12 +160,11 @@ class _Logged(NamedTuple):
 class _Statement:
     """One statement as the lifecycle tracks it. Routing rewrites
     replace ``request``, so the log records the text that ran;
-    ``views`` are temp views dropped when the statement ends;
     ``label`` is what a failure logs as ``transpiled``; ``kind`` is
-    the logged ``query_kind``."""
+    the logged ``query_kind``. Its temp views live on its session and
+    end with it (``BigHouseEngine._run``)."""
 
     request: QueryRequest
-    views: list[str] = field(default_factory=list)
     label: str = ""
     kind: str = "Select"
 
@@ -326,8 +326,7 @@ class BigHouseEngine:
         # Monotonic count of cancellations (KILL QUERY + watchdog),
         # surfaced by the Prometheus /metrics endpoint.
         self.kill_count = 0
-        # Statements run on a small-plan clone (_small_plan), for
-        # /metrics.
+        # Statements planned small (_small_plan), for /metrics.
         self.small_plan_count = 0
         # Cost-based optimization: with table/column stats from
         # ANALYZE, Catalyst reorders joins and sizes broadcasts from
@@ -351,7 +350,7 @@ class BigHouseEngine:
             raise ValueError(f"RENAME TABLE: target {new} exists")
         if old in self._attached:
             path, fmt, schema = self._attached.pop(old)
-            self.spark.catalog.dropTempView(old)
+            self._unpublish(old)
             if old in self._analyzed:
                 # Demote on rename: statistics are bound to the
                 # catalog identifier. Re-ANALYZE under the new name to
@@ -383,9 +382,8 @@ class BigHouseEngine:
                 self._comments[(new, c)] = self._comments.pop((t, c))
             self.attach_table(new, path, fmt=fmt, schema=schema)
         elif self.spark.catalog.tableExists(old):
-            df = self.spark.table(old)
-            df.createOrReplaceTempView(new)
-            self.spark.catalog.dropTempView(old)
+            self._publish(self.spark.table(old), new)
+            self._unpublish(old)
             if old in self._user_views:
                 self._user_views[new] = self._user_views.pop(old)
             for (t, c) in [k for k in self._comments if k[0] == old]:
@@ -488,31 +486,51 @@ class BigHouseEngine:
                 self.spark.sql(
                     f"ANALYZE TABLE {cat} COMPUTE STATISTICS NOSCAN"
                 )
-                self.spark.table(cat).select(*df.columns) \
-                    .createOrReplaceTempView(name)
+                self._publish(self.spark.table(cat).select(*df.columns),
+                              name)
                 return
             self.spark.sql(f"DROP TABLE IF EXISTS {cat}")
             self._analyzed.discard(name)
-        df.createOrReplaceTempView(name)
+        self._publish(df, name)
         self._attached[name] = (path, fmt, schema)
 
-    def refresh_system_views(self, only: "set[str] | None" = None) -> None:
+    def _publish(self, df: DataFrame, name: str) -> None:
+        """Register ``df`` (built on the base session) as temp view
+        ``name`` on the base, where DDL outlives its statement, and on
+        the running statement's session if it has one, so the rest of
+        the statement sees it too."""
+        df.createOrReplaceTempView(name)
+        if (s := getattr(_REQ_LOCAL, "session", None)) is not None:
+            create_view(s, df, name)
+
+    def _unpublish(self, name: str) -> None:
+        """Drop temp view ``name`` from the base session and from the
+        running statement's."""
+        self.spark.catalog.dropTempView(name)
+        if (s := getattr(_REQ_LOCAL, "session", None)) is not None:
+            s.catalog.dropTempView(name)
+
+    def refresh_system_views(
+        self, only: "set[str] | None" = None,
+        spark: SparkSession | None = None,
+    ) -> None:
         """Materialize engine bookkeeping as queryable views — the
         ``system.query_log`` analog (reference enables query_log et
         al. in ``ch/config.xml:932-1101``; B17 in SURVEY.md §2).
         Registered as ``system_query_log`` (temp-view names cannot
-        contain dots).
+        contain dots) on ``spark``, by default the running statement's
+        session (``_stmt_session``): a statement reading ``system.*``
+        sees its own views, and they end with it. Outside a statement,
+        and for ``SYSTEM FLUSH LOGS``, that is the base session.
 
-        ``only`` (r15): rebuild just the named views (e.g.
-        ``{"system_parts"}``). A full rebuild cost ~6-9 s of driver
-        time — 2,000+ py4j round trips dominated by per-column
-        catalog introspection, the ``SET -v`` collect and the
-        on-disk parts walk — and ran before EVERY ``system.*``
-        statement, while a statement references one or two views.
-        ``execute()`` passes the referenced names; ``None`` (the
-        manual / SYSTEM FLUSH LOGS surface) or any unknown name
-        rebuilds everything, so laziness can never serve a missing
-        view."""
+        ``only``: rebuild just the named views, as ``execute()`` does
+        (a full rebuild costs seconds of py4j catalog introspection);
+        ``None`` or any unknown name rebuilds everything, so laziness
+        can never serve a missing view."""
+        spark = spark or self._stmt_session
+
+        def put(view: str, rows: list, schema: str) -> None:
+            spark.createDataFrame(rows, schema).createOrReplaceTempView(view)
 
         def _query_log() -> None:
             schema = (
@@ -528,15 +546,13 @@ class BigHouseEngine:
                 # request thread appends to raises)
                 for e in list(self.query_log)
             ]
-            self.spark.createDataFrame(rows, schema).createOrReplaceTempView(
-                "system_query_log"
-            )
+            put("system_query_log", rows, schema)
 
         def _one() -> None:
             # system.one: CH's canonical dummy table (one row, dummy=0)
             # — the implicit FROM of bare SELECTs and the
             # remote()/cluster() smoke target.
-            self.spark.sql("SELECT CAST(0 AS TINYINT) AS dummy") \
+            spark.sql("SELECT CAST(0 AS TINYINT) AS dummy") \
                 .createOrReplaceTempView("system_one")
 
         def _processes() -> None:
@@ -550,7 +566,7 @@ class BigHouseEngine:
             rows = ", ".join(
                 f"(:p{i}, :p{i + 1}, :p{i + 2})" for i in range(0, len(flat), 3)
             )
-            self.spark.sql(
+            spark.sql(
                 f"SELECT * FROM VALUES {rows} "
                 f"AS t(query_id, query, elapsed_sec) LIMIT {len(procs)}",
                 args={f"p{i}": v for i, v in enumerate(flat)},
@@ -565,18 +581,16 @@ class BigHouseEngine:
                 _tables_memo.append([
                     (t.name, t.database or "", t.tableType,
                      bool(t.isTemporary))
-                    for t in self.spark.catalog.listTables()
+                    for t in spark.catalog.listTables()
                     if not t.name.startswith("__bh_src_")
                     and not t.name.endswith("__bhcat")
                 ])
             return _tables_memo[0]
 
         def _tables() -> None:
-            self.spark.createDataFrame(
-                _list_tables(),
+            put("system_tables", _list_tables(),
                 "name string, database string, engine string, "
-                "is_temporary boolean",
-            ).createOrReplaceTempView("system_tables")
+                "is_temporary boolean")
 
         def _columns() -> None:
             cols = []
@@ -590,7 +604,7 @@ class BigHouseEngine:
                     # catalog.listColumns materializes each Column
                     # field-by-field over the wire and dominated the
                     # old full refresh (~6 s with a few dozen views).
-                    fields = self.spark.table(tname).schema.fields
+                    fields = spark.table(tname).schema.fields
                 except Exception:
                     continue  # dropped concurrently; best-effort
                 for f in fields:
@@ -602,21 +616,17 @@ class BigHouseEngine:
                         "DEFAULT" if dflt is not None else "",
                         dflt or "",
                     ))
-            self.spark.createDataFrame(
-                cols,
+            put("system_columns", cols,
                 "table string, name string, type string, "
                 "nullable boolean, comment string, default_kind string, "
-                "default_expression string",
-            ).createOrReplaceTempView("system_columns")
+                "default_expression string")
 
         def _mutations() -> None:
             # system.mutations analog: the engine's synchronous
             # mutation log (ALTER UPDATE/DELETE), is_done always 1.
-            self.spark.createDataFrame(
-                [m + (1,) for m in self._mutations] or [],
+            put("system_mutations", [m + (1,) for m in self._mutations],
                 "table string, mutation_id string, command string, "
-                "create_time timestamp, is_done int",
-            ).createOrReplaceTempView("system_mutations")
+                "create_time timestamp, is_done int")
 
         def _clusters() -> None:
             # system.clusters analog (the reference's first smoke
@@ -639,11 +649,9 @@ class BigHouseEngine:
                 pass  # py4j surface moved; fall back to the driver row
             if not clusters:
                 clusters = [("bighouse", "driver", 0, 0, 0)]
-            self.spark.createDataFrame(
-                clusters,
+            put("system_clusters", clusters,
                 "cluster_name string, host_name string, port int, "
-                "num_running_tasks int, cache_size bigint",
-            ).createOrReplaceTempView("system_clusters")
+                "num_running_tasks int, cache_size bigint")
 
         def _profile() -> None:
             # processors_profile_log analog (reference
@@ -656,11 +664,9 @@ class BigHouseEngine:
                 len(tracker.getActiveJobsIds() or []),
                 len(tracker.getActiveStageIds() or []),
             )]
-            self.spark.createDataFrame(
-                profile,
+            put("system_profile", profile,
                 "queries_executed bigint, total_elapsed_sec double, "
-                "active_jobs int, active_stages int",
-            ).createOrReplaceTempView("system_profile")
+                "active_jobs int, active_stages int")
 
         def _settings() -> None:
             # system.settings analog in CH's column shape (name /
@@ -670,9 +676,7 @@ class BigHouseEngine:
             # running statement's pairs (an init-query SET: a URL
             # setting or its scope's SETs) change a CH-named setting.
             pairs = getattr(_REQ_LOCAL, "settings", {})
-            shuffle = _statement_conf().get(
-                "spark.sql.shuffle.partitions"
-            ) or self.spark.conf.get("spark.sql.shuffle.partitions", "200")
+            shuffle = spark.conf.get("spark.sql.shuffle.partitions", "200")
             ch_rows = [(name, pairs.get(name, default), int(name in pairs),
                         text) for name, default, text in (
                 ("max_threads", shuffle,
@@ -697,20 +701,18 @@ class BigHouseEngine:
             )]
             spark_rows = [
                 (r["key"], r["value"], 0, r["meaning"])
-                for r in self.spark.sql("SET -v")
+                for r in spark.sql("SET -v")
                 .toDF("key", "value", "meaning", "since")
                 .collect()
             ]
-            self.spark.createDataFrame(
-                ch_rows + spark_rows,
+            put("system_settings", ch_rows + spark_rows,
                 "name string, value string, changed int, "
-                "description string",
-            ).createOrReplaceTempView("system_settings")
+                "description string")
 
         def _table_engines() -> None:
             # system.table_engines analog: the ENGINE names the DDL
             # surface acknowledges.
-            self.spark.createDataFrame(
+            put("system_table_engines",
                 [("MergeTree", True, True),
                  ("ReplacingMergeTree", True, True),
                  ("SummingMergeTree", True, True),
@@ -720,16 +722,14 @@ class BigHouseEngine:
                  ("Null", False, False), ("View", False, False),
                  ("MaterializedView", False, False)],
                 "name string, supports_settings boolean, "
-                "supports_sort_order boolean",
-            ).createOrReplaceTempView("system_table_engines")
+                "supports_sort_order boolean")
 
         def _databases() -> None:
             # system.databases analog: the single warehouse this
             # engine serves plus the system views' pseudo-database.
-            self.spark.createDataFrame(
+            put("system_databases",
                 [("default", "Atomic"), ("system", "Memory")],
-                "name string, engine string",
-            ).createOrReplaceTempView("system_databases")
+                "name string, engine string")
 
         def _parts() -> None:
             # system.parts analog: one row per backing data file of
@@ -781,11 +781,9 @@ class BigHouseEngine:
                         "" if rel_dir == "." else rel_dir,
                         int(_os.path.getsize(fpath)), int(n_rows),
                     ))
-            self.spark.createDataFrame(
-                parts,
+            put("system_parts", parts,
                 "table string, name string, partition string, "
-                "bytes_on_disk bigint, rows bigint",
-            ).createOrReplaceTempView("system_parts")
+                "bytes_on_disk bigint, rows bigint")
 
         def _detached_parts() -> None:
             # system.detached_parts analog: partitions parked by
@@ -810,72 +808,58 @@ class BigHouseEngine:
                         if not f.startswith(("_", "."))
                     )
                     detached.append((tname, frag, int(nbytes)))
-            self.spark.createDataFrame(
-                detached,
-                "table string, partition string, bytes_on_disk bigint",
-            ).createOrReplaceTempView("system_detached_parts")
+            put("system_detached_parts", detached,
+                "table string, partition string, bytes_on_disk bigint")
 
         def _dictionaries() -> None:
-            self.spark.createDataFrame(
+            put("system_dictionaries",
                 [(n, src, pk) for n, (src, pk) in self._dicts.items()],
-                "name string, source string, key string",
-            ).createOrReplaceTempView("system_dictionaries")
+                "name string, source string, key string")
 
         def _maintenance() -> None:
             # system.data_skipping_indices analog (ALTER ... ADD
             # INDEX), plus each table's TTL expression.
-            self.spark.createDataFrame(
-                [
-                    (t, i, e, ty)
-                    for t, m in self._skip_indices.items()
-                    for i, (e, ty) in m.items()
-                ],
-                "table string, name string, expr string, type string",
-            ).createOrReplaceTempView("system_data_skipping_indices")
-            self.spark.createDataFrame(
-                list(self._ttl.items()), "table string, ttl string",
-            ).createOrReplaceTempView("system_table_ttl")
+            put("system_data_skipping_indices",
+                [(t, i, e, ty) for t, m in self._skip_indices.items()
+                 for i, (e, ty) in m.items()],
+                "table string, name string, expr string, type string")
+            put("system_table_ttl", list(self._ttl.items()),
+                "table string, ttl string")
 
         def _functions() -> None:
             # system.functions analog: every ClickHouse function
-            # spelling the dialect layer maps. Static per process —
-            # registered once, skipped on later refreshes.
+            # spelling the dialect layer maps.
             from bighouse_spark.dialect.transpile import (
                 SERVED_COMBINATORS,
                 served_function_names,
             )
-            if not getattr(self, "_fn_views_registered", False):
-                self.spark.createDataFrame(
-                    served_function_names(), "name string, kind string"
-                ).createOrReplaceTempView("system_functions")
-                self.spark.createDataFrame(
-                    [(c,) for c in SERVED_COMBINATORS], "name string"
-                ).createOrReplaceTempView(
-                    "system_aggregate_function_combinators"
-                )
-                self._fn_views_registered = True
+
+            put("system_functions", served_function_names(),
+                "name string, kind string")
+            put("system_aggregate_function_combinators",
+                [(c,) for c in SERVED_COMBINATORS], "name string")
 
         # Keep in sync with _SYSTEM_VIEW_NAMES (execute() uses it to
         # recognize underscore-spelled references in statements).
-        builders: dict[str, list] = {
-            "system_query_log": [_query_log],
-            "system_one": [_one],
-            "system_processes": [_processes],
-            "system_tables": [_tables],
-            "system_columns": [_columns],
-            "system_mutations": [_mutations],
-            "system_clusters": [_clusters],
-            "system_profile": [_profile],
-            "system_settings": [_settings],
-            "system_table_engines": [_table_engines],
-            "system_databases": [_databases],
-            "system_parts": [_parts],
-            "system_detached_parts": [_detached_parts],
-            "system_dictionaries": [_dictionaries],
-            "system_data_skipping_indices": [_maintenance],
-            "system_table_ttl": [_maintenance],
-            "system_functions": [_functions],
-            "system_aggregate_function_combinators": [_functions],
+        builders: dict[str, Callable[[], None]] = {
+            "system_query_log": _query_log,
+            "system_one": _one,
+            "system_processes": _processes,
+            "system_tables": _tables,
+            "system_columns": _columns,
+            "system_mutations": _mutations,
+            "system_clusters": _clusters,
+            "system_profile": _profile,
+            "system_settings": _settings,
+            "system_table_engines": _table_engines,
+            "system_databases": _databases,
+            "system_parts": _parts,
+            "system_detached_parts": _detached_parts,
+            "system_dictionaries": _dictionaries,
+            "system_data_skipping_indices": _maintenance,
+            "system_table_ttl": _maintenance,
+            "system_functions": _functions,
+            "system_aggregate_function_combinators": _functions,
         }
         # Loud divergence guard: execute()'s underscore-reference scan
         # trusts _SYSTEM_VIEW_NAMES to be exactly the buildable set.
@@ -883,21 +867,10 @@ class BigHouseEngine:
             "refresh_system_views builders out of sync with "
             "_SYSTEM_VIEW_NAMES"
         )
-        if only is not None and all(n in builders for n in only):
-            todo: list = []
-            for n in only:
-                for b in builders[n]:
-                    if b not in todo:
-                        todo.append(b)
-        else:
-            todo = [
-                _query_log, _one, _processes, _tables, _columns,
-                _mutations, _clusters, _profile, _settings,
-                _table_engines, _databases, _parts, _detached_parts,
-                _dictionaries, _maintenance, _functions,
-            ]
-        for b in todo:
-            b()
+        names = only if only is not None and only <= builders.keys() \
+            else builders
+        for build in dict.fromkeys(builders[n] for n in names):
+            build()
 
     # Every temp-view name refresh_system_views can build — used by
     # execute() to also refresh views referenced by their registered
@@ -1481,33 +1454,21 @@ class BigHouseEngine:
                 )
         cond = self._coerce_mutation_cond(cond)
         view = f"__bh_mutp_{uuid.uuid4().hex}"
-        df.createOrReplaceTempView(view)
-        try:
-            if is_delete:
-                sel = self._transpile(
-                    f"SELECT * FROM {view} WHERE NOT ({cond})"
-                )
-            else:
-                items = [
-                    f"CASE WHEN ({cond}) THEN ({pairs[c]}) "
-                    f"ELSE `{c}` END AS `{c}`" if c in pairs
-                    else f"`{c}`"
-                    for c in df.columns
-                ]
-                sel = self._transpile(
-                    f"SELECT {', '.join(items)} FROM {view}"
-                )
-            # files in the directory never carry the partition key —
-            # project back to the file schema before the swap
-            out = self._sql(sel.sql).select(*file_cols)
-            path = self._write_swap(
-                name, subdir, out, "mutp"
-            )
-        finally:
-            try:
-                self.spark.catalog.dropTempView(view)
-            except Exception:
-                pass
+        create_view(self._stmt_session, df, view)
+        if is_delete:
+            sel = self._transpile(f"SELECT * FROM {view} WHERE NOT ({cond})")
+        else:
+            items = [
+                f"CASE WHEN ({cond}) THEN ({pairs[c]}) "
+                f"ELSE `{c}` END AS `{c}`" if c in pairs
+                else f"`{c}`"
+                for c in df.columns
+            ]
+            sel = self._transpile(f"SELECT {', '.join(items)} FROM {view}")
+        # files in the directory never carry the partition key —
+        # project back to the file schema before the swap
+        out = self._sql(sel.sql).select(*file_cols)
+        path = self._write_swap(name, subdir, out, "mutp")
         self._record_mutation(
             name,
             ("DELETE" if is_delete else f"UPDATE {assigns}")
@@ -2225,7 +2186,9 @@ class BigHouseEngine:
                 out[am.group(1)] = item[: am.start()].strip()
         return out
 
-    def _sql_with_alias_fallback(self, sql: str):
+    def _sql_with_alias_fallback(
+        self, sql: str, spark: SparkSession | None = None,
+    ):
         """``spark.sql`` with ClickHouse's alias-in-WHERE semantics:
         CH resolves select-list aliases inside WHERE (a day-one
         migration idiom: ``SELECT f(x) AS s ... WHERE s LIKE ...``);
@@ -2255,7 +2218,7 @@ class BigHouseEngine:
         current = sql
         for _ in range(8):
             try:
-                return self._sql(current)
+                return self._sql(current, spark)
             except AnalysisException as e:
                 msg = str(e)
                 nm = re.search(
@@ -2342,7 +2305,7 @@ class BigHouseEngine:
                     raise
                 tail = "".join(pieces) + tail_src[last:]
                 current = current[:w_end] + tail + current[c_end:]
-        return self._sql(current)
+        return self._sql(current, spark)
 
     def _missing_col_default(self, name: str, field) -> "object":
         """Fill expression for a column omitted from an INSERT column
@@ -2650,7 +2613,7 @@ class BigHouseEngine:
             )
         if name in self._mviews or name in self._attached:
             raise ValueError(f"CREATE MATERIALIZED VIEW {name}: name in use")
-        transpiled = self._transpile(select_sql).sql
+        transpiled = self._transpile(select_sql, self.spark).sql
         base = tempfile.mkdtemp(prefix=f"bh_mv_{name}_")
         state_parts = self._mv_state_partitions(src)
         self._mviews[name] = {
@@ -2739,33 +2702,35 @@ class BigHouseEngine:
         checkpointed state, republish the result as temp view
         ``name``. The caller holds ``mv["lock"]``."""
         import os
-        import uuid
 
         mv = self._mviews[name]
         path, fmt, _schema = self._attached[mv["source"]]
         src_schema = self.spark.table(mv["source"]).schema
-        stream_view = f"__bh_mv_src_{uuid.uuid4().hex[:8]}"
-        reader = self.spark.readStream.schema(src_schema).format(fmt)
+        stmt_spark = self._stmt_session
+        reader = stmt_spark.readStream.schema(src_schema).format(fmt)
         if fmt == "csv":
             reader = reader.option("header", "true")
-        reader.load(path).createOrReplaceTempView(stream_view)
+        reader.load(path).createOrReplaceTempView("__bh_mv_src")
         sql = re.sub(
             rf"(?<![\w`.]){re.escape(mv['source'])}(?![\w`.])",
-            stream_view, mv["select"],
+            "__bh_mv_src", mv["select"],
         )
-        # Analyzed on the base session (it sees the current views),
-        # started on the view's clone: a stream takes its conf (the
-        # state partition count, which the checkpoint then pins) and
-        # its query manager from its Dataset's session.
-        plan = self.spark.sql(sql)._jdf.queryExecution().analyzed()
+        # Analyzed on the statement's session, where the stream view
+        # lives, started on the view's clone: a stream takes its conf
+        # (the state partition count, which the checkpoint then pins)
+        # and its query manager from its Dataset's session.
+        plan = stmt_spark.sql(sql)._jdf.queryExecution().analyzed()
         jds = getattr(self.spark._jvm, "org.apache.spark.sql.classic.Dataset")
-        sdf = DataFrame(jds.ofRows(mv["session"], plan), self.spark)
+        sdf = DataFrame(
+            jds.ofRows(mv["session"]._jsparkSession, plan), self.spark
+        )
         data_dir = mv["data"]
         # A stateful run builds a streaming query manager on Spark's
         # own per-run clone of the session, and its listener stays on
         # the SparkContext's bus for good: drop the ones this run adds.
         bus = self.spark.sparkContext._jsc.sc().listenerBus()
-        mv["session"].streams()  # the view's own manager stays
+        # the view's own manager stays
+        mv["session"]._jsparkSession.streams()
         known = set(bus.listeners())
         modes = [mv["mode"]] if mv["mode"] else ["complete", "append"]
         try:
@@ -2792,17 +2757,13 @@ class BigHouseEngine:
                     "StreamingQueryListenerBus"
                 ):
                     bus.removeListener(lst)
-            try:
-                self.spark.catalog.dropTempView(stream_view)
-            except Exception:
-                pass
         if os.path.isdir(data_dir) and any(
             f.endswith(".parquet") for f in os.listdir(data_dir)
         ):
             out = self.spark.read.parquet(data_dir)
         else:  # zero batches ran (empty source): publish empty result
             out = self.spark.createDataFrame([], sdf.schema)
-        out.createOrReplaceTempView(name)
+        self._publish(out, name)
         self.clear_cache()
 
     _CREATE_DICT_RE = re.compile(
@@ -2903,21 +2864,10 @@ class BigHouseEngine:
         ttl = self._ttl.get(name)
         if ttl:
             view = f"__bh_optp_{uuid.uuid4().hex}"
-            df.createOrReplaceTempView(view)
-            try:
-                sel = self._transpile(
-                    f"SELECT * FROM {view} WHERE "
-                    f"ifNull(({ttl}) > now(), true)"
-                )
-                # analysis binds the plan to the underlying relation
-                # at sql() time — dropping the temp view after is
-                # safe, and save-to-tmp runs before the dir swap
-                df = self._sql(sel.sql)
-            finally:
-                try:
-                    self.spark.catalog.dropTempView(view)
-                except Exception:
-                    pass
+            create_view(self._stmt_session, df, view)
+            df = self._sql(self._transpile(
+                f"SELECT * FROM {view} WHERE ifNull(({ttl}) > now(), true)"
+            ).sql)
         df = df.select(*file_cols)
         df = df.distinct().repartition(n_out) if dedup else df.coalesce(n_out)
         # partition_in_path: this df deliberately lacks the partition
@@ -3077,10 +3027,19 @@ class BigHouseEngine:
         reference gives each query its own: spawn, init statements,
         run, tear down — ``temporal/workflow_query_executor.go:70-80``).
         It owns the start time and query id, cancellation, the init
-        queries, the statement's conf knobs, temp-view cleanup, the one
+        queries, the statement's session and conf knobs, the one
         ``query_log`` write (on success and on failure) and the
         request-boundary release of operator scratch persists and HTTP
         spool pins.
+
+        The session (``_stmt_session``) dies with the statement, so
+        nothing it registers needs cleanup (the reference deletes its
+        cluster in a deferred activity, ``:346-355``). Transpile and its
+        source views, ``_sql``, the small-plan tier, ``system_*`` views,
+        MV refresh streams and any ``SET`` the pair parser cannot read
+        run on it. DDL that outlives the statement stays on the base
+        (``_publish``): ATTACH, CREATE VIEW and its sources, MV
+        creation, user functions, dictionaries, ``SYSTEM FLUSH LOGS``.
 
         ``handler(stmt)`` routes and runs the statement and returns its
         result, wrapped in ``_Logged`` when a success is logged;
@@ -3089,9 +3048,9 @@ class BigHouseEngine:
         statements: a failure is logged once, by the innermost
         statement that raised it. The OUTERMOST statement on this
         thread owns, for all nested in it, the query id (its
-        ``_inflight`` entry, job group and ``queryID()``) and the
-        release: a nested boundary must not drop caches/pins the
-        enclosing request still references."""
+        ``_inflight`` entry, job group and ``queryID()``), the session
+        and the release: a nested boundary must not drop caches/pins
+        the enclosing request still references."""
         if isinstance(request, str):
             request = QueryRequest(query=request)
         stmt = _Statement(
@@ -3146,32 +3105,26 @@ class BigHouseEngine:
                 self.spark.sparkContext.setJobGroup(
                     qid, request.query[:200], interruptOnCancel=True
                 )
-            try:
-                # Cluster-shape knobs → parallelism hint (B18); an init
-                # SET or the query's SETTINGS max_threads, later, wins.
-                if request.num_nodes or request.cores:
-                    parts = (request.num_nodes or 1) * (request.cores or 1)
-                    _REQ_LOCAL.settings = merge(outer, {
-                        "spark.sql.shuffle.partitions": str(max(parts, 1))
-                    })
-                for init in request.init_queries:
-                    # Init queries are full engine statements (the
-                    # reference's InitQueries carry ATTACH DDL + SET,
-                    # workflow_query_executor.go:302-310): a SET's
-                    # pairs are this statement's until it ends, and DDL
-                    # re-enters execute so the whole dispatch applies.
-                    if pairs := parse_set_statement(init):
-                        _REQ_LOCAL.settings = merge(_REQ_LOCAL.settings, pairs)
-                    elif self._route_of(init) != self._QUERY_ROUTE:
-                        self.execute(init)
-                    else:
-                        init_t = self._transpile(init)
-                        stmt.views.extend(init_t.views)
-                        if init_t.sql.strip():
-                            self.spark.sql(init_t.sql)
-                out = handler(stmt)
-            finally:
-                self._drop_views(stmt.views)
+            # Cluster-shape knobs → parallelism hint (B18); an init SET
+            # or the query's SETTINGS max_threads, later, wins.
+            if request.num_nodes or request.cores:
+                parts = (request.num_nodes or 1) * (request.cores or 1)
+                self._settle(
+                    {"spark.sql.shuffle.partitions": str(max(parts, 1))}
+                )
+            for init in request.init_queries:
+                # Init queries are full engine statements (the
+                # reference's InitQueries carry ATTACH DDL + SET,
+                # workflow_query_executor.go:302-310): a SET's pairs
+                # are this statement's until it ends, and DDL re-enters
+                # execute so the whole dispatch applies.
+                if pairs := parse_set_statement(init):
+                    self._settle(pairs)
+                elif self._route_of(init) != self._QUERY_ROUTE:
+                    self.execute(init)
+                elif (init_sql := self._transpile(init).sql).strip():
+                    self._sql(init_sql)
+            out = handler(stmt)
             if isinstance(err := self._cancelled.get(qid), TimeoutError):
                 # The cancel raced a completing job: the deadline is
                 # still exceeded — CH errors here too. A write that
@@ -3210,9 +3163,11 @@ class BigHouseEngine:
                     self.query_log.append(entry)
                     self.query_totals.add(entry)
             _REQ_LOCAL.depth, _REQ_LOCAL.settings = depth, outer
-            if depth == 0:
+            if depth:
+                self._hold()  # the nested statement's knobs end with it
+            else:
                 _REQ_LOCAL.logged_error = _REQ_LOCAL.qid = None
-                _REQ_LOCAL.watch = None
+                _REQ_LOCAL.watch = _REQ_LOCAL.session = None
                 if running is not None:
                     if timer is not None:
                         timer.cancel()
@@ -3279,16 +3234,47 @@ class BigHouseEngine:
                 self._committed.add(qid)
                 self._cancelled.pop(qid, None)
 
-    def _sql(self, text: str):
-        """``spark.sql(text)`` under the running statement's Spark
-        conf: on the base session when it has none, else on a
-        statement clone that holds it, so the base session's conf is
-        never written. Call it after transpile: the clone sees only
-        the views registered before it."""
-        conf = _statement_conf()
-        if not conf:
-            return self.spark.sql(text)
-        return DataFrame(self._clone_session(conf).sql(text), self.spark)
+    @property
+    def _stmt_session(self) -> SparkSession:
+        """The running statement's session: made at its first use in
+        the outermost statement (so init DDL that runs before it is
+        seen), holding the statement's Spark conf, and dropped when the
+        statement ends (``_run``). Outside a statement, the base."""
+        if not getattr(_REQ_LOCAL, "depth", 0):
+            return self.spark
+        if getattr(_REQ_LOCAL, "session", None) is None:
+            _REQ_LOCAL.session = self._clone_session(_statement_conf())
+        return _REQ_LOCAL.session
+
+    def _sql(self, text: str, spark: SparkSession | None = None):
+        """``spark.sql(text)`` on the running statement's session (or
+        ``spark``). Call it after transpile: source views are
+        registered there."""
+        return (spark or self._stmt_session).sql(text)
+
+    def _settle(self, pairs: dict[str, str]) -> None:
+        """Layer ``pairs`` over the running statement's settings; their
+        Spark conf half reaches its session at once."""
+        _REQ_LOCAL.settings = merge(_REQ_LOCAL.settings, pairs)
+        self._hold()
+
+    def _hold(self, session: StatementSession | None = None,
+              conf: dict[str, str] | None = None) -> None:
+        """Make ``session`` (the running statement's, if it has one)
+        hold ``conf`` (the statement's Spark conf) over the base: set
+        what changed; a key it no longer holds gets the base's value."""
+        session = session or getattr(_REQ_LOCAL, "session", None)
+        conf = _statement_conf() if conf is None else conf
+        if session is None or conf == session.held:
+            return
+        jconf = session._jsparkSession.sessionState().conf()
+        for k in conf.keys() | session.held.keys():
+            v = conf[k] if k in conf else self.spark.conf.get(k, None)
+            if v is None:
+                jconf.unsetConf(k)
+            elif v != session.held.get(k):
+                jconf.setConfString(k, v)
+        session.held = dict(conf)
 
     # The small-plan tier's execution confs, and the leaves its plans
     # may read (a CTE's definition is itself a child of the plan).
@@ -3302,18 +3288,19 @@ class BigHouseEngine:
     )
 
     def _small_plan(self, df: DataFrame) -> DataFrame:
-        """``df`` rebuilt from its analyzed plan on a statement clone
-        with AQE off and one shuffle partition, when the statement is
-        small; else ``df`` unchanged. Small: it holds no Spark conf (the
-        client's conf wins: ``_sql`` already ran it on its clone); its
-        leaves are file relations, local rows and CTE references, at
-        least one a file, and the files' ``sizeInBytes`` sum to less
-        than one split (``spark.sql.files.maxPartitionBytes``); it has
-        no ``Generate`` (``arrayJoin``/``explode`` can turn a small
-        input into a large one; ``numbers()`` is a ``Range`` leaf) and
-        no subquery, whose leaves ``collectLeaves`` does not visit.
-        Below one split the scan is one task, so AQE's re-planning,
-        range sampling and coalescing only add jobs."""
+        """``df``, with AQE off and one shuffle partition set on its
+        statement's session when the statement is small. Physical
+        planning reads the session conf when ``df`` first runs, so the
+        analyzed ``df`` takes them as it is. Small: it holds no Spark
+        conf (the client's conf wins); its leaves are file relations,
+        local rows and CTE references, at least one a file, and the
+        files' ``sizeInBytes`` sum to less than one split
+        (``spark.sql.files.maxPartitionBytes``); it has no ``Generate``
+        (``arrayJoin``/``explode`` can turn a small input into a large
+        one; ``numbers()`` is a ``Range`` leaf) and no subquery, whose
+        leaves ``collectLeaves`` does not visit. Below one split the
+        scan is one task, so AQE's re-planning, range sampling and
+        coalescing only add jobs."""
         if _statement_conf():
             return df
         plan = df._jdf.queryExecution().analyzed()
@@ -3335,11 +3322,8 @@ class BigHouseEngine:
             return df
         with self._log_lock:
             self.small_plan_count += 1
-        jds = getattr(self.spark._jvm, "org.apache.spark.sql.classic.Dataset")
-        return DataFrame(
-            jds.ofRows(self._clone_session(self._SMALL_PLAN_CONF), plan),
-            self.spark,
-        )
+        self._settle(self._SMALL_PLAN_CONF)
+        return df
 
     @cached_property
     def _unbounded_patterns(self) -> tuple:
@@ -3349,38 +3333,33 @@ class BigHouseEngine:
         )
         return tp.GENERATE(), tp.PLAN_EXPRESSION()
 
-    def _clone_session(self, conf: dict[str, str]):
-        """A JVM clone of the base session (a statement's, or an MV
-        stream's) with ``conf`` set on it. It shares the SparkContext (job group,
-        cancel) and sees the views and UDFs registered so far; its
-        SQLConf is its own, so the base session's is never written.
-        Wrap its Datasets as ``DataFrame(jds, self.spark)``: a Python
-        SparkSession per clone would rebind pyspark's process-wide
-        ``RDD.toDF`` to it. Dropped with its last Dataset."""
-        jclone = self.spark._jsparkSession.cloneSession()
-        jconf = jclone.sessionState().conf()
-        for k, v in conf.items():
-            jconf.setConfString(k, v)
-        return jclone
+    def _clone_session(self, conf: dict[str, str]) -> StatementSession:
+        """A clone of the base session, a statement's or an MV
+        stream's, holding ``conf``. It shares the SparkContext (job
+        group, cancel) and starts with the views and UDFs registered on
+        the base so far; its temp views and SQLConf are its own, so the
+        base session's are never written. Dropped with its last
+        reference."""
+        session = StatementSession(self.spark)
+        self._hold(session, conf)
+        return session
 
-    def _transpile(self, sql: str) -> TranspileResult:
-        """``transpile`` under the running statement's settings: the
-        Spark conf it returns (theirs with the SETTINGS clause over
-        them) joins them until the statement ends (``transpile``
-        itself never writes the shared conf)."""
-        out = transpile(sql, self.spark, _REQ_LOCAL.settings)
-        _REQ_LOCAL.settings = merge(_REQ_LOCAL.settings, out.settings)
+    def _transpile(
+        self, sql: str, spark: SparkSession | None = None,
+    ) -> TranspileResult:
+        """``transpile`` on the running statement's session (or
+        ``spark``) under its settings. The Spark conf of the SETTINGS
+        clause joins them, and reaches the session, before transpile
+        reads conf (reader confs, the cityHash time zone); it lasts
+        until the statement ends (``transpile`` itself never writes a
+        conf)."""
+        pairs = _strip_settings(sql, _REQ_LOCAL.settings)[1]
+        self._settle(split_settings(pairs)[0])
+        out = transpile(sql, spark or self._stmt_session, _REQ_LOCAL.settings)
         watch = getattr(_REQ_LOCAL, "watch", None)
         if watch and "max_execution_time" in out.dropped_settings:
             watch(out.dropped_settings["max_execution_time"])
         return out
-
-    def _drop_views(self, views: list[str]) -> None:
-        for v in views:
-            try:
-                self.spark.catalog.dropTempView(v)
-            except Exception:
-                pass
 
     def execute(
         self, request: QueryRequest | str, stream_to=None
@@ -3455,6 +3434,9 @@ class BigHouseEngine:
         "REVOKE": ("_route_rbac", "Revoke"),
     }
     _QUERY_ROUTE = ("_route_query", "Select")
+    # Kinds whose query-path statements (CREATE FUNCTION, Spark's own
+    # DDL) must outlive them: they run on the base session.
+    _DDL_KINDS = frozenset({"Create", "Drop", "Alter", "Rename", "Undrop"})
     _KIND_RE = re.compile(r"\s*(SET\s+ROLE\b|[A-Za-z]+)", re.IGNORECASE)
 
     @classmethod
@@ -3596,31 +3578,27 @@ class BigHouseEngine:
         )
 
         struct = parse_schema_string(schema_str.strip("'"))
-        df = parse_inline_payload(self.spark, fmt_name, payload, struct)
-        # uuid, not id(df): truncated object addresses can collide
-        # across concurrent INSERTs and clobber each other's view.
         view = f"__bh_input_{uuid.uuid4().hex}"
-        df.createOrReplaceTempView(view)
-        try:
-            # masked locate: a literal containing input('..')
-            # before the real call must not be substituted
-            m_call = re.search(
-                r"\binput\s*\(\s*'[^']*'\s*\)",
-                masked[m_inp.start(3):m_inp.end(3)],
-            )
-            select_rw = (
-                select_part[:m_call.start()] + view
-                + select_part[m_call.end():]
-            )
-            cols = f"({col_list})" if col_list else ""
-            stmt.request = replace(
-                request, query=f"INSERT INTO {name} {cols} {select_rw}"
-            )
-            return self._route_insert(
-                stmt, mask(stmt.request.query, strings_only=True), stream_to
-            )
-        finally:
-            self.spark.catalog.dropTempView(view)
+        parse_inline_payload(
+            self._stmt_session, fmt_name, payload, struct
+        ).createOrReplaceTempView(view)
+        # masked locate: a literal containing input('..') before the
+        # real call must not be substituted
+        m_call = re.search(
+            r"\binput\s*\(\s*'[^']*'\s*\)",
+            masked[m_inp.start(3):m_inp.end(3)],
+        )
+        select_rw = (
+            select_part[:m_call.start()] + view
+            + select_part[m_call.end():]
+        )
+        cols = f"({col_list})" if col_list else ""
+        stmt.request = replace(
+            request, query=f"INSERT INTO {name} {cols} {select_rw}"
+        )
+        return self._route_insert(
+            stmt, mask(stmt.request.query, strings_only=True), stream_to
+        )
 
     def _insert_format(self, stmt: _Statement, m_fmt: "re.Match") -> _Logged:
         """CH wire-style INSERT ... FORMAT <fmt> <payload>: the shape
@@ -4382,7 +4360,7 @@ class BigHouseEngine:
             f"SELECT ifNull(({expr}) > now(), true) AS "
             f"__ttl_probe FROM {name} LIMIT 0"
         )
-        self.spark.sql(probe.sql).schema  # analysis-only
+        self._sql(probe.sql).schema  # analysis-only
         self._ttl[name] = expr
         return QueryResult(cols=["table", "ttl"], rows=[[name, expr]])
 
@@ -4568,8 +4546,8 @@ class BigHouseEngine:
             # Spark temp view has identical semantics. Session-scoped,
             # like everything in this engine.
             name, select_sql = self._raw_groups(m, stmt.request.query)
-            sel = self._transpile(select_sql)
-            self.spark.sql(sel.sql).createOrReplaceTempView(name)
+            sel = self._transpile(select_sql, self.spark)
+            self._publish(self.spark.sql(sel.sql), name)
             self._user_views[name] = sel.sql
             return _Logged(
                 QueryResult(cols=["view"], rows=[[name]]), "<create view>"
@@ -4627,7 +4605,6 @@ class BigHouseEngine:
         self._table_writer(df, name, "parquet", "overwrite").save(path)
         self._commit()
         self._mark_null_engine(name, masked)
-        self._drop_views(sel.views)
         self.attach_table(name, path, schema=decl_schema)
         self._discard_if_null(name)  # CTAS into Null keeps nothing
         return _Logged(
@@ -4744,7 +4721,7 @@ class BigHouseEngine:
         m = self._DROP_VIEW_RE.match(masked)
         if m:
             name = m.group(1)
-            self.spark.catalog.dropTempView(name)
+            self._unpublish(name)
             self._user_views.pop(name, None)
             return _Logged(
                 QueryResult(cols=["dropped"], rows=[[name]]), "<drop view>"
@@ -4825,7 +4802,7 @@ class BigHouseEngine:
     def _unregister_table(self, name: str) -> None:
         """Drop ``name``'s view, its catalog statistics and its
         per-table records (DROP and DETACH)."""
-        self.spark.catalog.dropTempView(name)
+        self._unpublish(name)
         if name in self._analyzed:
             self.spark.sql(f"DROP TABLE IF EXISTS {name}__bhcat")
             self._analyzed.discard(name)
@@ -5037,7 +5014,7 @@ class BigHouseEngine:
             return self._route_query(stmt, masked, stream_to)
         action = re.sub(r"\s+", " ", m_sys.group(1).upper())
         if action == "FLUSH LOGS":
-            self.refresh_system_views()
+            self.refresh_system_views(spark=self.spark)
         elif action == "DROP QUERY CACHE":
             with self._cache_lock:
                 self._result_cache.clear()
@@ -5091,7 +5068,7 @@ class BigHouseEngine:
             candidates.add(name.replace(".", "_"))
         def _cat_exists(n: str) -> bool:
             try:
-                return self.spark.catalog.tableExists(n)
+                return self._stmt_session.catalog.tableExists(n)
             except Exception:
                 return False
         found = any(
@@ -5117,7 +5094,7 @@ class BigHouseEngine:
             # every column's data pages to decode — a bare
             # count(*) on parquet is answered from footer
             # metadata and would miss corrupt pages.
-            df = self.spark.table(name)
+            df = self._stmt_session.table(name)
             df.selectExpr(*[f"count(`{c}`)" for c in df.columns]).collect()
             ok = 1
         except Exception:
@@ -5258,10 +5235,14 @@ class BigHouseEngine:
                 QueryResult(hit.cols, hit.rows, types=hit.types),
                 "<cache hit>", len(hit.rows), cached=True,
             )
-        result = self._transpile(request.query)
-        stmt.views.extend(result.views)
+        # DDL that reaches the query path (CREATE FUNCTION, Spark's own
+        # DDL) outlives the statement: it runs on the base session.
+        spark = self.spark if stmt.kind in self._DDL_KINDS else None
+        result = self._transpile(request.query, spark)
         stmt.label = result.sql
-        df = self._small_plan(self._sql_with_alias_fallback(result.sql))
+        df = self._small_plan(
+            self._sql_with_alias_fallback(result.sql, spark)
+        )
         # CH renders interval values as plain numbers in their
         # own unit (Date - Date → Int32 days, DateTime - DateTime
         # → seconds, INTERVAL 3 HOUR → 3); Spark's interval cast
@@ -5384,7 +5365,6 @@ class BigHouseEngine:
 
         def run(stmt: _Statement) -> _Logged:
             result = self._transpile(stmt.request.query)
-            stmt.views.extend(result.views)
             stmt.label = result.sql
             df = self._sql(result.sql)
             if order_by and zorder_by:
@@ -5542,7 +5522,7 @@ class BigHouseEngine:
                     tail_part, self.spark.table(name).columns
                 )
             except ValueError:
-                self.spark.catalog.dropTempView(name)
+                self._unpublish(name)
                 self._attached.pop(name, None)
                 raise
         if tail_order:
@@ -5630,8 +5610,7 @@ class BigHouseEngine:
         # shape. Created AFTER the stats run: a temp view freezes its
         # relation snapshot, and a pre-stats snapshot would plan
         # without the statistics just computed.
-        self.spark.table(cat).select(*decl_order) \
-            .createOrReplaceTempView(name)
+        self._publish(self.spark.table(cat).select(*decl_order), name)
         return _Logged(
             QueryResult(cols=["analyzed"], rows=[[name]]), "<analyze>"
         )
@@ -5663,7 +5642,7 @@ class BigHouseEngine:
             )
         else:
             try:
-                schema = self.spark.table(name).schema
+                schema = self._stmt_session.table(name).schema
             except Exception:
                 raise ValueError(f"SHOW CREATE TABLE {name}: not found")
             stmt = render_create_table(name, schema).replace(

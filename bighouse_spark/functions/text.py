@@ -22,6 +22,7 @@ from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 
 from bighouse_spark.functions.identifiers import quote_ident
+from bighouse_spark.session import base_session
 
 # Tiny per-language stopword marker sets for the n-gram/stopword
 # language-ID heuristic. Real pipelines use fastText/CLD3; the point
@@ -80,7 +81,7 @@ def word_shingles(text: Column | str, n: int = 3) -> Column:
 
 # NGram transformers are stateless config objects; constructing one
 # costs a handful of py4j round trips, so reuse per (n, in, out).
-# Keyed on the owning SparkSession (same pattern as the catalog
+# Keyed on the owning base SparkSession (same pattern as the catalog
 # memos): the wrapper's _java_obj is bound to that session's py4j
 # gateway at construction, so an entry must die with its session or
 # a driver restart serves a dead JVM handle.
@@ -112,7 +113,8 @@ def with_shingles(
     # the same, and the real name is applied at the selectExpr alias.
     safe = re.sub(r"\W", "_", out_col)
     w, ng = f"__bh_w_{safe}", f"__bh_ng_{safe}"
-    per_session = _NGRAM_CACHE.setdefault(df.sparkSession, {})
+    owner = base_session(df.sparkSession)
+    per_session = _NGRAM_CACHE.setdefault(owner, {})
     ngram = per_session.get((n, w, ng))
     if ngram is None:
         ngram = per_session[(n, w, ng)] = NGram(

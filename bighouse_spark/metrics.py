@@ -149,8 +149,8 @@ def render(
     )
     w.metric(
         "bighouse_small_plan_statements_total", "counter",
-        "Queries planned small: run on a session clone with AQE off "
-        "and one shuffle partition, their input under one file split.",
+        "Queries planned small: run with AQE off and one shuffle "
+        "partition, their input under one file split.",
         [({}, getattr(engine, "small_plan_count", 0))],
     )
 

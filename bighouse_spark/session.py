@@ -19,20 +19,18 @@ Scale posture (100 TB / 1000-executor design targets):
 * File-split sizing (``spark.sql.files.maxPartitionBytes``) is left at
   128 MiB so a 100 TB scan fans out to ~800k tasks, which the Spark
   scheduler handles; do NOT collapse scans into fewer, larger splits.
+* One session per statement: each outermost engine statement runs
+  on its own ``cloneSession()`` of the base (``StatementSession``,
+  about a millisecond), which holds its conf knobs and views and dies
+  with it, so concurrent clients never share a conf or a view.
 * Small served statements are planned small (``BigHouseEngine
   ._small_plan``): a knob-less query whose file inputs sum to less
-  than one split, with no generator or subquery, runs on a
-  statement-scoped session clone with AQE off and one shuffle
-  partition. Below one split the scan is already one task, so one
-  reduce partition is the right size, and AQE's re-planning, range
-  sampling and coalescing only add jobs. Above one split the gate
-  never fires, so a 100 TB plan keeps AQE and its partition count.
-  The base session's conf is never written, so concurrent statements
-  keep their own plans.
-* A statement's conf knobs (``num_nodes``/``cores``, init-query
-  ``SET``s, mapped ``SETTINGS``) live on a statement clone too
-  (``BigHouseEngine._sql``), so concurrent clients never serialize on
-  a shared conf.
+  than one split, with no generator or subquery, runs with AQE off
+  and one shuffle partition on its statement session. Below one split
+  the scan is already one task, so one reduce partition is the right
+  size, and AQE's re-planning, range sampling and coalescing only add
+  jobs. Above one split the gate never fires, so a 100 TB plan keeps
+  AQE and its partition count.
 * Arrow enabled for the Pandas-UDF paths used by the dedup /
   similarity / multimodal operators.
 * Driver↔Python channels (``collect``, ``toLocalIterator``,
@@ -46,6 +44,7 @@ Scale posture (100 TB / 1000-executor design targets):
 from __future__ import annotations
 
 import atexit
+import itertools
 import os
 import shutil
 import tempfile
@@ -170,3 +169,35 @@ def stop_spark() -> None:
     if active is not None:
         active.stop()
     _remove_socket_dir()
+
+
+# Orders registrations on a base session against its clones' births.
+epoch = itertools.count().__next__
+
+
+class StatementSession(SparkSession):
+    """A Python session over a JVM ``cloneSession()`` of ``base``: its
+    own temp views, SQLConf and function registry, the base's
+    SparkContext. ``held`` is the Spark conf it holds over the base.
+    Process memos key on ``base`` (:func:`base_session`)."""
+
+    def __init__(self, base: SparkSession) -> None:
+        # Not SparkSession.__init__: it rebinds pyspark's process-wide
+        # RDD.toDF to the session it builds.
+        self.base, self.born, self.held = base, epoch(), {}
+        self._sc, self._jsc, self._jvm = base._sc, base._jsc, base._jvm
+        self._profiler_collector = base._profiler_collector
+        self._jsparkSession = base._jsparkSession.cloneSession()
+
+
+def base_session(spark: SparkSession) -> SparkSession:
+    """The session ``spark`` was cloned from, or ``spark`` itself."""
+    return spark.base if isinstance(spark, StatementSession) else spark
+
+
+def create_view(spark: SparkSession, df, name: str) -> None:
+    """Register ``df`` as temp view ``name`` in ``spark``, which need
+    not be the session that built ``df`` (a memoized relation's)."""
+    jds = getattr(spark._jvm, "org.apache.spark.sql.classic.Dataset")
+    jdf = jds.ofRows(spark._jsparkSession, df._jdf.logicalPlan())
+    jdf.createOrReplaceTempView(name)

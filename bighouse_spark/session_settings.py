@@ -24,6 +24,11 @@ _SET_PAIR_RE = re.compile(
     r"^\s*([A-Za-z_][A-Za-z0-9_.]*)\s*(?:=|\s+TO\s+)\s*(.+?)\s*$",
     re.IGNORECASE | re.DOTALL,
 )
+# Spark's ``SET TIME ZONE '<zone>'``: its conf key as a pair. The
+# other forms (``LOCAL``, an interval) are not pairs.
+_TIME_ZONE_RE = re.compile(
+    r"^\s*TIME\s+ZONE\s+('(?:[^'\\]|\\.|'')*')\s*$", re.I | re.S
+)
 
 # CH settings → Spark conf (SURVEY.md §2 B18); ``spark.*`` names pass
 # through. Every other name is a setting the engine reads, or a tuning
@@ -36,17 +41,18 @@ _SETTINGS_MAP = {
 
 
 def parse_set_statement(sql: str) -> dict[str, str] | None:
-    """``SET a = 1, b = 'x'`` (also PG's ``SET a TO 1``, and a
-    ``SETTINGS …`` clause) → pair dict with each quoted value decoded
-    once; None when the text is neither."""
+    """``SET a = 1, b = 'x'`` (also PG's ``SET a TO 1``, Spark's ``SET
+    TIME ZONE 'zone'``, and a ``SETTINGS …`` clause) → pair dict with
+    each quoted value decoded once; None when the text is neither."""
     m = SET_STMT_RE.match(sql)
     if not m:
         return None
     out: dict[str, str] = {}
     for part in split_top_level(m.group(1)):
-        pm = _SET_PAIR_RE.match(part)
-        if pm:
+        if pm := _SET_PAIR_RE.match(part):
             out[pm.group(1)] = unquote(pm.group(2))
+        elif tz := _TIME_ZONE_RE.match(part):
+            out["spark.sql.session.timeZone"] = unquote(tz.group(1))
     return out
 
 

@@ -35,6 +35,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
+from bighouse_spark.session import base_session
+
 FILE_COLUMN = "_file"
 
 # Resolved-relation memo. Inference is a Spark job (parquet/ORC
@@ -53,9 +55,11 @@ FILE_COLUMN = "_file"
 # and a source in which any of these was modified less than _RACY_NS
 # ago is read uncached (git's racy-timestamp rule: mtimes are
 # tick-coarse, so a same-size rewrite within one tick would look
-# unchanged). Entries are weakly keyed by session, as in ``catalog``,
-# in a lock-guarded LRU of fixed size; they hold the JVM Dataset only,
-# never the Python session they are keyed on.
+# unchanged). Entries are weakly keyed by the base session, as in
+# ``catalog``, in a lock-guarded LRU of fixed size; they hold the JVM
+# Dataset only, never the Python session they are keyed on. A relation
+# plans its scans under its loading session's conf: a statement session
+# holding Spark conf loads on itself, with that conf in the key.
 SCHEMA_MEMO_MAX = 256
 _RACY_NS = 1_000_000_000
 # Session confs that change what inference returns for the same bytes.
@@ -135,13 +139,15 @@ def _read_inferred(
         time.time_ns() - max(st.st_mtime_ns for _, st in files) < _RACY_NS
     ):
         return spark.read.format(fmt).options(**opts).load(paths)
+    home, held = base_session(spark), getattr(spark, "held", {})
     key = (
         tuple((p, st.st_ino, st.st_size, st.st_mtime_ns) for p, st in files),
         fmt, tuple(sorted(opts.items())),
         tuple(spark.conf.get(k) for k in _SCHEMA_CONFS),
+        tuple(sorted(held.items())),
     )
     with _SCHEMA_MEMO_LOCK:
-        memo = _SCHEMA_MEMO.get(spark)
+        memo = _SCHEMA_MEMO.get(home)
         jdf = memo.get(key) if memo is not None else None
         if jdf is not None:
             memo.move_to_end(key)
@@ -150,9 +156,9 @@ def _read_inferred(
             _memo_counts["misses"] += 1
     if jdf is not None:
         return DataFrame(jdf, spark)
-    df = spark.read.format(fmt).options(**opts).load(paths)
+    df = (spark if held else home).read.format(fmt).options(**opts).load(paths)
     with _SCHEMA_MEMO_LOCK:
-        memo = _SCHEMA_MEMO.setdefault(spark, OrderedDict())
+        memo = _SCHEMA_MEMO.setdefault(home, OrderedDict())
         memo[key] = df._jdf
         while len(memo) > SCHEMA_MEMO_MAX:
             memo.popitem(last=False)

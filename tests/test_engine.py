@@ -531,6 +531,198 @@ def test_table_function_views_dropped_and_unique(engine, spark, tmp_path):
     assert src_views() == before
 
 
+# -- one session per statement: the base session is never written ------
+
+_TZ = "spark.sql.session.timeZone"
+
+
+def _temp_views(spark) -> list[str]:
+    return sorted(t.name for t in spark.catalog.listTables() if t.isTemporary)
+
+
+def test_insert_from_file_leaves_base_views(engine, spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = tmp_path / "t.parquet"
+    pq.write_table(pa.table({"id": [1, 2], "k": [3, 4]}), p)
+    _backdate(p)
+    engine.execute("DROP TABLE IF EXISTS stmt_tgt")
+    engine.execute(
+        "CREATE TABLE stmt_tgt (id Int64, k Int64) ENGINE = MergeTree "
+        "ORDER BY id"
+    )
+    try:
+        before = _temp_views(spark)
+        for _ in range(3):
+            engine.execute(
+                f"INSERT INTO stmt_tgt SELECT id, k FROM file('{p}', 'Parquet')"
+            )
+        assert _temp_views(spark) == before
+        assert engine.execute(
+            "SELECT count() AS n FROM stmt_tgt"
+        ).rows == [[6]]
+    finally:
+        engine.execute("DROP TABLE IF EXISTS stmt_tgt")
+
+
+def test_set_time_zone_leaves_base_zone(engine, spark):
+    tz0 = spark.conf.get(_TZ)
+    try:
+        engine.execute("SET TIME ZONE 'America/New_York'")
+        assert spark.conf.get(_TZ) == tz0
+    finally:
+        spark.conf.set(_TZ, tz0)
+
+
+def test_init_set_reaches_file_read_of_its_statement(engine, spark, tmp_path):
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = tmp_path / "bin.parquet"
+    pq.write_table(pa.table({"b": pa.array([b"ab"], pa.binary())}), p)
+    _backdate(p)
+    q = f"SELECT b FROM file('{p}', 'Parquet')"
+    memo = lambda: len(readers._SCHEMA_MEMO.get(spark, {}))  # noqa: E731
+    n = memo()
+    as_string = engine.execute(QueryRequest(
+        query=q,
+        init_queries=["SET spark.sql.parquet.binaryAsString = true"],
+    ))
+    assert as_string.rows == [["ab"]]
+    plain = engine.execute(q)
+    assert isinstance(plain.rows[0][0], (bytes, bytearray))
+    assert memo() == n + 2  # one entry each, none shared
+
+
+def test_init_time_zone_reaches_cityhash_guard(engine, spark):
+    from bighouse_spark.dialect.transpile import transpile
+
+    q = ("SELECT cityHash64Exact(toDateTime('2024-01-01 00:00:00')) "
+         "AS h")
+    tz0 = spark.conf.get(_TZ)
+    spark.conf.set(_TZ, "UTC")
+    try:
+        with pytest.raises(Exception, match="UTC"):
+            engine.execute(QueryRequest(
+                query=q,
+                init_queries=[f"SET {_TZ} = 'America/New_York'"],
+            ))
+        assert engine.execute(q).rows[0][0] is not None
+        # the base session keeps the datetime-allowing UDF
+        assert spark.sql(transpile(q).sql).collect()[0][0] is not None
+    finally:
+        spark.conf.set(_TZ, tz0)
+
+
+def test_system_settings_are_per_statement(engine, spark):
+    import threading
+
+    q = "SELECT value FROM system.settings WHERE name = 'max_result_rows'"
+    seen: dict[int, list] = {7: [], 9: []}
+
+    def run(n: int) -> None:
+        for _ in range(20):
+            seen[n].append(engine.execute(QueryRequest(
+                query=q, init_queries=[f"SET max_result_rows = {n}"],
+            )).rows[0][0])
+
+    threads = [threading.Thread(target=run, args=(n,)) for n in seen]
+    for t in threads:
+        t.start()
+    for t in threads:
+        t.join(120)
+    assert not any(t.is_alive() for t in threads)
+    assert seen == {7: ["7"] * 20, 9: ["9"] * 20}
+    engine.execute(QueryRequest(
+        query=q, init_queries=["SET max_result_rows = 777"],
+    ))
+    if spark.catalog.tableExists("system_settings"):
+        assert spark.sql(q.replace("system.", "system_")).collect()[0][0] \
+            != "777"
+
+
+def test_init_ddl_after_session_is_seen_by_statement(engine):
+    # The INSERT's transpile makes the statement session before its
+    # write re-attaches t on the base; the query must see the rows.
+    engine.execute("DROP TABLE IF EXISTS stmt_init_t")
+    try:
+        out = engine.execute(QueryRequest(
+            query="SELECT count() AS n FROM stmt_init_t",
+            init_queries=[
+                "CREATE TABLE stmt_init_t (a Int64) ENGINE = MergeTree "
+                "ORDER BY a",
+                "INSERT INTO stmt_init_t SELECT number FROM numbers(3)",
+            ],
+        ))
+        assert out.rows == [[3]]
+    finally:
+        engine.execute("DROP TABLE IF EXISTS stmt_init_t")
+
+
+def test_nested_statement_knobs_end_with_it(engine, spark):
+    key = "spark.sql.shuffle.partitions"
+    engine.execute("DROP TABLE IF EXISTS stmt_knob_t")
+    try:
+        out = engine.execute(QueryRequest(
+            query=f"SELECT name, value FROM system.settings "
+            f"WHERE name = '{key}'",
+            init_queries=[
+                "CREATE TABLE stmt_knob_t (a Int64) ENGINE = MergeTree "
+                "ORDER BY a",
+                "INSERT INTO stmt_knob_t SELECT number FROM numbers(3) "
+                "SETTINGS max_threads = 1",
+            ],
+        ))
+        assert out.rows == [[key, spark.conf.get(key)]]
+    finally:
+        engine.execute("DROP TABLE IF EXISTS stmt_knob_t")
+
+
+def test_memoized_relation_plans_under_its_loading_conf(
+    engine, spark, tmp_path
+):
+    # A relation plans its scan splits under the conf of the session
+    # that loaded it: one loaded under a client's knobs must not serve
+    # a knob-less statement.
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    p = tmp_path / "split.parquet"
+    pq.write_table(pa.table({"v": list(range(40000))}), p,
+                   row_group_size=4000)
+    _backdate(p)
+    q = f"SELECT count() AS n FROM file('{p}', 'Parquet')"
+    engine.execute(QueryRequest(query=q, init_queries=[
+        "SET spark.sql.files.maxPartitionBytes = 4096",
+        "SET spark.sql.files.openCostInBytes = 0",
+    ]))
+    engine.execute(QueryRequest(query=q, query_id="stmt-split-plain"))
+    tracker = spark.sparkContext.statusTracker()
+    tasks = [
+        tracker.getStageInfo(st).numTasks
+        for j in tracker.getJobIdsForGroup("stmt-split-plain")
+        for st in tracker.getJobInfo(j).stageIds
+    ]
+    assert tasks and max(tasks) == 1
+
+
+def test_statement_session_leaves_rdd_todf_on_base(engine, spark, tmp_path):
+    # pyspark's SparkSession constructor rebinds RDD.toDF process-wide;
+    # a statement session must not be the session it builds on.
+    from pyspark import RDD
+
+    from bighouse_spark.session import StatementSession
+
+    p = tmp_path / "todf.parquet"
+    _write_memo_source(p, "Parquet")
+    to_df = RDD.toDF
+    engine.execute(f"SELECT count() AS n FROM file('{p}', 'Parquet')")
+    assert RDD.toDF is to_df
+    df = spark.sparkContext.parallelize([(1,)]).toDF()
+    assert not isinstance(df.sparkSession, StatementSession)
+
+
 def test_system_clusters_and_profile_views(engine, spark):
     engine.execute("SELECT 1 AS x")
     engine.refresh_system_views()

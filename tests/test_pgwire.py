@@ -413,6 +413,21 @@ class TestPGConnectionSettings:
             c2.close()
         assert spark.conf.getAll == before
 
+    def test_set_time_zone_is_scoped_to_its_connection(self, pg, spark):
+        key = "spark.sql.session.timeZone"
+        base = spark.conf.get(key)
+        q = "SELECT current_timezone() AS z"
+        c1 = PGClient(pg.host, pg.port)
+        c2 = PGClient(pg.host, pg.port)
+        try:
+            assert c1.query("SET TIME ZONE 'America/New_York'")[2] is None
+            assert c1.query(q)[1] == [["America/New_York"]]
+            assert c2.query(q)[1] == [[base]]
+        finally:
+            c1.close()
+            c2.close()
+        assert spark.conf.get(key) == base
+
 
 class TestPGStreaming:
     def test_large_result_streams_identically(self, pg):

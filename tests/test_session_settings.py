@@ -32,6 +32,14 @@ class TestSetStatementParsing:
         pairs = {"k": value, "max_threads": "2"}
         assert parse_set_statement(set_statement(pairs)) == pairs
 
+    def test_set_time_zone_is_a_pair(self):
+        # Spark's SET TIME ZONE '<zone>' is its conf key; the other
+        # forms are not pairs and persist nowhere.
+        pairs = parse_set_statement("SET TIME ZONE 'America/New_York'")
+        assert pairs == {"spark.sql.session.timeZone": "America/New_York"}
+        assert parse_set_statement(set_statement(pairs)) == pairs
+        assert parse_set_statement("SET TIME ZONE LOCAL") == {}
+
     def test_values_decode_once(self):
         assert parse_set_statement(
             "SET a = 'it''s', b = 'it\\'s', c = '', d = 'a\\\\b'"

@@ -361,14 +361,15 @@ def _conf_write(node: ast.AST) -> str | None:
 
 
 def test_statements_never_write_base_session_conf():
-    # A statement's knobs live on its own session clone (_sql): the
-    # base conf is shared by every client, and a write there is seen
-    # by every statement running meanwhile. Only engine construction
-    # (CBO flags) and attach_table's nanos fallback write it.
+    # A statement's knobs live on its own statement session (_hold
+    # writes only that clone's conf): the base conf is shared by every
+    # client, and a write there is seen by every statement running
+    # meanwhile. Only engine construction (CBO flags) and
+    # attach_table's nanos fallback write it.
     assert _sites(ENGINE, _conf_write) == [
         ("__init__", "self.spark.conf.set"),
         ("attach_table", "self.spark.conf.set"),
-        ("_clone_session", "jconf.setConfString"),
+        ("_hold", "jconf.setConfString"),
     ]
 
 
