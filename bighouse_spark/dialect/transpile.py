@@ -52,7 +52,7 @@ from bighouse_spark.dialect.lexer import (
     spans,
     split_top_level,
 )
-from bighouse_spark.session import base_session, create_view, epoch
+from bighouse_spark.session import base_session, create_view
 
 # Module import time = engine process start (uptime() anchor).
 _PROCESS_START = _time.time()
@@ -9734,33 +9734,25 @@ def transpile(
 # The registration memo keys on the session OBJECT, held weakly (the
 # sources.readers schema-memo pattern): an id() reused by a session
 # created after another was collected must not read as registered.
-# Values map a module to (variant, epoch of the registration). A
-# statement session copied its base's function registry when it was
-# ``born``, so it holds what the base registered before then.
+# Values are per-module registration variants. A statement session
+# starts with a copy of its base's, taken before the JVM clone
+# (``BigHouseEngine._clone_session``): a registration between the two
+# only registers again.
 _UDF_SESSIONS: "weakref.WeakKeyDictionary[SparkSession, dict]" = (
     weakref.WeakKeyDictionary()
 )
-
-
-def _holds_udfs(spark: SparkSession, module: str, variant=True) -> bool:
-    base = base_session(spark)
-    got = _UDF_SESSIONS.get(spark, {}).get(module)
-    if got is None and base is not spark:
-        got = _UDF_SESSIONS.get(base, {}).get(module)
-        got = got if got and got[1] < spark.born else None
-    return got is not None and got[0] == variant
 
 
 def _register_udfs(spark: SparkSession, module: str, fns: dict,
                    variant=True, on_base: bool = True) -> None:
     """Register ``fns`` on ``spark``, and on its base when ``on_base``
     and the base lacks them, so later statement sessions copy them."""
-    base = base_session(spark)
-    for s in {spark, base} if on_base else {spark}:
-        if s is spark or not _holds_udfs(base, module, variant):
+    for s in {spark, base_session(spark)} if on_base else {spark}:
+        registered = _UDF_SESSIONS.setdefault(s, {})
+        if registered.get(module) != variant:
             for name, fn in fns.items():
                 s.udf.register(name, fn)
-            _UDF_SESSIONS.setdefault(s, {})[module] = (variant, epoch())
+            registered[module] = variant
 
 
 def _pickle_udf_module_by_value(module) -> None:
@@ -9775,7 +9767,7 @@ def _pickle_udf_module_by_value(module) -> None:
 def _ensure_udfs(spark: SparkSession, module_name: str) -> None:
     """Register ``bighouse_spark.functions.<module_name>``'s ``ALL``
     UDFs on ``spark`` once."""
-    if _holds_udfs(spark, module_name):
+    if module_name in _UDF_SESSIONS.get(spark, {}):
         return
     import importlib
 
@@ -9828,7 +9820,7 @@ def _ensure_cityhash_udfs(spark: SparkSession) -> None:
     # takes only the variant its own time zone gives.
     tz = "spark.sql.session.timeZone"
     allow_dt = _tz_is_utc_equivalent(spark.conf.get(tz, "UTC"))
-    if _holds_udfs(spark, "cityhash", allow_dt):
+    if _UDF_SESSIONS.get(spark, {}).get("cityhash") == allow_dt:
         return
     from bighouse_spark.functions import cityhash
 

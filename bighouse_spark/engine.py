@@ -30,6 +30,7 @@ from typing import Any, Callable, NamedTuple
 from pyspark.sql import DataFrame, SparkSession
 
 from bighouse_spark.dialect.transpile import (
+    _UDF_SESSIONS,
     TranspileResult,
     _strip_settings,
     _sub_outside_quotes,
@@ -3340,7 +3341,11 @@ class BigHouseEngine:
         the base so far; its temp views and SQLConf are its own, so the
         base session's are never written. Dropped with its last
         reference."""
+        # The base's UDF record, copied before the JVM clone copies
+        # its function registry (see _UDF_SESSIONS).
+        udfs = dict(_UDF_SESSIONS.get(self.spark, {}))
         session = StatementSession(self.spark)
+        _UDF_SESSIONS[session] = udfs
         self._hold(session, conf)
         return session
 
@@ -3348,14 +3353,13 @@ class BigHouseEngine:
         self, sql: str, spark: SparkSession | None = None,
     ) -> TranspileResult:
         """``transpile`` on the running statement's session (or
-        ``spark``) under its settings. The Spark conf of the SETTINGS
-        clause joins them, and reaches the session, before transpile
-        reads conf (reader confs, the cityHash time zone); it lasts
-        until the statement ends (``transpile`` itself never writes a
-        conf)."""
-        pairs = _strip_settings(sql, _REQ_LOCAL.settings)[1]
-        self._settle(split_settings(pairs)[0])
+        ``spark``) under its settings. The Spark conf it returns (theirs
+        with the SETTINGS clause over them) joins them until the
+        statement ends (``transpile`` itself never writes a conf); the
+        query path settles the clause before transpile, so reader confs
+        and the cityHash time zone see it (``_route_query``)."""
         out = transpile(sql, spark or self._stmt_session, _REQ_LOCAL.settings)
+        self._settle(out.settings)
         watch = getattr(_REQ_LOCAL, "watch", None)
         if watch and "max_execution_time" in out.dropped_settings:
             watch(out.dropped_settings["max_execution_time"])
@@ -3437,6 +3441,10 @@ class BigHouseEngine:
     # Kinds whose query-path statements (CREATE FUNCTION, Spark's own
     # DDL) must outlive them: they run on the base session.
     _DDL_KINDS = frozenset({"Create", "Drop", "Alter", "Rename", "Undrop"})
+    _TEMP_DDL_RE = re.compile(
+        r"\s*(?:CREATE(?:\s+OR\s+REPLACE)?|DROP)\s+TEMP(?:ORARY)?\s+"
+        r"(?:FUNCTION|VIEW)\b", re.IGNORECASE,
+    )
     _KIND_RE = re.compile(r"\s*(SET\s+ROLE\b|[A-Za-z]+)", re.IGNORECASE)
 
     @classmethod
@@ -5226,15 +5234,16 @@ class BigHouseEngine:
         # SETTINGS clause over them, read before transpile so a hit
         # skips view re-registration entirely.
         scope = _REQ_LOCAL.settings
-        use_cache = _strip_settings(request.query, scope)[1].get(
-            "use_query_cache", "0"
-        ).lower() in ("1", "true")
+        pairs = _strip_settings(request.query, scope)[1]
+        use_cache = pairs.get("use_query_cache", "0").lower() in ("1", "true")
         key = (request.query, tuple(scope.items()))
         if use_cache and (hit := self._cache_get(key)) is not None:
             return _Logged(
                 QueryResult(hit.cols, hit.rows, types=hit.types),
                 "<cache hit>", len(hit.rows), cached=True,
             )
+        # The clause's Spark conf reaches the session before transpile.
+        self._settle(split_settings(pairs)[0])
         # DDL that reaches the query path (CREATE FUNCTION, Spark's own
         # DDL) outlives the statement: it runs on the base session.
         spark = self.spark if stmt.kind in self._DDL_KINDS else None
@@ -5243,6 +5252,14 @@ class BigHouseEngine:
         df = self._small_plan(
             self._sql_with_alias_fallback(result.sql, spark)
         )
+        if spark is not None and self._TEMP_DDL_RE.match(result.sql) and (
+            s := getattr(_REQ_LOCAL, "session", None)
+        ) is not None:
+            # A temp function or view is per session: the running
+            # statement's gets it too, as _publish does for views.
+            for v in result.views:
+                create_view(s, self.spark.table(v), v)
+            s.sql(result.sql)
         # CH renders interval values as plain numbers in their
         # own unit (Date - Date → Int32 days, DateTime - DateTime
         # → seconds, INTERVAL 3 HOUR → 3); Spark's interval cast

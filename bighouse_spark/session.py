@@ -44,7 +44,6 @@ Scale posture (100 TB / 1000-executor design targets):
 from __future__ import annotations
 
 import atexit
-import itertools
 import os
 import shutil
 import tempfile
@@ -171,10 +170,6 @@ def stop_spark() -> None:
     _remove_socket_dir()
 
 
-# Orders registrations on a base session against its clones' births.
-epoch = itertools.count().__next__
-
-
 class StatementSession(SparkSession):
     """A Python session over a JVM ``cloneSession()`` of ``base``: its
     own temp views, SQLConf and function registry, the base's
@@ -184,7 +179,7 @@ class StatementSession(SparkSession):
     def __init__(self, base: SparkSession) -> None:
         # Not SparkSession.__init__: it rebinds pyspark's process-wide
         # RDD.toDF to the session it builds.
-        self.base, self.born, self.held = base, epoch(), {}
+        self.base, self.held = base, {}
         self._sc, self._jsc, self._jvm = base._sc, base._jsc, base._jvm
         self._profiler_collector = base._profiler_collector
         self._jsparkSession = base._jsparkSession.cloneSession()
