@@ -828,17 +828,8 @@ class BigHouseEngine:
                 "table string, ttl string")
 
         def _functions() -> None:
-            # system.functions analog: every ClickHouse function
-            # spelling the dialect layer maps.
-            from bighouse_spark.dialect.transpile import (
-                SERVED_COMBINATORS,
-                served_function_names,
-            )
-
-            put("system_functions", served_function_names(),
-                "name string, kind string")
-            put("system_aggregate_function_combinators",
-                [(c,) for c in SERVED_COMBINATORS], "name string")
+            for view, df in self._function_frames.items():
+                create_view(spark, df, view)
 
         # Keep in sync with _SYSTEM_VIEW_NAMES (execute() uses it to
         # recognize underscore-spelled references in statements).
@@ -872,6 +863,23 @@ class BigHouseEngine:
             else builders
         for build in dict.fromkeys(builders[n] for n in names):
             build()
+
+    @cached_property
+    def _function_frames(self) -> dict[str, DataFrame]:
+        """system.functions analogs: every ClickHouse function spelling
+        the dialect layer maps, and its combinators. Static per process:
+        built once, registered by each statement that reads them."""
+        from bighouse_spark.dialect.transpile import (
+            SERVED_COMBINATORS,
+            served_function_names,
+        )
+
+        return {
+            "system_functions": self.spark.createDataFrame(
+                served_function_names(), "name string, kind string"),
+            "system_aggregate_function_combinators": self.spark
+            .createDataFrame([(c,) for c in SERVED_COMBINATORS], "name string"),
+        }
 
     # Every temp-view name refresh_system_views can build — used by
     # execute() to also refresh views referenced by their registered
@@ -3038,9 +3046,11 @@ class BigHouseEngine:
         cluster in a deferred activity, ``:346-355``). Transpile and its
         source views, ``_sql``, the small-plan tier, ``system_*`` views,
         MV refresh streams and any ``SET`` the pair parser cannot read
-        run on it. DDL that outlives the statement stays on the base
-        (``_publish``): ATTACH, CREATE VIEW and its sources, MV
-        creation, user functions, dictionaries, ``SYSTEM FLUSH LOGS``.
+        run on it. DDL that outlives the statement stays on the base:
+        ATTACH, CREATE VIEW and its sources, MV creation, user
+        functions, dictionaries, ``SYSTEM FLUSH LOGS``. Views and temp
+        functions it makes also reach the running statement's session
+        (``_publish``, ``_route_query``).
 
         ``handler(stmt)`` routes and runs the statement and returns its
         result, wrapped in ``_Logged`` when a success is logged;
@@ -3439,7 +3449,8 @@ class BigHouseEngine:
     }
     _QUERY_ROUTE = ("_route_query", "Select")
     # Kinds whose query-path statements (CREATE FUNCTION, Spark's own
-    # DDL) must outlive them: they run on the base session.
+    # DDL) must outlive them: they run on the base session, and a temp
+    # function or view (_TEMP_DDL_RE) on the statement's too.
     _DDL_KINDS = frozenset({"Create", "Drop", "Alter", "Rename", "Undrop"})
     _TEMP_DDL_RE = re.compile(
         r"\s*(?:CREATE(?:\s+OR\s+REPLACE)?|DROP)\s+TEMP(?:ORARY)?\s+"

@@ -644,41 +644,24 @@ def test_system_settings_are_per_statement(engine, spark):
 
 def test_init_ddl_after_session_is_seen_by_statement(engine):
     # The INSERT's transpile makes the statement session before its
-    # write re-attaches t on the base; the query must see the rows.
+    # write re-attaches t, and CREATE FUNCTION runs, on the base; the
+    # query must see the rows and the function.
     engine.execute("DROP TABLE IF EXISTS stmt_init_t")
     try:
         out = engine.execute(QueryRequest(
-            query="SELECT count() AS n FROM stmt_init_t",
+            query="SELECT count() AS n, sum(stmt_init_fn(a)) AS s "
+            "FROM stmt_init_t",
             init_queries=[
                 "CREATE TABLE stmt_init_t (a Int64) ENGINE = MergeTree "
                 "ORDER BY a",
                 "INSERT INTO stmt_init_t SELECT number FROM numbers(3)",
-            ],
-        ))
-        assert out.rows == [[3]]
-    finally:
-        engine.execute("DROP TABLE IF EXISTS stmt_init_t")
-
-
-def test_init_function_after_session_is_seen_by_statement(engine):
-    # CREATE FUNCTION runs on the base session after the INSERT's
-    # transpile made the statement session; the query must see it.
-    engine.execute("DROP TABLE IF EXISTS stmt_init_fn_t")
-    try:
-        out = engine.execute(QueryRequest(
-            query="SELECT stmt_init_fn(a) AS b FROM stmt_init_fn_t "
-            "ORDER BY b",
-            init_queries=[
-                "CREATE TABLE stmt_init_fn_t (a Int64) ENGINE = MergeTree "
-                "ORDER BY a",
-                "INSERT INTO stmt_init_fn_t SELECT number FROM numbers(2)",
                 "CREATE FUNCTION stmt_init_fn AS (x) -> x + 1",
             ],
         ))
-        assert out.rows == [[1.0], [2.0]]
+        assert out.rows == [[3, 6.0]]
     finally:
         engine.execute("DROP FUNCTION stmt_init_fn")
-        engine.execute("DROP TABLE IF EXISTS stmt_init_fn_t")
+        engine.execute("DROP TABLE IF EXISTS stmt_init_t")
 
 
 def test_nested_statement_knobs_end_with_it(engine, spark):
